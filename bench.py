@@ -840,12 +840,20 @@ def spread_scale_probe(spark, sf_dir: str, *, scales=(1, 10, 30)) -> dict:
 
     def _free_new(before: set) -> None:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        freed, failed = [], []
         for e in jmap.entrySet().toArray():
-            if int(e.getKey()) not in before:
+            rdd_id = int(e.getKey())
+            if rdd_id not in before:
                 try:
                     e.getValue().unpersist(False)
-                except Exception:
-                    pass
+                    freed.append(rdd_id)
+                except Exception as exc:  # counted and logged, not hidden
+                    failed.append(f"{rdd_id}: {exc!r}")
+        print(f"# spread_scale freed rdds {sorted(freed)}", file=sys.stderr,
+              flush=True)
+        for f in failed:
+            print(f"# spread_scale unpersist failed {f}", file=sys.stderr,
+                  flush=True)
 
     pre_probe_ids = _persisted_ids()
     out: dict = {"base_dir": sf_dir, "scales": {}}

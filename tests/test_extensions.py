@@ -1256,3 +1256,55 @@ def test_codegen_path_canary(spark, sf_dir):
     finally:
         spark.conf.set(key, before)
     assert interpreted == codegen and len(codegen) > 0
+
+
+def test_codegen_path_canary_fused_rank_lookup(spark):
+    """The same codegen-vs-interpreted check for the explode + window
+    shape: the fused percentile rank lookup (count/rank Window ->
+    Generate inline -> one last() lookup Window per aggregate), both
+    directions, with nulls and a null-only group."""
+    from window_aggregation_spark.operators.window_aggregation import (
+        window_aggregate,
+    )
+    from window_aggregation_spark.spec import (
+        AggregateDef,
+        Direction,
+        OrderKey,
+        WindowPlan,
+        WindowSpecDef,
+    )
+
+    df = spark.createDataFrame(
+        [(i, i % 4, float((i * 37) % 23)) for i in range(120)]
+        + [(200, 0, None), (201, 9, None)],
+        "id int, g int, v double",
+    )
+
+    def run(direction):
+        plan = WindowPlan(
+            spec=WindowSpecDef(
+                partition_by=("g",),
+                order_by=(OrderKey("v", Direction.parse(direction)),),
+            ),
+            aggregates=(
+                AggregateDef("med", "median", field="v"),
+                AggregateDef("p25", "discrete_percentile", field="v",
+                             args=("0.25",)),
+            ),
+        )
+        out = window_aggregate(df, plan)
+        jplan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Generate inline" in jplan and "Window [" in jplan
+        return sorted(tuple(r) for r in out.collect())
+
+    key = "spark.sql.codegen.wholeStage"
+    before = spark.conf.get(key)
+    try:
+        for direction in ("ascending", "descending"):
+            spark.conf.set(key, "false")
+            interpreted = run(direction)
+            spark.conf.set(key, "true")
+            codegen = run(direction)
+            assert interpreted == codegen and len(codegen) == 122
+    finally:
+        spark.conf.set(key, before)

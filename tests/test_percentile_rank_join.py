@@ -1,8 +1,9 @@
-"""The percentile rank-join rewrite: O(1)/row equi-joins replacing
-O(frame)/row buffers for DISCRETE_PERCENTILE / MEDIAN over running frames
-ordered by the aggregated field — both directions. Results must be
-BIT-identical to the general window composition (collect_list / Hive
-percentile)."""
+"""The percentile rank-lookup rewrite: one count/rank window, one
+request/value generator and a running last-value lookup per aggregate
+(O(1)/row) replacing O(frame)/row buffers for DISCRETE_PERCENTILE / MEDIAN
+over running frames ordered by the aggregated field — both directions,
+several aggregates fused into one plan. Results must be BIT-identical to
+the general window composition (collect_list / Hive percentile)."""
 
 from __future__ import annotations
 
@@ -39,19 +40,19 @@ def _plan(function, direction, args=()):
     )
 
 
-def _general_expected(df, function, direction, p):
+def _general_expected(df, function, direction, p, field="v", alias="out"):
     """The general-composition ground truth, built directly from Spark's
     own window aggregates (what the operator would do without the
     rewrite)."""
-    order = F.col("v").desc() if direction == "descending" else F.col("v").asc()
+    order = F.col(field).desc() if direction == "descending" else F.col(field).asc()
     w = Window.partitionBy("g").orderBy(order)
     if function == "discrete_percentile":
-        vals = F.array_sort(F.collect_list("v").over(w))
+        vals = F.array_sort(F.collect_list(field).over(w))
         k = F.greatest(F.ceil(F.lit(p) * F.size(vals)), F.lit(1)).cast("int")
         col = F.get(vals, k - 1)
     else:
-        col = F.percentile(F.col("v"), F.lit(p)).over(w).cast("double")
-    return df.withColumn("out", col)
+        col = F.percentile(F.col(field), F.lit(p)).over(w).cast("double")
+    return df.withColumn(alias, col)
 
 
 @pytest.mark.parametrize("direction", ["ascending", "descending"])
@@ -137,3 +138,98 @@ def test_rank_join_not_applied_when_ordered_by_other_field(spark):
     # spot-check running-median semantics over id order
     rows = {r["id"]: r["out"] for r in out.collect()}
     assert rows[0] == 7.0  # first row of group a: median of [7]
+
+
+# MEDIAN + two DISCRETE_PERCENTILEs over one field: one fused lookup plan
+_FUSED = (("med", "median", (), 0.5),
+          ("p25", "discrete_percentile", ("0.25",), 0.25),
+          ("p90", "discrete_percentile", ("0.9",), 0.9))
+
+
+def _multi_plan(direction, aggregates, partition_by=("g",)):
+    from window_aggregation_spark.spec import Direction
+
+    return WindowPlan(
+        spec=WindowSpecDef(
+            partition_by=partition_by,
+            order_by=(OrderKey("v", Direction.parse(direction)),),
+        ),
+        aggregates=tuple(
+            AggregateDef(alias, function, field="v", args=tuple(args))
+            for alias, function, args in aggregates
+        ),
+    )
+
+
+@pytest.mark.parametrize("direction", ["ascending", "descending"])
+@pytest.mark.parametrize("vtype", ["double", "int"])
+def test_fused_percentiles_match_general_and_one_pass(spark, direction,
+                                                      vtype):
+    """Several same-field percentiles share ONE count/rank window, ONE
+    generator and ONE exchange, with one lookup window each — and every
+    column stays bit-identical to the general composition and to
+    ``one_pass``, nulls and the null-only group included."""
+    import re
+
+    rows = [(i, g, None if v is None else (int(v) if vtype == "int" else v))
+            for i, g, v in ROWS]
+    df = spark.createDataFrame(rows, f"id int, g string, v {vtype}")
+    plan = _multi_plan(direction, [(a, f, args) for a, f, args, _ in _FUSED])
+    got = window_aggregate(df, plan)
+    one_pass = window_aggregate(df, plan, percentile_strategy="one_pass")
+    got_rows = got.orderBy("id").collect()
+    assert got.columns == ["id", "g", "v", "med", "p25", "p90"]
+    assert got_rows == one_pass.orderBy("id").collect()
+    for alias, function, _, p in _FUSED:
+        expected = _general_expected(df, function, direction, p,
+                                     alias=alias)
+        want = expected.select("id", alias).orderBy("id").collect()
+        assert [(r["id"], r[alias]) for r in got_rows] == [tuple(r) for r in want]
+    jplan = got._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning", jplan)) == 1
+    assert jplan.count("Generate inline") == 1
+    lookups = [line for line in jplan.splitlines()
+               if re.match(r"\W*Window \[", line) and "last(" in line]
+    assert len(lookups) == len(_FUSED)
+
+
+@pytest.mark.parametrize("direction", ["ascending", "descending"])
+@pytest.mark.parametrize(
+    "aggregates",
+    [
+        # alias == field: the later aggregate reads (and orders by) the
+        # replaced column
+        [("med", "median", ()), ("v", "discrete_percentile", ("0.25",)),
+         ("p90", "discrete_percentile", ("0.9",))],
+        # alias == partition key: the later aggregate re-partitions
+        [("g", "discrete_percentile", ("0.5",)), ("med", "median", ())],
+        # alias == another input column: replaced in place, group intact
+        [("id", "median", ()), ("p25", "discrete_percentile", ("0.25",))],
+    ],
+    ids=["alias_is_field", "alias_is_key", "alias_is_other_input"],
+)
+def test_fused_lookup_alias_collisions_keep_sequential_semantics(
+        spark, direction, aggregates):
+    """An alias that replaces the field or a partition key ends the fused
+    group: the result must equal the sequential withColumn chain of
+    single-aggregate plans and the ``one_pass`` plan, column for column.
+    (A repeated alias cannot reach a group: WindowPlan rejects it,
+    tests/test_parser_validation.py.)"""
+    df = spark.createDataFrame(ROWS, SCHEMA)
+    plan = _multi_plan(direction, aggregates)
+    got = window_aggregate(df, plan)
+    one_pass = window_aggregate(df, plan, percentile_strategy="one_pass")
+    chained = df
+    for agg in aggregates:
+        chained = window_aggregate(chained, _multi_plan(direction, [agg]),
+                                   validate=False)
+    assert got.columns == one_pass.columns == chained.columns
+    got_rows = sorted(map(tuple, got.collect()), key=repr)
+    assert got_rows == sorted(map(tuple, one_pass.collect()), key=repr)
+    assert got_rows == sorted(map(tuple, chained.collect()), key=repr)
+
+
+def test_fused_lookup_rejects_temporary_column_clash(spark):
+    df = spark.createDataFrame(ROWS, SCHEMA).withColumn("__pr_side", F.lit(1))
+    with pytest.raises(ValueError, match="__pr_side"):
+        window_aggregate(df, _plan("median", "ascending"))

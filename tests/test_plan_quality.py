@@ -74,19 +74,25 @@ def test_discrete_percentile_uses_rank_join_not_arrays(spark, sf_dir):
     assert "collect_list" not in plan, "rank-join rewrite regressed"
 
 
-def test_percentile_rank_lookup_is_two_keyed_shuffles(spark, sf_dir):
-    """The union + running-last-value lookup must keep its shape: exactly
-    two hash exchanges (enriched window + union window), both keyed on the
-    partition columns only — no join operator, no rank-keyed exchange, no
-    per-row buffers."""
+def test_percentile_rank_lookup_is_one_keyed_shuffle(spark, sf_dir):
+    """The fused generator + running-last-value lookup must keep its
+    shape: exactly ONE hash exchange, keyed on the partition columns
+    only (the count/rank window's; the generator keeps its partitioning),
+    one last(...) lookup window per aggregate — no join operator, no
+    rank-keyed exchange, no per-row buffers."""
     import re
 
     for name in ("w_median_running", "w_discrete_percentile"):
         plan = _plan(SUITE[name].build(spark, sf_dir))
         keys = re.findall(r"Exchange hashpartitioning\(([^)]*)", plan)
-        assert len(keys) == 2, f"{name}: {len(keys)} exchanges"
-        for k in keys:
-            assert "__pr_rk" not in k, f"{name}: rank-keyed exchange: {k}"
+        assert len(keys) == 1, f"{name}: {len(keys)} exchanges"
+        assert keys[0].startswith("l_suppkey#"), f"{name}: keyed {keys[0]}"
+        assert "__pr_rk" not in keys[0], f"{name}: rank-keyed exchange"
+        lookups = [
+            line for line in plan.splitlines()
+            if re.match(r"\W*Window \[", line) and "last(" in line
+        ]
+        assert len(lookups) == 1, f"{name}: {len(lookups)} lookup windows"
         for bad in ("SortMergeJoin", "BroadcastHashJoin", "collect_list",
                     "percentile("):
             assert bad not in plan, f"{name}: {bad} crept back in"

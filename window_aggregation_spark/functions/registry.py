@@ -273,8 +273,10 @@ def _count_distinct(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Colum
     This composition holds O(frame) per row — fine for small frames; for
     running frames :func:`..operators.window_aggregation.window_aggregate`
     rewrites it by default into the flat-memory first-occurrence-flag +
-    running-sum plan (same pattern as the percentile rank-lookup; results
-    bit-identical, pinned by tests/test_count_distinct.py)."""
+    running-sum plan (``_count_distinct_flag_sum``; the same flat-memory
+    trade as the percentiles' fused rank lookup,
+    ``_percentile_rank_lookup``; results bit-identical, pinned by
+    tests/test_count_distinct.py)."""
     return F.size(F.array_distinct(F.collect_list(F.col(agg.field)).over(w)))
 
 

@@ -16,6 +16,12 @@ Semantics re-expressed from the reference plugin (O1,
   declared output types (float for percent_rank, input-type passthrough for
   lead/lag/first/last/accumulate/discrete_percentile) are produced with
   explicit casts at the boundary.
+- MEDIAN / DISCRETE_PERCENTILE over running frames ordered by their own
+  field take the flat-memory rank lookup by default
+  (:func:`_percentile_rank_lookup`): a run of consecutive such aggregates
+  costs one count/rank window, one request/value generator and one
+  last-value lookup window each, all over the plan's single partition-key
+  exchange.
 - Optional ``num_partitions`` repartition (reference O4) — exposed, but AQE
   (``spark.sql.adaptive.enabled``) usually picks better partition counts;
   leave it unset unless a downstream stage needs a specific layout.
@@ -218,12 +224,14 @@ def window_aggregate(
     ``percentile_strategy`` picks the physical plan for MEDIAN /
     DISCRETE_PERCENTILE over running frames ordered by their own field:
 
-    - ``"rank_lookup"`` (default): the O(1)/row union + rank-lookup plan —
-      two key-only shuffles, flat memory, the shape that survives hot
-      partitions at 100 TB.
+    - ``"rank_lookup"`` (default): the O(1)/row fused rank lookup —
+      consecutive percentiles over the same field share one count/rank
+      window and one request/value generator, then take one last-value
+      lookup window each; one key-only shuffle, flat memory, the shape
+      that survives hot partitions at 100 TB.
     - ``"one_pass"``: the single-WindowExec composition (Hive
-      ``percentile`` / collect_list) — one shuffle, but O(frame) memory
-      per row. An EXPLICIT caller assertion that frames stay small
+      ``percentile`` / collect_list) — also one shuffle, but O(frame)
+      memory per row. An EXPLICIT caller assertion that frames stay small
       (thousands of rows, not millions); deliberately not a silent
       stats-based guess, because plan stability matters more than a
       micro-win when the estimate is wrong.
@@ -284,19 +292,26 @@ def window_aggregate(
     w = plan.spec.to_spark()
 
     out = df
+    # consecutive rank-lookup aggregates, fused into ONE lookup plan
+    group: list = []
     for agg in plan.aggregates:
         fdef = lookup(agg.function)
         declared = _output_field_type(agg, df.schema)
         if (
             percentile_strategy == "rank_lookup"
-            and fdef.name in _RANK_JOIN_FUNCTIONS
-            and _rank_join_direction(plan.spec, agg) is not None
+            and fdef.name in _RANK_LOOKUP_FUNCTIONS
+            and _rank_lookup_applies(plan.spec, agg)
         ):
-            out = _percentile_rank_join(
-                out, plan.spec, agg, declared,
-                _rank_join_direction(plan.spec, agg),
-            )
+            # (aliases are unique within a plan: WindowPlan rejects repeats)
+            group.append((agg, declared))
+            if agg.alias == agg.field or agg.alias in plan.spec.partition_by:
+                # later aggregates must read the replaced column
+                out = _percentile_rank_lookup(out, plan.spec, group)
+                group = []
             continue
+        if group:
+            out = _percentile_rank_lookup(out, plan.spec, group)
+            group = []
         if (
             percentile_strategy == "rank_lookup"
             and fdef.name == "count_distinct"
@@ -308,6 +323,8 @@ def window_aggregate(
         if declared is not None:
             col = col.cast(declared)
         out = out.withColumn(agg.alias, col)
+    if group:
+        out = _percentile_rank_lookup(out, plan.spec, group)
 
     if plan.declared_schema is not None:
         # project/reorder to the user-pinned output schema (reference O3,
@@ -389,11 +406,11 @@ def _group_plans_by_partition_keys(plans: "list[WindowPlan]") -> "list[WindowPla
     return sorted(plans, key=lambda p: order[tuple(p.spec.partition_by)])
 
 
-# Percentile-family functions with an O(1)/row rank-join rewrite for the
+# Percentile-family functions with an O(1)/row rank-lookup rewrite for the
 # running-frame-ordered-by-own-field shape. (CONTINUOUS_PERCENTILE is
 # partition-only in the reference surface — ordering NOT_SUPPORTED — so its
 # running shape cannot occur through a validated plan.)
-_RANK_JOIN_FUNCTIONS = ("discrete_percentile", "median")
+_RANK_LOOKUP_FUNCTIONS = ("discrete_percentile", "median")
 
 
 def _count_distinct_flag_sum(
@@ -415,7 +432,8 @@ def _count_distinct_flag_sum(
 
     Cost: two WindowExecs — the flag window shuffles on
     (partition keys, field), the sum reuses the plan's own window. Same
-    ``percentile_strategy`` knob as the rank-lookup percentiles:
+    ``percentile_strategy`` knob as the rank-lookup percentiles
+    (:func:`_percentile_rank_lookup`):
     ``"one_pass"`` keeps the single-WindowExec composition as an explicit
     small-frame assertion. Results are bit-identical either way
     (tests/test_count_distinct.py pins it)."""
@@ -440,176 +458,166 @@ def _count_distinct_flag_sum(
     ).drop(flag_col)
 
 
-def _rank_join_direction(spec, agg: AggregateDef):
-    """The order :class:`Direction` when the rank-join rewrite applies —
-    default frame, ordered by exactly the aggregated field (so each row's
-    frame is a sorted prefix — ascending — or suffix — descending — of the
-    partition's value multiset) — else None."""
-    from window_aggregation_spark.spec import FrameType
-
-    if (
+def _rank_lookup_applies(spec, agg: AggregateDef) -> bool:
+    """Whether the rank-lookup rewrite applies: default frame, ordered by
+    exactly the aggregated field (so each row's frame is a sorted prefix —
+    ascending — or suffix — descending — of the partition's value
+    multiset)."""
+    return (
         spec.frame_type is FrameType.NONE
         and len(spec.order_by) == 1
         and spec.order_by[0].field == agg.field
-    ):
-        return spec.order_by[0].direction
-    return None
+    )
 
 
-def _percentile_rank_join(
+def _percentile_rank_lookup(
     df: DataFrame,
     spec,
-    agg: AggregateDef,
-    declared: T.DataType | None,
-    direction,
+    group: "list[tuple[AggregateDef, T.DataType | None]]",
 ) -> DataFrame:
-    """Percentile over a running frame ordered by the aggregated field,
+    """Percentiles over a running frame ordered by the aggregated field,
     without materializing per-row arrays or per-row sort buffers.
 
+    ``group`` is a run of consecutive MEDIAN / DISCRETE_PERCENTILE
+    aggregates (with their declared output types) over the same field,
+    partition keys and direction; the whole run costs one plan.
+
     When the frame is the sorted prefix (ascending) of the partition, the
-    k-th smallest frame value is simply the partition row with
-    row_number == k under the same ordering; descending is symmetric — the
-    k-th smallest of a sorted SUFFIX of size n is the row with descending
-    row_number == n - k + 1. So: one window pass for the running non-null
-    count n (RANGE frame — peers included, which is what makes the row_
-    number set equal the frame multiset even under ties), one for
-    row_number, then an equi-join on (partition keys, rank). Two shuffles
-    on the partition keys and O(1) memory per row — versus the general
-    composition's O(frame) per row (collect_list for DISCRETE_PERCENTILE,
-    Hive percentile's accumulate-and-sort for MEDIAN/CONTINUOUS —
-    measured ~8x faster at 600-row frames, and the gap grows with frame
-    size; at 100 TB the O(frame) versions die on hot partitions while
+    k-th smallest frame value is simply the partition row with rank k
+    under the same ordering; descending is symmetric — the k-th smallest
+    of a sorted SUFFIX of size n is the row with descending rank
+    n - k + 1. The RANGE running non-null count n (peers included, which
+    is what makes the rank set equal the frame multiset even under ties)
+    gives each row the rank it needs; the ROWS running non-null count
+    gives each non-null value its own rank 1..N. O(1) memory per row —
+    versus the general composition's O(frame) per row (collect_list for
+    DISCRETE_PERCENTILE, Hive percentile's accumulate-and-sort for
+    MEDIAN — at 100 TB the O(frame) versions die on hot partitions while
     this stays flat).
 
-    DISCRETE_PERCENTILE needs one rank (k = max(ceil(p*n), 1)).
-    MEDIAN/CONTINUOUS_PERCENTILE interpolate between two adjacent ranks
-    (0-based pos = p*(n-1), lo = floor(pos), hi = ceil(pos), result =
-    v_lo + (pos - lo) * (v_hi - v_lo) — Hive/Spark `percentile`
-    arithmetic exactly); since hi is always lo or lo+1, the value side
-    carries its ADJACENT value (lead/lag in the same window pass) and the
-    interpolation still costs nothing extra.
+    DISCRETE_PERCENTILE needs one rank (k = max(ceil(p*n), 1)). MEDIAN
+    interpolates between two adjacent ranks (0-based pos = p*(n-1),
+    lo = floor(pos), hi = ceil(pos), result = v_lo + (pos - lo) *
+    (v_hi - v_lo) — Hive/Spark `percentile` arithmetic exactly); since hi
+    is always lo or lo+1, each value carries its ADJACENT value (lead, or
+    lag descending) and the interpolation costs nothing extra.
 
-    The rank LOOKUP is not an equi-join (that shape costs four exchanges:
-    two windows plus re-hashing both join sides on (keys, rank)). It is
-    the same union + running-last-value trick as :mod:`.asof_join`:
+    The rank LOOKUP is the union + running-last-value trick of
+    :mod:`.asof_join`, with the union done by a generator instead of a
+    second branch:
 
-    - "request" rows (every input row, carrying its needed rank) and
-      "value" rows (one per non-null field value, carrying rank -> value)
-      are unioned and windowed ONCE per partition key, ordered by
-      (rank, side). Every rank 1..n exists exactly once on the value
-      side, so ``last_value(ignoreNulls)`` at a request row is exactly
-      the value at its requested rank.
-    - both union branches hash-partition on the bare keys over the SAME
-      scan, so Catalyst's ReuseExchange ships the input once; the final
-      window re-partitions the union on the same keys. Two shuffle
-      writes total (vs four), no shuffle keyed on rank, and still O(1)
-      memory per row — the plan that survives hot partitions at 100 TB.
+    - ONE window pass over the plan's only exchange (partition keys)
+      computes n, the value rank and the adjacent value together.
+    - ONE ``inline`` turns every row into a "request" row (its rank per
+      aggregate) plus, when the field is non-null, a "value" row
+      (rank -> value). The input columns stay OUTER columns of the
+      generator, so the partition keys keep their attributes and the
+      window pass's hash partitioning carries through: no second scan,
+      no second exchange.
+    - per aggregate, ``last_value(ignoreNulls)`` ordered by (rank, side)
+      within the partition keys: every rank 1..N exists exactly once on
+      the value side, so at a request row it is exactly the value at the
+      requested rank. Each adds an in-partition sort, not a shuffle.
     """
     from pyspark.sql import Window
 
     from window_aggregation_spark.spec import Direction
-    from window_aggregation_spark.functions.registry import lookup as _lookup
 
-    fname = _lookup(agg.function).name
-    interpolated = fname != "discrete_percentile"
-    p = 0.5 if fname == "median" else float(agg.args[0])
     keys = list(spec.partition_by)
-    field = agg.field
-    desc = direction is Direction.DESCENDING
+    field = group[0][0].field
+    desc = spec.order_by[0].direction is Direction.DESCENDING
     ftype = df.schema[field].dataType
-
-    # ---- request side: every row + the frame rank it needs ---------------
-    cnt = F.count(field).over(spec.to_spark())
-    requests = df.withColumn("__pr_cnt", cnt)
-    cntc = F.col("__pr_cnt")
-    if interpolated:
-        # 0-based position, exactly Spark's `percentile` arithmetic
-        # (p * (n-1), floor, fractional remainder) so results are
-        # bit-identical to the general window path
-        pos = F.lit(p) * (cntc - 1).cast("double")
-        lo = F.floor(pos).cast("long")
-        rank = lo + 1
-        frac = pos - lo
-    else:
-        rank = F.greatest(F.ceil(F.lit(p) * cntc), F.lit(1)).cast("long")
-        frac = F.lit(0.0)
-    # "k-th smallest of the frame" as a row_number under the partition's
-    # own order direction: descending frames are value SUFFIXES, so the
-    # k-th smallest of a frame holding the top-n values is desc-rank
-    # n - k + 1. Null rank when the frame has no non-null values -> null.
-    oriented = (cntc - rank + 1) if desc else rank
-    requests = requests.select(
-        *df.columns,
-        F.when(cntc > 0, oriented).alias("__pr_rk"),
-        frac.alias("__pr_frac"),
-        F.lit(1).alias("__pr_side"),
-        F.lit(None).cast(ftype).alias("__pr_val"),
-        F.lit(None).cast(ftype).alias("__pr_adj"),
-    )
-
-    # ---- value side: rank -> value (+ adjacent value) --------------------
-    order = F.col(field).desc() if desc else F.col(field).asc()
-    wrn = Window.partitionBy(*keys).orderBy(order)
-    # the (k+1)-th smallest sits one row_number AWAY in the partition
-    # order: +1 ascending, -1 descending (row_number grows as values
-    # shrink). null only at rank n — unused there, since hi > lo
-    # requires lo < n, so frac > 0 never requests the edge.
-    adjacent = F.lag(field).over(wrn) if desc else F.lead(field).over(wrn)
-    # rank among NON-NULL values via a ROWS-frame count (each non-null row
-    # increments by one -> distinct ranks 1..n even under ties; a tie
-    # group's arbitrary internal order is invisible since peers share the
-    # value). The null filter sits ABOVE this window, not below it, so
-    # both union branches hash-partition the identical scan and
-    # ReuseExchange ships the input once.
-    rnn = F.count(field).over(
-        wrn.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    values = df.select(
-        *[
-            F.col(c) if c in keys
-            else F.lit(None).cast(df.schema[c].dataType).alias(c)
-            for c in df.columns
-        ],
-        rnn.cast("long").alias("__pr_rk"),
-        F.lit(0.0).alias("__pr_frac"),
-        F.lit(0).alias("__pr_side"),
-        F.col(field).alias("__pr_val"),
-        adjacent.alias("__pr_adj"),
-    ).where(F.col("__pr_val").isNotNull())
-
-    # ---- rank lookup: one window over the union --------------------------
-    unioned = requests.unionByName(values)
-    wq = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__pr_rk").asc_nulls_first(), F.col("__pr_side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    resolved = (
-        unioned.withColumn("__pr_mval", F.last("__pr_val", ignorenulls=True).over(wq))
-        .withColumn("__pr_madj", F.last("__pr_adj", ignorenulls=True).over(wq))
-        .where(F.col("__pr_side") == 1)
-    )
-
-    if interpolated:
-        v_lo = F.col("__pr_mval").cast("double")
-        v_hi = F.when(
-            F.col("__pr_frac") > 0, F.col("__pr_madj").cast("double")
-        ).otherwise(v_lo)
-        val = (v_lo + F.col("__pr_frac") * (v_hi - v_lo)).cast(
-            declared if declared is not None else T.DoubleType()
+    # MEDIAN interpolates; DISCRETE_PERCENTILE reads one rank
+    interp = [lookup(a.function).name == "median" for a, _ in group]
+    clash = [c for c in df.columns if c.startswith("__pr_")]
+    if clash:
+        raise ValueError(
+            f"input columns {clash} collide with the temporary '__pr_' prefix"
         )
-    else:
-        val = F.col("__pr_mval")
-        if declared is not None:
-            val = val.cast(declared)
 
-    result_cols = [
-        val.alias(agg.alias) if c == agg.alias else F.col(c)
-        for c in df.columns
-    ]
-    if agg.alias not in df.columns:
-        result_cols.append(val.alias(agg.alias))
-    return resolved.select(*result_cols)
+    # ---- one window pass: request count, value rank, adjacent value ------
+    w = spec.to_spark()
+    n = F.count(field).over(w)
+    # ROWS-frame count: each non-null row increments by one -> distinct
+    # ranks 1..N even under ties (a tie group's arbitrary internal order is
+    # invisible since peers share the value)
+    vrank = F.count(field).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    # the (k+1)-th smallest sits one row AWAY in the partition order: +1
+    # ascending, -1 descending. null only at rank N — unused there, since
+    # hi > lo requires lo < n.
+    adjacent = (F.lag if desc else F.lead)(field).over(w)
+    counted = df.select(
+        *df.columns,
+        n.alias("__pr_n"),
+        vrank.alias("__pr_vrank"),
+        adjacent.alias("__pr_adj"),
+    )
+
+    # ---- one generator: request row + (non-null) value row per input row
+    nc = F.col("__pr_n")
+    request, value = [F.lit(1).alias("__pr_side")], [F.lit(0).alias("__pr_side")]
+    for j, ((agg, _), interpolated) in enumerate(zip(group, interp)):
+        if interpolated:
+            # 0-based position, exactly Spark's `percentile` arithmetic
+            pos = F.lit(0.5) * (nc - 1).cast("double")
+            lo = F.floor(pos).cast("long")
+            rank = lo + 1
+            request.append((pos - lo).alias(f"__pr_frac{j}"))
+            value.append(F.lit(0.0).alias(f"__pr_frac{j}"))
+        else:
+            p = float(agg.args[0])
+            rank = F.greatest(F.ceil(F.lit(p) * nc), F.lit(1)).cast("long")
+        # null rank when the frame holds no non-null value -> null result
+        oriented = (nc - rank + 1) if desc else rank
+        request.append(F.when(nc > 0, oriented).alias(f"__pr_rk{j}"))
+        value.append(F.col("__pr_vrank").alias(f"__pr_rk{j}"))
+    request.append(F.lit(None).cast(ftype).alias("__pr_val"))
+    value.append(F.col(field).alias("__pr_val"))
+    if any(interp):
+        request.append(F.lit(None).cast(ftype).alias("__pr_adj"))
+        value.append(F.col("__pr_adj").alias("__pr_adj"))
+    rows = counted.select(
+        *df.columns,
+        F.inline(F.array(
+            F.struct(*request),
+            F.when(F.col(field).isNotNull(), F.struct(*value)),
+        )),
+    )
+
+    # ---- rank lookup: one last(ignoreNulls) window per aggregate ----------
+    lookups, results = [], {}
+    for j, ((agg, declared), interpolated) in enumerate(zip(group, interp)):
+        wq = (
+            Window.partitionBy(*keys)
+            .orderBy(F.col(f"__pr_rk{j}").asc_nulls_first(), F.col("__pr_side"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        lookups.append(
+            F.last("__pr_val", ignorenulls=True).over(wq).alias(f"__pr_mv{j}")
+        )
+        if interpolated:
+            lookups.append(
+                F.last("__pr_adj", ignorenulls=True).over(wq).alias(f"__pr_ma{j}")
+            )
+            frac = F.col(f"__pr_frac{j}")
+            v_lo = F.col(f"__pr_mv{j}").cast("double")
+            v_hi = F.when(
+                frac > 0, F.col(f"__pr_ma{j}").cast("double")
+            ).otherwise(v_lo)
+            val = (v_lo + frac * (v_hi - v_lo)).cast(
+                declared if declared is not None else T.DoubleType()
+            )
+        else:
+            val = F.col(f"__pr_mv{j}")
+            if declared is not None:
+                val = val.cast(declared)
+        results[agg.alias] = val.alias(agg.alias)
+    resolved = rows.select("*", *lookups).where(F.col("__pr_side") == 1)
+    return resolved.select(
+        *[results.pop(c, c) for c in df.columns], *results.values()
+    )
 
 
 def derive_output_schema(
