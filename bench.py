@@ -1860,99 +1860,53 @@ def main() -> None:
         "text_index": {"build_sec": tix_build_sec},
         "sentence_hash_store": {"build_sec": spanhash_build_sec},
     }
-    if os.environ.get("SPARK_GRAFT_MJPEG_PROBE", "1") != "0":
-        sections["mjpeg_decode_probe"] = mjpeg_decode_probe()
-    if os.environ.get("SPARK_GRAFT_FRAME_PROBE", "1") != "0":
-        sections["frame_probe"] = frame_scaling_probe(spark, sf_dir)
-    if os.environ.get("SPARK_GRAFT_SKEW_PROBE", "1") != "0":
-        sections["skew_probe"] = skew_probe(spark, sf_dir)
-    if os.environ.get("SPARK_GRAFT_STREAM_PROBE", "1") != "0":
-        sections["streaming_probe"] = streaming_probe(spark, sf_dir)
-    if os.environ.get("SPARK_GRAFT_STREAM_STATE_PROBE", "1") != "0":
+    # (section key, env var that disables it with "0", probe, sf0.1 only).
+    # Probes are evidence, never the headline's problem: a failing probe
+    # records {"err": ...} and the run goes on (a scaled-fixture problem
+    # in sf1 must not break the headline JSON line either).
+    probes = [
+        ("mjpeg_decode_probe", "SPARK_GRAFT_MJPEG_PROBE",
+         mjpeg_decode_probe, False),
+        ("frame_probe", "SPARK_GRAFT_FRAME_PROBE",
+         lambda: frame_scaling_probe(spark, sf_dir), False),
+        ("skew_probe", "SPARK_GRAFT_SKEW_PROBE",
+         lambda: skew_probe(spark, sf_dir), False),
+        ("streaming_probe", "SPARK_GRAFT_STREAM_PROBE",
+         lambda: streaming_probe(spark, sf_dir), False),
+        ("stream_state_probe", "SPARK_GRAFT_STREAM_STATE_PROBE",
+         lambda: stream_state_probe(spark, sf_dir), False),
+        ("hof_materialization_probe", "SPARK_GRAFT_HOF_PROBE",
+         lambda: hof_materialization_probe(spark, sf_dir), False),
+        ("prune_dup_lines_strategy_probe", "SPARK_GRAFT_PRUNE_PROBE",
+         lambda: prune_dup_lines_strategy_probe(spark), False),
+        ("span_store_probe", "SPARK_GRAFT_SPAN_STORE_PROBE",
+         lambda: span_store_probe(spark, sf_dir), False),
+        ("ann_recall_probe", "SPARK_GRAFT_ANN_RECALL_PROBE",
+         lambda: ann_recall_probe(spark, sf_dir), False),
+        ("span_join_strategy_probe", "SPARK_GRAFT_SPAN_STRATEGY_PROBE",
+         lambda: span_join_strategy_probe(spark, sf_dir), False),
+        ("span_fold_probe", "SPARK_GRAFT_SPAN_FOLD_PROBE",
+         lambda: span_fold_probe(spark, sf_dir), False),
+        ("hybrid_cost_probe", "SPARK_GRAFT_HYBRID_COST_PROBE",
+         lambda: hybrid_cost_probe(spark, sf_dir), True),
+        ("layout_probe", "SPARK_GRAFT_LAYOUT_PROBE",
+         lambda: layout_probe(spark, sf_dir), False),
+        ("graph_skew_probe", "SPARK_GRAFT_GRAPH_PROBE",
+         lambda: graph_skew_probe(spark), False),
+        ("cc_scale_probe", "SPARK_GRAFT_CC_PROBE",
+         lambda: cc_scale_probe(spark, sf_dir), True),
+        ("spread_scale_probe", "SPARK_GRAFT_SPREAD_PROBE",
+         lambda: spread_scale_probe(spark, sf_dir), True),
+        ("sf1", "SPARK_GRAFT_SF1",
+         lambda: sf1_section(spark, sf_dir, timings), True),
+    ]
+    for key, env, probe, sf01_only in probes:
+        if (sf01_only and sf != "0.1") or os.environ.get(env, "1") == "0":
+            continue
         try:
-            sections["stream_state_probe"] = stream_state_probe(spark, sf_dir)
+            sections[key] = probe()
         except Exception as e:
-            sections["stream_state_probe"] = {
-                "err": f"{type(e).__name__}: {e}"[:300]
-            }
-    if os.environ.get("SPARK_GRAFT_HOF_PROBE", "1") != "0":
-        try:
-            sections["hof_materialization_probe"] = (
-                hof_materialization_probe(spark, sf_dir)
-            )
-        except Exception as e:
-            sections["hof_materialization_probe"] = {
-                "err": f"{type(e).__name__}: {e}"[:300]
-            }
-    if os.environ.get("SPARK_GRAFT_PRUNE_PROBE", "1") != "0":
-        try:
-            sections["prune_dup_lines_strategy_probe"] = (
-                prune_dup_lines_strategy_probe(spark)
-            )
-        except Exception as e:
-            sections["prune_dup_lines_strategy_probe"] = {
-                "err": f"{type(e).__name__}: {e}"[:300]
-            }
-    if os.environ.get("SPARK_GRAFT_SPAN_STORE_PROBE", "1") != "0":
-        try:
-            sections["span_store_probe"] = span_store_probe(spark, sf_dir)
-        except Exception as e:
-            sections["span_store_probe"] = {
-                "err": f"{type(e).__name__}: {e}"[:300]
-            }
-    if os.environ.get("SPARK_GRAFT_ANN_RECALL_PROBE", "1") != "0":
-        try:
-            sections["ann_recall_probe"] = ann_recall_probe(spark, sf_dir)
-        except Exception as e:
-            sections["ann_recall_probe"] = {
-                "err": f"{type(e).__name__}: {e}"[:300]
-            }
-    if os.environ.get("SPARK_GRAFT_SPAN_STRATEGY_PROBE", "1") != "0":
-        try:
-            sections["span_join_strategy_probe"] = span_join_strategy_probe(
-                spark, sf_dir
-            )
-        except Exception as e:
-            sections["span_join_strategy_probe"] = {
-                "err": f"{type(e).__name__}: {e}"[:300]
-            }
-    if os.environ.get("SPARK_GRAFT_SPAN_FOLD_PROBE", "1") != "0":
-        try:
-            sections["span_fold_probe"] = span_fold_probe(spark, sf_dir)
-        except Exception as e:
-            sections["span_fold_probe"] = {
-                "err": f"{type(e).__name__}: {e}"[:300]
-            }
-    if sf == "0.1" and os.environ.get(
-            "SPARK_GRAFT_HYBRID_COST_PROBE", "1") != "0":
-        try:
-            sections["hybrid_cost_probe"] = hybrid_cost_probe(spark, sf_dir)
-        except Exception as e:
-            sections["hybrid_cost_probe"] = {
-                "err": f"{type(e).__name__}: {e}"[:300]
-            }
-    if os.environ.get("SPARK_GRAFT_LAYOUT_PROBE", "1") != "0":
-        sections["layout_probe"] = layout_probe(spark, sf_dir)
-    if os.environ.get("SPARK_GRAFT_GRAPH_PROBE", "1") != "0":
-        sections["graph_skew_probe"] = graph_skew_probe(spark)
-    if sf == "0.1" and os.environ.get("SPARK_GRAFT_CC_PROBE", "1") != "0":
-        try:
-            sections["cc_scale_probe"] = cc_scale_probe(spark, sf_dir)
-        except Exception as e:  # evidence, never the headline's problem
-            sections["cc_scale_probe"] = {"err": f"{type(e).__name__}: {e}"[:300]}
-    if sf == "0.1" and os.environ.get("SPARK_GRAFT_SPREAD_PROBE", "1") != "0":
-        try:
-            sections["spread_scale_probe"] = spread_scale_probe(spark, sf_dir)
-        except Exception as e:
-            sections["spread_scale_probe"] = {
-                "err": f"{type(e).__name__}: {e}"[:300]
-            }
-    if sf == "0.1" and os.environ.get("SPARK_GRAFT_SF1", "1") != "0":
-        try:
-            sections["sf1"] = sf1_section(spark, sf_dir, timings)
-        except Exception as e:  # sf1 is evidence, not the gate — never
-            sections["sf1"] = {"err": f"{type(e).__name__}: {e}"[:300]}
-            # let a scaled-fixture problem break the headline JSON line
+            sections[key] = {"err": f"{type(e).__name__}: {e}"[:300]}
 
     # The driver records a BOUNDED TAIL of stdout and parses the last JSON
     # line. Round 4 lost the headline because probes+sf1 inlined into ONE

@@ -768,16 +768,91 @@ def test_gc_grace_period_spares_fresh_generations(spark, tmp_path):
     assert "postings" in removed and "postings_v9" in removed["postings"]
 
 
-def test_compact_raises_on_concurrent_manifest_flip(spark, tmp_path):
-    """The expected= guard on ALL compact paths: a writer that flips the
-    manifest between a compact's read and its publish must make the
-    compact raise, not silently erase the other writer's generation."""
-    docs = _sig_corpus(spark)
+def _text_add(spark, tmp_path):
+    path = str(tmp_path / "ix")
+    docs = _corpus(spark)
+    build_text_index(docs.where("doc_id <= 'd4'"), path, n_buckets=4)
+    return path, lambda: text_index_add(
+        spark, path, docs.where("doc_id > 'd4'")
+    )
+
+
+def _text_compact(spark, tmp_path):
+    path = str(tmp_path / "ix")
+    build_text_index(_corpus(spark), path, n_buckets=4)
+    text_index_delete(spark, path, _ids(spark, "d1"))
+    return path, lambda: text_index_compact(spark, path)
+
+
+def _ivf_add(spark, tmp_path):
+    path = str(tmp_path / "ivf")
+    sim.build_ivf_index(_vectors(spark, 24), path, n_centroids=4)
+    return path, lambda: sim.ivf_index_add(
+        spark, path, _vectors(spark, 32).where("vec_id >= 24")
+    )
+
+
+def _ivf_compact(spark, tmp_path):
+    path = str(tmp_path / "ivf")
+    sim.build_ivf_index(_vectors(spark, 24), path, n_centroids=4)
+    sim.ivf_index_delete(
+        spark, path, spark.createDataFrame([(3,)], "vec_id long")
+    )
+    return path, lambda: sim.ivf_index_compact(spark, path)
+
+
+def _signature_compact(spark, tmp_path):
     path = str(tmp_path / "store")
-    dd.build_signature_store(docs, "doc_id", path)
+    dd.build_signature_store(_sig_corpus(spark), "doc_id", path)
     dd.signature_store_delete(
         spark, path, spark.createDataFrame([(2,)], "doc_id long")
     )
+    return path, lambda: dd.signature_store_compact(spark, path)
+
+
+def _signature_build_pairs(spark, tmp_path):
+    path = str(tmp_path / "store")
+    docs = _sig_corpus(spark)
+    dd.build_signature_store(docs, "doc_id", path)
+    return path, lambda: dd.signature_store_build_pairs(
+        docs, "doc_id", path, threshold=0.3
+    )
+
+
+def _span_compact(spark, tmp_path):
+    path = str(tmp_path / "spans")
+    docs = spark.createDataFrame(
+        [
+            (1, "Corpus doc opens. And more here. Also this one."),
+            (2, "Batch text arrives. With new words. Exactly so."),
+        ],
+        "doc_id long, text string",
+    )
+    dd.build_sentence_hash_store(docs.where("doc_id = 1"), "doc_id", path)
+    dd.sentence_hash_store_add(
+        docs.where("doc_id = 2"), "doc_id", path, batch_id=0, reload=False
+    )
+    return path, lambda: dd.sentence_hash_store_compact(spark, path)
+
+
+_PUBLISHING_MUTATIONS = {
+    "text_add": _text_add,
+    "text_compact": _text_compact,
+    "ivf_add": _ivf_add,
+    "ivf_compact": _ivf_compact,
+    "signature_compact": _signature_compact,
+    "signature_build_pairs": _signature_build_pairs,
+    "span_compact": _span_compact,
+}
+
+
+@pytest.mark.parametrize("mutation", sorted(_PUBLISHING_MUTATIONS))
+def test_compact_raises_on_concurrent_manifest_flip(spark, tmp_path, mutation):
+    """The expected= guard on EVERY publishing mutation: a writer that
+    flips the manifest between the mutation's read and its publish must
+    make the mutation raise, not silently erase the other writer's
+    generation."""
+    path, mutate = _PUBLISHING_MUTATIONS[mutation](spark, tmp_path)
     real_write = sm.write_manifest
     calls = {}
 
@@ -788,12 +863,73 @@ def test_compact_raises_on_concurrent_manifest_flip(spark, tmp_path):
             real_write(p, {**sm.read_manifest(p, {}), "intruder": "g1"})
         return real_write(p, mapping, expected=expected)
 
-    # dedup re-imports the module object per call, so patching the module
-    # attribute is seen by the compact path
+    # every store publishes through store_manifest.publish, which looks
+    # write_manifest up on the module, so patching the attribute is seen
     sm_patched = pytest.MonkeyPatch()
     sm_patched.setattr(sm, "write_manifest", hijack)
     try:
         with pytest.raises(RuntimeError, match="another.*writer|changed"):
-            dd.signature_store_compact(spark, path)
+            mutate()
     finally:
         sm_patched.undo()
+    # the intruder's generation survived
+    assert sm.read_manifest(path, {})["intruder"] == "g1"
+
+
+def test_ivf_build_rejects_append(spark, tmp_path):
+    """build_ivf_index refuses mode='append' like the other builders: an
+    append build stacked a second codebook and a second copy of every
+    list row next to the first."""
+    corpus = _vectors(spark).where("vec_id >= 8")
+    path = str(tmp_path / "ivf")
+    built = sim.build_ivf_index(corpus, path, n_centroids=4)
+    with pytest.raises(ValueError, match="ivf_index_add"):
+        sim.build_ivf_index(corpus, path, n_centroids=4, mode="append")
+    idx = sim.load_ivf_index(spark, path)
+    assert idx.centroids.shape == built.centroids.shape == (4, 8)
+    assert idx.lists.count() == corpus.count()
+
+
+def test_ivf_add_is_atomic_under_crash(spark, tmp_path):
+    """The IVF twin of test_add_is_atomic_under_crash: an ivf_index_add
+    that dies after writing its batch directory but before the manifest
+    flip leaves the store serving exactly the pre-add index; the orphaned
+    lists_v1 is collectable garbage, and a real add afterwards equals a
+    one-shot build with the same codebook."""
+    vectors = _vectors(spark)
+    queries = vectors.where("vec_id < 8")
+    first = vectors.where("vec_id >= 8 and vec_id < 24")
+    second = vectors.where("vec_id >= 24")
+    path = str(tmp_path / "ivf")
+    before = sim.build_ivf_index(first, path, n_centroids=4)
+    rows_before = _topk_rows(before, queries)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crashed before the flip")
+
+    mp = pytest.MonkeyPatch()
+    mp.setattr(sm, "publish", crash)
+    try:
+        with pytest.raises(RuntimeError, match="crashed"):
+            sim.ivf_index_add(spark, path, second)
+    finally:
+        mp.undo()
+    assert os.path.isdir(f"{path}/lists_v1")
+    after_crash = sim.load_ivf_index(spark, path)
+    assert after_crash.lists.count() == first.count()
+    assert _topk_rows(after_crash, queries) == rows_before
+    assert sim.ivf_index_gc(path, grace_seconds=0) == {"lists": ["lists_v1"]}
+    # an empty batch publishes nothing
+    empty = sim.ivf_index_add(spark, path, second.where("vec_id < 0"))
+    assert empty.lists.count() == first.count()
+    assert sm.read_manifest(path, sim._IVF_COMPONENTS)["lists"] == "lists"
+    # a real add is one flip onto a ";"-joined list; compact collapses it
+    idx = sim.ivf_index_add(spark, path, second)
+    assert len(sm.split_dirs(sm.read_manifest(path, {})["lists"])) == 2
+    want = sim.build_ivf_index(
+        vectors.where("vec_id >= 8"), str(tmp_path / "rb"), n_centroids=4
+    )
+    assert _topk_rows(idx, queries) == _topk_rows(want, queries)
+    compacted = sim.ivf_index_compact(spark, path)
+    assert len(sm.split_dirs(sm.read_manifest(path, {})["lists"])) == 1
+    assert _topk_rows(compacted, queries) == _topk_rows(want, queries)

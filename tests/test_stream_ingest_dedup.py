@@ -292,5 +292,5 @@ def test_exclude_fold_epoch_reconstructs_prefold_state(spark, sf_dir, tmp_path):
         f"{store_path}/sigs_folds/batch_id=4"
     )
     full = dd.load_signature_store(spark, store_path)
-    without = dd.load_signature_store(spark, store_path, exclude_fold_epoch=4)
+    without = dd.load_signature_store(spark, store_path, exclude_folds_from=4)
     assert full.sigs.count() == without.sigs.count() + batch.count()

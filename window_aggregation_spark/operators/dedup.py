@@ -32,12 +32,14 @@ lets the driver oracle-check them against DuckDB instead of rows-only.
 
 from __future__ import annotations
 
+import json
 import random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from window_aggregation_spark.operators.text import tokens
+from window_aggregation_spark.sources import store_manifest as sm
 
 _MERSENNE = 2147483647  # 2^31-1, prime — universal-hash modulus
 
@@ -216,38 +218,25 @@ def build_signature_store(
     (``sigs/`` parquet + a one-row ``params/`` parquet). Returns the
     store re-read from disk, so downstream plans run against exactly
     what was persisted."""
-    from window_aggregation_spark.sources import store_manifest as sm
-
-    if mode not in ("overwrite", "error", "errorifexists"):
-        # append would stack rows into the one-row params parquet (an
-        # arbitrary row wins at load -> wrong ngram/num_hashes -> wrong
-        # LSH buckets) and would bypass the manifest after a compaction;
-        # growing a store is the streaming fold's job
-        raise ValueError(
-            f"mode must be overwrite/error, got {mode!r}; signatures are "
-            "grown by the ingest loop's fold (sigs_folds/), never by "
-            "re-running the builder"
-        )
+    sm.guard_build(
+        path, mode, _SIG_COMPONENTS,
+        "signatures are grown by the ingest loop's fold (sigs_folds/), "
+        "never by re-running the builder",
+    )
     spark = df.sparkSession
-    if mode == "overwrite":
-        # a rebuild over a lifecycle-managed store must clear the old
-        # MANIFEST/tombstones/fold partitions, or loads keep resolving
-        # the previous generation / filtering the fresh signatures
-        sm.reset_generations(path, _SIG_COMPONENTS)
     sigs = minhash_signatures(
         df, id_col, text_col, ngram=ngram, num_hashes=num_hashes
     )
     sigs.write.mode(mode).parquet(f"{path}/sigs")
-    spark.createDataFrame(
-        [(id_col, ngram, num_hashes)],
-        "id_col string, ngram int, num_hashes int",
-    ).coalesce(1).write.mode(mode).parquet(f"{path}/params")
+    sm.write_rows(
+        spark, [(id_col, ngram, num_hashes)],
+        "id_col string, ngram int, num_hashes int", f"{path}/params", mode,
+    )
     return load_signature_store(spark, path)
 
 
 def load_signature_store(
-    spark, path: str, *, exclude_fold_epoch: int | None = None,
-    exclude_folds_from: int | None = None,
+    spark, path: str, *, exclude_folds_from: int | None = None,
 ) -> SignatureStore:
     """Load a persisted signature store; the signatures stay a lazy
     parquet scan (only the one params row reaches the driver).
@@ -259,39 +248,30 @@ def load_signature_store(
     are unioned in here; the base ``sigs/`` written at build time is
     never touched after the fact.
 
-    ``exclude_fold_epoch``: the ingest loop passes its CURRENT epoch id
-    so a replayed micro-batch never sees its own previously-folded
-    signatures — without this, every doc of a batch retried after its
-    fold would band-match ITSELF in the store, be dropped as a
-    "duplicate", and overwrite its output partition as empty (silent
-    data loss, far worse than the duplicate rows the overwrite already
-    prevents). Excluding exactly ``batch_id=N`` reconstructs the store
-    state the epoch saw the first time, making a single-batch retry
-    bit-identical.
+    ``exclude_folds_from``: exclude every fold with ``batch_id >=`` the
+    given epoch. The streaming loop passes its CURRENT epoch id, so a
+    replayed micro-batch never sees its own previously-folded signatures
+    — without this, every doc of a batch retried after its fold would
+    band-match ITSELF in the store, be dropped as a "duplicate", and
+    overwrite its output partition as empty (silent data loss) — and a
+    fresh-checkpoint restart replaying SEVERAL epochs reconstructs each
+    epoch's original store view, because earlier epochs cannot see LATER
+    epochs' folds."""
+    return _load_signatures(spark, path, exclude_folds_from)[0]
 
-    ``exclude_folds_from`` (r13 — the span-store twin's ADVICE r12 fix,
-    applied symmetrically): exclude every fold with ``batch_id >=`` the
-    given epoch. The streaming loop passes this instead, so a
-    fresh-checkpoint restart replaying SEVERAL epochs also reconstructs
-    each epoch's original store view — with the exact-match form,
-    earlier epochs saw LATER epochs' folds and could drop documents the
-    first run admitted."""
-    from window_aggregation_spark.sources import store_manifest as sm
 
+def _load_signatures(
+    spark, path: str, exclude_folds_from: int | None = None
+) -> tuple[SignatureStore, bool]:
+    """:func:`load_signature_store`, plus whether folds or tombstones are
+    pending (what a compaction would merge)."""
     m = sm.read_manifest(path, _SIG_COMPONENTS)
     p = spark.read.parquet(f"{path}/params").first()
+    id_c = p["id_col"]
     base = spark.read.parquet(f"{path}/{m['sigs']}")
-    folds = None
-    folds_dir = f"{path}/{m['folds']}"
-    # existence via the Hadoop FS layer: folds are written by Spark on
-    # ANY filesystem (hdfs/s3a included) — driver-side os.path.exists
-    # would silently ignore them everywhere but local disk
-    if sm.dir_exists(spark, folds_dir):
-        folds = spark.read.parquet(folds_dir)
-        if exclude_fold_epoch is not None:
-            folds = folds.where(F.col("batch_id") != int(exclude_fold_epoch))
-        if exclude_folds_from is not None:
-            folds = folds.where(F.col("batch_id") < int(exclude_folds_from))
+    folds = sm.folds_before(
+        sm.read_optional(spark, path, m["folds"]), exclude_folds_from
+    )
     # pending deletions (signature_store_delete) anti-join out here, so
     # deleted docs stop matching ingest batches immediately. Tombstones
     # carry the fold WATERMARK captured at delete time (`__upto_batch` =
@@ -301,15 +281,11 @@ def load_signature_store(
     # re-submitted content reusing a stable id (url hash, content id)
     # would stay invisible forever and the next compaction would destroy
     # its fresh signature.
-    tomb_dir = f"{path}/{m['tombstones']}"
-    if sm.dir_exists(spark, tomb_dir):
-        tomb = spark.read.parquet(tomb_dir)
-        id_c = p["id_col"]
+    tomb = sm.read_optional(spark, path, m["tombstones"])
+    if tomb is not None:
         if "__upto_batch" not in tomb.columns:  # legacy id-only tombstones
             tomb = tomb.withColumn("__upto_batch", F.lit(2**62))
-        # no broadcast hints: AQE broadcasts small tombstone sets from
-        # runtime stats; mass deletions stay within the join budget
-        base = base.join(tomb.select(id_c), id_c, "left_anti")
+        base = sm.drop_tombstoned(base, tomb, id_c)
         if folds is not None:
             folds = folds.alias("f").join(
                 tomb.alias("t"),
@@ -320,11 +296,10 @@ def load_signature_store(
     sigs = base if folds is None else base.unionByName(
         folds.drop("batch_id")
     )
-    return SignatureStore(
-        sigs,
-        ngram=int(p["ngram"]),
-        num_hashes=int(p["num_hashes"]),
+    store = SignatureStore(
+        sigs, ngram=int(p["ngram"]), num_hashes=int(p["num_hashes"])
     )
+    return store, folds is not None or tomb is not None
 
 
 def signature_store_delete(spark, path: str, ids: DataFrame) -> SignatureStore:
@@ -349,28 +324,16 @@ def signature_store_delete(spark, path: str, ids: DataFrame) -> SignatureStore:
     store rebuilt on the filtered corpus. Reclaim space with
     :func:`signature_store_compact`. Works on POSIX paths and object
     stores alike (manifest protocol, ``sources/store_manifest.py``)."""
-    from window_aggregation_spark.sources import store_manifest as sm
-
-    sm.check_store_path(path, "signature store")
-    m = sm.read_manifest(path, _SIG_COMPONENTS)
-    p = spark.read.parquet(f"{path}/params").first()
-    id_c = p["id_col"]
-    store_t = dict(spark.read.parquet(f"{path}/{m['sigs']}").dtypes)[id_c]
-    given_t = ids.dtypes[0][1]
-    if given_t != store_t:
-        raise ValueError(
-            f"signature_store_delete: ids column has type {given_t}, but "
-            f"the store's {id_c!r} is {store_t} — a coercing join would "
-            "silently tombstone nothing; cast explicitly upstream"
-        )
-    upto = -1
-    if sm.dir_exists(spark, f"{path}/{m['folds']}"):
-        row = spark.read.parquet(f"{path}/{m['folds']}").agg(
-            F.max("batch_id")
-        ).first()
-        upto = int(row[0]) if row[0] is not None else -1
+    m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
+    id_c = spark.read.parquet(f"{path}/params").first()["id_col"]
+    sm.check_id_type(
+        ids, spark.read.parquet(f"{path}/{m['sigs']}"), id_c,
+        "signature_store_delete",
+    )
+    folds = sm.read_optional(spark, path, m["folds"])
+    upto = None if folds is None else folds.agg(F.max("batch_id")).first()[0]
     batch = ids.toDF(id_c).dropDuplicates().withColumn(
-        "__upto_batch", F.lit(upto).cast("long")
+        "__upto_batch", F.lit(-1 if upto is None else int(upto)).cast("long")
     )
     batch.write.mode("append").parquet(f"{path}/{m['tombstones']}")
     return load_signature_store(spark, path)
@@ -395,38 +358,25 @@ def signature_store_compact(
     ``sweep`` (default OFF) deletes the superseded generation dirs right
     after the flip — only safe with no concurrent readers; default
     keeps them for out-of-band GC."""
-    from window_aggregation_spark.sources import store_manifest as sm
-
-    sm.check_store_path(path, "signature store")
-    m = sm.read_manifest(path, _SIG_COMPONENTS)
-    have_folds = sm.dir_exists(spark, f"{path}/{m['folds']}")
-    have_tombs = sm.dir_exists(spark, f"{path}/{m['tombstones']}")
-    if not have_folds and not have_tombs:
-        return load_signature_store(spark, path)
-    # materialize exactly the serving view (folds unioned, watermarked
-    # tombstones applied) — compaction can never drift from what loads
+    m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
+    # the serving view (folds unioned, watermarked tombstones applied) is
+    # what gets materialized — compaction can never drift from what loads
     # were already serving
-    merged = load_signature_store(spark, path).sigs
-    new = {
-        c: sm.next_version(path, _SIG_COMPONENTS[c], m[c])
-        # "pairs" is rotated to a fresh (not-yet-existing, reads as
-        # absent) dir too: the pair cache was derived from the
-        # pre-compaction generation and its fingerprint would fail
-        # anyway — dropping the reference lets GC reclaim it
-        for c in ("sigs", "tombstones", "folds", "pairs")
-    }
-    merged.write.parquet(f"{path}/{new['sigs']}")
-    # expected=m: a compact racing a concurrent writer must raise, not
-    # silently erase the generation that writer just published (the
-    # read-modify-write lost update gc_store would then collect)
-    mapping = {**m, **new}
-    mapping.pop("pairs_meta", None)
-    sm.write_manifest(path, mapping, expected=m)
-    if sweep:
-        for c in ("sigs", "tombstones", "folds", "pairs"):
-            sm.sweep_stale(path, _SIG_COMPONENTS[c], new[c])
+    store, pending = _load_signatures(spark, path)
+    if not pending:
+        return store
+    # "pairs" is rotated to a fresh (not-yet-existing, reads as absent)
+    # dir too: the pair cache was derived from the pre-compaction
+    # generation and its fingerprint would fail anyway — dropping the
+    # reference lets GC reclaim it
+    new = sm.new_generation(
+        path, m, _SIG_COMPONENTS, ("sigs", "tombstones", "folds", "pairs")
+    )
+    store.sigs.write.parquet(f"{path}/{new['sigs']}")
+    sm.publish(
+        path, m, new, _SIG_COMPONENTS, sweep=sweep, drop=("pairs_meta",)
+    )
     return load_signature_store(spark, path)
-
 
 
 def signature_store_gc(path: str, *, grace_seconds: float = 900.0) -> dict:
@@ -434,15 +384,26 @@ def signature_store_gc(path: str, *, grace_seconds: float = 900.0) -> dict:
     run from a quiet window (the same slot as compactions); see
     ``sources/store_manifest.gc_store`` (incl. the ``grace_seconds``
     mid-publish guard)."""
-    from window_aggregation_spark.sources import store_manifest as sm
-
     return sm.gc_store(path, _SIG_COMPONENTS, grace_seconds=grace_seconds)
 
 
-# LSH/verify parameters a pair cache is keyed by: pairs computed at one
-# parameterization are silently wrong for any other, so load re-checks
-# every one of these before serving the cache.
-_PAIR_PARAM_KEYS = ("threshold", "ngram", "num_hashes", "bands", "max_bucket_size")
+def _pair_params(threshold, ngram, num_hashes, bands, max_bucket_size) -> dict:
+    """The LSH/verify parameters a pair cache is keyed by: pairs computed
+    at one parameterization are silently wrong for any other, so load
+    re-checks every one of these before serving the cache."""
+    return {
+        "threshold": float(threshold),
+        "ngram": int(ngram),
+        "num_hashes": int(num_hashes),
+        "bands": int(bands),
+        "max_bucket_size": None if max_bucket_size is None else int(max_bucket_size),
+    }
+
+
+def _sig_fingerprint(path: str, m: dict) -> str:
+    return sm.state_fingerprint(
+        path, [m[c] for c in ("sigs", "tombstones", "folds")]
+    )
 
 
 def signature_store_build_pairs(
@@ -477,10 +438,8 @@ def signature_store_build_pairs(
     rotates the manifest's ``pairs`` reference to a fresh dir so GC
     reclaims the stale cache. Published like every other generation:
     fully written, then one atomic manifest flip (expected-guarded)."""
-    from window_aggregation_spark.sources import store_manifest as sm
-
     spark = df.sparkSession
-    m = sm.read_manifest(path, _SIG_COMPONENTS)
+    m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
     store = load_signature_store(spark, path)
     pairs = minhash_dedup_pairs(
         df, id_col, text_col,
@@ -488,26 +447,16 @@ def signature_store_build_pairs(
         threshold=threshold, max_bucket_size=max_bucket_size,
         signatures=store,
     )
-    fp = sm.state_fingerprint(
-        path, [m[c] for c in ("sigs", "tombstones", "folds")]
-    )
-    new_dir = sm.next_version(path, _SIG_COMPONENTS["pairs"], m["pairs"])
-    pairs.write.parquet(f"{path}/{new_dir}")
     meta = {
-        "threshold": float(threshold),
-        "ngram": int(ngram),
-        "num_hashes": int(num_hashes),
-        "bands": int(bands),
-        "max_bucket_size": None if max_bucket_size is None else int(max_bucket_size),
-        "fingerprint": fp,
+        **_pair_params(threshold, ngram, num_hashes, bands, max_bucket_size),
+        "fingerprint": _sig_fingerprint(path, m),
     }
-    import json as _json
-
-    sm.write_manifest(
-        path, {**m, "pairs": new_dir, "pairs_meta": _json.dumps(meta)},
-        expected=m,
+    new = sm.new_generation(path, m, _SIG_COMPONENTS, ("pairs",))
+    pairs.write.parquet(f"{path}/{new['pairs']}")
+    sm.publish(
+        path, m, {**new, "pairs_meta": json.dumps(meta)}, _SIG_COMPONENTS
     )
-    return spark.read.parquet(f"{path}/{new_dir}")
+    return spark.read.parquet(f"{path}/{new['pairs']}")
 
 
 def load_pair_cache(
@@ -526,33 +475,17 @@ def load_pair_cache(
     fingerprint no longer matches the one recorded at build time — see
     :func:`signature_store_build_pairs`). ``None`` means "recompute",
     never "serve something close"."""
-    import json as _json
-
-    from window_aggregation_spark.sources import store_manifest as sm
-
     m = sm.read_manifest(path, _SIG_COMPONENTS)
     raw = m.get("pairs_meta")
     if not raw:
         return None
-    meta = _json.loads(raw)
-    want = {
-        "threshold": float(threshold),
-        "ngram": int(ngram),
-        "num_hashes": int(num_hashes),
-        "bands": int(bands),
-        "max_bucket_size": None if max_bucket_size is None else int(max_bucket_size),
-    }
-    if {k: meta.get(k) for k in _PAIR_PARAM_KEYS} != want:
+    meta = json.loads(raw)
+    want = _pair_params(threshold, ngram, num_hashes, bands, max_bucket_size)
+    if {k: meta.get(k) for k in want} != want:
         return None
-    fp = sm.state_fingerprint(
-        path, [m[c] for c in ("sigs", "tombstones", "folds")]
-    )
-    if fp != meta.get("fingerprint"):
+    if _sig_fingerprint(path, m) != meta.get("fingerprint"):
         return None
-    pair_dir = f"{path}/{m['pairs']}"
-    if not sm.dir_exists(spark, pair_dir):
-        return None
-    return spark.read.parquet(pair_dir)
+    return sm.read_optional(spark, path, m["pairs"])
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -1740,6 +1673,18 @@ _WINDOW_GRAINS = {
 }
 
 
+def _span_params(spark, path: str, m: dict) -> tuple[int, str, int | None]:
+    """``(window, grain, n_hashes)`` from the store's params row.
+    Pre-r12 stores predate the grain column and are sentence-grain;
+    pre-r13 stores predate ``n_hashes`` (None: the auto strategy defers
+    to the planner)."""
+    pdf = spark.read.parquet(f"{path}/{m['params']}")
+    p = pdf.first()
+    grain = p["grain"] if "grain" in pdf.columns else "sentence"
+    n_hashes = p["n_hashes"] if "n_hashes" in pdf.columns else None
+    return int(p["window"]), grain, None if n_hashes is None else int(n_hashes)
+
+
 def build_sentence_hash_store(
     corpus: DataFrame,
     id_col: str,
@@ -1755,25 +1700,14 @@ def build_sentence_hash_store(
     (``span_hashes/`` parquet + a one-row ``params/`` parquet). Returns
     the store re-read from disk, so downstream plans run against
     exactly what was persisted."""
-    from window_aggregation_spark.sources import store_manifest as sm
-
     if grain not in _WINDOW_GRAINS:
         raise ValueError(f"unknown grain: {grain!r}")
-    if mode not in ("overwrite", "error", "errorifexists"):
-        # append would stack params rows (arbitrary row wins -> wrong
-        # window grain) and bypass the manifest after a compaction;
-        # growing the set is sentence_hash_store_add's job
-        raise ValueError(
-            f"mode must be overwrite/error, got {mode!r}; the hash set is "
-            "grown per admitted batch via sentence_hash_store_add, never "
-            "by re-running the builder"
-        )
+    sm.guard_build(
+        path, mode, _SPANHASH_COMPONENTS,
+        "the hash set is grown per admitted batch via "
+        "sentence_hash_store_add, never by re-running the builder",
+    )
     spark = corpus.sparkSession
-    if mode == "overwrite":
-        # a rebuild over a lifecycle-managed store must clear the old
-        # MANIFEST/fold partitions, or loads keep resolving the
-        # previous generation's folds on top of the fresh base
-        sm.reset_generations(path, _SPANHASH_COMPONENTS)
     hashes = (
         _WINDOW_GRAINS[grain](corpus, id_col, text_col, window)
         .select("__h")
@@ -1784,16 +1718,15 @@ def build_sentence_hash_store(
     # plan — the count drives the join auto-strategy, so it must be the
     # store's truth, not a recompute that could drift from it
     n_hashes = spark.read.parquet(f"{path}/span_hashes").count()
-    spark.createDataFrame(
-        [(window, grain, n_hashes)],
-        "window int, grain string, n_hashes long",
-    ).coalesce(1).write.mode(mode).parquet(f"{path}/params")
+    sm.write_rows(
+        spark, [(window, grain, n_hashes)],
+        "window int, grain string, n_hashes long", f"{path}/params", mode,
+    )
     return load_sentence_hash_store(spark, path)
 
 
 def load_sentence_hash_store(
-    spark, path: str, *, exclude_fold_epoch: int | None = None,
-    exclude_folds_from: int | None = None,
+    spark, path: str, *, exclude_folds_from: int | None = None,
 ) -> "SentenceHashStore":
     """Load a persisted span-hash store; the hashes stay a lazy
     parquet scan (only the one params row reaches the driver). Fold
@@ -1812,46 +1745,23 @@ def load_sentence_hash_store(
     output partition with over-cut documents — silent data loss), and
     a fresh-checkpoint restart replaying SEVERAL epochs reconstructs
     each epoch's original store view too, because earlier epochs can
-    no longer see LATER epochs' folds (ADVICE r12 — the old
-    exact-epoch exclusion only covered Structured Streaming's
-    single-uncommitted-batch retry).
-
-    ``exclude_fold_epoch`` is the r12 exact-match form (excludes ONLY
-    ``batch_id == N``), kept for callers that reconstruct one epoch's
-    view while trusting later folds; the streaming loop itself uses
-    ``exclude_folds_from``."""
-    from window_aggregation_spark.sources import store_manifest as sm
-
+    no longer see LATER epochs' folds (ADVICE r12)."""
     m = sm.read_manifest(path, _SPANHASH_COMPONENTS)
-    pdf = spark.read.parquet(f"{path}/{m['params']}")
-    p = pdf.first()
-    # pre-r12 stores predate the grain column and are sentence-grain;
-    # pre-r13 stores predate n_hashes (auto-strategy defers to planner)
-    grain = p["grain"] if "grain" in pdf.columns else "sentence"
-    n_base = (
-        int(p["n_hashes"]) if "n_hashes" in pdf.columns
-        and p["n_hashes"] is not None else None
-    )
+    window, grain, n_base = _span_params(spark, path, m)
     base = spark.read.parquet(f"{path}/{m['hashes']}")
-    folds_dir = f"{path}/{m['folds']}"
-    folds = None
-    if sm.dir_exists(spark, folds_dir):
-        # explicit schema: a stream whose batches so far were ALL cut to
-        # empty leaves only empty fold partitions, and schema inference
-        # over zero part-files would fail the load
-        folds = spark.read.schema(_SPANHASH_FOLD_SCHEMA).parquet(folds_dir)
-        if exclude_fold_epoch is not None:
-            folds = folds.where(
-                F.col("batch_id") != int(exclude_fold_epoch)
-            )
-        if exclude_folds_from is not None:
-            folds = folds.where(
-                F.col("batch_id") < int(exclude_folds_from)
-            )
+    # explicit schema: a stream whose batches so far were ALL cut to
+    # empty leaves only empty fold partitions, and schema inference over
+    # zero part-files would fail the load
+    folds = sm.folds_before(
+        sm.read_optional(
+            spark, path, m["folds"], schema=_SPANHASH_FOLD_SCHEMA
+        ),
+        exclude_folds_from,
+    )
+    if folds is not None:
         base = base.unionByName(folds.select("__h"))
     return SentenceHashStore(
-        base, window=int(p["window"]), grain=grain, n_base=n_base,
-        folds=folds,
+        base, window=window, grain=grain, n_base=n_base, folds=folds,
     )
 
 
@@ -1878,16 +1788,11 @@ def sentence_hash_store_add(
     Duplicate hashes ACROSS folds/base are harmless for correctness
     (serving distincts the union) and disappear at the next
     :func:`sentence_hash_store_compact`."""
-    from window_aggregation_spark.sources import store_manifest as sm
-
-    sm.check_store_path(path, "sentence-hash store")
     spark = new.sparkSession
-    m = sm.read_manifest(path, _SPANHASH_COMPONENTS)
-    pdf = spark.read.parquet(f"{path}/{m['params']}")
-    p = pdf.first()
-    grain = p["grain"] if "grain" in pdf.columns else "sentence"
+    m = sm.snapshot(path, _SPANHASH_COMPONENTS, "sentence-hash store")
+    window, grain, _ = _span_params(spark, path, m)
     hashes = (
-        _WINDOW_GRAINS[grain](new, id_col, text_col, int(p["window"]))
+        _WINDOW_GRAINS[grain](new, id_col, text_col, window)
         .select("__h")
         .distinct()
     )
@@ -1895,7 +1800,7 @@ def sentence_hash_store_add(
         f"{path}/{m['folds']}/batch_id={int(batch_id)}"
     )
     # reload=False: the streaming loop discards the return (it reloads
-    # with exclude_fold_epoch at the NEXT epoch anyway) — skip the
+    # with exclude_folds_from at the NEXT epoch anyway) — skip the
     # manifest read + params job it would pay per micro-batch
     return load_sentence_hash_store(spark, path) if reload else None
 
@@ -1929,45 +1834,33 @@ def sentence_hash_store_compact(
     ``sweep`` deletes the superseded generation dirs right after the
     flip — only safe with no concurrent readers; default keeps them for
     :func:`sentence_hash_store_gc`."""
-    from window_aggregation_spark.sources import store_manifest as sm
-
-    sm.check_store_path(path, "sentence-hash store")
-    m = sm.read_manifest(path, _SPANHASH_COMPONENTS)
-    if not sm.dir_exists(spark, f"{path}/{m['folds']}"):
-        return load_sentence_hash_store(spark, path)
-    folds = spark.read.schema(_SPANHASH_FOLD_SCHEMA).parquet(
-        f"{path}/{m['folds']}"
+    m = sm.snapshot(path, _SPANHASH_COMPONENTS, "sentence-hash store")
+    folds = sm.read_optional(
+        spark, path, m["folds"], schema=_SPANHASH_FOLD_SCHEMA
     )
+    if folds is None:
+        return load_sentence_hash_store(spark, path)
+    new = sm.new_generation(
+        path, m, _SPANHASH_COMPONENTS, ("hashes", "folds", "params")
+    )
+    spark.read.parquet(f"{path}/{m['hashes']}").unionByName(
+        sm.folds_before(folds, keep_folds_from).select("__h")
+    ).distinct().write.parquet(f"{path}/{new['hashes']}")
+    n_hashes = spark.read.parquet(f"{path}/{new['hashes']}").count()
     if keep_folds_from is not None:
         kept = folds.where(F.col("batch_id") >= int(keep_folds_from))
-        folds = folds.where(F.col("batch_id") < int(keep_folds_from))
-    else:
-        kept = None
-    base = spark.read.parquet(f"{path}/{m['hashes']}")
-    merged = base.unionByName(folds.select("__h")).distinct()
-    new = {
-        c: sm.next_version(path, _SPANHASH_COMPONENTS[c], m[c])
-        for c in ("hashes", "folds", "params")
-    }
-    merged.write.parquet(f"{path}/{new['hashes']}")
-    n_hashes = spark.read.parquet(f"{path}/{new['hashes']}").count()
-    if kept is not None and kept.head(1):
-        # carry the un-merged recent folds into the new generation,
-        # keyed exactly as sentence_hash_store_add writes them
-        kept.write.partitionBy("batch_id").parquet(f"{path}/{new['folds']}")
-    pdf = spark.read.parquet(f"{path}/{m['params']}")
-    p = pdf.first()
-    grain = p["grain"] if "grain" in pdf.columns else "sentence"
-    spark.createDataFrame(
-        [(int(p["window"]), grain, n_hashes)],
-        "window int, grain string, n_hashes long",
-    ).coalesce(1).write.parquet(f"{path}/{new['params']}")
-    # expected=m: a compact racing a concurrent add must raise, not
-    # silently erase the fold that add just published
-    sm.write_manifest(path, {**m, **new}, expected=m)
-    if sweep:
-        for c in ("hashes", "folds", "params"):
-            sm.sweep_stale(path, _SPANHASH_COMPONENTS[c], new[c])
+        if kept.head(1):
+            # carry the un-merged recent folds into the new generation,
+            # keyed exactly as sentence_hash_store_add writes them
+            kept.write.partitionBy("batch_id").parquet(
+                f"{path}/{new['folds']}"
+            )
+    window, grain, _ = _span_params(spark, path, m)
+    sm.write_rows(
+        spark, [(window, grain, n_hashes)],
+        "window int, grain string, n_hashes long", f"{path}/{new['params']}",
+    )
+    sm.publish(path, m, new, _SPANHASH_COMPONENTS, sweep=sweep)
     return load_sentence_hash_store(spark, path)
 
 
@@ -1975,8 +1868,6 @@ def sentence_hash_store_gc(path: str, *, grace_seconds: float = 900.0) -> dict:
     """Out-of-band reclaim of superseded sentence-hash-store generations
     — run from a quiet window (the same slot as compactions); see
     ``sources/store_manifest.gc_store``."""
-    from window_aggregation_spark.sources import store_manifest as sm
-
     return sm.gc_store(path, _SPANHASH_COMPONENTS, grace_seconds=grace_seconds)
 
 

@@ -52,26 +52,6 @@ _SCORE_SCALE = 6
 _TOK = re.compile(TOKEN_RE)
 
 
-def _read_dirs(spark, path: str, value: str) -> DataFrame:
-    """Read a manifest component that may reference several directories
-    (";"-joined — the atomic-append encoding): a unionByName of per-dir
-    parquet reads. Per-dir reads keep partition discovery (term_bucket=)
-    and filter pushdown working independently in each branch; the branch
-    count is bounded by adds-since-last-compact."""
-    dirs = sm.split_dirs(value)
-    if len(dirs) > 32:
-        import warnings
-
-        warnings.warn(
-            f"{path}: {len(dirs)} un-compacted generation dirs — every "
-            "query unions that many scan branches; run "
-            "text_index_compact to collapse them",
-            stacklevel=3,
-        )
-    frames = [spark.read.parquet(f"{path}/{d}") for d in dirs]
-    return reduce(lambda a, b: a.unionByName(b), frames)
-
-
 def query_terms(query: str) -> list[str]:
     """Sorted distinct alnum tokens of a query string (duplicates in the
     query do not re-weight BM25)."""
@@ -489,17 +469,10 @@ def build_text_index(
     would stack extra rows into the one-row stats/params files and
     silently corrupt loads — growing an index is :func:`text_index_add`.
     """
-    if mode not in ("overwrite", "error", "errorifexists"):
-        raise ValueError(
-            f"mode must be overwrite/error, got {mode!r}; to grow an "
-            "existing index use text_index_add"
-        )
-    if mode == "overwrite":
-        # a rebuild over a generation-managed store must clear the old
-        # MANIFEST (else loads resolve to versioned dirs this build never
-        # writes and the rebuild is invisible) and stale tombstones (else
-        # they keep filtering freshly indexed docs and skewing stats)
-        sm.reset_generations(path, _IDX_COMPONENTS)
+    sm.guard_build(
+        path, mode, _IDX_COMPONENTS,
+        "to grow an existing index use text_index_add",
+    )
     base = df.select(id_col, tokens(F.col(text_col)).alias("toks"))
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -516,9 +489,10 @@ def build_text_index(
         "term_bucket"
     ).parquet(f"{path}/postings")
     spark = df.sparkSession
-    spark.createDataFrame(
-        [(n_buckets, id_col)], "n_buckets int, id_col string"
-    ).coalesce(1).write.mode(mode).parquet(f"{path}/params")
+    sm.write_rows(
+        spark, [(n_buckets, id_col)], "n_buckets int, id_col string",
+        f"{path}/params", mode,
+    )
     return load_text_index(spark, path)
 
 
@@ -560,9 +534,8 @@ def text_index_add(
     after the flip; leave it off when readers may hold the index open
     concurrently and GC out of band instead.
     """
-    sm.check_store_path(path, "text index")
+    m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
     idx = load_text_index(spark, path)
-    m = sm.read_manifest(path, _IDX_COMPONENTS)
     idc = id_col or idx.id_col
     base = new_docs.select(
         F.col(idc).alias(idx.id_col), tokens(F.col(text_col)).alias("toks")
@@ -573,39 +546,35 @@ def text_index_add(
     ).first()
     if int(batch["n_docs"]) == 0:
         return idx  # empty batch: nothing to publish
-    postings_dirs = sm.split_dirs(m["postings"])
-    if int(batch["sum_dl"]) > 0:
-        # only when the batch has tokens: a zero-row partitionBy write
-        # produces a _SUCCESS-only directory that parquet cannot infer a
-        # schema from, which would brick every later load. A batch of
-        # zero-token docs has no postings — it still counts in N via
-        # doclens/stats below.
-        new_postings = sm.next_version(path, "postings", m["postings"])
+    # postings only when the batch has tokens: a zero-row partitionBy
+    # write produces a _SUCCESS-only directory that parquet cannot infer
+    # a schema from, which would brick every later load. A batch of
+    # zero-token docs has no postings — it still counts in N via
+    # doclens/stats below.
+    has_tokens = int(batch["sum_dl"]) > 0
+    keys = ("doclens", "stats") + (("postings",) if has_tokens else ())
+    new = sm.new_generation(path, m, _IDX_COMPONENTS, keys)
+    if has_tokens:
         _postings_frame(base, idx.id_col, idx.n_buckets).write.partitionBy(
             "term_bucket"
-        ).parquet(f"{path}/{new_postings}")
-        postings_dirs = postings_dirs + [new_postings]
-    new_doclens = sm.next_version(path, "doclens", m["doclens"])
+        ).parquet(f"{path}/{new['postings']}")
     base.select(idx.id_col, F.size("toks").alias("dl")).write.parquet(
-        f"{path}/{new_doclens}"
+        f"{path}/{new['doclens']}"
     )
     # idx.n_docs/sum_dl are tombstone-adjusted; raw stats must stay raw
     # (the tombstone delta is re-subtracted at every load).
     s = spark.read.parquet(f"{path}/{m['stats']}").first()
-    new_stats = sm.next_version(path, "stats", m["stats"])
-    spark.createDataFrame(
+    sm.write_rows(
+        spark,
         [(int(s["n_docs"]) + int(batch["n_docs"]),
           int(s["sum_dl"]) + int(batch["sum_dl"]))],
         "n_docs bigint, sum_dl bigint",
-    ).coalesce(1).write.parquet(f"{path}/{new_stats}")
-    sm.write_manifest(path, {
-        **m,
-        "postings": sm.join_dirs(postings_dirs),
-        "doclens": sm.join_dirs(sm.split_dirs(m["doclens"]) + [new_doclens]),
-        "stats": new_stats,
-    }, expected=m)
-    if sweep:
-        sm.sweep_stale(path, "stats", new_stats)
+        f"{path}/{new['stats']}",
+    )
+    sm.publish(
+        path, m, new, _IDX_COMPONENTS,
+        append=("postings", "doclens"), sweep=sweep,
+    )
     return load_text_index(spark, path)
 
 
@@ -630,9 +599,8 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
     Raises on stores built before the doclens sidecar existed (detected
     by doclens count ≠ raw N): deletion needs the exact per-doc lengths;
     rebuild the index once with this version first."""
-    sm.check_store_path(path, "text index")
+    m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
     idx = load_text_index(spark, path)
-    m = sm.read_manifest(path, _IDX_COMPONENTS)
     raw = spark.read.parquet(f"{path}/{m['stats']}").first()
     # only the "sidecar was never written" shapes (missing path /
     # no-schema empty dir, both AnalysisException) mean a pre-deletion
@@ -642,7 +610,7 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
     from pyspark.errors import AnalysisException
 
     try:
-        doclens = _read_dirs(spark, path, m['doclens'])
+        doclens = sm.read_dirs(spark, path, m["doclens"])
         n_lens = doclens.count()
     except AnalysisException:
         n_lens = -1
@@ -655,17 +623,10 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
             "deletion needs the per-doc lengths — rebuild the index "
             "with build_text_index(mode='overwrite') to heal"
         )
-    store_t = dict(doclens.dtypes)[idx.id_col]
-    given_t = ids.dtypes[0][1]
-    if given_t != store_t:
-        raise ValueError(
-            f"text_index_delete: ids column has type {given_t}, but the "
-            f"index's {idx.id_col!r} is {store_t} — a coercing join would "
-            "silently delete nothing; cast explicitly upstream"
-        )
-    batch = ids.toDF(idx.id_col).dropDuplicates()
-    if idx.tombstones is not None:
-        batch = batch.join(idx.tombstones, idx.id_col, "left_anti")
+    sm.check_id_type(ids, doclens, idx.id_col, "text_index_delete")
+    batch = sm.drop_tombstoned(
+        ids.toDF(idx.id_col).dropDuplicates(), idx.tombstones, idx.id_col
+    )
     matched = doclens.join(F.broadcast(batch), idx.id_col)
     matched.select(idx.id_col, "dl").write.mode("append").parquet(
         f"{path}/{m['tombstones']}"
@@ -691,45 +652,35 @@ def text_index_compact(spark, path: str, *, sweep: bool = False) -> TextIndex:
     resolved the old manifest (or holds the old generation's DataFrames)
     would find its directories gone mid-job. Default keeps them; GC out
     of band when no readers are active."""
-    sm.check_store_path(path, "text index")
+    m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
     idx = load_text_index(spark, path)
     if idx.tombstones is None:
         return idx
-    m = sm.read_manifest(path, _IDX_COMPONENTS)
     tomb = spark.read.parquet(f"{path}/{m['tombstones']}")
-    new = {
-        c: sm.next_version(path, c, m[c])
-        for c in ("postings", "doclens", "stats", "tombstones")
-    }
-    # no broadcast HINT: tombstone sets are usually tiny (AQE will
-    # broadcast them from runtime stats) but a mass deletion before a
-    # compact must not be forced past the broadcast budget
-    tomb_ids = tomb.select(idx.id_col)
+    new = sm.new_generation(
+        path, m, _IDX_COMPONENTS,
+        ("postings", "doclens", "stats", "tombstones"),
+    )
     (
-        _read_dirs(spark, path, m['postings'])
-        .join(tomb_ids, idx.id_col, "left_anti")
+        sm.drop_tombstoned(
+            sm.read_dirs(spark, path, m["postings"]), tomb, idx.id_col
+        )
         .repartition("term_bucket")
         .sortWithinPartitions("token", idx.id_col)
         .write.partitionBy("term_bucket")
         .parquet(f"{path}/{new['postings']}")
     )
-    (
-        _read_dirs(spark, path, m['doclens'])
-        .join(tomb_ids, idx.id_col, "left_anti")
-        .write.parquet(f"{path}/{new['doclens']}")
-    )
+    sm.drop_tombstoned(
+        sm.read_dirs(spark, path, m["doclens"]), tomb, idx.id_col
+    ).write.parquet(f"{path}/{new['doclens']}")
     # effective stats were already tombstone-adjusted at load: publish them
-    spark.createDataFrame(
-        [(idx.n_docs, idx.sum_dl)], "n_docs bigint, sum_dl bigint"
-    ).coalesce(1).write.parquet(f"{path}/{new['stats']}")
+    sm.write_rows(
+        spark, [(idx.n_docs, idx.sum_dl)], "n_docs bigint, sum_dl bigint",
+        f"{path}/{new['stats']}",
+    )
     # tombstones reset by pointing at a not-yet-existing dir (reads as
-    # none). expected=m: a compact racing a concurrent add must raise,
-    # not silently drop the generation the add just published (the
-    # read-modify-write lost update gc_store would then collect)
-    sm.write_manifest(path, {**m, **new}, expected=m)
-    if sweep:
-        for c in ("postings", "doclens", "stats", "tombstones"):
-            sm.sweep_stale(path, c, new[c])
+    # none)
+    sm.publish(path, m, new, _IDX_COMPONENTS, sweep=sweep)
     return load_text_index(spark, path)
 
 
@@ -747,8 +698,8 @@ def load_text_index(spark, path: str) -> TextIndex:
     s = spark.read.parquet(f"{path}/{m['stats']}").first()
     n_docs, sum_dl = int(s["n_docs"]), int(s["sum_dl"])
     tombstones = None
-    if sm.dir_exists(spark, f"{path}/{m['tombstones']}"):
-        tomb = spark.read.parquet(f"{path}/{m['tombstones']}")
+    tomb = sm.read_optional(spark, path, m["tombstones"])
+    if tomb is not None:
         d = tomb.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
@@ -763,7 +714,7 @@ def load_text_index(spark, path: str) -> TextIndex:
         id_col=p["id_col"],
         n_docs=n_docs,
         sum_dl=sum_dl,
-        postings=_read_dirs(spark, path, m['postings']),
+        postings=sm.read_dirs(spark, path, m["postings"]),
         tombstones=tombstones,
     )
 

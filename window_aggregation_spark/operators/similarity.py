@@ -777,16 +777,19 @@ def build_ivf_index(
     written once at build, they let :func:`ivf_topk_index` run its
     coarse list scans over 4× fewer bytes (``coarse="quantized"``).
 
+    ``mode`` is overwrite/error only, like every store builder: an
+    ``append`` build would stack a second codebook next to the first —
+    growing an index is :func:`ivf_index_add`.
+
     Returns the index with ``lists`` re-read from disk, so downstream
     plans run against exactly what was persisted.
     """
     spark = corpus.sparkSession
     _require_long_id(corpus, corpus_id, "build_ivf_index")
-    if mode == "overwrite":
-        # clear stale MANIFEST/tombstones/generations: a rebuild must not
-        # be shadowed by a manifest pointing at old lists_vN dirs, nor
-        # filtered by tombstones from the store's previous life
-        sm.reset_generations(path, _IVF_COMPONENTS)
+    sm.guard_build(
+        path, mode, _IVF_COMPONENTS,
+        "to grow an existing index use ivf_index_add",
+    )
     c_base = corpus.select(
         F.col(corpus_id).alias("id"), F.col(vec_col).alias("v")
     )
@@ -807,10 +810,10 @@ def build_ivf_index(
     if quantize:
         c_lists = quantize_embeddings(c_lists, "v")
     c_lists.write.mode(mode).partitionBy("list_id").parquet(f"{path}/lists")
-    cent_rows = [(i, [float(x) for x in row]) for i, row in enumerate(cents)]
-    spark.createDataFrame(
-        cent_rows, "list_id int, centroid array<double>"
-    ).coalesce(1).write.mode(mode).parquet(f"{path}/centroids")
+    sm.write_rows(
+        spark, [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
+        "list_id int, centroid array<double>", f"{path}/centroids", mode,
+    )
     return load_ivf_index(spark, path)
 
 
@@ -828,9 +831,19 @@ def ivf_index_add(
     and re-clustering 100 TB of embeddings per ingest batch is not a
     plan. New vectors are assigned against the index's FROZEN centroids
     (standard IVF serving: the codebook only moves on a periodic rebuild)
-    and appended under the existing ``lists/list_id=*/`` partitions, so
-    partition pruning keeps working and the next
-    :func:`ivf_topk_index` call sees them with zero other changes.
+    into the same ``list_id=*/`` partition layout, so partition pruning
+    keeps working and the next :func:`ivf_topk_index` call sees them with
+    zero other changes.
+
+    The add is ATOMIC, like ``text_index_add``: the batch is written as a
+    FRESH ``lists_vN`` directory (never appended into live lists), and one
+    expected-guarded manifest flip publishes it by appending it to the
+    ";"-joined ``lists`` entry. A crash before the flip leaves only an
+    unreferenced directory (garbage for :func:`ivf_index_gc`); a
+    concurrent compaction makes the flip raise instead of losing the add.
+    Loads union the per-directory scans; :func:`ivf_index_compact`
+    collapses the list back to one directory. An empty batch publishes
+    nothing.
 
     If the index was built with ``quantize=True`` the batch is quantized
     the same way (detected from the stored lists' schema) — appended rows
@@ -840,8 +853,8 @@ def ivf_index_add(
     ingestion filter's job, upstream); appending an id twice yields
     duplicate candidates. Returns the reloaded index."""
     _require_long_id(new_vectors, corpus_id, "ivf_index_add")
+    m = sm.snapshot(path, _IVF_COMPONENTS, "IVF index")
     idx = load_ivf_index(spark, path)
-    m = sm.read_manifest(path, _IVF_COMPONENTS)
     n_base = new_vectors.select(
         F.col(corpus_id).alias("id"), F.col(vec_col).alias("v")
     )
@@ -852,9 +865,11 @@ def ivf_index_add(
     )
     if "qvec" in idx.lists.columns:
         assigned = quantize_embeddings(assigned, "v")
-    assigned.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/{m['lists']}"
-    )
+    new = sm.new_generation(path, m, _IVF_COMPONENTS, ("lists",))
+    assigned.write.partitionBy("list_id").parquet(f"{path}/{new['lists']}")
+    if not sm.has_data(path, new["lists"]):
+        return idx  # empty batch: nothing to publish
+    sm.publish(path, m, new, _IVF_COMPONENTS, append=("lists",))
     return load_ivf_index(spark, path)
 
 
@@ -870,9 +885,8 @@ def ivf_index_delete(spark, path: str, ids: DataFrame) -> IVFIndex:
     delete batch is harmless beyond duplicate tombstone rows; ids are
     still de-duplicated per batch to keep the set tidy. Reclaim space
     and drop the anti-join with :func:`ivf_index_compact`."""
-    sm.check_store_path(path, "IVF index")
     _require_long_id(ids, ids.columns[0], "ivf_index_delete")
-    m = sm.read_manifest(path, _IVF_COMPONENTS)
+    m = sm.snapshot(path, _IVF_COMPONENTS, "IVF index")
     ids.toDF("id").dropDuplicates().select(
         F.col("id").cast("long")
     ).write.mode("append").parquet(f"{path}/{m['tombstones']}")
@@ -880,38 +894,28 @@ def ivf_index_delete(spark, path: str, ids: DataFrame) -> IVFIndex:
 
 
 def ivf_index_compact(spark, path: str, *, sweep: bool = False) -> IVFIndex:
-    """Rewrite the inverted lists without tombstoned vectors and reset
-    the tombstone set, published as one new generation behind a single
-    atomic manifest flip (``sources/store_manifest.py``): a concurrent
-    loader — or a crash at any point before the flip — sees the previous
-    generation fully intact. Results are unchanged (the anti-join already
-    hid these vectors); compaction reclaims space and removes the
-    per-query anti-join. No-op when nothing is tombstoned.
+    """Rewrite the inverted lists without tombstoned vectors, as one
+    directory, and reset the tombstone set, published as one new
+    generation behind a single atomic manifest flip
+    (``sources/store_manifest.py``): a concurrent loader — or a crash at
+    any point before the flip — sees the previous generation fully
+    intact. Results are unchanged (the anti-join already hid these
+    vectors); compaction reclaims space, removes the per-query anti-join
+    and collapses the directory list that adds left behind. No-op when
+    nothing is tombstoned and no add is pending.
 
     ``sweep`` (default OFF) deletes the superseded generation right
     after the flip — only safe with no concurrent readers; default keeps
     it for out-of-band GC."""
-    sm.check_store_path(path, "IVF index")
-    m = sm.read_manifest(path, _IVF_COMPONENTS)
-    if not sm.dir_exists(spark, f"{path}/{m['tombstones']}"):
+    m = sm.snapshot(path, _IVF_COMPONENTS, "IVF index")
+    tomb = sm.read_optional(spark, path, m["tombstones"])
+    if tomb is None and len(sm.split_dirs(m["lists"])) == 1:
         return load_ivf_index(spark, path)
-    tomb = spark.read.parquet(f"{path}/{m['tombstones']}")
-    new_lists = sm.next_version(path, "lists", m["lists"])
-    new_tomb = sm.next_version(path, "tombstones", m["tombstones"])
-    (
-        spark.read.parquet(f"{path}/{m['lists']}")
-        .join(tomb, "id", "left_anti")  # AQE-sized, never a forced broadcast
-        .write.partitionBy("list_id")
-        .parquet(f"{path}/{new_lists}")
-    )
-    # expected=m: a compact racing a concurrent add must raise instead of
-    # silently erasing the add's just-published generation (lost update)
-    sm.write_manifest(
-        path, {**m, "lists": new_lists, "tombstones": new_tomb}, expected=m
-    )
-    if sweep:
-        sm.sweep_stale(path, "lists", new_lists)
-        sm.sweep_stale(path, "tombstones", new_tomb)
+    new = sm.new_generation(path, m, _IVF_COMPONENTS, ("lists", "tombstones"))
+    sm.drop_tombstoned(
+        sm.read_dirs(spark, path, m["lists"]), tomb, "id"
+    ).write.partitionBy("list_id").parquet(f"{path}/{new['lists']}")
+    sm.publish(path, m, new, _IVF_COMPONENTS, sweep=sweep)
     return load_ivf_index(spark, path)
 
 
@@ -932,12 +936,11 @@ def load_ivf_index(spark, path: str) -> IVFIndex:
         f"{path}/{m['centroids']}"
     ).orderBy("list_id").collect()
     cents = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in rows])
-    lists = spark.read.parquet(f"{path}/{m['lists']}")
-    if sm.dir_exists(spark, f"{path}/{m['tombstones']}"):
-        tomb = spark.read.parquet(f"{path}/{m['tombstones']}")
-        # no broadcast hint: AQE broadcasts small tombstone sets from
-        # runtime stats; mass deletions stay within the join budget
-        lists = lists.join(tomb, "id", "left_anti")
+    lists = sm.drop_tombstoned(
+        sm.read_dirs(spark, path, m["lists"]),
+        sm.read_optional(spark, path, m["tombstones"]),
+        "id",
+    )
     return IVFIndex(cents, lists)
 
 

@@ -2,17 +2,18 @@
 
 The persisted stores (``operators/search.py`` inverted index,
 ``operators/similarity.py`` IVF lists, ``operators/dedup.py`` signature
-store) are plain parquet directories. Their lifecycle steps (add, delete,
-compact) rewrite shared state that cannot be replaced in place without a
-window where readers see half a store. The fix is the classic one: every
-mutable component is a VERSIONED directory (``stats_v3/``,
-``postings_v7/``...), and one tiny manifest names the current version of
-each. Writers build the new generation fully, then publish it with one
-atomic manifest flip. Readers resolve every component through the
-manifest, so they observe either the old complete generation or the new
-complete generation — never a mix, never a missing directory. A crash
-before the flip leaves the old generation fully intact; stale version
-directories are garbage, not corruption, collected by :func:`gc_store`.
+and span-hash stores) are plain parquet directories. Their lifecycle
+steps (add, delete, compact) rewrite shared state that cannot be
+replaced in place without a window where readers see half a store. The
+fix is the classic one: every mutable component is a VERSIONED directory
+(``stats_v3/``, ``postings_v7/``...), and one tiny manifest names the
+current version of each. Writers build the new generation fully, then
+publish it with one atomic manifest flip. Readers resolve every
+component through the manifest, so they observe either the old complete
+generation or the new complete generation — never a mix, never a missing
+directory. A crash before the flip leaves the old generation fully
+intact; stale version directories are garbage, not corruption, collected
+by :func:`gc_store`.
 
 Two publication protocols, selected per filesystem (round 8 — VERDICT r7
 next-round #2 asked for the rename-less path):
@@ -71,6 +72,28 @@ check-then-write window; such deployments that cannot guarantee one
 maintenance writer should serialize writers externally (a scheduler
 lock, a lease object). Readers are safe either way — they only ever
 see whole generations.
+
+Shared lifecycle steps. The four stores (text index, IVF index,
+signature store, span-hash store) run their build, load, add, delete
+and compact through these plain functions and keep only their own
+logic beside them:
+
+- :func:`guard_build` — a builder refuses ``mode="append"`` and, on
+  ``overwrite``, clears the previous life (:func:`reset_generations`);
+- :func:`snapshot` — a mutation checks the path and reads the manifest
+  it derives its new generation from;
+- :func:`read_dirs` / :func:`read_optional` — read a component that may
+  be a ``;``-joined directory list, or ``None`` when an optional
+  component (tombstones, folds, the pair cache) was never written;
+- :func:`drop_tombstoned` / :func:`folds_before` — anti-join pending
+  tombstones; keep only the fold epochs before a given one;
+- :func:`check_id_type` — a delete batch's id type must equal the
+  store's;
+- :func:`new_generation` / :func:`publish` — stage fresh versioned
+  directories, then flip the manifest once, guarded by the snapshot
+  (``expected=``), optionally sweeping what the flip superseded;
+  :func:`has_data` tells an empty staged batch (nothing to publish);
+- :func:`write_rows` — the small params/stats/centroid parquets.
 """
 
 from __future__ import annotations
@@ -81,6 +104,10 @@ import re
 import shutil
 import tempfile
 import time
+import warnings
+from functools import reduce
+
+from pyspark.sql import functions as F
 
 _LEGACY_MANIFEST = "MANIFEST"
 _MANIFEST_RE = re.compile(r"^MANIFEST-(\d{20})$")
@@ -807,13 +834,25 @@ def state_fingerprint(path: str, dirs: list[str]) -> str:
         entries = sorted(
             (rel, size)
             for rel, size, _ in fs.walk_files(full)
-            if not any(
-                seg.startswith((".", "_")) for seg in rel.split("/")
-            )
+            if _visible(rel)
         )
         for rel, size in entries:
             h.update(f"{d}/{rel}:{size}\x00".encode())
     return h.hexdigest()
+
+
+def _visible(rel: str) -> bool:
+    """A data file, not a hidden ``.crc`` sidecar or ``_SUCCESS`` marker."""
+    return not any(seg.startswith((".", "_")) for seg in rel.split("/"))
+
+
+def has_data(path: str, d: str) -> bool:
+    """True when generation directory ``d`` holds a data file. A zero-row
+    ``partitionBy`` write leaves a ``_SUCCESS``-only directory that
+    parquet cannot infer a schema from; publishing one would break every
+    later load."""
+    fs = _fs_for(path)
+    return any(_visible(rel) for rel, _, _ in fs.walk_files(f"{path}/{d}"))
 
 
 def split_dirs(value: str) -> list[str]:
@@ -964,3 +1003,151 @@ def sweep_stale(path: str, component: str, keep: str) -> None:
             continue
         if name == component or name.startswith(f"{component}_v"):
             fs.delete(f"{path}/{name}")
+
+
+# ---------------------------------------------------------------------------
+# Store lifecycle steps (see the module docstring)
+# ---------------------------------------------------------------------------
+
+
+def guard_build(
+    path: str, mode: str, components: dict[str, str], grow: str
+) -> None:
+    """Build guard of every store builder. ``append`` is refused: it would
+    stack rows into the one-row params/stats parquets (an arbitrary row
+    wins at load) and write past the manifest after a compaction; a store
+    grows through its own add/fold path, which ``grow`` names in the
+    error. ``overwrite`` first removes the previous generation's manifest,
+    tombstones, folds and versioned dirs, or loads would keep resolving
+    the old generation or filtering the fresh data."""
+    if mode not in ("overwrite", "error", "errorifexists"):
+        raise ValueError(f"mode must be overwrite/error, got {mode!r}; {grow}")
+    if mode == "overwrite":
+        reset_generations(path, components)
+
+
+def snapshot(
+    path: str, components: dict[str, str], what: str
+) -> dict[str, str]:
+    """The manifest a mutation derives its new generation from, after
+    checking that ``path`` can carry the manifest protocol. Pass it back
+    to :func:`publish`, whose flip is guarded against it."""
+    check_store_path(path, what)
+    return read_manifest(path, components)
+
+
+def read_dirs(spark, path: str, value: str, *, schema: str | None = None):
+    """Read a component that may reference several directories
+    (";"-joined — the atomic-append encoding): a unionByName of per-dir
+    parquet reads. Per-dir reads keep partition discovery and filter
+    pushdown working independently in each branch; the branch count is
+    bounded by adds since the last compaction. ``schema`` skips inference
+    (an all-empty fold set still loads)."""
+    dirs = split_dirs(value)
+    if len(dirs) > 32:
+        warnings.warn(
+            f"{path}: {len(dirs)} un-compacted generation dirs — every "
+            "query unions that many scan branches; compact the store to "
+            "collapse them",
+            stacklevel=3,
+        )
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [reader.parquet(f"{path}/{d}") for d in dirs],
+    )
+
+
+def read_optional(spark, path: str, value: str, *, schema: str | None = None):
+    """:func:`read_dirs` over the component's directories that exist, or
+    ``None`` when none does: tombstones, folds and the pair cache appear
+    only with their first write. Existence goes through
+    :func:`dir_exists`, so it holds on every filesystem Spark reads."""
+    dirs = [d for d in split_dirs(value) if dir_exists(spark, f"{path}/{d}")]
+    if not dirs:
+        return None
+    return read_dirs(spark, path, join_dirs(dirs), schema=schema)
+
+
+def drop_tombstoned(df, tombstones, id_col: str):
+    """``df`` without the rows whose ``id_col`` is tombstoned (``None``:
+    nothing pending). No broadcast hint: AQE broadcasts small tombstone
+    sets from runtime stats, and a mass deletion stays within the join
+    budget."""
+    if tombstones is None:
+        return df
+    return df.join(tombstones.select(id_col), id_col, "left_anti")
+
+
+def folds_before(folds, epoch: int | None):
+    """The fold partitions with ``batch_id < epoch`` (all when ``epoch`` is
+    None). A streaming loop loads with its current epoch, so a replayed
+    batch never sees its own or later epochs' folds."""
+    if folds is None or epoch is None:
+        return folds
+    return folds.where(F.col("batch_id") < int(epoch))
+
+
+def check_id_type(ids, store, id_col: str, where: str) -> None:
+    """A delete batch's id type must equal the store's ``id_col`` type:
+    a coercing join would silently delete nothing."""
+    given, want = ids.dtypes[0][1], dict(store.dtypes)[id_col]
+    if given != want:
+        raise ValueError(
+            f"{where}: ids column has type {given}, but the store's "
+            f"{id_col!r} is {want} — a coercing join would silently "
+            "delete nothing; cast explicitly upstream"
+        )
+
+
+def new_generation(
+    path: str, m: dict[str, str], components: dict[str, str], keys
+) -> dict[str, str]:
+    """A fresh, never-published directory name for each component in
+    ``keys`` (:func:`next_version`). Write the new generation there, then
+    :func:`publish` it."""
+    return {k: next_version(path, components[k], m[k]) for k in keys}
+
+
+def write_rows(
+    spark, rows, schema: str, dst: str, mode: str = "errorifexists"
+) -> None:
+    """Write a few driver-side rows (params, stats, centroids) as one
+    parquet file."""
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(mode).parquet(
+        dst
+    )
+
+
+def publish(
+    path: str,
+    m: dict[str, str],
+    new: dict[str, str],
+    components: dict[str, str],
+    *,
+    append=(),
+    sweep: bool = False,
+    drop=(),
+) -> None:
+    """Flip the manifest from snapshot ``m`` to ``m`` updated by ``new``,
+    in one write guarded by ``expected=m``: a writer that flipped in
+    between makes this raise :class:`ManifestConflictError` instead of
+    losing its generation.
+
+    - ``append``: keys whose new directory joins the component's
+      ";"-joined list (an atomic add) instead of replacing it;
+    - ``drop``: manifest keys to remove (metadata the flip invalidates);
+    - ``sweep``: after the flip, delete the superseded generation dirs of
+      every replaced component. Only safe with no concurrent readers;
+      the default keeps them for out-of-band GC (:func:`gc_store`)."""
+    mapping = {**m, **new}
+    for k in append:
+        if k in new:
+            mapping[k] = join_dirs(split_dirs(m[k]) + [new[k]])
+    for k in drop:
+        mapping.pop(k, None)
+    write_manifest(path, mapping, expected=m)
+    if sweep:
+        for k in new:
+            if k not in append:
+                sweep_stale(path, components[k], new[k])
