@@ -6,10 +6,13 @@ listener bus has drained). A change that silently adds a job to a store
 op (an extra schema-inference read, a stray ``count()`` or ``first()``)
 fails here, the way exchange counts are pinned in
 ``test_plan_quality.py``. Fixtures are tiny and fixed, so the counts are
-deterministic for the test session's configuration."""
+deterministic for the test session's configuration: a local master,
+so file listing never runs as a job, and one-row params/stats files
+read with their declared schema (no schema-inference job)."""
 
 import itertools
 import math
+import os
 
 from window_aggregation_spark.operators import dedup as dd
 from window_aggregation_spark.operators import search
@@ -92,10 +95,25 @@ def test_text_index_op_job_counts(spark, tmp_path):
         "load_tombstoned": _jobs(spark, search.load_text_index, spark, path),
         "compact": _jobs(spark, search.text_index_compact, spark, path),
     }
+    # add, delete and compact load the index once, at entry
     assert got == {
-        "build": 12, "load": 5, "add": 20, "delete": 24,
-        "load_tombstoned": 9, "compact": 25,
+        "build": 10, "load": 3, "add": 11, "delete": 16,
+        "load_tombstoned": 7, "compact": 19,
     }
+
+
+def test_text_index_load_lists_many_buckets_inline(spark, tmp_path):
+    """A 64-bucket postings directory is past Spark's default listing
+    threshold (32 paths); in local mode it is listed in the driver, so
+    a load is still the params, stats and postings-schema reads only."""
+    path = str(tmp_path / "ix64")
+    words = " ".join(f"word{i}" for i in range(400))
+    search.build_text_index(
+        spark.createDataFrame([("d1", words)], "doc_id string, text string"),
+        path, n_buckets=64,
+    )
+    assert len(os.listdir(f"{path}/postings")) > 33  # buckets + _SUCCESS
+    assert _jobs(spark, search.load_text_index, spark, path) == 3
 
 
 def test_ivf_index_op_job_counts(spark, tmp_path):
@@ -119,8 +137,8 @@ def test_ivf_index_op_job_counts(spark, tmp_path):
     # every op until the compaction read two list directories (one
     # schema-inference job each)
     assert got == {
-        "build": 8, "load": 5, "add": 12, "delete": 9,
-        "load_tombstoned": 7, "compact": 10,
+        "build": 7, "load": 4, "add": 10, "delete": 8,
+        "load_tombstoned": 6, "compact": 9,
     }
 
 
@@ -157,9 +175,9 @@ def test_signature_store_op_job_counts(spark, tmp_path):
         "compact": _jobs(spark, dd.signature_store_compact, spark, path),
     }
     assert got == {
-        "build": 6, "load": 3, "load_folded": 4, "build_pairs": 10,
-        "load_pair_cache": 1, "delete": 13, "load_tombstoned": 5,
-        "compact": 11,
+        "build": 5, "load": 2, "load_folded": 3, "build_pairs": 9,
+        "load_pair_cache": 1, "delete": 11, "load_tombstoned": 4,
+        "compact": 9,
     }
 
 
@@ -183,5 +201,5 @@ def test_sentence_hash_store_op_job_counts(spark, tmp_path):
         "compact": _jobs(spark, dd.sentence_hash_store_compact, spark, path),
     }
     assert got == {
-        "build": 9, "load": 3, "add": 7, "load_folded": 3, "compact": 12,
+        "build": 8, "load": 2, "add": 5, "load_folded": 2, "compact": 10,
     }

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from window_aggregation_spark.operators.text import tokens
 from window_aggregation_spark.sources import store_manifest as sm
+from window_aggregation_spark.spec import quote_ident
 
 _MERSENNE = 2147483647  # 2^31-1, prime — universal-hash modulus
 
@@ -135,7 +136,10 @@ def minhash_signatures(
     aggregates over universal-hash permutations ``(a*h + b) mod p``. Plain
     mins run in whole-stage codegen with map-side partial aggregation; the
     equivalent nested array-fold expression evaluates interpreted
-    (measured ~10x slower).
+    (measured ~10x slower). The aggregates are SQL text: the same
+    expression trees as Column-built ones, at 1 py4j round trip each
+    instead of ~11 per Column operation (plan build, best of 5 on 4
+    vCPUs: 0.56 → 0.18 s; ``dedup_new_against_corpus`` 1.47 → 0.35 s).
     """
     if num_hashes > len(_HASH_A):
         raise ValueError(f"num_hashes must be <= {len(_HASH_A)}")
@@ -145,17 +149,13 @@ def minhash_signatures(
         )
         .select(id_col, F.pmod(portable_hash64(F.col("__s")), F.lit(_MERSENNE)).alias("__h"))
     )
-    return hashed.groupBy(id_col).agg(
-        *[
-            F.min(
-                F.pmod(
-                    F.lit(_HASH_A[i]) * F.col("__h") + F.lit(_HASH_B[i]),
-                    F.lit(_MERSENNE),
-                )
-            ).alias(f"m{i}")
-            for i in range(num_hashes)
-        ]
-    )
+    return hashed.groupBy(id_col).agg(*[
+        F.expr(
+            f"min(pmod({_HASH_A[i]} * __h + {_HASH_B[i]}, {_MERSENNE}))"
+            f" AS m{i}"
+        )
+        for i in range(num_hashes)
+    ])
 
 
 class SignatureStore:
@@ -202,6 +202,8 @@ _SIG_COMPONENTS = {
     # lets the CC family skip LSH + exact-verify entirely
     "pairs": "pairs",
 }
+# The store's one-row params parquet, written and read with this schema.
+_SIG_PARAMS_SCHEMA = "id_col string, ngram int, num_hashes int"
 
 
 def build_signature_store(
@@ -229,8 +231,8 @@ def build_signature_store(
     )
     sigs.write.mode(mode).parquet(f"{path}/sigs")
     sm.write_rows(
-        spark, [(id_col, ngram, num_hashes)],
-        "id_col string, ngram int, num_hashes int", f"{path}/params", mode,
+        spark, [(id_col, ngram, num_hashes)], _SIG_PARAMS_SCHEMA,
+        f"{path}/params", mode,
     )
     return load_signature_store(spark, path)
 
@@ -266,7 +268,7 @@ def _load_signatures(
     """:func:`load_signature_store`, plus whether folds or tombstones are
     pending (what a compaction would merge)."""
     m = sm.read_manifest(path, _SIG_COMPONENTS)
-    p = spark.read.parquet(f"{path}/params").first()
+    p = sm.read_row(spark, f"{path}/params", _SIG_PARAMS_SCHEMA)
     id_c = p["id_col"]
     base = spark.read.parquet(f"{path}/{m['sigs']}")
     folds = sm.folds_before(
@@ -325,7 +327,7 @@ def signature_store_delete(spark, path: str, ids: DataFrame) -> SignatureStore:
     :func:`signature_store_compact`. Works on POSIX paths and object
     stores alike (manifest protocol, ``sources/store_manifest.py``)."""
     m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
-    id_c = spark.read.parquet(f"{path}/params").first()["id_col"]
+    id_c = sm.read_row(spark, f"{path}/params", _SIG_PARAMS_SCHEMA)["id_col"]
     sm.check_id_type(
         ids, spark.read.parquet(f"{path}/{m['sigs']}"), id_c,
         "signature_store_delete",
@@ -550,19 +552,14 @@ def _band_keys(
     so its width is what the stage costs at scale (guide §2.3 narrower
     types / shuffle fewer bytes)."""
     rows = num_hashes // bands
-    return sigs.select(
-        F.col(id_col).alias("__id"),
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[F.col(f"m{b * rows + j}") for j in range(rows)],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("key"),
+    keys = ", ".join(
+        "xxhash64(" + ", ".join(
+            [str(b)] + [f"m{b * rows + j}" for j in range(rows)]
+        ) + ")"
+        for b in range(bands)
+    )
+    return sigs.selectExpr(
+        f"{quote_ident(id_col)} AS __id", f"explode(array({keys})) AS key"
     )
 
 
@@ -1605,6 +1602,9 @@ _SPANHASH_COMPONENTS = {
     "folds": "span_hash_folds",
     "params": "params",
 }
+# The span-hash store's one-row params parquet, written and read with this
+# schema (a store older than a column reads it as null).
+_SPAN_PARAMS_SCHEMA = "window int, grain string, n_hashes long"
 
 #: Largest corpus hash set the span-join auto strategy will broadcast
 #: (count of 8-byte hashes; 4M ≈ 32 MB raw, comfortably inside executor
@@ -1678,11 +1678,12 @@ def _span_params(spark, path: str, m: dict) -> tuple[int, str, int | None]:
     Pre-r12 stores predate the grain column and are sentence-grain;
     pre-r13 stores predate ``n_hashes`` (None: the auto strategy defers
     to the planner)."""
-    pdf = spark.read.parquet(f"{path}/{m['params']}")
-    p = pdf.first()
-    grain = p["grain"] if "grain" in pdf.columns else "sentence"
-    n_hashes = p["n_hashes"] if "n_hashes" in pdf.columns else None
-    return int(p["window"]), grain, None if n_hashes is None else int(n_hashes)
+    p = sm.read_row(spark, f"{path}/{m['params']}", _SPAN_PARAMS_SCHEMA)
+    n_hashes = p["n_hashes"]
+    return (
+        int(p["window"]), p["grain"] or "sentence",
+        None if n_hashes is None else int(n_hashes),
+    )
 
 
 def build_sentence_hash_store(
@@ -1720,7 +1721,7 @@ def build_sentence_hash_store(
     n_hashes = spark.read.parquet(f"{path}/span_hashes").count()
     sm.write_rows(
         spark, [(window, grain, n_hashes)],
-        "window int, grain string, n_hashes long", f"{path}/params", mode,
+        _SPAN_PARAMS_SCHEMA, f"{path}/params", mode,
     )
     return load_sentence_hash_store(spark, path)
 
@@ -1858,7 +1859,7 @@ def sentence_hash_store_compact(
     window, grain, _ = _span_params(spark, path, m)
     sm.write_rows(
         spark, [(window, grain, n_hashes)],
-        "window int, grain string, n_hashes long", f"{path}/{new['params']}",
+        _SPAN_PARAMS_SCHEMA, f"{path}/{new['params']}",
     )
     sm.publish(path, m, new, _SPANHASH_COMPONENTS, sweep=sweep)
     return load_sentence_hash_store(spark, path)
@@ -2462,22 +2463,25 @@ def minhash_dedup_against(
         # Signature-agreement estimator: mean over i of [m_i(new)==m_i(corpus)].
         # Joins only the (small) new-side signatures broadcast against the
         # corpus signatures — the corpus text column is never in any plan.
-        agree = sum(
-            (F.col(f"__n{i}") == F.col(f"__c{i}")).cast("int")
-            for i in range(num_hashes)
+        # SQL text, the same trees as the Column-built sum (a left fold
+        # from 0) at a fraction of the plan-build cost.
+        agree = " + ".join(
+            ["0"] + [f"CAST((__n{i} = __c{i}) AS INT)" for i in range(num_hashes)]
         )
-        nsel = nsig.select(
-            F.col(id_col).alias("new_id"),
-            *[F.col(f"m{i}").alias(f"__n{i}") for i in range(num_hashes)],
+        idq = quote_ident(id_col)
+        nsel = nsig.selectExpr(
+            f"{idq} AS new_id", *[f"m{i} AS __n{i}" for i in range(num_hashes)]
         )
-        csel = csig.select(
-            F.col(id_col).alias("corpus_id"),
-            *[F.col(f"m{i}").alias(f"__c{i}") for i in range(num_hashes)],
+        csel = csig.selectExpr(
+            f"{idq} AS corpus_id",
+            *[f"m{i} AS __c{i}" for i in range(num_hashes)],
         )
         return (
             csel.join(F.broadcast(candidates), on="corpus_id")
             .join(F.broadcast(nsel), on="new_id")
-            .withColumn("jaccard", F.round(agree / F.lit(num_hashes), 4))
+            .withColumn(
+                "jaccard", F.expr(f"round(({agree}) / {num_hashes}, 4)")
+            )
             .where(F.col("jaccard") >= threshold)
             .select("new_id", "corpus_id", "jaccard")
         )

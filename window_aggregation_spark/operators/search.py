@@ -46,6 +46,9 @@ _IDX_COMPONENTS = {
     "doclens": "doclens",
     "tombstones": "tombstones",
 }
+# The index's one-row parquets, written and read with these schemas.
+_PARAMS_SCHEMA = "n_buckets int, id_col string"
+_STATS_SCHEMA = "n_docs bigint, sum_dl bigint"
 
 _IDF_SCALE = 9
 _SCORE_SCALE = 6
@@ -431,7 +434,10 @@ def _postings_frame(base: DataFrame, id_col: str, n_buckets: int) -> DataFrame:
             .cast("int"),
         )
         .repartition("term_bucket")
-        .sortWithinPartitions("token", id_col)
+        # led by the partition column, the sort is the one the bucketed
+        # write needs; a sort without it gets replaced by the writer's
+        # own sort on term_bucket alone, losing the token order
+        .sortWithinPartitions("term_bucket", "token", id_col)
     )
 
 
@@ -490,8 +496,7 @@ def build_text_index(
     ).parquet(f"{path}/postings")
     spark = df.sparkSession
     sm.write_rows(
-        spark, [(n_buckets, id_col)], "n_buckets int, id_col string",
-        f"{path}/params", mode,
+        spark, [(n_buckets, id_col)], _PARAMS_SCHEMA, f"{path}/params", mode,
     )
     return load_text_index(spark, path)
 
@@ -533,19 +538,25 @@ def text_index_add(
     ``sweep`` (default OFF) removes the superseded stats generation
     after the flip; leave it off when readers may hold the index open
     concurrently and GC out of band instead.
+
+    One load per add: the params and raw stats rows are read once at
+    entry, with their written schemas, and the returned index is built
+    from the manifest and stats this add published; no postings
+    directory is listed before the write.
     """
     m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
-    idx = load_text_index(spark, path)
-    idc = id_col or idx.id_col
+    p, n_docs, sum_dl = _index_rows(spark, path, m)
+    id_c, n_buckets = p["id_col"], int(p["n_buckets"])
     base = new_docs.select(
-        F.col(idc).alias(idx.id_col), tokens(F.col(text_col)).alias("toks")
+        F.col(id_col or id_c).alias(id_c), tokens(F.col(text_col)).alias("toks")
     )
     batch = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.coalesce(F.sum(F.size("toks")), F.lit(0)).alias("sum_dl"),
     ).first()
     if int(batch["n_docs"]) == 0:
-        return idx  # empty batch: nothing to publish
+        # empty batch: nothing to publish
+        return _open_text_index(spark, path, m, p, n_docs, sum_dl)
     # postings only when the batch has tokens: a zero-row partitionBy
     # write produces a _SUCCESS-only directory that parquet cannot infer
     # a schema from, which would brick every later load. A batch of
@@ -555,27 +566,22 @@ def text_index_add(
     keys = ("doclens", "stats") + (("postings",) if has_tokens else ())
     new = sm.new_generation(path, m, _IDX_COMPONENTS, keys)
     if has_tokens:
-        _postings_frame(base, idx.id_col, idx.n_buckets).write.partitionBy(
+        _postings_frame(base, id_c, n_buckets).write.partitionBy(
             "term_bucket"
         ).parquet(f"{path}/{new['postings']}")
-    base.select(idx.id_col, F.size("toks").alias("dl")).write.parquet(
+    base.select(id_c, F.size("toks").alias("dl")).write.parquet(
         f"{path}/{new['doclens']}"
     )
-    # idx.n_docs/sum_dl are tombstone-adjusted; raw stats must stay raw
-    # (the tombstone delta is re-subtracted at every load).
-    s = spark.read.parquet(f"{path}/{m['stats']}").first()
+    n_docs += int(batch["n_docs"])
+    sum_dl += int(batch["sum_dl"])
     sm.write_rows(
-        spark,
-        [(int(s["n_docs"]) + int(batch["n_docs"]),
-          int(s["sum_dl"]) + int(batch["sum_dl"]))],
-        "n_docs bigint, sum_dl bigint",
-        f"{path}/{new['stats']}",
+        spark, [(n_docs, sum_dl)], _STATS_SCHEMA, f"{path}/{new['stats']}"
     )
-    sm.publish(
+    m = sm.publish(
         path, m, new, _IDX_COMPONENTS,
         append=("postings", "doclens"), sweep=sweep,
     )
-    return load_text_index(spark, path)
+    return _open_text_index(spark, path, m, p, n_docs, sum_dl)
 
 
 def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
@@ -600,8 +606,8 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
     by doclens count ≠ raw N): deletion needs the exact per-doc lengths;
     rebuild the index once with this version first."""
     m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
-    idx = load_text_index(spark, path)
-    raw = spark.read.parquet(f"{path}/{m['stats']}").first()
+    p, n_raw, sum_raw = _index_rows(spark, path, m)
+    idx = _open_text_index(spark, path, m, p, n_raw, sum_raw)
     # only the "sidecar was never written" shapes (missing path /
     # no-schema empty dir, both AnalysisException) mean a pre-deletion
     # store; anything else (FS hiccup, permissions, corrupt file) must
@@ -614,10 +620,10 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
         n_lens = doclens.count()
     except AnalysisException:
         n_lens = -1
-    if n_lens != int(raw["n_docs"]):
+    if n_lens != n_raw:
         raise ValueError(
             f"text index at {path!r} has no usable doclens sidecar "
-            f"({n_lens} rows vs {int(raw['n_docs'])} raw docs): the "
+            f"({n_lens} rows vs {n_raw} raw docs): the "
             "store predates deletion support (adds are published "
             "atomically, so a torn add cannot cause this). Exact "
             "deletion needs the per-doc lengths — rebuild the index "
@@ -631,7 +637,8 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
     matched.select(idx.id_col, "dl").write.mode("append").parquet(
         f"{path}/{m['tombstones']}"
     )
-    return load_text_index(spark, path)
+    # same generation, one more tombstone batch: re-derive the delta only
+    return _open_text_index(spark, path, m, p, n_raw, sum_raw)
 
 
 def text_index_compact(spark, path: str, *, sweep: bool = False) -> TextIndex:
@@ -653,7 +660,8 @@ def text_index_compact(spark, path: str, *, sweep: bool = False) -> TextIndex:
     would find its directories gone mid-job. Default keeps them; GC out
     of band when no readers are active."""
     m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
-    idx = load_text_index(spark, path)
+    p, n_raw, sum_raw = _index_rows(spark, path, m)
+    idx = _open_text_index(spark, path, m, p, n_raw, sum_raw)
     if idx.tombstones is None:
         return idx
     tomb = spark.read.parquet(f"{path}/{m['tombstones']}")
@@ -666,7 +674,7 @@ def text_index_compact(spark, path: str, *, sweep: bool = False) -> TextIndex:
             sm.read_dirs(spark, path, m["postings"]), tomb, idx.id_col
         )
         .repartition("term_bucket")
-        .sortWithinPartitions("token", idx.id_col)
+        .sortWithinPartitions("term_bucket", "token", idx.id_col)
         .write.partitionBy("term_bucket")
         .parquet(f"{path}/{new['postings']}")
     )
@@ -675,13 +683,13 @@ def text_index_compact(spark, path: str, *, sweep: bool = False) -> TextIndex:
     ).write.parquet(f"{path}/{new['doclens']}")
     # effective stats were already tombstone-adjusted at load: publish them
     sm.write_rows(
-        spark, [(idx.n_docs, idx.sum_dl)], "n_docs bigint, sum_dl bigint",
+        spark, [(idx.n_docs, idx.sum_dl)], _STATS_SCHEMA,
         f"{path}/{new['stats']}",
     )
     # tombstones reset by pointing at a not-yet-existing dir (reads as
     # none)
-    sm.publish(path, m, new, _IDX_COMPONENTS, sweep=sweep)
-    return load_text_index(spark, path)
+    m = sm.publish(path, m, new, _IDX_COMPONENTS, sweep=sweep)
+    return _open_text_index(spark, path, m, p, idx.n_docs, idx.sum_dl)
 
 
 
@@ -693,10 +701,31 @@ def text_index_gc(path: str, *, grace_seconds: float = 900.0) -> dict:
     return sm.gc_store(path, _IDX_COMPONENTS, grace_seconds=grace_seconds)
 
 def load_text_index(spark, path: str) -> TextIndex:
+    """Open the persisted index at ``path``: the manifest, the params and
+    raw stats rows (read with their written schemas, one job each), the
+    pending tombstones' (count, Σdl) delta, and a lazy scan per postings
+    directory. The mutations build their result from the rows they read
+    at entry and the manifest they published instead of loading again
+    (one load per add, delete or compact)."""
     m = sm.read_manifest(path, _IDX_COMPONENTS)
-    p = spark.read.parquet(f"{path}/params").first()
-    s = spark.read.parquet(f"{path}/{m['stats']}").first()
-    n_docs, sum_dl = int(s["n_docs"]), int(s["sum_dl"])
+    return _open_text_index(spark, path, m, *_index_rows(spark, path, m))
+
+
+def _index_rows(spark, path: str, m: dict):
+    """``(params row, raw n_docs, raw sum_dl)`` of manifest ``m``: two
+    one-row reads with the schemas the index wrote."""
+    s = sm.read_row(spark, f"{path}/{m['stats']}", _STATS_SCHEMA)
+    return (
+        sm.read_row(spark, f"{path}/params", _PARAMS_SCHEMA),
+        int(s["n_docs"]), int(s["sum_dl"]),
+    )
+
+
+def _open_text_index(
+    spark, path: str, m: dict, p, n_docs: int, sum_dl: int
+) -> TextIndex:
+    """The index of manifest ``m`` with params row ``p`` and RAW stats
+    ``n_docs``/``sum_dl``; the pending tombstones are subtracted here."""
     tombstones = None
     tomb = sm.read_optional(spark, path, m["tombstones"])
     if tomb is not None:

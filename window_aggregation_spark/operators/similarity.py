@@ -725,6 +725,8 @@ _IVF_COMPONENTS = {
     "centroids": "centroids",
     "tombstones": "tombstones",
 }
+# The codebook parquet, written and read with this schema.
+_CENTROIDS_SCHEMA = "list_id int, centroid array<double>"
 
 _LONG_ID_TYPES = ("byte", "short", "int", "integer", "bigint", "long")
 
@@ -812,7 +814,7 @@ def build_ivf_index(
     c_lists.write.mode(mode).partitionBy("list_id").parquet(f"{path}/lists")
     sm.write_rows(
         spark, [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
-        "list_id int, centroid array<double>", f"{path}/centroids", mode,
+        _CENTROIDS_SCHEMA, f"{path}/centroids", mode,
     )
     return load_ivf_index(spark, path)
 
@@ -932,7 +934,7 @@ def load_ivf_index(spark, path: str) -> IVFIndex:
     ``list_id`` pruning filter pushes below the tombstone anti-join when
     deletions are pending)."""
     m = sm.read_manifest(path, _IVF_COMPONENTS)
-    rows = spark.read.parquet(
+    rows = spark.read.schema(_CENTROIDS_SCHEMA).parquet(
         f"{path}/{m['centroids']}"
     ).orderBy("list_id").collect()
     cents = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in rows])

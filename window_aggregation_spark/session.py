@@ -20,6 +20,19 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's session: ``master`` defaults to ``local[cpus]``
+    (``SPARK_GRAFT_CPUS``, else the core count), and ``extra_conf`` is
+    applied last, over every setting below.
+
+    With a local master (``local`` / ``local[...]``) file listing stays in
+    the driver up to 1024 paths
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``). Past
+    Spark's default of 32 paths, e.g. a 64-bucket postings directory, a
+    read otherwise launches a listing job that runs in the same JVM on
+    the same disk: 0.42-0.54 s and one extra job per read of a 64-bucket
+    directory, against 0.08-0.09 s listed inline (4 vCPUs). A cluster
+    master keeps the default: there the job spreads a large listing
+    over the executors, which is what the threshold is for."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
     # Production sizing (optimization guide §2.2): target 100 MB-1 GB
@@ -51,6 +64,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if master == "local" or master.startswith("local["):
+        # a listing job gains nothing in one JVM (see the docstring)
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "1024"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

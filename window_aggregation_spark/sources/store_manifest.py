@@ -93,7 +93,8 @@ logic beside them:
   directories, then flip the manifest once, guarded by the snapshot
   (``expected=``), optionally sweeping what the flip superseded;
   :func:`has_data` tells an empty staged batch (nothing to publish);
-- :func:`write_rows` — the small params/stats/centroid parquets.
+- :func:`write_rows` / :func:`read_row` — the small params/stats/centroid
+  parquets, written and read with one declared schema.
 """
 
 from __future__ import annotations
@@ -1109,14 +1110,46 @@ def new_generation(
     return {k: next_version(path, components[k], m[k]) for k in keys}
 
 
+# Row sets up to this many literal values (params, stats, a small
+# codebook) are written from a JVM-only plan; larger ones (a big IVF
+# codebook) go through ``createDataFrame``, whose fixed parallelize cost
+# is then small beside the per-literal plan-build cost (at 1,024 values
+# the literal plan still wins, 0.59 s against 0.90 s on 4 vCPUs).
+_LITERAL_VALUES_MAX = 1024
+
+
 def write_rows(
     spark, rows, schema: str, dst: str, mode: str = "errorifexists"
 ) -> None:
     """Write a few driver-side rows (params, stats, centroids) as one
-    parquet file."""
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(mode).parquet(
-        dst
+    parquet file with the column types of the DDL ``schema``.
+
+    The rows become literal structs cast to ``struct<schema>`` and
+    ``inline``-d over ``spark.range(1)``: a plan the JVM runs alone.
+    ``createDataFrame`` pickles the rows into a Python RDD
+    (``parallelize``): 0.94-1.13 s per call against 0.16-0.19 s here
+    (one params row, 4 vCPUs), so it serves only row sets past
+    ``_LITERAL_VALUES_MAX`` values. Read the rows back with
+    :func:`read_row` and the same ``schema``."""
+    n_values = sum(
+        len(v) if isinstance(v, (list, tuple)) else 1 for r in rows for v in r
     )
+    if 0 < n_values <= _LITERAL_VALUES_MAX:
+        struct = f"struct<{schema}>"
+        df = spark.range(1).select(F.inline(F.array(*[
+            F.struct(*[F.lit(v) for v in r]).cast(struct) for r in rows
+        ])))
+    else:
+        df = spark.createDataFrame(rows, schema)
+    df.coalesce(1).write.mode(mode).parquet(dst)
+
+
+def read_row(spark, src: str, schema: str):
+    """The one row of a params/stats parquet, read with the ``schema`` it
+    was written with: one Spark job, where an inferred read runs a second
+    one for the schema. A column the file lacks (a store written before
+    the column existed) reads as null."""
+    return spark.read.schema(schema).parquet(src).first()
 
 
 def publish(
@@ -1139,7 +1172,10 @@ def publish(
     - ``drop``: manifest keys to remove (metadata the flip invalidates);
     - ``sweep``: after the flip, delete the superseded generation dirs of
       every replaced component. Only safe with no concurrent readers;
-      the default keeps them for out-of-band GC (:func:`gc_store`)."""
+      the default keeps them for out-of-band GC (:func:`gc_store`).
+
+    Returns the published manifest, so a caller can build its result
+    from it without reading the manifest back."""
     mapping = {**m, **new}
     for k in append:
         if k in new:
@@ -1151,3 +1187,4 @@ def publish(
         for k in new:
             if k not in append:
                 sweep_stale(path, components[k], new[k])
+    return mapping

@@ -1136,6 +1136,29 @@ _DUCK_SHINGLES = f"""
     END
 """
 
+def _duck_minhash_sig_ctes(corpus_where: str | None = None) -> str:
+    """The ``sh, ex, hs, sig`` CTEs of :func:`_duck_minhash_lsh_sql`:
+    shingles, the portable hash, and the 64 universal-hash minima per
+    ``documents.doc_id`` — the DuckDB twin of
+    ``dedup.minhash_signatures``."""
+    from window_aggregation_spark.operators import dedup as dd
+
+    h = dd.portable_hash64_duck("s")
+    p = 2147483647
+    mins = ",\n               ".join(
+        f"min(({dd._HASH_A[i]} * h + {dd._HASH_B[i]}) % {p}) AS m{i}"
+        for i in range(64)
+    )
+    corpus_filter = f" WHERE {corpus_where}" if corpus_where else ""
+    return f"""sh AS (SELECT doc_id, {_DUCK_SHINGLES} AS sh
+                    FROM documents{corpus_filter}),
+        ex AS (SELECT doc_id, unnest(sh) AS s FROM sh),
+        hs AS (SELECT doc_id, {h} % {p} AS h FROM ex),
+        sig AS (SELECT doc_id,
+               {mins}
+               FROM hs GROUP BY doc_id)"""
+
+
 def _duck_minhash_lsh_sql(
     split_where: str | None = None,
     id_a: str = "id_a",
@@ -1161,14 +1184,6 @@ def _duck_minhash_lsh_sql(
     ``corpus_where`` filters the corpus itself before everything — the
     oracle form for the deletion-lifecycle twin (a store with docs
     deleted must behave exactly like this filtered recomputation)."""
-    from window_aggregation_spark.operators import dedup as dd
-
-    h = dd.portable_hash64_duck("s")
-    p = 2147483647
-    mins = ",\n               ".join(
-        f"min(({dd._HASH_A[i]} * h + {dd._HASH_B[i]}) % {p}) AS m{i}"
-        for i in range(64)
-    )
     band_conds = "\n            OR ".join(
         "(" + " AND ".join(f"l.m{b * 4 + j} = r.m{b * 4 + j}" for j in range(4)) + ")"
         for b in range(16)
@@ -1205,15 +1220,8 @@ def _duck_minhash_lsh_sql(
           JOIN sh b ON c.{id_b} = b.doc_id)
         WHERE jaccard >= 0.3
         """
-    corpus_filter = f" WHERE {corpus_where}" if corpus_where else ""
     return f"""
-        WITH sh AS (SELECT doc_id, {_DUCK_SHINGLES} AS sh
-                    FROM documents{corpus_filter}),
-        ex AS (SELECT doc_id, unnest(sh) AS s FROM sh),
-        hs AS (SELECT doc_id, {h} % {p} AS h FROM ex),
-        sig AS (SELECT doc_id,
-               {mins}
-               FROM hs GROUP BY doc_id),
+        WITH {_duck_minhash_sig_ctes(corpus_where)},
         cand AS (SELECT l.doc_id AS {id_a}, r.doc_id AS {id_b}
                  FROM sig l JOIN sig r
                    ON {pair_rule} AND ({band_conds}))
