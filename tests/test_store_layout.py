@@ -92,23 +92,28 @@ def _same(a, b) -> bool:
     return type(a) is type(b) and a == b
 
 
-_WIDE = [[math.sin(i * 31 + j) for j in range(300)] for i in range(4)]
-
+_RNG = random.Random(11)
 _STORE_ROWS = [
     (search._PARAMS_SCHEMA, [(64, "doc_id")]),
-    (search._PARAMS_SCHEMA, [(7, "naïve id ` 'q'")]),
+    (search._PARAMS_SCHEMA, [(7, "naïve id ` 'q' \\ \\' \\u0041")]),
     (search._STATS_SCHEMA, [(2**40 + 3, 2**62 - 1)]),
     (search._STATS_SCHEMA, [(0, 0)]),
+    (search._STATS_SCHEMA, [(-(2**63), -1)]),
     (dd._SIG_PARAMS_SCHEMA, [("doc_id", 3, 64)]),
     (dd._SPAN_PARAMS_SCHEMA, [(3, "sentence", 2**33)]),
     (dd._SPAN_PARAMS_SCHEMA, [(15, "token", None)]),
+    # a default-size codebook (16 lists, 64 dims) over many magnitudes:
+    # every double must survive the trip through text bit for bit
+    (sim._CENTROIDS_SCHEMA, [
+        (i, [_RNG.uniform(-1, 1) * 10.0 ** _RNG.randint(-300, 300)
+             for _ in range(64)])
+        for i in range(16)
+    ]),
     (sim._CENTROIDS_SCHEMA, [
         (0, [0.1, -0.0, 1e308, 5e-324]),
         (1, [float("nan"), float("inf"), float("-inf"), 1 / 3]),
         (2, []),
     ]),
-    # past the literal-plan size: the createDataFrame path
-    (sim._CENTROIDS_SCHEMA, list(enumerate(_WIDE))),
 ]
 
 
@@ -125,13 +130,24 @@ def test_write_rows_round_trip(spark, tmp_path, schema, rows):
         assert len(got) == len(rows)
         assert all(map(_same, sorted(got, key=str), sorted(rows, key=str)))
     assert len([f for f in os.listdir(dst) if f.endswith(".parquet")]) == 1
-    if len(rows) == 1:
-        assert _same(tuple(sm.read_row(spark, dst, schema)), rows[0])
 
 
-def test_read_row_missing_column_reads_null(spark, tmp_path):
-    """A params file written before a column existed reads it as null."""
+@pytest.mark.parametrize(
+    "rows", [[(2**31, "doc_id")], [("64", "doc_id")], [(1.5, "doc_id")], [(1,)]]
+)
+def test_write_rows_rejects_values_the_schema_cannot_hold(
+    spark, tmp_path, rows
+):
+    """An int overflow, a string or a float in an int column and a short
+    row fail the write instead of storing a null or a truncated value."""
+    with pytest.raises(Exception):
+        sm.write_rows(spark, rows, search._PARAMS_SCHEMA, str(tmp_path / "p"))
+
+
+def test_declared_read_of_older_params_reads_null(spark, tmp_path):
+    """A span-hash params file written before a column existed reads it
+    as null through the declared schema."""
     dst = str(tmp_path / "old_params")
     sm.write_rows(spark, [(3,)], "window int", dst)
-    row = sm.read_row(spark, dst, dd._SPAN_PARAMS_SCHEMA)
+    row = spark.read.schema(dd._SPAN_PARAMS_SCHEMA).parquet(dst).first()
     assert tuple(row) == (3, None, None)

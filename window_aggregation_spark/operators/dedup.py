@@ -268,7 +268,7 @@ def _load_signatures(
     """:func:`load_signature_store`, plus whether folds or tombstones are
     pending (what a compaction would merge)."""
     m = sm.read_manifest(path, _SIG_COMPONENTS)
-    p = sm.read_row(spark, f"{path}/params", _SIG_PARAMS_SCHEMA)
+    p = spark.read.schema(_SIG_PARAMS_SCHEMA).parquet(f"{path}/params").first()
     id_c = p["id_col"]
     base = spark.read.parquet(f"{path}/{m['sigs']}")
     folds = sm.folds_before(
@@ -327,7 +327,10 @@ def signature_store_delete(spark, path: str, ids: DataFrame) -> SignatureStore:
     :func:`signature_store_compact`. Works on POSIX paths and object
     stores alike (manifest protocol, ``sources/store_manifest.py``)."""
     m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
-    id_c = sm.read_row(spark, f"{path}/params", _SIG_PARAMS_SCHEMA)["id_col"]
+    id_c = (
+        spark.read.schema(_SIG_PARAMS_SCHEMA).parquet(f"{path}/params")
+        .first()["id_col"]
+    )
     sm.check_id_type(
         ids, spark.read.parquet(f"{path}/{m['sigs']}"), id_c,
         "signature_store_delete",
@@ -1603,7 +1606,9 @@ _SPANHASH_COMPONENTS = {
     "params": "params",
 }
 # The span-hash store's one-row params parquet, written and read with this
-# schema (a store older than a column reads it as null).
+# schema. A declared read gives a column the file lacks as null, so a
+# store written before ``grain`` or ``n_hashes`` existed still loads
+# (:func:`_span_params`).
 _SPAN_PARAMS_SCHEMA = "window int, grain string, n_hashes long"
 
 #: Largest corpus hash set the span-join auto strategy will broadcast
@@ -1678,7 +1683,10 @@ def _span_params(spark, path: str, m: dict) -> tuple[int, str, int | None]:
     Pre-r12 stores predate the grain column and are sentence-grain;
     pre-r13 stores predate ``n_hashes`` (None: the auto strategy defers
     to the planner)."""
-    p = sm.read_row(spark, f"{path}/{m['params']}", _SPAN_PARAMS_SCHEMA)
+    p = (
+        spark.read.schema(_SPAN_PARAMS_SCHEMA)
+        .parquet(f"{path}/{m['params']}").first()
+    )
     n_hashes = p["n_hashes"]
     return (
         int(p["window"]), p["grain"] or "sentence",

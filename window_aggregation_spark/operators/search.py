@@ -714,9 +714,12 @@ def load_text_index(spark, path: str) -> TextIndex:
 def _index_rows(spark, path: str, m: dict):
     """``(params row, raw n_docs, raw sum_dl)`` of manifest ``m``: two
     one-row reads with the schemas the index wrote."""
-    s = sm.read_row(spark, f"{path}/{m['stats']}", _STATS_SCHEMA)
+    s = (
+        spark.read.schema(_STATS_SCHEMA).parquet(f"{path}/{m['stats']}")
+        .first()
+    )
     return (
-        sm.read_row(spark, f"{path}/params", _PARAMS_SCHEMA),
+        spark.read.schema(_PARAMS_SCHEMA).parquet(f"{path}/params").first(),
         int(s["n_docs"]), int(s["sum_dl"]),
     )
 

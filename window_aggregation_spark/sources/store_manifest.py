@@ -93,8 +93,8 @@ logic beside them:
   directories, then flip the manifest once, guarded by the snapshot
   (``expected=``), optionally sweeping what the flip superseded;
   :func:`has_data` tells an empty staged batch (nothing to publish);
-- :func:`write_rows` / :func:`read_row` — the small params/stats/centroid
-  parquets, written and read with one declared schema.
+- :func:`write_rows` — the small params/stats/centroid parquets, written
+  with the schema each store declares once and reads them back with.
 """
 
 from __future__ import annotations
@@ -109,6 +109,7 @@ import warnings
 from functools import reduce
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 _LEGACY_MANIFEST = "MANIFEST"
 _MANIFEST_RE = re.compile(r"^MANIFEST-(\d{20})$")
@@ -1110,46 +1111,31 @@ def new_generation(
     return {k: next_version(path, components[k], m[k]) for k in keys}
 
 
-# Row sets up to this many literal values (params, stats, a small
-# codebook) are written from a JVM-only plan; larger ones (a big IVF
-# codebook) go through ``createDataFrame``, whose fixed parallelize cost
-# is then small beside the per-literal plan-build cost (at 1,024 values
-# the literal plan still wins, 0.59 s against 0.90 s on 4 vCPUs).
-_LITERAL_VALUES_MAX = 1024
-
-
 def write_rows(
     spark, rows, schema: str, dst: str, mode: str = "errorifexists"
 ) -> None:
     """Write a few driver-side rows (params, stats, centroids) as one
     parquet file with the column types of the DDL ``schema``.
 
-    The rows become literal structs cast to ``struct<schema>`` and
-    ``inline``-d over ``spark.range(1)``: a plan the JVM runs alone.
+    The rows travel as one JSON string literal, parsed by ``from_json``
+    into ``array<struct<schema>>`` and ``inline``-d over
+    ``spark.range(1)``: a plan of constant size that the JVM runs alone.
+    A value the schema cannot hold (an int overflow, a string in a
+    number column) fails the write (``FAILFAST``) instead of storing a
+    null. Doubles round-trip exactly, NaN and ±inf included.
     ``createDataFrame`` pickles the rows into a Python RDD
-    (``parallelize``): 0.94-1.13 s per call against 0.16-0.19 s here
-    (one params row, 4 vCPUs), so it serves only row sets past
-    ``_LITERAL_VALUES_MAX`` values. Read the rows back with
-    :func:`read_row` and the same ``schema``."""
-    n_values = sum(
-        len(v) if isinstance(v, (list, tuple)) else 1 for r in rows for v in r
-    )
-    if 0 < n_values <= _LITERAL_VALUES_MAX:
-        struct = f"struct<{schema}>"
-        df = spark.range(1).select(F.inline(F.array(*[
-            F.struct(*[F.lit(v) for v in r]).cast(struct) for r in rows
-        ])))
-    else:
-        df = spark.createDataFrame(rows, schema)
+    (``parallelize``): one params row took 1.19-1.44 s that way against
+    0.23-0.34 s here, and a 256 x 256 codebook 1.40-1.55 s against
+    0.63-0.99 s (4 vCPUs); only a codebook far past the default 16 lists
+    is slower here (1,024 x 768: 3.9-5.1 s against 1.8-2.0 s), once per
+    build. Read the rows back with ``spark.read.schema(schema)``, which
+    skips the inference job."""
+    names = DataType.fromDDL(schema).fieldNames()
+    text = json.dumps([dict(zip(names, r, strict=True)) for r in rows])
+    df = spark.range(1).select(F.inline(F.from_json(
+        F.lit(text), f"array<struct<{schema}>>", {"mode": "FAILFAST"}
+    )))
     df.coalesce(1).write.mode(mode).parquet(dst)
-
-
-def read_row(spark, src: str, schema: str):
-    """The one row of a params/stats parquet, read with the ``schema`` it
-    was written with: one Spark job, where an inferred read runs a second
-    one for the schema. A column the file lacks (a store written before
-    the column existed) reads as null."""
-    return spark.read.schema(schema).parquet(src).first()
 
 
 def publish(
@@ -1161,7 +1147,7 @@ def publish(
     append=(),
     sweep: bool = False,
     drop=(),
-) -> None:
+) -> dict[str, str]:
     """Flip the manifest from snapshot ``m`` to ``m`` updated by ``new``,
     in one write guarded by ``expected=m``: a writer that flipped in
     between makes this raise :class:`ManifestConflictError` instead of
