@@ -163,6 +163,14 @@ def test_argument_constraints():
         (AggregateDef("a", "lead", field="amount", args=("-1",)), "non-negative"),
         (AggregateDef("a", "discrete_percentile", field="amount", args=("1.5",)),
          "between [0,1]"),
+        (AggregateDef("a", "discrete_percentile", field="amount", args=("nan",)),
+         "between [0,1]"),
+        (AggregateDef("a", "nth_value", field="amount", args=("abc",)),
+         "greater than 0"),
+        (AggregateDef("a", "nth_value", field="amount", args=("0",)),
+         "greater than 0"),
+        (AggregateDef("a", "nth_value", field="amount", args=("1 + 1",)),
+         "greater than 0"),
     ]:
         msgs = _validate(WindowPlan(spec=base, aggregates=(agg,)))
         assert any(frag in m for m in msgs), (agg, msgs)

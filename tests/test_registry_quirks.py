@@ -44,5 +44,74 @@ def test_every_reference_function_is_registered():
 
 def test_registry_entries_are_complete():
     for fdef in FUNCTIONS.values():
-        assert fdef.build is not None and fdef.sql is not None
+        assert fdef.sql is not None
         assert fdef.output_type in (None, "int", "float", "double", "long")
+
+
+def test_discrete_percentile_backends_agree_on_the_rank(spark):
+    """Both backends compute k = ceil(p*n) in the same double arithmetic.
+    p = 0.07 over 100 rows and 0.14 over 50 rows are the cases where an
+    exact DECIMAL product (7) and the double product (7.000000000000001)
+    pick different ranks; ordering by (val, id) keeps the general
+    composition (the rank lookup needs a single order key)."""
+    from pyspark.sql import functions as F
+
+    from window_aggregation_spark.operators.window_aggregation import (
+        window_aggregate,
+    )
+    from window_aggregation_spark.plans.sql_gen import plan_to_sql
+    from window_aggregation_spark.spec import OrderKey, WindowPlan, WindowSpecDef
+
+    for n, p in ((100, "0.07"), (50, "0.14")):
+        df = spark.range(n).select(
+            F.col("id").cast("int").alias("id"),
+            F.lit(0).alias("g"),
+            F.col("id").cast("double").alias("val"),
+        )
+        plan = WindowPlan(
+            WindowSpecDef(
+                partition_by=("g",), order_by=(OrderKey("val"), OrderKey("id"))
+            ),
+            (AggregateDef("pd", "discrete_percentile", field="val", args=(p,)),),
+        )
+        api = window_aggregate(df, plan).orderBy("id").collect()
+        df.createOrReplaceTempView("dp_rank_parity")
+        sql = spark.sql(
+            plan_to_sql(plan, "dp_rank_parity", df.columns,
+                        input_types=dict(df.dtypes))
+        ).orderBy("id").collect()
+        assert [r.pd for r in api] == [r.pd for r in sql], (n, p)
+
+
+def test_passthrough_functions_keep_nested_and_udt_types(spark):
+    """LEAD/FIRST/MAX keep their input's type for fields SQL cannot name
+    exactly: a struct whose field name needs quoting and a UDT column."""
+    from pyspark.ml.linalg import Vectors, VectorUDT
+    from pyspark.sql import types as T
+
+    from window_aggregation_spark.operators.window_aggregation import (
+        window_aggregate,
+    )
+    from window_aggregation_spark.spec import OrderKey, WindowPlan, WindowSpecDef
+
+    schema = T.StructType([
+        T.StructField("g", T.LongType()),
+        T.StructField("id", T.LongType()),
+        T.StructField("s", T.StructType([T.StructField("a b", T.LongType())])),
+        T.StructField("v", VectorUDT()),
+    ])
+    df = spark.createDataFrame(
+        [(0, i, (i,), Vectors.dense([float(i)])) for i in range(3)], schema
+    )
+    spec = WindowSpecDef(partition_by=("g",), order_by=(OrderKey("id"),))
+    for fn, field, args in (("lead", "s", ("1",)), ("first", "s", ()),
+                            ("max", "s", ()), ("lead", "v", ("1",)),
+                            ("last", "v", ())):
+        plan = WindowPlan(spec, (AggregateDef("o", fn, field=field, args=args),))
+        out = window_aggregate(df, plan, validate=False)
+        assert out.schema["o"].dataType == schema[field].dataType, (fn, field)
+        got = [r.o for r in out.orderBy("id").collect()]
+        values = [r[field] for r in df.orderBy("id").collect()]
+        want = {"lead": values[1:] + [None], "first": values[:1] * 3,
+                "max": values, "last": values}[fn]
+        assert got == want, (fn, field)

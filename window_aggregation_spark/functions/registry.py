@@ -10,15 +10,20 @@ Each entry declares (mirroring the reference ``Function`` enum,
   we additionally accept short/byte/decimal as a superset),
 - the declared output type ('int', 'float', 'double', or ``None`` =
   input-type passthrough, matching ``Function.getOutputSchema`` semantics),
-- a DataFrame-API column builder, and
-- a SQL renderer for the generated-SQL backend (the analogue of the
-  reference's BigQuery pushdown templates, ``WindowAggregation.java:75-93``).
+- one SQL renderer, the function's only expression builder: the
+  DataFrame backend runs its ``spark``-dialect text through ``F.expr``
+  and the generated-SQL backend splices the same text into one SELECT
+  (the reference's one-IR, two-output design,
+  ``WindowAggregation.java:663-686``); the ``ansi`` dialect serves the
+  DuckDB cross-checks.
 
-All builders produce pure built-in Catalyst expressions — no Python UDFs, so
-every function stays JVM-side inside ``WindowExec`` / whole-stage codegen.
-The single genuinely custom function, DISCRETE_PERCENTILE (reference UDAF
-``function/DiscretePercentile.java:40-168``), is composed from builtins; see
-:func:`_discrete_percentile` below.
+All renderers produce pure built-in Catalyst expressions — no Python UDFs,
+so every function stays JVM-side inside ``WindowExec`` / whole-stage
+codegen. Numeric arguments are rendered from their parsed values, never
+the config text. The single genuinely custom function, DISCRETE_PERCENTILE
+(reference UDAF ``function/DiscretePercentile.java:40-168``), is composed
+from builtins; see :func:`_sql_discrete_percentile` below. The reference's
+BigQuery templates are a separate renderer, :func:`bigquery_expression`.
 """
 
 from __future__ import annotations
@@ -27,11 +32,9 @@ from dataclasses import dataclass
 from enum import Enum
 from typing import Callable
 
-from pyspark.sql import Column, WindowSpec
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from window_aggregation_spark.spec import AggregateDef, WindowSpecDef, quote_ident
+from window_aggregation_spark.spec import AggregateDef, quote_ident
 
 # The reference's "numeric" union INT/LONG/FLOAT/DOUBLE plus the natural
 # Spark superset (short/byte/decimal) — SURVEY §1.3.
@@ -44,6 +47,16 @@ NUMERIC_TYPES = (
     T.DoubleType,
     T.DecimalType,
 )
+
+
+# The declared output types a registry entry can name (``output_type``);
+# the cast renders their SQL name, the design-time schema the type itself.
+OUTPUT_TYPES = {
+    "int": T.IntegerType(),
+    "float": T.FloatType(),
+    "double": T.DoubleType(),
+    "long": T.LongType(),
+}
 
 
 class Clause(Enum):
@@ -59,11 +72,9 @@ def _effective_ignore_nulls(agg: AggregateDef) -> bool:
     return agg.ignore_nulls or from_args
 
 
-def _int_arg(agg: AggregateDef, default: int | None = None) -> int:
+def _int_arg(agg: AggregateDef) -> int:
     if not agg.args:
-        if default is None:
-            raise ValueError(f"Function '{agg.function}' requires an integer argument.")
-        return default
+        raise ValueError(f"Function '{agg.function}' requires an integer argument.")
     return int(agg.args[0].strip())
 
 
@@ -71,204 +82,40 @@ def _float_arg(agg: AggregateDef) -> float:
     return float(agg.args[0].strip())
 
 
+def double_sql(p: float, dialect: str = "spark") -> str:
+    # Spark SQL reads a bare 0.07 as a DECIMAL literal and computes
+    # ceil(0.07 * 100) = 7 exactly; the D suffix keeps the double arithmetic
+    # (ceil(7.000000000000001) = 8) of every other percentile path
+    return f"{p!r}D" if dialect == "spark" else repr(p)
+
+
 # --------------------------------------------------------------------------
-# Column builders.  Signature: (agg, window_spec, spec_def) -> Column
-# (the returned Column is complete — `.over(...)` already applied).
+# SQL renderers.  Signature: (agg, over_sql, dialect) -> str expression.
+# (mirrors reference O12, WindowAggregation.java:631-661)
 # --------------------------------------------------------------------------
 
-def _rank(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.rank().over(w)
+def _sql_simple(
+    template: str, p: float | None = None
+) -> Callable[[AggregateDef, str, str], str]:
+    """``template`` + OVER: ``{field}`` is the quoted field, ``{n}`` the
+    integer argument and ``{p}`` the fraction argument (or the fixed ``p``)."""
+
+    def render(agg: AggregateDef, over: str, dialect: str) -> str:
+        values = {"field": quote_ident(agg.field, dialect) if agg.field else ""}
+        if "{n}" in template:
+            values["n"] = _int_arg(agg)
+        if "{p}" in template:
+            values["p"] = double_sql(_float_arg(agg) if p is None else p, dialect)
+        return f"{template.format(**values)} {over}"
+
+    return render
 
 
-def _dense_rank(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.dense_rank().over(w)
-
-
-def _percent_rank(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    # Spark computes double; the reference's declared schema is FLOAT
-    # (WindowAggregationConfig.java:332-336) — downcast at the boundary.
-    return F.percent_rank().over(w).cast(T.FloatType())
-
-
-def _ntile(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.ntile(_int_arg(agg)).over(w)
-
-
-def _row_number(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.row_number().over(w)
-
-
-def _median(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    # Exact interpolated percentile at 0.5 — the reference calls Hive's
-    # `percentile` UDAF (WindowsAggregationUtil.java:140-141); Spark ≥3.5 has
-    # it as a native builtin aggregate, usable over a window.
-    return F.percentile(F.col(agg.field), F.lit(0.5)).over(w).cast(T.DoubleType())
-
-
-def _continuous_percentile(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return (
-        F.percentile(F.col(agg.field), F.lit(_float_arg(agg)))
-        .over(w)
-        .cast(T.DoubleType())
-    )
-
-
-def _discrete_percentile(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    """PERCENTILE_DISC: smallest actual value whose cumulative distribution
-    within the frame is >= p.
-
-    Matches the reference UDAF's walk over a sorted frequency map
-    (``DiscretePercentile.java:142-168``) including null-skipping (``:105-107``
-    — ``collect_list`` likewise drops nulls): for the sorted non-null frame
-    values v_1..v_n, return v_k with k = max(ceil(p*n), 1); empty frame -> null.
-
-    Composed entirely from builtin Catalyst expressions, so it works over any
-    frame (including the running default frame) and — unlike the reference,
-    which re-registers its UDAF under one global name
-    (``WindowsAggregationUtil.java:113-114``) — multiple percentiles in one
-    plan can't clobber each other.
-
-    Scale note: memory is O(frame size) per row. For 100 TB hot partitions use
-    the sketch-based alternative ``approx_percentile`` (accepted here as
-    function name "approx_discrete_percentile").
-    """
-    p = _float_arg(agg)
-    vals = F.array_sort(F.collect_list(F.col(agg.field)).over(w))
-    n = F.size(vals)
-    k = F.greatest(F.ceil(F.lit(p) * n), F.lit(1)).cast(T.IntegerType())
-    return F.get(vals, k - F.lit(1))
-
-
-def _approx_discrete_percentile(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    # The 100 TB-scale variant: t-digest style sketch, fixed memory per frame.
-    p = _float_arg(agg)
-    return F.approx_percentile(F.col(agg.field), F.lit(p), F.lit(10000)).over(w)
-
-
-def _lead(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.lead(F.col(agg.field), _int_arg(agg)).over(w)
-
-
-def _lag(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.lag(F.col(agg.field), _int_arg(agg)).over(w)
-
-
-def _first(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.first(F.col(agg.field), ignorenulls=_effective_ignore_nulls(agg)).over(w)
-
-
-def _last(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.last(F.col(agg.field), ignorenulls=_effective_ignore_nulls(agg)).over(w)
-
-
-def _cume_dist(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.cume_dist().over(w).cast(T.DoubleType())
-
-
-def _accumulate(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    # Running / framed SUM; output type = input type per the reference's
-    # schema passthrough (Spark widens int->long, so cast back at the edge).
-    return F.sum(F.col(agg.field)).over(w)
-
-
-# Extension aggregates beyond the reference's 14 (same clause shape as
-# ACCUMULATE: partition required, order and frame optional).
-
-def _min(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.min(F.col(agg.field)).over(w)
-
-
-def _max(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.max(F.col(agg.field)).over(w)
-
-
-def _avg(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.avg(F.col(agg.field)).over(w).cast(T.DoubleType())
-
-
-def _count(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.count(F.col(agg.field)).over(w)
-
-
-def _approx_count_distinct(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    # HyperLogLog++ sketch — the fixed-memory cardinality path for 100 TB.
-    return F.approx_count_distinct(F.col(agg.field)).over(w)
-
-
-def _nth_value(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.nth_value(
-        F.col(agg.field), _int_arg(agg), ignoreNulls=_effective_ignore_nulls(agg)
-    ).over(w)
-
-
-def _second_field(agg: AggregateDef) -> str:
-    return agg.args[0].strip()
-
-
-def _moment_sums(agg: AggregateDef, w: WindowSpec):
-    """Pairwise-complete power sums for the two-field moments.
-
-    The moments are built from plain window SUMS plus ONE final arithmetic
-    expression — not from Spark's native Corr/Covariance co-moment
-    aggregates — for two reasons:
-
-    1. **ANSI safety**: native ``corr`` raises DIVIDE_BY_ZERO under ANSI
-       mode for empty or zero-variance frames; here every division is
-       guarded and evaluates lazily.
-    2. **Cross-engine bit-reproducibility**: sums of integral-valued
-       doubles are EXACT, hence independent of accumulation order — so any
-       engine computing the same final expression over the same frame gets
-       the identical bit pattern. Co-moment (Welford) updates divide at
-       every step and diverge ~1e-9 between engines on long frames, which
-       measurably straddles rounding grids. Trade-off: the power-sum
-       formula cancels catastrophically when |mean| >> stddev — center
-       such inputs first (subtract a constant shift; moments are
-       shift-invariant).
-    """
-    x = F.col(agg.field).cast(T.DoubleType())
-    y = F.col(_second_field(agg)).cast(T.DoubleType())
-    both = x.isNotNull() & y.isNotNull()
-    xv = F.when(both, x)
-    yv = F.when(both, y)
-    n = F.count(F.when(both, F.lit(1))).over(w).cast(T.DoubleType())
-    sx = F.sum(xv).over(w)
-    sy = F.sum(yv).over(w)
-    sxx = F.sum(xv * xv).over(w)
-    syy = F.sum(yv * yv).over(w)
-    sxy = F.sum(xv * yv).over(w)
-    return n, sx, sy, sxx, syy, sxy
-
-
-def _null_d() -> Column:
-    # built lazily — F.lit needs an active SparkContext, which module import
-    # must not assume
-    return F.lit(None).cast(T.DoubleType())
-
-
-def _corr(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    n, sx, sy, sxx, syy, sxy = _moment_sums(agg, w)
-    num = n * sxy - sx * sy
-    den = F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)
-    return F.when(den > 0, num / den).otherwise(_null_d())
-
-
-def _covar_samp(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    n, sx, sy, _sxx, _syy, sxy = _moment_sums(agg, w)
-    return F.when(n >= 2, (n * sxy - sx * sy) / (n * (n - 1))).otherwise(
-        _null_d()
-    )
-
-
-def _covar_pop(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    n, sx, sy, _sxx, _syy, sxy = _moment_sums(agg, w)
-    return F.when(n >= 1, (n * sxy - sx * sy) / (n * n)).otherwise(_null_d())
-
-
-def _count_distinct(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
+def _sql_count_distinct(agg: AggregateDef, over: str, dialect: str) -> str:
     """Running exact distinct count. Neither Spark nor BigQuery allows
-    DISTINCT inside an analytic aggregate, so the registry composition is
-    collect_list -> array_distinct -> size (collect_list skips NULLs, so
-    NULL values are ignored exactly like COUNT(DISTINCT col)).
+    DISTINCT inside an analytic aggregate, so Spark gets collect_list ->
+    array_distinct -> size (collect_list skips NULLs, so NULL values are
+    ignored exactly like COUNT(DISTINCT col)).
 
     This composition holds O(frame) per row — fine for small frames; for
     running frames :func:`..operators.window_aggregation.window_aggregate`
@@ -277,32 +124,6 @@ def _count_distinct(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Colum
     trade as the percentiles' fused rank lookup,
     ``_percentile_rank_lookup``; results bit-identical, pinned by
     tests/test_count_distinct.py)."""
-    return F.size(F.array_distinct(F.collect_list(F.col(agg.field)).over(w)))
-
-
-def _stddev(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.stddev_samp(F.col(agg.field)).over(w).cast(T.DoubleType())
-
-
-def _variance(agg: AggregateDef, w: WindowSpec, _: WindowSpecDef) -> Column:
-    return F.var_samp(F.col(agg.field)).over(w).cast(T.DoubleType())
-
-
-# --------------------------------------------------------------------------
-# SQL renderers.  Signature: (agg, over_sql, dialect) -> str expression.
-# The generated-SQL backend (mirrors reference O12, WindowAggregation.java:631-661).
-# --------------------------------------------------------------------------
-
-def _sql_simple(template: str) -> Callable[[AggregateDef, str, str], str]:
-    def render(agg: AggregateDef, over: str, dialect: str) -> str:
-        field = quote_ident(agg.field, dialect) if agg.field else ""
-        args = [a.strip() for a in agg.args]
-        return template.format(field=field, args=args, a0=args[0] if args else "") + " " + over
-
-    return render
-
-
-def _sql_count_distinct(agg: AggregateDef, over: str, dialect: str) -> str:
     field = quote_ident(agg.field, dialect)
     if dialect == "ansi":
         # ANSI engines (DuckDB among them) allow DISTINCT in analytic
@@ -314,36 +135,42 @@ def _sql_count_distinct(agg: AggregateDef, over: str, dialect: str) -> str:
     return f"size(array_distinct(collect_list({field}) {over}))"
 
 
-def _sql_percent_rank(agg: AggregateDef, over: str, dialect: str) -> str:
-    target = "FLOAT" if dialect == "spark" else "REAL"
-    return f"CAST(percent_rank() {over} AS {target})"
-
-
 def _sql_first_last(name: str) -> Callable[[AggregateDef, str, str], str]:
     def render(agg: AggregateDef, over: str, dialect: str) -> str:
-        field = quote_ident(agg.field, dialect)
-        if _effective_ignore_nulls(agg):
-            return f"{name}({field}) IGNORE NULLS {over}"
-        return f"{name}({field}) {over}"
+        # Spark's own name: `first_value` resolves to the same aggregate
+        # but under another name in the plan
+        fn = name if dialect == "spark" else f"{name}_value"
+        nulls = " IGNORE NULLS" if _effective_ignore_nulls(agg) else ""
+        return f"{fn}({quote_ident(agg.field, dialect)}){nulls} {over}"
 
     return render
 
 
 def _sql_nth_value(agg: AggregateDef, over: str, dialect: str) -> str:
-    # Must mirror the DataFrame builder's ignoreNulls handling (review
-    # finding: the API passed ignoreNulls while the SQL said nothing,
-    # so the two backends diverged on null-bearing frames).
+    nulls = " IGNORE NULLS" if _effective_ignore_nulls(agg) else ""
     field = quote_ident(agg.field, dialect)
-    n = agg.args[0].strip()
-    if _effective_ignore_nulls(agg):
-        return f"nth_value({field}, {n}) IGNORE NULLS {over}"
-    return f"nth_value({field}, {n}) {over}"
+    return f"nth_value({field}, {_int_arg(agg)}){nulls} {over}"
 
 
 def _sql_moment_sums(agg: AggregateDef, over: str, dialect: str):
-    """SQL rendering of :func:`_moment_sums` — textually the same sums and
-    final arithmetic as the DataFrame builder, so any engine running this
-    SQL over integral-valued inputs reproduces the builder bit-for-bit."""
+    """Pairwise-complete power sums for the two-field moments.
+
+    The moments are built from plain window SUMS plus ONE final arithmetic
+    expression — not from Spark's native Corr/Covariance co-moment
+    aggregates — for two reasons:
+
+    1. **ANSI safety**: native ``corr`` raises DIVIDE_BY_ZERO under ANSI
+       mode for empty or zero-variance frames; here every division is
+       guarded and evaluates lazily.
+    2. **Cross-engine bit-reproducibility**: sums of integral-valued
+       doubles are EXACT, hence independent of accumulation order — so any
+       engine running this SQL over the same frame gets the identical bit
+       pattern. Co-moment (Welford) updates divide at every step and
+       diverge ~1e-9 between engines on long frames, which measurably
+       straddles rounding grids. Trade-off: the power-sum formula cancels
+       catastrophically when |mean| >> stddev — center such inputs first
+       (subtract a constant shift; moments are shift-invariant).
+    """
     f1 = quote_ident(agg.field, dialect)
     f2 = quote_ident(agg.args[0].strip(), dialect)
     d = "FLOAT64" if dialect == "bigquery" else "DOUBLE"
@@ -389,12 +216,28 @@ def _sql_covar(sample: bool) -> Callable[[AggregateDef, str, str], str]:
 
 
 def _sql_discrete_percentile(agg: AggregateDef, over: str, dialect: str) -> str:
+    """PERCENTILE_DISC: smallest actual value whose cumulative distribution
+    within the frame is >= p.
+
+    Matches the reference UDAF's walk over a sorted frequency map
+    (``DiscretePercentile.java:142-168``) including null-skipping (``:105-107``
+    — ``collect_list`` likewise drops nulls): for the sorted non-null frame
+    values v_1..v_n, return v_k with k = max(ceil(p*n), 1); empty frame -> null.
+
+    Composed entirely from builtin Catalyst expressions, so it works over any
+    frame (including the running default frame) and — unlike the reference,
+    which re-registers its UDAF under one global name
+    (``WindowsAggregationUtil.java:113-114``) — multiple percentiles in one
+    plan can't clobber each other.
+
+    Scale note: memory is O(frame size) per row. For 100 TB hot partitions use
+    the sketch-based alternative ``approx_percentile`` (accepted here as
+    function name "approx_discrete_percentile").
+    """
     field = quote_ident(agg.field, dialect)
-    p = float(agg.args[0])
+    p = double_sql(_float_arg(agg), dialect)
     vals = f"array_sort(collect_list({field}) {over})"
-    return (
-        f"get({vals}, CAST(greatest(ceil({p!r} * size({vals})), 1) AS INT) - 1)"
-    )
+    return f"get({vals}, CAST(greatest(ceil({p} * size({vals})), 1) AS INT) - 1)"
 
 
 @dataclass(frozen=True)
@@ -407,10 +250,9 @@ class FunctionDef:
     ordering: Clause
     frame: Clause
     numeric_input: bool
-    output_type: str | None  # 'int'|'float'|'double'|None(=input passthrough)
+    output_type: str | None  # 'int'|'float'|'double'|'long'|None(=input passthrough)
     takes_field: bool
     n_args: int  # required positional args (FIRST/LAST optional arg handled ad hoc)
-    build: Callable[[AggregateDef, WindowSpec, WindowSpecDef], Column]
     sql: Callable[[AggregateDef, str, str], str]
     # True when the positional args are COLUMN references (two-field moments:
     # corr/covar take the second column via args[0]). Drives the
@@ -424,23 +266,27 @@ FUNCTIONS: dict[str, FunctionDef] = {
     f.name: f
     for f in [
         FunctionDef("rank", "RANK", _R, _R, _N, False, "int", False, 0,
-                    _rank, _sql_simple("rank()")),
+                    _sql_simple("rank()")),
         FunctionDef("dense_rank", "DENSE_RANK", _R, _R, _N, False, "int", False, 0,
-                    _dense_rank, _sql_simple("dense_rank()")),
+                    _sql_simple("dense_rank()")),
+        # Spark computes double; the reference's declared schema is FLOAT
+        # (WindowAggregationConfig.java:332-336) — downcast at the boundary
         FunctionDef("percent_rank", "PERCENT_RANK", _R, _R, _N, False, "float", False, 0,
-                    _percent_rank, _sql_percent_rank),
+                    _sql_simple("percent_rank()")),
         FunctionDef("ntile", "N_TILE", _R, _R, _N, True, "int", True, 1,
-                    _ntile, _sql_simple("ntile({a0})")),
+                    _sql_simple("ntile({n})")),
         FunctionDef("row_number", "ROW_NUMBER", _R, _R, _N, False, "int", False, 0,
-                    _row_number, _sql_simple("row_number()")),
+                    _sql_simple("row_number()")),
+        # exact interpolated percentile at 0.5 — the reference calls Hive's
+        # `percentile` UDAF (WindowsAggregationUtil.java:140-141); Spark has
+        # it as a native builtin aggregate, usable over a window
         FunctionDef("median", "MEDIAN", _R, _R, _N, False, "double", True, 0,
-                    _median, _sql_simple("percentile({field}, 0.5)")),
+                    _sql_simple("percentile({field}, {p})", p=0.5)),
         FunctionDef("continuous_percentile", "CONTINUOUS_PERCENTILE", _R, _N, _N,
                     True, "double", True, 1,
-                    _continuous_percentile, _sql_simple("percentile({field}, {a0})")),
+                    _sql_simple("percentile({field}, {p})")),
         FunctionDef("discrete_percentile", "DISCRETE_PERCENTILE", _R, _R, _N,
-                    True, None, True, 1,
-                    _discrete_percentile, _sql_discrete_percentile),
+                    True, None, True, 1, _sql_discrete_percentile),
         # ordering OPTIONAL (unlike exact DISCRETE_PERCENTILE's REQUIRED):
         # a sketch is order-free, and the partition-only shape — one
         # mergeable sketch per partition, one evaluate — is the 100 TB
@@ -448,56 +294,53 @@ FUNCTIONS: dict[str, FunctionDef] = {
         # per-row evaluate; prefer partition-only.
         FunctionDef("approx_discrete_percentile", "APPROX_DISCRETE_PERCENTILE",
                     _R, _O, _N, True, None, True, 1,
-                    _approx_discrete_percentile,
-                    _sql_simple("approx_percentile({field}, {a0}, 10000)")),
+                    _sql_simple("approx_percentile({field}, {p}, 10000)")),
         FunctionDef("lead", "LEAD", _R, _R, _N, False, None, True, 1,
-                    _lead, _sql_simple("lead({field}, {a0})")),
+                    _sql_simple("lead({field}, {n})")),
         FunctionDef("lag", "LAG", _R, _R, _N, False, None, True, 1,
-                    _lag, _sql_simple("lag({field}, {a0})")),
+                    _sql_simple("lag({field}, {n})")),
         FunctionDef("first", "FIRST", _R, _R, _O, False, None, True, 0,
-                    _first, _sql_first_last("first_value")),
+                    _sql_first_last("first")),
         FunctionDef("last", "LAST", _R, _R, _O, False, None, True, 0,
-                    _last, _sql_first_last("last_value")),
+                    _sql_first_last("last")),
         FunctionDef("cume_dist", "CUMULATIVE_DISTRIBUTION", _R, _R, _N,
-                    True, "double", True, 0,
-                    _cume_dist, _sql_simple("cume_dist()")),
+                    True, "double", True, 0, _sql_simple("cume_dist()")),
+        # running / framed SUM; output type = input type per the reference's
+        # schema passthrough (Spark widens int->long, cast back at the edge)
         FunctionDef("accumulate", "ACCUMULATE", _R, _O, _O, True, None, True, 0,
-                    _accumulate, _sql_simple("sum({field})")),
+                    _sql_simple("sum({field})")),
         # extension aggregates (not in the reference's enum)
         FunctionDef("min", "MIN", _R, _O, _O, False, None, True, 0,
-                    _min, _sql_simple("min({field})")),
+                    _sql_simple("min({field})")),
         FunctionDef("max", "MAX", _R, _O, _O, False, None, True, 0,
-                    _max, _sql_simple("max({field})")),
+                    _sql_simple("max({field})")),
         FunctionDef("avg", "AVG", _R, _O, _O, True, "double", True, 0,
-                    _avg, _sql_simple("avg({field})")),
+                    _sql_simple("avg({field})")),
         FunctionDef("count", "COUNT", _R, _O, _O, False, "long", True, 0,
-                    _count, _sql_simple("count({field})")),
+                    _sql_simple("count({field})")),
+        # HyperLogLog++ sketch — the fixed-memory cardinality path for 100 TB
         FunctionDef("approx_count_distinct", "APPROX_COUNT_DISTINCT",
                     _R, _O, _O, False, "long", True, 0,
-                    _approx_count_distinct,
                     _sql_simple("approx_count_distinct({field})")),
         # exact distinct count; ordering REQUIRED / frame NOT_SUPPORTED =
         # the running shape only (the partition-wide exact count is a
         # plain groupBy, and windowed DISTINCT frames beyond running
         # prefixes have no flat-memory plan)
         FunctionDef("count_distinct", "COUNT_DISTINCT",
-                    _R, _R, _N, False, "long", True, 0,
-                    _count_distinct, _sql_count_distinct),
+                    _R, _R, _N, False, "long", True, 0, _sql_count_distinct),
         FunctionDef("nth_value", "NTH_VALUE", _R, _R, _O, False, None, True, 1,
-                    _nth_value, _sql_nth_value),
+                    _sql_nth_value),
         FunctionDef("stddev", "STDDEV", _R, _O, _O, True, "double", True, 0,
-                    _stddev, _sql_simple("stddev_samp({field})")),
+                    _sql_simple("stddev_samp({field})")),
         FunctionDef("variance", "VARIANCE", _R, _O, _O, True, "double", True, 0,
-                    _variance, _sql_simple("var_samp({field})")),
+                    _sql_simple("var_samp({field})")),
         # two-field moments: field = first column, args[0] = second column
         FunctionDef("corr", "CORR", _R, _O, _O, True, "double", True, 1,
-                    _corr, _sql_corr, column_args=True),
+                    _sql_corr, column_args=True),
         FunctionDef("covar_samp", "COVAR_SAMP", _R, _O, _O, True, "double",
-                    True, 1, _covar_samp, _sql_covar(sample=True),
-                    column_args=True),
+                    True, 1, _sql_covar(sample=True), column_args=True),
         FunctionDef("covar_pop", "COVAR_POP", _R, _O, _O, True, "double",
-                    True, 1, _covar_pop, _sql_covar(sample=False),
-                    column_args=True),
+                    True, 1, _sql_covar(sample=False), column_args=True),
     ]
 }
 
@@ -514,12 +357,12 @@ def bigquery_expression(agg: AggregateDef, over: str) -> str:
 
     - ``FIRST``/``LAST`` render the RESPECT/IGNORE NULLS keyword INSIDE the
       parens (``FIRST_VALUE(col IGNORE NULLS)``), with the same
-      "config flag OR literal-true args[0]" quirk as the DataFrame builder.
+      "config flag OR literal-true args[0]" quirk as the Spark renderer.
     - ``MEDIAN`` -> ``PERCENTILE_CONT(col, 0.5)``; the percentiles pass
       ``args[0]`` through verbatim (``PERCENTILE_CONT(col, 0.1234)``).
     - No boundary casts: like the reference's pushdown, results carry
-      BigQuery-native types (INT64/FLOAT64), not the DataFrame path's
-      declared output schema.
+      BigQuery-native types (INT64/FLOAT64), not the declared output
+      schema.
 
     Extension functions (not in the reference enum) get the closest
     BigQuery analytic form; the two-field moments reuse the shared

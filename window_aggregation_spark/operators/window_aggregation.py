@@ -16,6 +16,14 @@ Semantics re-expressed from the reference plugin (O1,
   declared output types (float for percent_rank, input-type passthrough for
   lead/lag/first/last/accumulate/discrete_percentile) are produced with
   explicit casts at the boundary.
+- Every expression is SQL text: each aggregate is ``F.expr`` of the
+  registry's Spark-dialect rendering, cast included
+  (:func:`..plans.sql_gen.aggregate_sql`), over the spec's ``OVER (...)``
+  clause — interval RANGE frames included — so the DataFrame and
+  generated-SQL backends share one builder, and Catalyst plans the text
+  exactly as it planned the equivalent Column calls, for a few py4j round
+  trips per expression instead of one per Column operation. The rank
+  lookup and distinct-count rewrites below are SQL text too.
 - MEDIAN / DISCRETE_PERCENTILE over running frames ordered by their own
   field take the flat-memory rank lookup by default
   (:func:`_percentile_rank_lookup`): a run of consecutive such aggregates
@@ -45,29 +53,37 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from window_aggregation_spark.errors import FailureCollector
-from window_aggregation_spark.functions.registry import lookup
-from window_aggregation_spark.spec import AggregateDef, FrameType, WindowPlan
+from window_aggregation_spark.functions.registry import (
+    OUTPUT_TYPES,
+    double_sql,
+    lookup,
+)
+from window_aggregation_spark.plans.rewrites import reverse_unbounded_following
+from window_aggregation_spark.plans.sql_gen import aggregate_sql, declared_type
+from window_aggregation_spark.spec import (
+    CURRENT_ROW,
+    UNBOUNDED_PRECEDING,
+    AggregateDef,
+    Direction,
+    FrameType,
+    OrderKey,
+    WindowPlan,
+    WindowSpecDef,
+    quote_ident,
+)
 from window_aggregation_spark.validation import validate_plan
 
-_DECLARED = {
-    "int": T.IntegerType(),
-    "float": T.FloatType(),
-    "double": T.DoubleType(),
-    "long": T.LongType(),
-}
-
-
-def _output_field_type(
-    agg: AggregateDef, input_schema: T.StructType
-) -> T.DataType | None:
-    """Declared output type for one aggregate; None = leave Spark's type
-    (used only when the input field is absent, which validation rejects)."""
-    fdef = lookup(agg.function)
-    if fdef.output_type is not None:
-        return _DECLARED[fdef.output_type]
-    if agg.field and agg.field in input_schema.fieldNames():
-        return input_schema[agg.field].dataType
-    return None
+def _cast_types(df: DataFrame) -> dict[str, str]:
+    """The input types a passthrough cast may name: atomic types only. A
+    nested or user-defined type has no SQL spelling that keeps it exact
+    (field-name quoting, nullability flags, UDT classes), and only the
+    type-preserving functions (lead/lag/first/last/nth_value/min/max)
+    accept such a field, so its result needs no cast."""
+    return {
+        f.name: f.dataType.simpleString()
+        for f in df.schema.fields
+        if isinstance(f.dataType, T.AtomicType)
+    }
 
 
 # Running-aggregate functions the two-phase salted rewrite can compute
@@ -103,8 +119,6 @@ def _salted_route(
     plus mitigation runs ONE sampling job, not two."""
     if hints is not None and not hints:
         return None
-    from window_aggregation_spark.spec import Direction, FrameType
-
     spec = plan.spec
     if (
         spec.frame_type is not FrameType.NONE
@@ -155,13 +169,14 @@ def _salted_route(
     # one approxQuantile pass shared by every routed aggregate (they all
     # chunk on the same order column)
     bounds = chunk_boundaries(df, order_col)
+    input_types = _cast_types(df)
     out = df
     for agg, salted_name in mapped:
         out = salted_running_agg(
             out, list(spec.partition_by), order_col, agg.field,
             agg=salted_name, alias=agg.alias, boundaries=bounds,
         )
-        declared = _output_field_type(agg, df.schema)
+        declared = declared_type(agg, input_types)
         if declared is not None:
             out = out.withColumn(agg.alias, F.col(agg.alias).cast(declared))
     if tmp_order is not None:
@@ -269,41 +284,24 @@ def window_aggregate(
         if routed is not None:
             return routed
 
-    if plan.spec.has_interval_frame:
-        # Time-based RANGE frames exist only in the SQL surface (the
-        # DataFrame rangeBetween API takes longs), so route this plan
-        # through the generated-SQL backend — same IR, other door.
-        import uuid
-
-        from window_aggregation_spark.plans.sql_gen import plan_to_sql
-
-        view = f"__wa_interval_{uuid.uuid4().hex[:12]}"
-        df.createOrReplaceTempView(view)
-        out = df.sparkSession.sql(
-            plan_to_sql(plan, view, df.columns, input_types=dict(df.dtypes))
-        )
-        if plan.spec.num_partitions:
-            out = out.repartition(plan.spec.num_partitions)
-        return out
-
-    from window_aggregation_spark.plans.rewrites import reverse_unbounded_following
-
     plan = reverse_unbounded_following(plan)
-    w = plan.spec.to_spark()
+    over = plan.spec.over_sql()
+    # the input's types, for the declared-type casts (withColumn semantics
+    # read replaced columns, but cast to the input field's type)
+    input_types = _cast_types(df)
 
     out = df
     # consecutive rank-lookup aggregates, fused into ONE lookup plan
     group: list = []
     for agg in plan.aggregates:
         fdef = lookup(agg.function)
-        declared = _output_field_type(agg, df.schema)
         if (
             percentile_strategy == "rank_lookup"
             and fdef.name in _RANK_LOOKUP_FUNCTIONS
             and _rank_lookup_applies(plan.spec, agg)
         ):
             # (aliases are unique within a plan: WindowPlan rejects repeats)
-            group.append((agg, declared))
+            group.append((agg, declared_type(agg, input_types)))
             if agg.alias == agg.field or agg.alias in plan.spec.partition_by:
                 # later aggregates must read the replaced column
                 out = _percentile_rank_lookup(out, plan.spec, group)
@@ -319,10 +317,9 @@ def window_aggregate(
         ):
             out = _count_distinct_flag_sum(out, plan.spec, agg)
             continue
-        col = fdef.build(agg, w, plan.spec)
-        if declared is not None:
-            col = col.cast(declared)
-        out = out.withColumn(agg.alias, col)
+        out = out.withColumn(
+            agg.alias, F.expr(aggregate_sql(agg, over, "spark", input_types))
+        )
     if group:
         out = _percentile_rank_lookup(out, plan.spec, group)
 
@@ -442,19 +439,17 @@ def _count_distinct_flag_sum(
         raise ValueError(
             f"temporary column {flag_col!r} collides with an input column"
         )
-    from pyspark.sql import Window
-
-    first_w = Window.partitionBy(
-        *[F.col(k) for k in spec.partition_by], F.col(agg.field)
-    ).orderBy(*[k.to_column() for k in spec.order_by])
-    flag = F.when(
-        F.col(agg.field).isNotNull() & (F.row_number().over(first_w) == 1),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    out = df.withColumn(flag_col, flag)
-    run = spec.to_spark()
+    field = quote_ident(agg.field)
+    first = WindowSpecDef(
+        partition_by=(*spec.partition_by, agg.field), order_by=spec.order_by
+    ).over_sql()
+    out = df.withColumn(flag_col, F.expr(
+        f"CASE WHEN {field} IS NOT NULL AND row_number() {first} = 1 "
+        f"THEN 1 ELSE 0 END"
+    ))
+    total = f"sum({quote_ident(flag_col)}) {spec.over_sql()}"
     return out.withColumn(
-        agg.alias, F.sum(flag_col).over(run).cast(T.LongType())
+        agg.alias, F.expr(f"CAST({total} AS {declared_type(agg, None)})")
     ).drop(flag_col)
 
 
@@ -473,7 +468,7 @@ def _rank_lookup_applies(spec, agg: AggregateDef) -> bool:
 def _percentile_rank_lookup(
     df: DataFrame,
     spec,
-    group: "list[tuple[AggregateDef, T.DataType | None]]",
+    group: "list[tuple[AggregateDef, str | None]]",
 ) -> DataFrame:
     """Percentiles over a running frame ordered by the aggregated field,
     without materializing per-row arrays or per-row sort buffers.
@@ -519,14 +514,10 @@ def _percentile_rank_lookup(
       the value side, so at a request row it is exactly the value at the
       requested rank. Each adds an in-partition sort, not a shuffle.
     """
-    from pyspark.sql import Window
-
-    from window_aggregation_spark.spec import Direction
-
-    keys = list(spec.partition_by)
     field = group[0][0].field
+    f = quote_ident(field)
     desc = spec.order_by[0].direction is Direction.DESCENDING
-    ftype = df.schema[field].dataType
+    ftype = dict(df.dtypes)[field]
     # MEDIAN interpolates; DISCRETE_PERCENTILE reads one rank
     interp = [lookup(a.function).name == "median" for a, _ in group]
     clash = [c for c in df.columns if c.startswith("__pr_")]
@@ -534,89 +525,75 @@ def _percentile_rank_lookup(
         raise ValueError(
             f"input columns {clash} collide with the temporary '__pr_' prefix"
         )
+    cols = [quote_ident(c) for c in df.columns]
 
     # ---- one window pass: request count, value rank, adjacent value ------
-    w = spec.to_spark()
-    n = F.count(field).over(w)
+    over = spec.over_sql()
     # ROWS-frame count: each non-null row increments by one -> distinct
     # ranks 1..N even under ties (a tie group's arbitrary internal order is
     # invisible since peers share the value)
-    vrank = F.count(field).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    rows_over = spec.rows(UNBOUNDED_PRECEDING, CURRENT_ROW).over_sql()
     # the (k+1)-th smallest sits one row AWAY in the partition order: +1
     # ascending, -1 descending. null only at rank N — unused there, since
     # hi > lo requires lo < n.
-    adjacent = (F.lag if desc else F.lead)(field).over(w)
-    counted = df.select(
-        *df.columns,
-        n.alias("__pr_n"),
-        vrank.alias("__pr_vrank"),
-        adjacent.alias("__pr_adj"),
+    adjacent = "lag" if desc else "lead"
+    counted = df.selectExpr(
+        *cols,
+        f"count({f}) {over} AS __pr_n",
+        f"count({f}) {rows_over} AS __pr_vrank",
+        f"{adjacent}({f}) {over} AS __pr_adj",
     )
 
     # ---- one generator: request row + (non-null) value row per input row
-    nc = F.col("__pr_n")
-    request, value = [F.lit(1).alias("__pr_side")], [F.lit(0).alias("__pr_side")]
+    request, value = ["1 AS __pr_side"], ["0 AS __pr_side"]
     for j, ((agg, _), interpolated) in enumerate(zip(group, interp)):
         if interpolated:
             # 0-based position, exactly Spark's `percentile` arithmetic
-            pos = F.lit(0.5) * (nc - 1).cast("double")
-            lo = F.floor(pos).cast("long")
-            rank = lo + 1
-            request.append((pos - lo).alias(f"__pr_frac{j}"))
-            value.append(F.lit(0.0).alias(f"__pr_frac{j}"))
+            pos = "0.5D * CAST(__pr_n - 1 AS DOUBLE)"
+            lo = f"CAST(FLOOR({pos}) AS BIGINT)"
+            rank = f"{lo} + 1"
+            request.append(f"{pos} - {lo} AS __pr_frac{j}")
+            value.append(f"0.0D AS __pr_frac{j}")
         else:
-            p = float(agg.args[0])
-            rank = F.greatest(F.ceil(F.lit(p) * nc), F.lit(1)).cast("long")
+            p = double_sql(float(agg.args[0]))
+            rank = f"CAST(greatest(ceil({p} * __pr_n), 1) AS BIGINT)"
         # null rank when the frame holds no non-null value -> null result
-        oriented = (nc - rank + 1) if desc else rank
-        request.append(F.when(nc > 0, oriented).alias(f"__pr_rk{j}"))
-        value.append(F.col("__pr_vrank").alias(f"__pr_rk{j}"))
-    request.append(F.lit(None).cast(ftype).alias("__pr_val"))
-    value.append(F.col(field).alias("__pr_val"))
+        oriented = f"__pr_n - ({rank}) + 1" if desc else rank
+        request.append(f"CASE WHEN __pr_n > 0 THEN {oriented} END AS __pr_rk{j}")
+        value.append(f"__pr_vrank AS __pr_rk{j}")
+    request.append(f"CAST(NULL AS {ftype}) AS __pr_val")
+    value.append(f"{f} AS __pr_val")
     if any(interp):
-        request.append(F.lit(None).cast(ftype).alias("__pr_adj"))
-        value.append(F.col("__pr_adj").alias("__pr_adj"))
-    rows = counted.select(
-        *df.columns,
-        F.inline(F.array(
-            F.struct(*request),
-            F.when(F.col(field).isNotNull(), F.struct(*value)),
-        )),
-    )
+        request.append(f"CAST(NULL AS {ftype}) AS __pr_adj")
+        value.append("__pr_adj AS __pr_adj")
+    rows = counted.selectExpr(*cols, (
+        f"inline(array(struct({', '.join(request)}), "
+        f"CASE WHEN {f} IS NOT NULL THEN struct({', '.join(value)}) END))"
+    ))
 
     # ---- rank lookup: one last(ignoreNulls) window per aggregate ----------
     lookups, results = [], {}
     for j, ((agg, declared), interpolated) in enumerate(zip(group, interp)):
-        wq = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col(f"__pr_rk{j}").asc_nulls_first(), F.col("__pr_side"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        lookups.append(
-            F.last("__pr_val", ignorenulls=True).over(wq).alias(f"__pr_mv{j}")
-        )
+        wq = WindowSpecDef(
+            partition_by=spec.partition_by,
+            order_by=(OrderKey(f"__pr_rk{j}"), OrderKey("__pr_side")),
+        ).rows(UNBOUNDED_PRECEDING, CURRENT_ROW).over_sql()
+        lookups.append(f"last(__pr_val) IGNORE NULLS {wq} AS __pr_mv{j}")
         if interpolated:
-            lookups.append(
-                F.last("__pr_adj", ignorenulls=True).over(wq).alias(f"__pr_ma{j}")
-            )
-            frac = F.col(f"__pr_frac{j}")
-            v_lo = F.col(f"__pr_mv{j}").cast("double")
-            v_hi = F.when(
-                frac > 0, F.col(f"__pr_ma{j}").cast("double")
-            ).otherwise(v_lo)
-            val = (v_lo + frac * (v_hi - v_lo)).cast(
-                declared if declared is not None else T.DoubleType()
-            )
+            lookups.append(f"last(__pr_adj) IGNORE NULLS {wq} AS __pr_ma{j}")
+            v_lo = f"CAST(__pr_mv{j} AS DOUBLE)"
+            v_hi = (f"CASE WHEN __pr_frac{j} > 0 "
+                    f"THEN CAST(__pr_ma{j} AS DOUBLE) ELSE {v_lo} END")
+            val = (f"CAST({v_lo} + __pr_frac{j} * ({v_hi} - {v_lo}) "
+                   f"AS {declared or 'DOUBLE'})")
         else:
-            val = F.col(f"__pr_mv{j}")
+            val = f"__pr_mv{j}"
             if declared is not None:
-                val = val.cast(declared)
-        results[agg.alias] = val.alias(agg.alias)
-    resolved = rows.select("*", *lookups).where(F.col("__pr_side") == 1)
-    return resolved.select(
-        *[results.pop(c, c) for c in df.columns], *results.values()
+                val = f"CAST({val} AS {declared})"
+        results[agg.alias] = f"{val} AS {quote_ident(agg.alias)}"
+    resolved = rows.selectExpr("*", *lookups).where("__pr_side = 1")
+    return resolved.selectExpr(
+        *[results.pop(c, quote_ident(c)) for c in df.columns], *results.values()
     )
 
 
@@ -628,8 +605,12 @@ def derive_output_schema(
     order — alias collisions replaced — plus appended nullable alias fields."""
     alias_types: dict[str, T.DataType] = {}
     for agg in plan.aggregates:
-        declared = _output_field_type(agg, input_schema)
-        if declared is None:
+        output_type = lookup(agg.function).output_type
+        if output_type is not None:
+            declared = OUTPUT_TYPES[output_type]
+        elif agg.field in input_schema.fieldNames():
+            declared = input_schema[agg.field].dataType
+        else:
             raise ValueError(
                 f"Cannot derive output type for aggregate '{agg.alias}': "
                 f"field '{agg.field}' not in input schema."

@@ -13,18 +13,24 @@ reproduces the reference's BigQuery Standard SQL templates exactly
 (``FIRST_VALUE(col IGNORE NULLS)``, ``PERCENTILE_CONT(col, p)``, ... —
 see :func:`functions.registry.bigquery_expression`).
 
-Both backends compile to the same Catalyst logical plan, which the parity
-tests assert by comparing results.
+The DataFrame backend builds every aggregate from the same text
+(:func:`aggregate_sql`, ``dialect="spark"``, through ``F.expr``), so the
+registry writes each function once and both backends cast to the declared
+output type in one place.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
+from dataclasses import replace
 
-from window_aggregation_spark.functions.registry import lookup
-from window_aggregation_spark.spec import WindowPlan, quote_ident
-
-_CAST_SQL = {"int": "INT", "float": "FLOAT", "double": "DOUBLE", "long": "BIGINT"}
+from window_aggregation_spark.functions.registry import (
+    OUTPUT_TYPES,
+    bigquery_expression,
+    consumed_columns,
+    lookup,
+)
+from window_aggregation_spark.plans.rewrites import reverse_unbounded_following
+from window_aggregation_spark.spec import AggregateDef, WindowPlan, quote_ident
 
 
 def plans_to_sql(
@@ -47,8 +53,9 @@ def plans_to_sql(
     schemas) — the same conditions under which the DataFrame path disables
     its regroup.
     """
-    from window_aggregation_spark.plans.rewrites import reverse_unbounded_following
-
+    # the DataFrame backend's rewrite too: identical logical plans keep
+    # double aggregates bit-identical across backends (and spare the SQL
+    # Spark's O(n^2) unbounded-following frame)
     plans = [reverse_unbounded_following(p) for p in plans]
     produced: set[str] = set()
     for p in plans:
@@ -59,8 +66,6 @@ def plans_to_sql(
                 f"({sorted(aliases & produced)}) cannot render as one SELECT."
             )
         produced |= aliases
-    from window_aggregation_spark.functions.registry import consumed_columns
-
     for p in plans:
         consumed: set[str] = set()
         for a in p.aggregates:
@@ -85,9 +90,8 @@ def plans_to_sql(
     for p in plans:
         over = p.spec.over_sql(dialect)
         for agg in p.aggregates:
-            rendered[agg.alias] = _render_aggregate(
-                agg, over, dialect, input_types
-            )
+            expr = aggregate_sql(agg, over, dialect, input_types)
+            rendered[agg.alias] = f"{expr} AS {quote_ident(agg.alias, dialect)}"
             order.append(agg.alias)
 
     select_items = [
@@ -103,33 +107,34 @@ def plans_to_sql(
     return sql
 
 
-def _render_aggregate(
-    agg,
+def declared_type(
+    agg: AggregateDef, input_types: dict[str, str] | None
+) -> str | None:
+    """The SQL type one aggregate's output is cast to: the registry's
+    declared type, else its input field's type from ``input_types``
+    (column -> SQL type name, e.g. ``dict(df.dtypes)``); None when neither
+    is known."""
+    fdef = lookup(agg.function)
+    if fdef.output_type is not None:
+        return OUTPUT_TYPES[fdef.output_type].simpleString().upper()
+    return (input_types or {}).get(agg.field)
+
+
+def aggregate_sql(
+    agg: AggregateDef,
     over: str,
     dialect: str,
     input_types: dict[str, str] | None,
 ) -> str:
+    """One aggregate's expression over ``over``, cast to its declared type."""
     if dialect == "bigquery":
         # the reference's warehouse templates verbatim, and — like the
         # reference's pushdown — no boundary casts: results carry
         # BigQuery-native types (registry.bigquery_expression docstring)
-        from window_aggregation_spark.functions.registry import (
-            bigquery_expression,
-        )
-
-        expr = bigquery_expression(agg, over)
-        return f"{expr} AS {quote_ident(agg.alias, dialect)}"
-    fdef = lookup(agg.function)
-    expr = fdef.sql(agg, over, dialect)
-    if fdef.output_type is not None and fdef.name != "percent_rank":
-        expr = f"CAST({expr} AS {_CAST_SQL[fdef.output_type]})"
-    elif (
-        fdef.output_type is None
-        and input_types is not None
-        and agg.field in input_types
-    ):
-        expr = f"CAST({expr} AS {input_types[agg.field]})"
-    return f"{expr} AS {quote_ident(agg.alias, dialect)}"
+        return bigquery_expression(agg, over)
+    expr = lookup(agg.function).sql(agg, over, dialect)
+    target = declared_type(agg, input_types)
+    return expr if target is None else f"CAST({expr} AS {target})"
 
 
 def plan_to_sql(
@@ -150,29 +155,8 @@ def plan_to_sql(
     (e.g. ACCUMULATE over INT returns BIGINT in SQL) would diverge in type
     from the DataFrame path's declared output schema.
     """
-    from window_aggregation_spark.plans.rewrites import reverse_unbounded_following
-
-    # Apply the same plan rewrites as the DataFrame backend: identical
-    # logical plans keep double aggregates bit-identical across backends
-    # (and spare the generated SQL Spark's O(n^2) unbounded-following frame).
-    plan = reverse_unbounded_following(plan)
-    over = plan.spec.over_sql(dialect)
-
-    rendered: dict[str, str] = {
-        agg.alias: _render_aggregate(agg, over, dialect, input_types)
-        for agg in plan.aggregates
-    }
-
-    select_items = [
-        rendered.pop(name) if name in rendered else quote_ident(name, dialect)
-        for name in input_columns
-    ]
-    select_items.extend(
-        rendered[a.alias] for a in plan.aggregates if a.alias in rendered
+    return plans_to_sql(
+        [replace(plan, declared_schema=None)], table, input_columns,
+        dialect=dialect, input_types=input_types,
+        declared_schema=plan.declared_schema,
     )
-
-    sql = f"SELECT {', '.join(select_items)} FROM {table}"
-    if plan.declared_schema is not None:
-        outer = ", ".join(quote_ident(c, dialect) for c in plan.declared_schema)
-        sql = f"SELECT {outer} FROM ({sql})"
-    return sql

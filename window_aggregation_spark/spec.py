@@ -3,15 +3,16 @@
 Mirrors the reference's configuration surface (partition fields, ordered keys,
 ROW/RANGE frame with signed bounds, aggregate list; reference
 ``WindowAggregationConfig.java:46-109`` and ``FunctionInfo`` ``:460-499``) as
-frozen dataclasses, then compiles to a ``pyspark.sql.Window`` spec.
+frozen dataclasses, then renders as the SQL ``OVER (...)`` clause both
+execution backends use (:meth:`WindowSpecDef.over_sql`).
 
 Bound conventions (kept bit-compatible with the reference, which feeds its
 parsed longs straight into ``rowsBetween``/``rangeBetween``,
 ``WindowsAggregationUtil.java:58-69``):
 
 - unbounded preceding/following  -> ``Long.MIN_VALUE`` / ``Long.MAX_VALUE``,
-  which are exactly PySpark's ``Window.unboundedPreceding/-Following``
-  (``WindowAggregationConfig.java:157-175``).
+  the values of PySpark's ``Window.unboundedPreceding/-Following``
+  (``WindowAggregationConfig.java:157-175``); they render as UNBOUNDED.
 - an empty/missing bound with a frame enabled -> ``0`` = ``Window.currentRow``.
 - bounds are Spark-signed: ``-2`` means "2 preceding", ``3`` means
   "3 following".
@@ -24,15 +25,12 @@ behavior of the reference and must be left to Spark, not "fixed".
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 from enum import Enum
 
-from pyspark.sql import Column, Window, WindowSpec
-from pyspark.sql import functions as F
-
-UNBOUNDED_PRECEDING: int = Window.unboundedPreceding  # == -(2**63) == Long.MIN_VALUE
-UNBOUNDED_FOLLOWING: int = Window.unboundedFollowing  # ==  2**63-1 == Long.MAX_VALUE
-CURRENT_ROW: int = Window.currentRow  # == 0
+UNBOUNDED_PRECEDING: int = -(2**63)  # Long.MIN_VALUE == Window.unboundedPreceding
+UNBOUNDED_FOLLOWING: int = 2**63 - 1  # Long.MAX_VALUE == Window.unboundedFollowing
+CURRENT_ROW: int = 0  # == Window.currentRow
 
 
 class Direction(Enum):
@@ -72,10 +70,6 @@ class FrameType(Enum):
 class OrderKey:
     field: str
     direction: Direction = Direction.ASCENDING
-
-    def to_column(self) -> Column:
-        col = F.col(self.field)
-        return col.asc() if self.direction is Direction.ASCENDING else col.desc()
 
     def sql(self, dialect: str = "spark") -> str:
         word = "ASC" if self.direction is Direction.ASCENDING else "DESC"
@@ -119,9 +113,8 @@ class WindowSpecDef:
     end: int = CURRENT_ROW  # Spark-signed; UNBOUNDED_FOLLOWING for unbounded
     num_partitions: int | None = None
     # time-based RANGE bounds, e.g. ("1 hour", None) = INTERVAL 1 HOUR
-    # PRECEDING .. CURRENT ROW. Only the SQL surface can express these
-    # (DataFrame rangeBetween takes longs), so plans carrying them execute
-    # through the generated-SQL backend automatically.
+    # PRECEDING .. CURRENT ROW, rendered by over_sql like any other frame
+    # (the DataFrame rangeBetween API takes only longs).
     interval_start: str | None = None
     interval_end: str | None = None
 
@@ -156,29 +149,7 @@ class WindowSpecDef:
     def has_interval_frame(self) -> bool:
         return self.interval_start is not None or self.interval_end is not None
 
-    # ---- compilation -----------------------------------------------------
-    def to_spark(self) -> WindowSpec:
-        if self.has_interval_frame:
-            raise ValueError(
-                "Interval RANGE frames cannot compile to the DataFrame "
-                "Window API — execute the plan through window_aggregate "
-                "(it routes interval-framed plans via the SQL backend)."
-            )
-        spec = Window.partitionBy(*[F.col(f) for f in self.partition_by])
-        if self.order_by:
-            spec = spec.orderBy(*[k.to_column() for k in self.order_by])
-        if self.frame_type is FrameType.ROW:
-            spec = spec.rowsBetween(self.start, self.end)
-        elif self.frame_type is FrameType.RANGE:
-            spec = spec.rangeBetween(self.start, self.end)
-        return spec
-
-    def unordered(self) -> "WindowSpecDef":
-        """The same partitioning with no order and no frame — whole-partition
-        scope. Used by functions whose frame must span the partition."""
-        return WindowSpecDef(partition_by=self.partition_by)
-
-    # ---- SQL rendering (the dual backend, reference O12) ------------------
+    # ---- SQL rendering (both backends, reference O12) --------------------
     def over_sql(self, dialect: str = "spark") -> str:
         parts: list[str] = []
         if self.partition_by:

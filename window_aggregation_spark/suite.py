@@ -3140,7 +3140,7 @@ def w_two_field_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     running Pearson correlation and sample/population covariance over
     (quantity, discount*100). Inputs are integral-valued doubles, so the
     power-sum formulation gives bit-identical results in any engine — no
-    rounding on either side (see registry._moment_sums)."""
+    rounding on either side (see registry._sql_moment_sums)."""
     df = read_table(spark, sf_dir, "lineitem").withColumn(
         "discount_pct", F.round(F.col("l_discount") * 100, 0)
     )
@@ -3217,9 +3217,8 @@ def w_multi_spec_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_range_interval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-based sliding RANGE frame (INTERVAL bounds) in the window IR —
-    window_aggregate routes interval-framed plans through the generated-SQL
-    backend, since the DataFrame rangeBetween API only takes numeric
-    offsets."""
+    the OVER clause renders the INTERVAL bounds the DataFrame rangeBetween
+    API cannot take, and window_aggregate runs it like any other plan."""
     df = read_table(spark, sf_dir, "events")
     plan = WindowPlan(
         spec=WindowSpecDef(

@@ -108,7 +108,9 @@ def _validate_clauses(
 def _validate_arguments(
     fdef: FunctionDef, agg: AggregateDef, collector: FailureCollector
 ) -> None:
-    if fdef.name == "ntile":
+    # arguments are checked by value: the renderers emit the parsed value,
+    # so text such as "1 + 1" must fail here, not splice into the SQL
+    if fdef.name in ("ntile", "nth_value"):
         if len(agg.args) != 1:
             collector.add_failure(f"{fdef.ref_name} takes exactly 1 argument.")
             return
@@ -125,8 +127,7 @@ def _validate_arguments(
             collector.add_failure(f"{fdef.ref_name} takes exactly 1 argument.")
             return
         try:
-            p = float(agg.args[0].strip())
-            if p < 0 or p > 1:
+            if not 0 <= float(agg.args[0].strip()) <= 1:  # NaN fails too
                 raise ValueError
         except ValueError:
             collector.add_failure(f"{fdef.ref_name} needs an argument between [0,1].")
