@@ -23,7 +23,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from window_aggregation_spark.session import get_spark  # noqa: E402
+from window_aggregation_spark.session import get_spark, scope  # noqa: E402
 from window_aggregation_spark.suite import (  # noqa: E402
     SUITE,
     headline_queries,
@@ -826,36 +826,11 @@ def spread_scale_probe(spark, sf_dir: str, *, scales=(1, 10, 30)) -> dict:
         "dedup_substring_spans",
     )
 
-    # pipeline_gopher_filter's barrier spread lazily localCheckpoints the
+    # pipeline_gopher_filter's barrier spread lazily checkpoints the
     # scaled corpus INSIDE each timed build; without cleanup every rep at
     # every scale pins another copy for the rest of the bench session
-    # (the streaming-loop leak class, r14 review finding) — distorting
-    # the sections that run after this probe. DataFrame handles to those
-    # internals don't exist here, so free by DIFF: snapshot the persisted
-    # RDD ids before the probe and unpersist only ids this probe created
-    # (the probed queries load no shared store, so new ids are ours).
-    def _persisted_ids() -> set:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
-
-    def _free_new(before: set) -> None:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        freed, failed = [], []
-        for e in jmap.entrySet().toArray():
-            rdd_id = int(e.getKey())
-            if rdd_id not in before:
-                try:
-                    e.getValue().unpersist(False)
-                    freed.append(rdd_id)
-                except Exception as exc:  # counted and logged, not hidden
-                    failed.append(f"{rdd_id}: {exc!r}")
-        print(f"# spread_scale freed rdds {sorted(freed)}", file=sys.stderr,
-              flush=True)
-        for f in failed:
-            print(f"# spread_scale unpersist failed {f}", file=sys.stderr,
-                  flush=True)
-
-    pre_probe_ids = _persisted_ids()
+    # (the streaming-loop leak class, r14 review finding), distorting the
+    # sections that run after this probe; so each scale runs in a scope
     out: dict = {"base_dir": sf_dir, "scales": {}}
     base: dict[str, float] = {}
     for c in scales:
@@ -870,26 +845,26 @@ def spread_scale_probe(spark, sf_dir: str, *, scales=(1, 10, 30)) -> dict:
             "documents": int(n_docs),
             "spread_target": spread_target(spark, docs_path),
         }
-        for name in names:
-            q = SUITE[name]
-            build = q.bench_build or q.build
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                build(spark, ddir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            sec = round(best, 3)
-            entry[name] = {"sec": sec}
-            if c == 1:
-                base[name] = sec
-            elif base.get(name):
-                entry[name]["growth_ratio"] = round(
-                    sec / (c * base[name]), 2
-                )
+        with scope():
+            for name in names:
+                q = SUITE[name]
+                build = q.bench_build or q.build
+                best = float("inf")
+                for _ in range(2):
+                    t0 = time.perf_counter()
+                    build(spark, ddir).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
+                    best = min(best, time.perf_counter() - t0)
+                sec = round(best, 3)
+                entry[name] = {"sec": sec}
+                if c == 1:
+                    base[name] = sec
+                elif base.get(name):
+                    entry[name]["growth_ratio"] = round(
+                        sec / (c * base[name]), 2
+                    )
         out["scales"][f"{c}x"] = entry
-        _free_new(pre_probe_ids)
         print(f"# spread_scale {c}x: {entry}", file=sys.stderr, flush=True)
     return out
 

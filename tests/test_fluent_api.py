@@ -133,3 +133,42 @@ def test_fluent_agg_percentile_strategy_passthrough(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "percentile(" in plan  # single-WindowExec plan, not the lookup
+
+
+def test_sql_door_keeps_nested_and_udt_passthrough_types(spark):
+    """The SQL door builds its passthrough casts like the DataFrame
+    backend (``sql_gen.cast_types``): a struct whose field name needs
+    quoting and a UDT column get no cast, because Spark SQL cannot parse
+    their ``simpleString`` spellings (``struct<a b:bigint>``, ``vector``).
+    The rendered SQL must run and equal ``.agg(...)``."""
+    from pyspark.ml.linalg import Vectors, VectorUDT
+    from pyspark.sql import types as T
+
+    from window_aggregation_spark.api import max_
+
+    schema = T.StructType([
+        T.StructField("g", T.LongType()),
+        T.StructField("id", T.LongType()),
+        T.StructField("s", T.StructType([T.StructField("a b", T.LongType())])),
+        T.StructField("v", VectorUDT()),
+    ])
+    df = spark.createDataFrame(
+        [(i % 2, i, (i * 7 % 5,), Vectors.dense([float(i)]))
+         for i in range(6)],
+        schema,
+    )
+    df.createOrReplaceTempView("nested_udt")
+    b = window(df).partition_by("g").order_by("id")
+    aggs = (
+        lead("s", 1).alias("lead_s"), first("s").alias("first_s"),
+        max_("s").alias("max_s"), lead("v", 1).alias("lead_v"),
+        first("v").alias("first_v"),
+    )
+    via_sql = spark.sql(b.sql("nested_udt", *aggs))
+    via_agg = b.agg(*aggs)
+    assert via_sql.schema == via_agg.schema
+    assert via_sql.schema["lead_s"].dataType == schema["s"].dataType
+    assert via_sql.schema["lead_v"].dataType == schema["v"].dataType
+    assert sorted(via_sql.collect(), key=lambda r: r.id) == sorted(
+        via_agg.collect(), key=lambda r: r.id
+    )

@@ -294,3 +294,77 @@ def test_exclude_fold_epoch_reconstructs_prefold_state(spark, sf_dir, tmp_path):
     full = dd.load_signature_store(spark, store_path)
     without = dd.load_signature_store(spark, store_path, exclude_folds_from=4)
     assert full.sigs.count() == without.sigs.count() + batch.count()
+
+
+def test_epoch_checkpoint_blocks_freed_across_epochs(
+    spark, tmp_path, staged_ingest
+):
+    """The dedup stream's twin of ingest_spans'
+    ``test_epoch_checkpoint_blocks_freed_across_serves``: each epoch pins
+    its cleaned batch (two writes read it) and, with ``intra_batch=True``,
+    the CC loop's final round (the cleaned batch's lazy plan reads it).
+    Once both writes land the epoch must free both, or a long-running
+    stream pins them for every epoch. Every staged batch gains two
+    copies of a text of its own (an intra-batch duplicate pair, so the CC
+    edge set is not empty); the batches arrive one file per epoch, and
+    after every epoch no storage block the stream created may be left."""
+    corpus, parts, _stream_dir, store_path, _store, _src = staged_ingest
+    live = tmp_path / "live"
+    live.mkdir()
+    twin_ids = []
+    for epoch, part in enumerate(parts):
+        twin_id = 2_000_000_000 + 10 * epoch
+        twin_ids.append(twin_id)
+        twins = (
+            part.orderBy("doc_id").limit(1)
+            .crossJoin(spark.range(2).withColumnRenamed("id", "__k"))
+            .withColumn("doc_id", F.lit(twin_id) + F.col("__k"))
+            .withColumn("text", F.lit(
+                " ".join(f"epoch{epoch} word{k}" for k in range(30))
+            ))
+            .drop("__k")
+        )
+        w = str(tmp_path / f"twins{epoch}")
+        part.unionByName(twins).coalesce(1).write.parquet(w)
+        shutil.move(
+            glob.glob(f"{w}/part-*.parquet")[0],
+            tmp_path / f"epoch-{epoch}.parquet",
+        )
+
+    def stored_ids() -> set[int]:
+        # ids, not a count: the ContextCleaner may drop earlier tests'
+        # blocks at any moment, which only shrinks the set
+        return {
+            int(i.id())
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
+
+    out_path = str(tmp_path / "clean")
+    stream = spark.readStream.schema(
+        spark.read.parquet(str(tmp_path / "epoch-0.parquet")).schema
+    ).parquet(str(live))
+    q = streaming_ingest_dedup(
+        stream, corpus, "doc_id",
+        store_path=store_path,
+        out_path=out_path,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        threshold=THRESHOLD,
+        intra_batch=True,
+    ).start()
+    try:
+        base = stored_ids()
+        for epoch in range(len(parts)):
+            name = f"epoch-{epoch}.parquet"
+            shutil.move(tmp_path / name, live / name)
+            q.processAllAvailable()
+            leaked = stored_ids() - base
+            assert not leaked, (
+                f"epoch {epoch} left blocks pinned: {sorted(leaked)}"
+            )
+        assert q.lastProgress["batchId"] == len(parts) - 1
+    finally:
+        q.stop()
+    # each epoch's duplicate pair collapsed to its lower id in the CC step
+    got = {r["doc_id"] for r in spark.read.parquet(out_path).collect()}
+    for twin_id in twin_ids:
+        assert twin_id in got and twin_id + 1 not in got, twin_id

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from window_aggregation_spark.errors import FailureCollector
 from window_aggregation_spark.functions.registry import lookup
 from window_aggregation_spark.operators.window_aggregation import window_aggregate
-from window_aggregation_spark.plans.sql_gen import plan_to_sql
+from window_aggregation_spark.plans.sql_gen import cast_types, plan_to_sql
 from window_aggregation_spark.spec import (
     AggregateDef,
     FrameType,
@@ -202,7 +202,7 @@ class WindowBuilder:
         collector.get_or_throw()
         return plan_to_sql(
             plan, table, self.df.columns,
-            dialect=dialect, input_types=dict(self.df.dtypes),
+            dialect=dialect, input_types=cast_types(self.df),
         )
 
 

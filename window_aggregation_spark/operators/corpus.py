@@ -44,6 +44,7 @@ from window_aggregation_spark.operators.text import (
     lf_lines_duck,
     tokens,
 )
+from window_aggregation_spark.session import checkpoint
 
 # Hash grain for split thresholds: weights are quantized to 1/1_000_000,
 # plenty for any realistic split ratio and small enough that the 60-bit
@@ -482,7 +483,7 @@ def prune_duplicated_lines(
         # shuffles), and without truncation the chosen strategy's plan
         # would re-run the identical aggregation from scratch — auto
         # would cost two corpus passes instead of one (r11 self-review)
-        frequent_lines = frequent_lines.localCheckpoint()
+        frequent_lines = checkpoint(frequent_lines, eager=True)
         n_bl = frequent_lines.count()
         strategy = "array" if n_bl <= blocklist_join_threshold else "join"
     if strategy == "array":
@@ -767,7 +768,7 @@ def decontaminate(
         # the gram set is consumed up to three times (count, filter
         # build, exact semi-join) — materialize its explode+distinct
         # once instead of re-shuffling the benchmark text per consumer
-        bench_grams = bench_grams.localCheckpoint(eager=True)
+        bench_grams = checkpoint(bench_grams, eager=True)
         n = (
             expected_bench_grams
             if expected_bench_grams is not None

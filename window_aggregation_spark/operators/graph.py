@@ -26,10 +26,13 @@ clusters converge in 1-2 rounds).
 
 Scale notes: per round, two shuffles (a groupBy min and a self-join per
 star step) over the EDGE set — which for LSH dup pairs is far smaller than
-the corpus. Lineage is truncated every round with ``localCheckpoint``
-(iterative plans otherwise grow exponentially and stall Catalyst); on a
-real cluster with executor churn, set a reliable ``checkpoint_dir``
-(``spark.sparkContext.setCheckpointDir``) and pass ``reliable=True``.
+the corpus. Lineage is truncated every round with
+:func:`..session.checkpoint` (iterative plans otherwise grow exponentially
+and stall Catalyst): a local checkpoint by default; on a real cluster with
+executor churn, set a checkpoint dir (``spark.sparkContext.setCheckpointDir``)
+and every pin in this module becomes a reliable checkpoint. Superseded
+rounds are freed inside the loops; the frames a result still reads stay
+pinned until the caller's :func:`..session.scope` exits.
 """
 
 from __future__ import annotations
@@ -37,14 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-from window_aggregation_spark.session import free_checkpoint
-
-# internal alias kept for the loops below; the canonical definition (and
-# its measured rationale) moved to session.free_checkpoint in r14 — it is
-# session-level block management, not a graph operator, and the streaming
-# ingest loops need it too
-_free_checkpoint = free_checkpoint
+from window_aggregation_spark.session import checkpoint, free
 
 
 def _symmetric(e: DataFrame) -> DataFrame:
@@ -141,16 +137,11 @@ def connected_components(
     dst: str = "id_b",
     *,
     max_iter: int = 25,
-    reliable: bool = False,
     stats: dict | None = None,
 ) -> DataFrame:
     """Component label per node: ``(node, component)`` where ``component``
     is the minimum node id reachable from ``node``. Only nodes appearing in
     ``pairs`` are returned — callers map absent nodes to themselves.
-
-    ``reliable=True`` uses ``checkpoint()`` (requires a checkpoint dir) for
-    lineage truncation instead of ``localCheckpoint()``; use it on clusters
-    where executor loss must not kill the job.
     """
     e = (
         pairs.select(
@@ -161,21 +152,14 @@ def connected_components(
         .distinct()
     )
 
-    def _truncate(df: DataFrame) -> DataFrame:
-        # LAZY checkpoint (r13): every round already runs exactly one
-        # action — the convergence fingerprint — and that action
-        # materializes the checkpoint as a side effect. An eager
-        # checkpoint here would run a SECOND driver action per round
-        # just to materialize earlier (measured: the loop's job count
-        # halves lazy vs eager, same shuffles). The unpersist of the
-        # superseded round stays safe: by the time round i+1's
-        # fingerprint runs, round i's blocks were materialized by round
-        # i's own fingerprint.
-        return df.checkpoint(eager=False) if reliable else df.localCheckpoint(
-            eager=False
-        )
-
-    e = _truncate(e)
+    # LAZY checkpoints (r13): every round already runs exactly one action
+    # — the convergence fingerprint — and that action materializes the
+    # checkpoint as a side effect. An eager checkpoint would run a SECOND
+    # driver action per round just to materialize earlier (measured: the
+    # loop's job count halves lazy vs eager, same shuffles). Freeing the
+    # superseded round stays safe: by the time round i+1's fingerprint
+    # runs, round i's blocks were materialized by round i's own.
+    e = checkpoint(e)
     # one action per round: digest + star-forest flag (see _round_stats).
     # The flag fires ON the converged round — the digest-only loop paid
     # one extra full round of star steps just to observe no change (and
@@ -196,7 +180,7 @@ def connected_components(
                 "rounds (pathological graph? raise max_iter)"
             )
         last_e = e
-        e = _truncate(_small_star(_large_star(e)))
+        e = checkpoint(_small_star(_large_star(e)))
         rounds += 1
         cur, star = _round_stats(e)
         # free the superseded round's blocks ONLY NOW: the stats action
@@ -205,8 +189,8 @@ def connected_components(
         # lineage to recompute from). Without this an iterative loop
         # pins every round's edge set for the whole session — the old
         # per-round DataFrame.unpersist() was a CacheManager no-op on
-        # checkpointed frames (see _free_checkpoint).
-        _free_checkpoint(last_e)
+        # checkpointed frames (see session.free).
+        free(last_e)
         if cur == prev:
             break
         prev = cur
@@ -224,19 +208,13 @@ def connected_components(
 
 
 def _degree_oriented(
-    edges: DataFrame, src: str = "u", dst: str = "v",
-    *, reliable: bool = False,
+    edges: DataFrame, src: str = "u", dst: str = "v"
 ) -> DataFrame:
     """Deduplicated undirected edges oriented from the lower-(degree, id)
     endpoint to the higher — the Schank-Wagner orientation whose
     out-degrees are bounded by O(sqrt(m)). THE one definition, shared by
     :func:`triangle_count` and :func:`oriented_out_degrees` so the probe
-    measures exactly what the operator runs. ``reliable`` as in
-    :func:`connected_components`: local checkpoints (default) are fast
-    but die with their executor — on clusters with churn pass
-    ``reliable=True`` (requires ``setCheckpointDir``) so the pinned edge
-    set survives executor loss instead of failing the whole query with
-    "checkpoint block not found"."""
+    measures exactly what the operator runs."""
     # The dedup'd edge set is referenced FIVE times downstream (twice
     # per degree union, once per rank join side) and the orientation
     # result three more — without a materialization barrier every
@@ -245,13 +223,9 @@ def _degree_oriented(
     # exchanges in one plan; ReuseExchange recovered only 6). One lazy
     # checkpoint pins the 16-byte edge rows instead — the same barrier
     # the CC loop already uses, and cheaper at any scale than re-running
-    # the distinct shuffle per reference (fault-tolerance trade above).
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=False) if reliable else df.localCheckpoint(
-            eager=False
-        )
-
-    e = _pin(
+    # the distinct shuffle per reference (fault tolerance: see the module
+    # docstring).
+    e = checkpoint(
         edges.select(
             F.least(F.col(src), F.col(dst)).cast("long").alias("a"),
             F.greatest(F.col(src), F.col(dst)).cast("long").alias("b"),
@@ -297,7 +271,6 @@ def triangle_count(
     dst: str = "v",
     *,
     per_node: bool = True,
-    reliable: bool = False,
 ) -> DataFrame:
     """Exact triangle counting over an undirected simple graph via
     degree orientation (Schank-Wagner / MapReduce "compact-forward"):
@@ -321,19 +294,12 @@ def triangle_count(
     co-purchase graph (392k edges): 4.2M oriented wedges avoided,
     0.31M triangle rows materialized. Shuffles: the degree groupBy, the
     adjacency groupBy, and the two adjacency joins (broadcast when the
-    node list fits, hash otherwise). ``reliable`` as in
-    :func:`connected_components` — reliable checkpoints for the two
-    pinned edge sets on clusters where executor loss must not kill the
-    query.
+    node list fits, hash otherwise).
     """
     # oriented is consumed three times (the adjacency build twice, the
     # closing join once) — pin it like `e` above so the rank joins run
     # once, not per consumer
-    oriented = _degree_oriented(edges, src, dst, reliable=reliable)
-    oriented = (
-        oriented.checkpoint(eager=False) if reliable
-        else oriented.localCheckpoint(eager=False)
-    )
+    oriented = checkpoint(_degree_oriented(edges, src, dst))
     # edge-iterator closing: a triangle {p, x, y} with p -> x, p -> y,
     # x -> y is found exactly once, at edge (p, x): y is an out-neighbor
     # of both endpoints (of p directly, of x via the closing edge); at
@@ -370,7 +336,6 @@ def pagerank(
     *,
     iterations: int = 3,
     damping: float = 0.85,
-    reliable: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list: ``(node, rank)``
     for every node appearing as a source or destination.
@@ -395,11 +360,6 @@ def pagerank(
     plan never grows. The single driver action is the bounded node
     count N (a scalar, needed for the teleport constant).
     """
-    def _truncate(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(
-            eager=True
-        )
-
     e = (
         edges.select(
             F.col(src).cast("long").alias("src"),
@@ -412,7 +372,7 @@ def pagerank(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes = _truncate(nodes)
+    nodes = checkpoint(nodes, eager=True)
     n = nodes.count()
     if n == 0:
         # empty edge set -> empty result, not a ZeroDivisionError from
@@ -422,10 +382,11 @@ def pagerank(
     # reciprocal precomputed once (multiply beats divide in the per-
     # iteration hot path, and the 1/outdeg form is what the DuckDB
     # oracle mirrors op-for-op for bit-level comparability)
-    w = _truncate(
+    w = checkpoint(
         e.join(deg, "src").select(
             "src", "dst", (F.lit(1.0) / F.col("__outdeg")).alias("w")
-        )
+        ),
+        eager=True,
     )
     base = (1.0 - damping) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
@@ -436,7 +397,7 @@ def pagerank(
             .agg(F.sum(F.col("rank") * F.col("w")).alias("__c"))
         )
         last_ranks = ranks
-        ranks = _truncate(
+        ranks = checkpoint(
             nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
             .select(
                 "node",
@@ -444,24 +405,21 @@ def pagerank(
                     F.lit(base)
                     + F.lit(damping) * F.coalesce(F.col("__c"), F.lit(0.0))
                 ).alias("rank"),
-            )
+            ),
+            eager=True,
         )
         if i > 0:
             # superseded iteration checkpoints leak storage linearly —
             # free them (i == 0 is the un-checkpointed init projection).
-            # Safe here because _truncate is EAGER: ranks_{i+1} is fully
-            # materialized before the free. Plain unpersist() would be a
-            # CacheManager no-op on checkpointed frames.
-            _free_checkpoint(last_ranks)
+            # Safe here because the checkpoint is EAGER: ranks_{i+1} is
+            # fully materialized before the free.
+            free(last_ranks)
     if iterations > 0:
-        # the returned table is checkpoint-materialized by the last
-        # _truncate, so the weight/node tables and the final superseded
-        # rank table are dead weight from here — and w is O(edges)
+        # the returned table is checkpoint-materialized, so the weight and
+        # node tables are dead weight from here — and w is O(edges)
         # (measured: 108 MB pinned at sf0.1 without this). With
         # iterations == 0 the returned projection still READS nodes'
-        # blocks, hence the guard; freeing the never-checkpointed
-        # ranks_0 is a typed no-op inside _free_checkpoint.
-        _free_checkpoint(last_ranks)
-        _free_checkpoint(w)
-        _free_checkpoint(nodes)
+        # blocks, hence the guard.
+        free(w)
+        free(nodes)
     return ranks

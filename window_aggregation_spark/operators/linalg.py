@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from window_aggregation_spark.session import checkpoint
+
 _COV_SCALE = 4
 
 
@@ -91,7 +93,7 @@ def covariance_cells(
     # consuming branches (total, s_sum, g_sum, d_row) run the BLAS corpus
     # pass ONCE, not once each (the lm.py lesson: AQE exchange reuse does
     # not dedupe mapInPandas branches)
-    parts = parts.localCheckpoint(eager=False)
+    parts = checkpoint(parts)
     total = parts.agg(F.sum("n").alias("n"))
     s_sum = (
         parts.select(F.posexplode("s").alias("i", "v"))

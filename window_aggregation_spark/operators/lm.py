@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from window_aggregation_spark.operators.text import TOKEN_RE, tokens
+from window_aggregation_spark.session import checkpoint
 
 _LNP_SCALE = 9   # decimals kept on per-token log probabilities
 _OUT_SCALE = 6   # decimals kept on per-document metrics
@@ -111,7 +112,6 @@ def perplexity_unigram(
     keep_cols: tuple[str, ...] = (),
     add_k: float = 1.0,
     broadcast_vocab: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """Score each document under an add-k-smoothed unigram LM.
 
@@ -126,14 +126,14 @@ def perplexity_unigram(
     ``counts`` (from :func:`unigram_counts` on a reference corpus) scores
     out-of-vocabulary tokens at the smoothed floor ``k / (C + k*V)``.
 
-    ``materialize=True`` (default) ``localCheckpoint``-s the per-document
-    term-frequency table and the trained vocabulary, which are each
-    consumed by two downstream branches — without it Spark re-derives the
-    whole explode+aggregate pipeline per branch (measured: 8 corpus scans
-    in the AQE final plan vs 2 with materialization; exchange reuse does
-    not dedupe across the differing projections). On a real cluster prefer
-    a reliable ``df.checkpoint`` / persisted counts for fault tolerance
-    (same trade documented in ``operators/graph.py``).
+    The per-document term-frequency table and the trained vocabulary are
+    each consumed by two downstream branches, so both are pinned with
+    :func:`..session.checkpoint` — without it Spark re-derives the whole
+    explode+aggregate pipeline per branch (measured: 8 corpus scans in
+    the AQE final plan vs 2 with materialization; exchange reuse does not
+    dedupe across the differing projections). With a checkpoint dir set
+    the pins are reliable checkpoints; free them by running the scoring
+    inside a :func:`..session.scope`.
     """
     base = df.select(id_col, *keep_cols, tokens(F.col(text_col)).alias("toks"))
     # ONE corpus-side exchange, before the explode (moves documents, not
@@ -145,13 +145,12 @@ def perplexity_unigram(
     doc_tf = exploded.groupBy(id_col, "token").agg(
         F.count(F.lit(1)).alias("tf")
     )
-    if materialize:
-        doc_tf = doc_tf.localCheckpoint(eager=False)
+    doc_tf = checkpoint(doc_tf)
 
     if counts is None:
-        counts = doc_tf.groupBy("token").agg(F.sum("tf").alias("cnt"))
-        if materialize:
-            counts = counts.localCheckpoint(eager=False)
+        counts = checkpoint(
+            doc_tf.groupBy("token").agg(F.sum("tf").alias("cnt"))
+        )
     lnp, oov = _logprob_table(counts, add_k)
     if broadcast_vocab:
         lnp = F.broadcast(lnp)
@@ -238,7 +237,6 @@ def perplexity_bigram(
     keep_cols: tuple[str, ...] = (),
     add_k: float = 1.0,
     broadcast_vocab: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """Contextual perplexity under an add-k bigram LM:
     ``p(w2 | w1) = (c(w1 w2) + k) / (c(w1) + k*V)`` with ``V`` the unigram
@@ -263,19 +261,15 @@ def perplexity_bigram(
     doc_bf = exploded.groupBy(id_col, "bigram").agg(
         F.count(F.lit(1)).alias("tf")
     )
-    if materialize:
-        doc_bf = doc_bf.localCheckpoint(eager=False)
+    doc_bf = checkpoint(doc_bf)
 
     if counts is None:
-        bi = doc_bf.groupBy("bigram").agg(F.sum("tf").alias("cnt"))
-        uni = (
+        bi = checkpoint(doc_bf.groupBy("bigram").agg(F.sum("tf").alias("cnt")))
+        uni = checkpoint(
             base.select(F.explode("toks").alias("token"))
             .groupBy("token")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        if materialize:
-            bi = bi.localCheckpoint(eager=False)
-            uni = uni.localCheckpoint(eager=False)
     else:
         bi, uni = counts
 

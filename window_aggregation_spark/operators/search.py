@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from window_aggregation_spark.operators.lm import sorted_fold_sum
 from window_aggregation_spark.operators.text import TOKEN_RE, tokens
+from window_aggregation_spark.session import checkpoint
 from window_aggregation_spark.sources import store_manifest as sm
 
 # Component -> directory names of a freshly built index (a pre-manifest
@@ -138,7 +139,6 @@ def bm25_topk_batch(
     id_col: str = "doc_id",
     query_id_col: str = "query_id",
     query_text_col: str = "query_text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Top-``k`` per query for a batch of queries (``query_id``,
     ``query_text``) — the query-log scale path.
@@ -178,12 +178,10 @@ def bm25_topk_batch(
     doc_tf = doc_tok.groupBy(id_col, "token").agg(
         F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl")
     )
-    if materialize:
-        # consumed by the per-term statistics AND the scoring join;
-        # localCheckpoint so the filtered-explode pipeline runs once
-        # (same rationale as operators/lm.py — AQE exchange reuse does
-        # not dedupe the branches).
-        doc_tf = doc_tf.localCheckpoint(eager=False)
+    # consumed by the per-term statistics AND the scoring join; pinned so
+    # the filtered-explode pipeline runs once (same rationale as
+    # operators/lm.py — AQE exchange reuse does not dedupe the branches)
+    doc_tf = checkpoint(doc_tf)
 
     term_df = doc_tf.groupBy("token").agg(
         F.count(F.lit(1)).alias("df_t")
@@ -229,7 +227,6 @@ def tfidf_keywords(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Top-``m`` characteristic terms per document by tf-idf (keyword
     extraction / doc summarization for corpus exploration).
@@ -248,8 +245,7 @@ def tfidf_keywords(
         .groupBy(id_col, "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    if materialize:
-        doc_tf = doc_tf.localCheckpoint(eager=False)
+    doc_tf = checkpoint(doc_tf)
 
     # count the RAW input (map-side combined, no exchange) — counting
     # through `base` would inherit the doc-id repartition shuffle just to

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from window_aggregation_spark.operators.dedup import cosine
+from window_aggregation_spark.session import checkpoint
 from window_aggregation_spark.sources import store_manifest as sm
 
 _PLANES_SEED = 42
@@ -1249,7 +1250,7 @@ def _pruned_union_rank(
     # assignment passes included — once per reference (measured: the
     # clustered-regime hybrid read >1x the sum of its branches in the
     # first r12 recording, exactly the double-execution surcharge)
-    ivf_out = ivf.select(*cols).localCheckpoint(eager=False)
+    ivf_out = checkpoint(ivf.select(*cols))
     # both sides are tiny (k and k*overfetch rows per query): broadcast
     # the scored IVF output as the anti-join's build side
     rest = shortlist.join(

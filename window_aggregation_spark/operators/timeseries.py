@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from window_aggregation_spark.session import checkpoint
+
 _STEPS = {"day": "1 day", "hour": "1 hour", "minute": "1 minute"}
 
 
@@ -455,7 +457,6 @@ def cohort_retention(
     user_col: str = "user_id",
     ts_col: str = "ts",
     period_seconds: int = 7 * 24 * 3600,
-    materialize: bool = True,
 ) -> DataFrame:
     """Cohort retention: users are cohorted by the fixed-width period of
     their FIRST event (epoch-aligned buckets of ``period_seconds``), and
@@ -474,16 +475,16 @@ def cohort_retention(
     reuse), one distinct-count per (cohort, offset) — <= cohorts x
     horizon result rows regardless of event volume.
 
-    ``materialize=True`` (default) ``localCheckpoint``-s the two-column
-    (user, period) projection and the per-user first-touch frame, each
-    consumed by two plan branches — without it Spark re-derives the
-    events scan per branch (three pruned scans; the ``operators/lm.py``
-    pattern, VERDICT r7 #5). The materialized copy is two integer
-    columns, ~16 bytes/event in executor storage. Tradeoff to know:
-    ``localCheckpoint`` truncates lineage, so losing an executor that
-    holds checkpointed blocks mid-job fails the query instead of
-    recomputing (retry the job). Pass False on preemptible/spot
-    clusters to trade the extra scans for full lineage recovery."""
+    The two-column (user, period) projection and the per-user
+    first-touch frame are each consumed by two plan branches, so both
+    are pinned with :func:`..session.checkpoint` — without it Spark
+    re-derives the events scan per branch (three pruned scans; the
+    ``operators/lm.py`` pattern, VERDICT r7 #5). The materialized copy is
+    two integer columns, ~16 bytes/event in executor storage. A local
+    checkpoint truncates lineage, so losing an executor that holds its
+    blocks mid-job fails the query instead of recomputing; on
+    preemptible/spot clusters set a checkpoint dir and the pins become
+    reliable checkpoints."""
     e = events.select(
         F.col(user_col).alias("__u"),
         F.floor(
@@ -491,11 +492,8 @@ def cohort_retention(
             / F.lit(period_seconds)
         ).cast("long").alias("__p"),
     )
-    if materialize:
-        e = e.localCheckpoint(eager=False)
-    first = e.groupBy("__u").agg(F.min("__p").alias("__cohort"))
-    if materialize:
-        first = first.localCheckpoint(eager=False)
+    e = checkpoint(e)
+    first = checkpoint(e.groupBy("__u").agg(F.min("__p").alias("__cohort")))
     # `first` is one row per user by construction: a plain count avoids
     # the Expand/partial-distinct stage countDistinct would add
     sizes = first.groupBy("__cohort").agg(

@@ -59,7 +59,11 @@ from window_aggregation_spark.functions.registry import (
     lookup,
 )
 from window_aggregation_spark.plans.rewrites import reverse_unbounded_following
-from window_aggregation_spark.plans.sql_gen import aggregate_sql, declared_type
+from window_aggregation_spark.plans.sql_gen import (
+    aggregate_sql,
+    cast_types,
+    declared_type,
+)
 from window_aggregation_spark.spec import (
     CURRENT_ROW,
     UNBOUNDED_PRECEDING,
@@ -72,19 +76,6 @@ from window_aggregation_spark.spec import (
     quote_ident,
 )
 from window_aggregation_spark.validation import validate_plan
-
-def _cast_types(df: DataFrame) -> dict[str, str]:
-    """The input types a passthrough cast may name: atomic types only. A
-    nested or user-defined type has no SQL spelling that keeps it exact
-    (field-name quoting, nullability flags, UDT classes), and only the
-    type-preserving functions (lead/lag/first/last/nth_value/min/max)
-    accept such a field, so its result needs no cast."""
-    return {
-        f.name: f.dataType.simpleString()
-        for f in df.schema.fields
-        if isinstance(f.dataType, T.AtomicType)
-    }
-
 
 # Running-aggregate functions the two-phase salted rewrite can compute
 # (skew.salted_running_agg), keyed by registry name -> salted agg name.
@@ -169,7 +160,7 @@ def _salted_route(
     # one approxQuantile pass shared by every routed aggregate (they all
     # chunk on the same order column)
     bounds = chunk_boundaries(df, order_col)
-    input_types = _cast_types(df)
+    input_types = cast_types(df)
     out = df
     for agg, salted_name in mapped:
         out = salted_running_agg(
@@ -288,7 +279,7 @@ def window_aggregate(
     over = plan.spec.over_sql()
     # the input's types, for the declared-type casts (withColumn semantics
     # read replaced columns, but cast to the input field's type)
-    input_types = _cast_types(df)
+    input_types = cast_types(df)
 
     out = df
     # consecutive rank-lookup aggregates, fused into ONE lookup plan

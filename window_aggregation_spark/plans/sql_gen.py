@@ -23,6 +23,9 @@ from __future__ import annotations
 
 from dataclasses import replace
 
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
 from window_aggregation_spark.functions.registry import (
     OUTPUT_TYPES,
     bigquery_expression,
@@ -107,12 +110,26 @@ def plans_to_sql(
     return sql
 
 
+def cast_types(df: DataFrame) -> dict[str, str]:
+    """The ``input_types`` of ``df``: the input types a passthrough cast may
+    name, atomic types only. A nested or user-defined type has no SQL
+    spelling that keeps it exact (field-name quoting, nullability flags,
+    UDT classes), and only the type-preserving functions
+    (lead/lag/first/last/nth_value/min/max) accept such a field, so its
+    result needs no cast."""
+    return {
+        f.name: f.dataType.simpleString()
+        for f in df.schema.fields
+        if isinstance(f.dataType, T.AtomicType)
+    }
+
+
 def declared_type(
     agg: AggregateDef, input_types: dict[str, str] | None
 ) -> str | None:
     """The SQL type one aggregate's output is cast to: the registry's
     declared type, else its input field's type from ``input_types``
-    (column -> SQL type name, e.g. ``dict(df.dtypes)``); None when neither
+    (column -> SQL type name, from :func:`cast_types`); None when neither
     is known."""
     fdef = lookup(agg.function)
     if fdef.output_type is not None:
@@ -150,7 +167,7 @@ def plan_to_sql(
     ``input_columns`` is the input column order (the information the
     DataFrame path gets from ``df.columns``); alias collisions replace the
     input column in place, matching the operator's semantics.
-    ``input_types`` (``dict(df.dtypes)``) enables the input-type passthrough
+    ``input_types`` (:func:`cast_types`) enables the input-type passthrough
     casts the DataFrame backend applies — without it, widening aggregates
     (e.g. ACCUMULATE over INT returns BIGINT in SQL) would diverge in type
     from the DataFrame path's declared output schema.

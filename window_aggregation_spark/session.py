@@ -4,13 +4,23 @@ Local mode for tests/bench; the same settings are the right defaults on a
 real cluster (AQE on, Arrow on, UTC timestamps). ``shuffle_partitions``
 defaults to the local core count — on a 1000-executor cluster you'd raise it
 (or, better, let AQE coalesce from a high initial number).
+
+It also owns materialisation: :func:`checkpoint` is the only call in the
+package that pins a frame (local or reliable, decided by the context's
+checkpoint dir), :func:`free` releases one, and :func:`scope` frees every
+frame pinned inside a block.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -76,24 +86,77 @@ def get_spark(
     return spark
 
 
-def free_checkpoint(df) -> None:
-    """Release a SUPERSEDED checkpointed DataFrame's storage blocks.
+# Frames ``checkpoint`` pinned inside the innermost open ``scope()`` of the
+# current context (None outside any scope). A ContextVar, not a global:
+# every thread starts with its own context, so builds running in parallel
+# threads never free each other's frames.
+_SCOPE: ContextVar[list | None] = ContextVar("pinned_frames", default=None)
+_log = logging.getLogger(__name__)
+# frees that raised (see ``free``): a fragile internal handle breaking
+# after an upgrade shows up here and in the log, not as silent growth
+failed_frees = 0
+_failed_frees_lock = threading.Lock()
 
-    ``DataFrame.unpersist()`` is a CacheManager operation and provably
-    does NOT touch localCheckpoint blocks (r13, measured: 168 MB of
-    blocks survive ``unpersist(blocking=True)`` and the frame stays
-    readable) — a per-round/per-epoch ``unpersist()`` is a no-op and the
-    loop pins every iteration's data for the session. The real handle is
-    the plan's LogicalRDD: unpersisting ITS rdd drops the blocks
-    (measured to zero) while frames already materialized FROM it keep
-    working. Callers must only invoke this AFTER every consumer of the
-    frame has materialized — the freed frame itself becomes unreadable
-    (the checkpoint truncated its lineage). Best-effort by design: on
-    any internals mismatch the old behavior (leak until context GC) is
-    the fallback, never an error. Used by the graph iteration loops
-    (CC, PageRank) and the streaming ingest epochs; lives here because
-    it is session-level block management, not an operator."""
+
+def checkpoint(df: DataFrame, *, eager: bool = False) -> DataFrame:
+    """Pin ``df``: the one place the engine truncates a plan's lineage.
+
+    A reliable ``df.checkpoint`` when the context has a checkpoint dir
+    (``spark.sparkContext.setCheckpointDir``: the pinned rows survive
+    executor loss), a ``localCheckpoint`` otherwise (faster, but a lost
+    executor fails the query that reads its blocks). ``eager=False``
+    materialises on the first action that reads the frame. The result is
+    registered with the innermost open :func:`scope`, which frees it on
+    exit."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        out = df.checkpoint(eager=eager)
+    else:
+        out = df.localCheckpoint(eager=eager)
+    pinned = _SCOPE.get()
+    if pinned is not None:
+        pinned.append(out)
+    return out
+
+
+def free(df: DataFrame) -> None:
+    """Release the storage blocks of a frame :func:`checkpoint` returned.
+
+    ``DataFrame.unpersist()`` is a CacheManager operation and does NOT
+    touch checkpoint blocks (measured: 168 MB of blocks survive
+    ``unpersist(blocking=True)`` and the frame stays readable). The real
+    handle is the plan's LogicalRDD: unpersisting ITS rdd drops the blocks
+    (measured to zero) while frames already materialised FROM it keep
+    working. Call it only AFTER every consumer of the frame has
+    materialised: a freed local checkpoint is unreadable (its lineage was
+    truncated). A reliable checkpoint's files stay in the checkpoint dir
+    unless ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set.
+
+    The handle is a Spark internal, so a failure is logged and counted in
+    ``failed_frees`` rather than raised: the blocks then live until the
+    context garbage-collects them."""
+    global failed_frees
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    except Exception as exc:
+        with _failed_frees_lock:
+            failed_frees += 1
+        _log.warning(
+            "could not free a checkpointed frame: %r", exc, exc_info=exc
+        )
+
+
+@contextmanager
+def scope() -> Iterator[None]:
+    """Free, on exit, every frame :func:`checkpoint` pinned inside the
+    block (nested scopes each free their own). Use it around a unit of
+    work whose results are written or collected inside it, e.g. one
+    streaming epoch: a lazy frame that reads a local checkpoint pinned
+    inside the block cannot run after it."""
+    pinned: list = []
+    token = _SCOPE.set(pinned)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for df in pinned:
+            free(df)

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from window_aggregation_spark.session import checkpoint
+
 SchemaLike = "T.StructType | str | None"
 
 
@@ -172,9 +174,9 @@ def spread_scan(
     therefore broadcast-join choices downstream) are untouched.
 
     ``barrier=True``: additionally pin the rows behind a lazy
-    ``localCheckpoint``. Required when a deterministic *filter* consumes
-    the spread rows: ``PushDownPredicates`` has no cost model and would
-    push the predicate straight back through the exchange into the
+    :func:`..session.checkpoint`. Required when a deterministic *filter*
+    consumes the spread rows: ``PushDownPredicates`` has no cost model and
+    would push the predicate straight back through the exchange into the
     single-task scan. The cost is that the checkpointed relation loses
     its size statistics (LogicalRDD defaults to "huge", measured to flip
     the minhash verify's broadcast joins to sort-merge — 3.6 s → 9.6 s —
@@ -187,7 +189,7 @@ def spread_scan(
     if n is None:
         return df
     out = df.repartition(n)
-    return out.localCheckpoint(eager=False) if barrier else out
+    return checkpoint(out) if barrier else out
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

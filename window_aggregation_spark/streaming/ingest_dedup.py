@@ -39,12 +39,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from window_aggregation_spark.operators.dedup import (
+    _SIG_COMPONENTS,
     SignatureStore,
     dedup_new_against_corpus,
     load_signature_store,
     minhash_dedup_cc,
     minhash_signatures,
 )
+from window_aggregation_spark.session import checkpoint, scope
+from window_aggregation_spark.sources import store_manifest
 
 
 def ingest_dedup_batch(
@@ -140,42 +143,46 @@ def streaming_ingest_dedup(
         if not batch_df.head(1):
             return
         spark = batch_df.sparkSession
-        # exclude THIS epoch's fold partition AND every later one
-        # (r13, >= semantics): a replayed batch must dedup against the
-        # store state it saw the first time — its own folded signatures
-        # would drop every doc as a self-duplicate and empty the output
-        # partition, and under a fresh-checkpoint multi-epoch replay an
-        # EARLY epoch seeing a LATER epoch's folds would drop documents
-        # the first run admitted
-        store = load_signature_store(
-            spark, store_path, exclude_folds_from=int(epoch_id)
-        )
-        clean = ingest_dedup_batch(
-            batch_df,
-            corpus,
-            id_col,
-            text_col,
-            corpus_signatures=store,
-            threshold=threshold,
-            verify=verify,
-            intra_batch=intra_batch,
-            ngram=store.ngram,
-            num_hashes=store.num_hashes,
-        ).localCheckpoint()  # computed once, consumed by two writes
-        clean.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={int(epoch_id)}"
-        )
-        if fold_signatures:
+        # the scope frees every frame the epoch pinned once both writes
+        # have landed: the cleaned batch and the intra-batch CC loop's
+        # final round, which its lazy result reads until then — without
+        # it a long-running stream pins both for every epoch
+        with scope():
+            # exclude THIS epoch's fold partition AND every later one
+            # (r13, >= semantics): a replayed batch must dedup against
+            # the store state it saw the first time — its own folded
+            # signatures would drop every doc as a self-duplicate and
+            # empty the output partition, and under a fresh-checkpoint
+            # multi-epoch replay an EARLY epoch seeing a LATER epoch's
+            # folds would drop documents the first run admitted
+            store = load_signature_store(
+                spark, store_path, exclude_folds_from=int(epoch_id)
+            )
+            clean = checkpoint(  # computed once, consumed by two writes
+                ingest_dedup_batch(
+                    batch_df,
+                    corpus,
+                    id_col,
+                    text_col,
+                    corpus_signatures=store,
+                    threshold=threshold,
+                    verify=verify,
+                    intra_batch=intra_batch,
+                    ngram=store.ngram,
+                    num_hashes=store.num_hashes,
+                ),
+                eager=True,
+            )
+            clean.write.mode("overwrite").parquet(
+                f"{out_path}/batch_id={int(epoch_id)}"
+            )
+            if not fold_signatures:
+                return
             # overwrite THIS epoch's fold dir: replayed batches replace
             # their own rows (idempotent), never append duplicates. The
             # folds dir resolves through the store manifest so the loop
             # keeps working across signature_store_compact generations
             # (run compaction only between streaming runs — see its doc)
-            from window_aggregation_spark.operators.dedup import (
-                _SIG_COMPONENTS,
-            )
-            from window_aggregation_spark.sources import store_manifest
-
             folds = store_manifest.read_manifest(
                 store_path, _SIG_COMPONENTS
             )["folds"]
@@ -188,12 +195,6 @@ def streaming_ingest_dedup(
             ).write.mode("overwrite").parquet(
                 f"{store_path}/{folds}/batch_id={int(epoch_id)}"
             )
-        # both consumers of the checkpoint have written — free its blocks,
-        # or a long-running stream pins every epoch's cleaned batch for
-        # the session (r14; same leak class as the r13 CC/PageRank fix)
-        from window_aggregation_spark.session import free_checkpoint
-
-        free_checkpoint(clean)
 
     return (
         new_stream.writeStream.foreachBatch(handle)

@@ -63,6 +63,7 @@ from window_aggregation_spark.operators.dedup import (
     sentence_hash_store_add,
     sentence_hash_store_compact,
 )
+from window_aggregation_spark.session import checkpoint, scope
 
 _CUTTERS = {
     "sentence": cut_sentence_spans,
@@ -118,21 +119,27 @@ def ingest_spans_epoch(
     if not batch_df.head(1):
         return
     spark = batch_df.sparkSession
-    store = load_sentence_hash_store(
-        spark, store_path, exclude_folds_from=int(epoch_id)
-    )
-    clean = ingest_spans_batch(
-        batch_df, store, id_col, text_col,
-        window=store.window, alias=alias, grain=store.grain,
-    ).localCheckpoint()  # computed once, consumed by two writes
-    clean.write.mode("overwrite").parquet(
-        f"{out_path}/batch_id={int(epoch_id)}"
-    )
-    if fold_hashes:
-        sentence_hash_store_add(
-            clean.select(id_col, alias).withColumnRenamed(
-                alias, text_col
+    # the scope frees every frame the epoch pinned once both writes have
+    # landed, or a long-running stream pins every epoch's cleaned batch
+    # for the session
+    with scope():
+        store = load_sentence_hash_store(
+            spark, store_path, exclude_folds_from=int(epoch_id)
+        )
+        clean = checkpoint(  # computed once, consumed by two writes
+            ingest_spans_batch(
+                batch_df, store, id_col, text_col,
+                window=store.window, alias=alias, grain=store.grain,
             ),
+            eager=True,
+        )
+        clean.write.mode("overwrite").parquet(
+            f"{out_path}/batch_id={int(epoch_id)}"
+        )
+        if not fold_hashes:
+            return
+        sentence_hash_store_add(
+            clean.select(id_col, alias).withColumnRenamed(alias, text_col),
             id_col,
             store_path,
             text_col,
@@ -148,12 +155,6 @@ def ingest_spans_epoch(
             sentence_hash_store_compact(
                 spark, store_path, keep_folds_from=int(epoch_id)
             )
-    # both consumers of the checkpoint have written — free its blocks,
-    # or a long-running stream pins every epoch's cleaned batch for the
-    # session (r14; same leak class as the r13 CC/PageRank fix)
-    from window_aggregation_spark.session import free_checkpoint
-
-    free_checkpoint(clean)
 
 
 def streaming_ingest_spans(

@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from window_aggregation_spark.parser import config_to_plan
-from window_aggregation_spark.plans.sql_gen import plan_to_sql
+from window_aggregation_spark.plans.sql_gen import cast_types, plan_to_sql
+from window_aggregation_spark.session import checkpoint
 from window_aggregation_spark.sources.io import (
     read_table,
     read_table_spread,
@@ -544,7 +545,7 @@ def w_sql_backend(spark: SparkSession, sf_dir: str) -> DataFrame:
     df.createOrReplaceTempView("lineitem_sqlgen")
     sql = plan_to_sql(
         plan, "lineitem_sqlgen", df.columns,
-        dialect="spark", input_types=dict(df.dtypes),
+        dialect="spark", input_types=cast_types(df),
     )
     return spark.sql(sql)
 
@@ -4107,13 +4108,11 @@ def _register_pipeline() -> None:
         # ABOVE the round-robin exchange (projections never sink
         # through it), so the checkpoint materialization itself runs
         # cluster-wide instead of in the scan's one task.
-        with_lang = read_table_spread(
-            spark, sf_dir, "documents", "doc_id"
-        ).select(
-            "doc_id", F.expr(_ML_PIPE_SYNTH).alias("t2")
-        ).select(
-            "doc_id", "t2", tx.language_pred("t2").alias("lang_pred")
-        ).localCheckpoint(eager=False)
+        with_lang = checkpoint(
+            read_table_spread(spark, sf_dir, "documents", "doc_id")
+            .select("doc_id", F.expr(_ML_PIPE_SYNTH).alias("t2"))
+            .select("doc_id", "t2", tx.language_pred("t2").alias("lang_pred"))
+        )
         gated = with_lang.where(
             tx.gopher_quality_pass_by_language(
                 "t2", lang_col="lang_pred", und_policy="structural"
@@ -4237,9 +4236,9 @@ def _register_pipeline() -> None:
         # over the already-aggregated, checkpointed line-key set at
         # plan-build time (all strategies value-identical, so the
         # oracle is unchanged).
-        pruned = cp.prune_duplicated_lines(
+        pruned = checkpoint(cp.prune_duplicated_lines(
             pages, "doc_id", "c4_text", max_doc_frac=0.3, strategy="auto"
-        ).select("doc_id", "pruned_text").localCheckpoint(eager=False)
+        ).select("doc_id", "pruned_text"))
         spans = dd.duplicated_sentence_spans(pruned, "doc_id", "pruned_text")
         return dd.cut_sentence_spans(
             pruned, spans, "doc_id", "pruned_text", alias="clean_text"
@@ -4372,9 +4371,9 @@ def _register_pipeline() -> None:
             .where(F.col("c4_keep"))
             .select("doc_id", "c4_text")
         )
-        pruned = cp.prune_duplicated_lines(
+        pruned = checkpoint(cp.prune_duplicated_lines(
             pages, "doc_id", "c4_text", max_doc_frac=0.3, strategy="auto"
-        ).select("doc_id", "pruned_text").localCheckpoint(eager=False)
+        ).select("doc_id", "pruned_text"))
         store = sentence_hash_store_for(spark, sf_dir)
         spans = dd.sentence_spans_increment(
             pruned, store, "doc_id", "pruned_text"
