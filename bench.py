@@ -954,60 +954,6 @@ def mjpeg_decode_probe() -> dict:
     return out
 
 
-def hof_materialization_probe(spark, sf_dir: str) -> dict:
-    """Records the interpreted-HOF re-evaluation pitfall as numbers
-    (round 10): an array subexpression referenced inside a transform
-    lambda is re-evaluated PER ELEMENT, so building n-gram windows off
-    the INLINED tokenizer re-runs ``regexp_extract_all`` for every gram
-    position, while the same plan with the token array materialized
-    behind a projection boundary evaluates it once per row. Both plans
-    produce identical grams; the ratio is the cost of missing the
-    materialization (the shape every text operator here now uses)."""
-    from window_aggregation_spark.operators.text import tokens
-    from window_aggregation_spark.sources.io import read_table
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def grams_from(toks):
-        # guarded like the production builder: sequence(1, 0) yields a
-        # DESCENDING [1, 0] (not empty!) whose element_at(toks, 0) is a
-        # runtime error — docs with <2 tokens must produce no windows
-        return F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 1),
-                lambda i: F.concat_ws(
-                    " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-                ),
-            ),
-        ).otherwise(F.expr("CAST(array() AS array<string>)"))
-
-    inlined = docs.select(
-        "doc_id",
-        grams_from(tokens(F.coalesce(F.col("text"), F.lit("")))).alias("g"),
-    )
-    materialized = docs.select(
-        "doc_id",
-        tokens(F.coalesce(F.col("text"), F.lit(""))).alias("__toks"),
-    ).select("doc_id", grams_from(F.col("__toks")).alias("g"))
-
-    def best_of(df, reps: int = 3) -> float:
-        df.write.format("noop").mode("overwrite").save()  # warm
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    t_in, t_mat = best_of(inlined), best_of(materialized)
-    return {
-        "inlined_sec": t_in,
-        "materialized_sec": t_mat,
-        "slowdown_x": round(t_in / max(t_mat, 1e-9), 1),
-    }
-
-
 def span_store_probe(spark, sf_dir: str, *, corpus_mult: int = 64) -> dict:
     """The SentenceHashStore's reason to exist, measured (r12 — VERDICT
     r11 #1): the incremental span dedup's batch cost must not scale
@@ -1268,82 +1214,6 @@ def hybrid_cost_probe(
     queries.unpersist()
     corpus.unpersist()
     return out
-
-
-def prune_dup_lines_strategy_probe(
-    spark, *, n_docs: int = 1000, lines_per_doc: int = 200,
-    pool: int = 20000, max_doc_frac: float = 0.005,
-) -> dict:
-    """Measures the blocklist-scale crossover in
-    ``prune_duplicated_lines`` (round 11 — VERDICT r10 next-round #5):
-    a boilerplate-heavy corpus whose frequent-line set (~``pool``
-    lines) far exceeds the documented ``blocklist_join_threshold``,
-    timed under both strategies. The fast path's per-line membership
-    test is a linear scan over the one-row broadcast array (O(lines ×
-    |bl|) per doc); the fallback hash-joins per-doc-distinct lines
-    against the frequent set. Also checks the two outputs hash-equal —
-    the fallback must be value-identical, not just faster.
-
-    Corpus shape: each doc draws ``lines_per_doc`` lines from a shared
-    ``pool`` (each pool line lands in ~n_docs*lines_per_doc/pool docs,
-    comfortably over ``max_doc_frac``) plus one unique line, so the
-    expected blocklist IS the pool and the unique lines must survive."""
-    from window_aggregation_spark.operators.corpus import (
-        prune_duplicated_lines,
-    )
-
-    idx = F.sequence(F.lit(0), F.lit(lines_per_doc - 1))
-    docs = spark.range(n_docs).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    idx,
-                    lambda i: F.concat(
-                        F.lit("boilerplate line "),
-                        F.pmod(
-                            F.col("id") * F.lit(131) + i * F.lit(17),
-                            F.lit(pool),
-                        ).cast("string"),
-                    ),
-                ),
-            ),
-            F.lit("\nunique "),
-            F.col("id").cast("string"),
-        ).alias("text"),
-    ).localCheckpoint()  # pin the synthetic corpus: time the prune, not
-    # the generator, and give both strategies the identical input
-
-    def best_of(strategy: str, reps: int = 2) -> float:
-        out = prune_duplicated_lines(
-            docs, "doc_id", max_doc_frac=max_doc_frac, strategy=strategy
-        )
-        out.write.format("noop").mode("overwrite").save()  # warm
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            out.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    def out_hash(strategy: str) -> int:
-        return prune_duplicated_lines(
-            docs, "doc_id", max_doc_frac=max_doc_frac, strategy=strategy
-        ).selectExpr(
-            "bit_xor(xxhash64(doc_id, pruned_text, n_pruned_lines)) AS h"
-        ).first()["h"]
-
-    t_arr, t_join = best_of("array"), best_of("join")
-    return {
-        "n_docs": n_docs,
-        "lines_per_doc": lines_per_doc,
-        "blocklist_pool": pool,
-        "array_sec": t_arr,
-        "join_sec": t_join,
-        "speedup_x": round(t_arr / max(t_join, 1e-9), 1),
-        "outputs_hash_equal": out_hash("array") == out_hash("join"),
-    }
 
 
 # Pinned host-speed reference for the calibrated headline (round 11 —
@@ -1850,10 +1720,6 @@ def main() -> None:
          lambda: streaming_probe(spark, sf_dir), False),
         ("stream_state_probe", "SPARK_GRAFT_STREAM_STATE_PROBE",
          lambda: stream_state_probe(spark, sf_dir), False),
-        ("hof_materialization_probe", "SPARK_GRAFT_HOF_PROBE",
-         lambda: hof_materialization_probe(spark, sf_dir), False),
-        ("prune_dup_lines_strategy_probe", "SPARK_GRAFT_PRUNE_PROBE",
-         lambda: prune_dup_lines_strategy_probe(spark), False),
         ("span_store_probe", "SPARK_GRAFT_SPAN_STORE_PROBE",
          lambda: span_store_probe(spark, sf_dir), False),
         ("ann_recall_probe", "SPARK_GRAFT_ANN_RECALL_PROBE",

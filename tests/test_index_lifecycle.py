@@ -222,9 +222,9 @@ def test_manifest_roundtrip_and_scheme_guard(tmp_path):
             sm.check_store_path("s3://bucket/ix")
     finally:
         mp.undo()
-    # plain paths resolve to the POSIX fast path; registered prefixes win
+    # plain paths resolve to PosixFS; registered prefixes win
     assert isinstance(sm._fs_for(path), sm.PosixFS)
-    shim = sm.RenamelessLocalFS()
+    shim = sm.PosixFS()
     sm.register_fs_prefix(path, shim)
     try:
         assert sm._fs_for(path) is shim

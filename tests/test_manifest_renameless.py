@@ -1,15 +1,15 @@
-"""Rename-less (object-store) manifest protocol: numbered MANIFEST-N
-generations written whole, readers take the highest PARSEABLE one.
-
-VERDICT r7 next-round #2: the POSIX ``os.replace`` protocol was rejected
-up front on ``scheme://`` paths, making the index-lifecycle features
-unusable exactly at the 100 TB scale where corpora live on S3/GCS. These
-tests drive the full store lifecycles through ``RenamelessLocalFS`` — a
-local FS shim that forbids the atomic-rename fast path, i.e. the object
-PUT model — and prove the protocol's safety property: a reader concurrent
+"""The manifest protocol, which needs no rename: numbered MANIFEST-N
+generations claimed with create-if-absent and written whole, readers
+take the highest PARSEABLE one. Every filesystem publishes this way, so
+these tests drive the full store lifecycles on plain local paths (the
+object PUT model: no file is ever replaced) and through the real
+HadoopFS, and prove the protocol's safety property: a reader concurrent
 with add/delete/compact always resolves a COMPLETE generation (old or
 new, never a mix), torn manifest writes fall back to the previous
-complete generation, and a crash before the flip changes nothing.
+complete generation, a crash before the flip changes nothing, and of two
+writers racing for one generation exactly one publishes. A store
+written with the older single ``MANIFEST`` file still loads and moves to
+numbered manifests on its first publish.
 """
 
 import json
@@ -28,19 +28,6 @@ from window_aggregation_spark.operators.search import (
     text_index_delete,
 )
 from window_aggregation_spark.sources import store_manifest as sm
-
-
-@pytest.fixture
-def shim_dir(tmp_path):
-    """A tmp directory whose manifest I/O is forced onto the rename-less
-    numbered protocol (Spark still reads/writes the parquet natively)."""
-    root = str(tmp_path / "objstore")
-    os.makedirs(root)
-    sm.register_fs_prefix(root, sm.RenamelessLocalFS())
-    try:
-        yield root
-    finally:
-        sm.unregister_fs_prefix(root)
 
 
 def _corpus(spark):
@@ -74,15 +61,15 @@ def _numbered(path):
     )
 
 
-def test_full_lifecycle_uses_numbered_manifests(spark, shim_dir, tmp_path):
-    """build -> add -> delete -> compact on the rename-less FS: every
+def test_full_lifecycle_uses_numbered_manifests(spark, tmp_path):
+    """build -> add -> delete -> compact on a plain path: every
     flip appends a numbered manifest (never the legacy single file), each
     step serves exactly like a from-scratch rebuild of the same logical
     corpus, and — the concurrency property — the PREVIOUS generation's
     directories remain fully intact after every mutation (sweep=False),
     so a reader that resolved the old manifest keeps a complete store."""
     docs = _corpus(spark)
-    path = f"{shim_dir}/ix"
+    path = f"{tmp_path}/ix"
     build_text_index(docs.where("doc_id <= 'd4'"), path, n_buckets=4)
 
     def snapshot_dirs():
@@ -120,13 +107,12 @@ def test_full_lifecycle_uses_numbered_manifests(spark, shim_dir, tmp_path):
 
 
 def test_torn_top_manifest_falls_back_to_previous_generation(
-    spark, shim_dir, tmp_path
+    spark, tmp_path
 ):
     """A torn whole-file write (garbage at the highest generation number)
-    must be SKIPPED: readers serve the previous parseable generation —
-    the exact failure mode atomic rename used to prevent."""
+    must be SKIPPED: readers serve the previous parseable generation."""
     docs = _corpus(spark)
-    path = f"{shim_dir}/ix"
+    path = f"{tmp_path}/ix"
     build_text_index(docs.where("doc_id <= 'd4'"), path, n_buckets=4)
     idx = text_index_add(spark, path, docs.where("doc_id > 'd4'"))
     good = {q: _scores(idx, q) for q in QUERIES}
@@ -138,7 +124,7 @@ def test_torn_top_manifest_falls_back_to_previous_generation(
         assert _scores(again, q) == good[q]
 
 
-def test_crash_before_flip_changes_nothing(spark, shim_dir, tmp_path):
+def test_crash_before_flip_changes_nothing(spark, tmp_path):
     """Generation dirs staged without a manifest flip (the crash window)
     are invisible: the store serves the pre-crash state bit-for-bit."""
     from pyspark.sql import functions as F
@@ -149,7 +135,7 @@ def test_crash_before_flip_changes_nothing(spark, shim_dir, tmp_path):
     )
 
     docs = _corpus(spark)
-    path = f"{shim_dir}/ix"
+    path = f"{tmp_path}/ix"
     build_text_index(docs.where("doc_id <= 'd4'"), path, n_buckets=4)
     before = load_text_index(spark, path)
     scores_before = {q: _scores(before, q) for q in QUERIES}
@@ -168,10 +154,10 @@ def test_crash_before_flip_changes_nothing(spark, shim_dir, tmp_path):
         assert _scores(after, q) == scores_before[q]
 
 
-def test_expected_guard_on_numbered_protocol(shim_dir):
+def test_expected_guard_on_numbered_protocol(tmp_path):
     """The single-writer fence works identically on the numbered path:
     a flip since the snapshot was taken raises instead of publishing."""
-    path = f"{shim_dir}/s"
+    path = f"{tmp_path}/s"
     os.makedirs(path)
     sm.write_manifest(path, {"a": "a_v1"})
     snap = sm.read_manifest(path, {"a": "a"})
@@ -182,8 +168,8 @@ def test_expected_guard_on_numbered_protocol(shim_dir):
     assert sm.read_manifest(path, {"a": "a"})["a"] == "a_v2"
 
 
-def test_numbered_history_pruned_to_keep_window(shim_dir):
-    path = f"{shim_dir}/s"
+def test_numbered_history_pruned_to_keep_window(tmp_path):
+    path = f"{tmp_path}/s"
     os.makedirs(path)
     for i in range(sm._MANIFEST_KEEP + 5):
         sm.write_manifest(path, {"a": f"a_v{i}"})
@@ -193,27 +179,55 @@ def test_numbered_history_pruned_to_keep_window(shim_dir):
     assert sm.read_manifest(path, {})["a"] == f"a_v{sm._MANIFEST_KEEP + 4}"
 
 
-def test_posix_paths_keep_the_legacy_fast_path(tmp_path):
-    """No prefix registered, plain path: one MANIFEST file via os.replace
-    — the unchanged round-7 behavior (no numbered files appear)."""
+def test_plain_paths_publish_numbered_manifests(tmp_path):
+    """No prefix registered, plain path: every publish claims the next
+    ``MANIFEST-<n>`` and no single ``MANIFEST`` file appears."""
     path = str(tmp_path / "s")
     os.makedirs(path)
     sm.write_manifest(path, {"a": "a_v1"})
-    assert os.path.exists(f"{path}/MANIFEST")
-    assert _numbered(path) == []
-    # ...unless the store already carries a numbered history (copied back
-    # from an object store): then the numbered protocol continues
-    os.unlink(f"{path}/MANIFEST")
-    with open(f"{path}/MANIFEST-{3:020d}", "w") as f:
-        json.dump({"a": "a_v3"}, f)
-    sm.write_manifest(path, {"a": "a_v4"})
-    assert _numbered(path) == [f"MANIFEST-{3:020d}", f"MANIFEST-{4:020d}"]
-    assert sm.read_manifest(path, {})["a"] == "a_v4"
+    assert _numbered(path) == [f"MANIFEST-{1:020d}"]
+    assert not os.path.exists(f"{path}/MANIFEST")
+    sm.write_manifest(path, {"a": "a_v2"})
+    assert _numbered(path) == [f"MANIFEST-{1:020d}", f"MANIFEST-{2:020d}"]
+    assert sorted(os.listdir(path)) == _numbered(path)
+    assert sm.read_manifest(path, {})["a"] == "a_v2"
 
 
-def test_signature_store_lifecycle_on_renameless_fs(spark, shim_dir, tmp_path):
+def test_two_plain_path_writers_past_the_expected_check_one_publishes(
+    tmp_path, monkeypatch
+):
+    """Two writers derive their mappings from the same snapshot and both
+    pass the ``expected=`` check; writer A publishes before writer B
+    claims. B must lose with ManifestConflictError and A's generation must
+    survive: a second ``os.replace`` of one ``MANIFEST`` used to erase it
+    silently. A plain path, no prefix registered: the default PosixFS."""
+    path = str(tmp_path / "s")
+    os.makedirs(path)
+    sm.write_manifest(path, {"a": "a_v1"})
+    snap = sm.read_manifest(path, {"a": "a"})
+    real_read = sm.PosixFS.read_text
+    pending = ["writer A"]
+
+    def read_then_let_a_publish(self, p):
+        text = real_read(self, p)
+        if pending:  # B's expected check has read; A publishes now
+            pending.pop()
+            sm.write_manifest(path, {"a": "a_A"}, expected=snap)
+        return text
+
+    monkeypatch.setattr(sm.PosixFS, "read_text", read_then_let_a_publish)
+    with pytest.raises(sm.ManifestConflictError):
+        sm.write_manifest(path, {"a": "a_B"}, expected=snap)
+    monkeypatch.undo()
+    assert not pending
+    assert sm.read_manifest(path, {"a": "a"})["a"] == "a_A"
+
+
+def test_signature_store_lifecycle_on_renameless_fs(
+    spark, tmp_path
+):
     """The dedup signature store inherits the protocol through the shared
-    module: delete -> compact on the shim == filtered rebuild, and the
+    module: delete -> compact == filtered rebuild, and the
     pair cache stays fingerprint-guarded."""
     rows = [
         (1, "the quick brown fox jumps over the lazy dog near the river"),
@@ -223,7 +237,7 @@ def test_signature_store_lifecycle_on_renameless_fs(spark, shim_dir, tmp_path):
         (5, "another unrelated document mentioning window aggregation"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    path = f"{shim_dir}/sig"
+    path = f"{tmp_path}/sig"
     dd.build_signature_store(docs, "doc_id", path)
     dd.signature_store_build_pairs(docs, "doc_id", path, threshold=0.3)
     assert dd.load_pair_cache(spark, path, threshold=0.3) is not None
@@ -251,10 +265,10 @@ def test_signature_store_lifecycle_on_renameless_fs(spark, shim_dir, tmp_path):
 
 
 def test_sentence_hash_store_lifecycle_on_renameless_fs(
-    spark, shim_dir, tmp_path
+    spark, tmp_path
 ):
     """The incremental-span-dedup hash set (VERDICT r11 #1) on the
-    object-store shim: build -> serve == recompute, add() folds an
+    numbered protocol: build -> serve == recompute, add() folds an
     admitted batch in (idempotent under replay), compact flips a
     numbered manifest and leaves the previous generation intact for
     concurrent readers — and the compacted store still serves exactly
@@ -283,7 +297,7 @@ def test_sentence_hash_store_lifecycle_on_renameless_fs(
         ],
         "doc_id long, text string",
     )
-    path = f"{shim_dir}/spanhash"
+    path = f"{tmp_path}/spanhash"
     store = dd.build_sentence_hash_store(corpus, "doc_id", path)
 
     def spans(new, against):
@@ -334,8 +348,8 @@ def hadoop_dir(spark, tmp_path):
     """A tmp directory whose manifest I/O runs through the REAL HadoopFS
     implementation (py4j -> org.apache.hadoop.fs.FileSystem on the local
     filesystem) — the exact code path scheme:// store paths take, minus
-    the network. Catches py4j signature/marshalling bugs the pure-Python
-    shim cannot."""
+    the network. Catches py4j signature/marshalling bugs PosixFS
+    cannot."""
     root = str(tmp_path / "hadoopstore")
     os.makedirs(root)
     sm.register_fs_prefix(root, sm.HadoopFS(spark))
@@ -347,7 +361,7 @@ def hadoop_dir(spark, tmp_path):
 
 def test_hadoopfs_manifest_roundtrip_and_fingerprint(spark, hadoop_dir):
     """write/read/expected-guard/prune + state_fingerprint through the
-    JVM Hadoop filesystem layer (rename-less, so numbered protocol)."""
+    JVM Hadoop filesystem layer."""
     path = f"{hadoop_dir}/s"
     os.makedirs(path)
     sm.write_manifest(path, {"a": "a_v1"})
@@ -399,7 +413,7 @@ def test_hadoopfs_text_index_lifecycle(spark, hadoop_dir, tmp_path):
 
 def test_fingerprint_identical_across_fs_implementations(spark, tmp_path):
     """state_fingerprint of the SAME directory content must agree across
-    PosixFS, the rename-less shim, and HadoopFS — a store copied between
+    PosixFS and HadoopFS — a store copied between
     a plain path and an object store keeps its fingerprint-guarded
     caches valid (posix used to emit './part-0' for top-level files
     where HadoopFS emits 'part-0')."""
@@ -410,13 +424,13 @@ def test_fingerprint_identical_across_fs_implementations(spark, tmp_path):
     with open(f"{root}/comp/sub/part-1", "w") as f:
         f.write("defg")
     fps = []
-    for fs in (sm.PosixFS(), sm.RenamelessLocalFS(), sm.HadoopFS(spark)):
+    for fs in (sm.PosixFS(), sm.HadoopFS(spark)):
         sm.register_fs_prefix(root, fs)
         try:
             fps.append(sm.state_fingerprint(root, ["comp", "missing"]))
         finally:
             sm.unregister_fs_prefix(root)
-    assert fps[0] == fps[1] == fps[2]
+    assert fps[0] == fps[1]
     # hidden entries must not perturb the fingerprint on ANY impl:
     # Hadoop's local ChecksumFileSystem hides .crc sidecars that os.walk
     # lists, and _SUCCESS markers say nothing about data — a Spark-
@@ -425,7 +439,7 @@ def test_fingerprint_identical_across_fs_implementations(spark, tmp_path):
         f.write("crc")
     with open(f"{root}/comp/_SUCCESS", "w") as f:
         f.write("")
-    for fs in (sm.PosixFS(), sm.RenamelessLocalFS(), sm.HadoopFS(spark)):
+    for fs in (sm.PosixFS(), sm.HadoopFS(spark)):
         sm.register_fs_prefix(root, fs)
         try:
             assert sm.state_fingerprint(root, ["comp", "missing"]) == fps[0]
@@ -452,21 +466,15 @@ class _HideFromListing:
         return [n for n in super().listdir(p) if n != self._hide]
 
 
-class _StaleListingFS(_HideFromListing, sm.RenamelessLocalFS):
-    pass
-
-
-class _StalePosixFS(_HideFromListing, sm.PosixFS):
+class _StaleListingFS(_HideFromListing, sm.PosixFS):
     pass
 
 
 def test_create_new_is_exclusive_on_every_fs(spark, tmp_path):
     """The fencing primitive: create_new claims a fresh path and raises
-    FileExistsError on an existing one — O_EXCL on the POSIX impls,
-    Hadoop create(path, overwrite=false) through the JVM."""
-    for i, fs in enumerate(
-        (sm.PosixFS(), sm.RenamelessLocalFS(), sm.HadoopFS(spark))
-    ):
+    FileExistsError on an existing one — O_EXCL on PosixFS, Hadoop
+    create(path, overwrite=false) through the JVM."""
+    for i, fs in enumerate((sm.PosixFS(), sm.HadoopFS(spark))):
         p = str(tmp_path / f"claim-{i}")
         fs.create_new(p, "first")
         with pytest.raises(FileExistsError):
@@ -475,32 +483,25 @@ def test_create_new_is_exclusive_on_every_fs(spark, tmp_path):
             assert f.read() == "first"  # the loser changed nothing
 
 
-@pytest.mark.parametrize("posix", [False, True])
-def test_contended_writers_exactly_one_wins(tmp_path, posix):
+@pytest.mark.parametrize("legacy", [False, True])
+def test_contended_writers_exactly_one_wins(tmp_path, legacy):
     """Two writers race to publish the same generation number: the one
     whose PUT lands first wins; the other raises ManifestConflictError
-    and the winner's published mapping survives byte-for-byte — on both
-    the rename-less shim and a plain path that carries numbered history."""
+    and the winner's published mapping survives byte-for-byte — also
+    when the race is for the first numbered generation of a store that
+    carries only a legacy single ``MANIFEST``."""
     root = str(tmp_path / "store")
     os.makedirs(root)
-    base_cls = sm.PosixFS if posix else sm.RenamelessLocalFS
-    sm.register_fs_prefix(root, base_cls())
-    try:
+    if legacy:
+        with open(f"{root}/MANIFEST", "w") as f:
+            json.dump({"a": "a_v1"}, f)
+    else:
         sm.write_manifest(root, {"a": "a_v1"})
-        if posix:
-            # move the plain path onto the numbered protocol the way it
-            # happens in the wild: a store copied back from an object
-            # store already carries numbered manifests
-            os.unlink(f"{root}/MANIFEST")
-            with open(f"{root}/MANIFEST-{1:020d}", "w") as f:
-                json.dump({"a": "a_v1"}, f)
-        sm.write_manifest(root, {"a": "a_winner"})  # writer A publishes
-        top = _numbered(root)[-1]
-    finally:
-        sm.unregister_fs_prefix(root)
+    sm.write_manifest(root, {"a": "a_winner"})  # writer A publishes
+    top = _numbered(root)[-1]
+    assert not os.path.exists(f"{root}/MANIFEST")
     # writer B listed BEFORE A's publish landed, so it claims A's number
-    stale = _StalePosixFS(top) if posix else _StaleListingFS(top)
-    sm.register_fs_prefix(root, stale)
+    sm.register_fs_prefix(root, _StaleListingFS(top))
     try:
         with pytest.raises(sm.ManifestConflictError, match="claimed"):
             sm.write_manifest(root, {"a": "a_loser"})
@@ -511,12 +512,39 @@ def test_contended_writers_exactly_one_wins(tmp_path, posix):
     assert sm.read_manifest(root, {"a": "a"})["a"] == "a_winner"
 
 
-def test_unreadable_top_manifest_is_never_reclaimed(shim_dir):
+class _ReadOnlyDeletesFS(sm.PosixFS):
+    """Claims succeed, deletes fail: a writer without delete permission."""
+
+    def delete(self, p):
+        raise PermissionError(p)
+
+
+def test_failed_prune_is_logged_and_the_publish_stands(tmp_path, caplog):
+    """The claim already published the generation, so a prune that fails
+    must not fail the write (a retried add would double-count every
+    document); it is logged instead."""
+    root = str(tmp_path / "s")
+    os.makedirs(root)
+    sm.register_fs_prefix(root, _ReadOnlyDeletesFS())
+    try:
+        for i in range(sm._MANIFEST_KEEP):
+            sm.write_manifest(root, {"a": f"a_v{i}"})
+        assert not caplog.records
+        with caplog.at_level("WARNING", logger=sm.__name__):
+            sm.write_manifest(root, {"a": "a_last"})
+    finally:
+        sm.unregister_fs_prefix(root)
+    assert sm.read_manifest(root, {})["a"] == "a_last"
+    assert len(_numbered(root)) == sm._MANIFEST_KEEP + 1  # nothing pruned
+    assert "could not prune" in caplog.text
+
+
+def test_unreadable_top_manifest_is_never_reclaimed(tmp_path):
     """ADVICE r8: the next generation number comes from the highest
     LISTED manifest, not the highest READABLE one — a torn PUT (or a
     transiently unreadable top file) must bump the writer PAST it, never
     let the writer derive N-1 and overwrite the existing MANIFEST-N."""
-    path = f"{shim_dir}/s"
+    path = f"{tmp_path}/s"
     os.makedirs(path)
     sm.write_manifest(path, {"a": "a_v1"})
     torn = f"{path}/MANIFEST-{2:020d}"
@@ -577,7 +605,7 @@ def test_conditional_put_fs_fences_natively(tmp_path):
     root = str(tmp_path / "s3ish")
     os.makedirs(root)
     store = _Fake412Store()
-    fs = sm.ConditionalPutFS(sm.RenamelessLocalFS(), store.conditional_put)
+    fs = sm.ConditionalPutFS(sm.PosixFS(), store.conditional_put)
     sm.register_fs_prefix(root, fs)
     try:
         sm.write_manifest(root, {"a": "a_v1"})
@@ -698,15 +726,13 @@ def test_message_fallback_still_works():
 
 
 # ---------------------------------------------------------------------------
-# Quarantine sink on the rename-less shim (VERDICT r9 next-round #4)
+# Quarantine sink (VERDICT r9 next-round #4)
 # ---------------------------------------------------------------------------
 
 
-def test_quarantine_write_roundtrip_on_renameless_fs(spark, shim_dir):
+def test_quarantine_write_roundtrip_on_renameless_fs(spark, tmp_path):
     """quarantine_write's committed-counts read-back reconstructs the
-    routing flag from the {flag}=true/false partition-directory KEYS —
-    run the full roundtrip with the store prefix forced onto the
-    rename-less protocol (same shim as the manifest lifecycle tests):
+    routing flag from the {flag}=true/false partition-directory KEYS:
     counts must describe the committed files, clean ∪ quarantine must
     equal the input exactly, and the string-bool partition-key pitfall
     must stay handled."""
@@ -719,7 +745,7 @@ def test_quarantine_write_roundtrip_on_renameless_fs(spark, shim_dir):
         "k long, price double",
     )
     checks = {"price_pos": F.col("price") > 0}
-    path = f"{shim_dir}/routed"
+    path = f"{tmp_path}/routed"
     out = quarantine_write(df, checks, path)
     assert (out["clean_rows"], out["quarantined_rows"]) == (2, 3)
     clean = spark.read.parquet(out["clean_path"])
@@ -739,23 +765,11 @@ def test_quarantine_write_roundtrip_on_renameless_fs(spark, shim_dir):
         ).collect()
     }
     assert flags == {True, False}
-    # empty input on the shim: no partitions, counts read 0/0
+    # empty input: no partitions, counts read 0/0
     out2 = quarantine_write(
-        df.where(F.lit(False)), checks, f"{shim_dir}/routed_empty"
+        df.where(F.lit(False)), checks, f"{tmp_path}/routed_empty"
     )
     assert (out2["clean_rows"], out2["quarantined_rows"]) == (0, 0)
-
-
-def test_conditional_put_fs_refuses_atomic_rename_base():
-    """ADVICE r10: wrapping an atomic-rename-capable FS must raise — a
-    hardcoded atomic_rename=False would otherwise silently switch the
-    manifest protocol to the numbered rename-less layout even though
-    the base could have used the rename fast path."""
-    with pytest.raises(ValueError, match="RENAME-LESS"):
-        sm.ConditionalPutFS(sm.PosixFS(), lambda p, d: True)
-    # the intended base (rename-less) still wraps fine
-    fs = sm.ConditionalPutFS(sm.RenamelessLocalFS(), lambda p, d: True)
-    assert fs.atomic_rename is False
 
 
 class _FakeBoto3S3:
@@ -882,7 +896,7 @@ def test_boto3_adapter_fences_write_manifest_end_to_end(tmp_path):
     os.makedirs(root)
     fake = _FakeBoto3S3(root=root)
     fs = sm.ConditionalPutFS(
-        sm.RenamelessLocalFS(), sm.boto3_conditional_put(fake, bucket="b")
+        sm.PosixFS(), sm.boto3_conditional_put(fake, bucket="b")
     )
     sm.register_fs_prefix(root, fs)
     try:
@@ -900,3 +914,162 @@ def test_boto3_adapter_fences_write_manifest_end_to_end(tmp_path):
         assert fake.objects[("b", key)] != b"stolen"
     finally:
         sm.unregister_fs_prefix(root)
+
+
+# ---------------------------------------------------------------------------
+# Stores published with a single MANIFEST file (the format plain paths
+# used before every filesystem published numbered manifests)
+# ---------------------------------------------------------------------------
+
+
+def _rewrite_as_single_manifest(path):
+    """Replace the numbered history with one ``MANIFEST`` holding the
+    current mapping, written the way the single-file protocol wrote it."""
+    mapping = sm.read_manifest(path, {})
+    for name in _numbered(path):
+        os.unlink(f"{path}/{name}")
+    with open(f"{path}/MANIFEST", "w") as f:
+        f.write(json.dumps(mapping, indent=1, sort_keys=True))
+
+
+def _text_store(spark):
+    docs = _corpus(spark)
+
+    def build(path):
+        build_text_index(docs.where("doc_id <= 'd4'"), path, n_buckets=4)
+        text_index_add(spark, path, docs.where("doc_id > 'd4'"))
+
+    def rows(path):
+        idx = load_text_index(spark, path)
+        live = sm.drop_tombstoned(idx.postings, idx.tombstones, "doc_id")
+        return (idx.n_docs, idx.sum_dl), live.collect()
+
+    return (
+        build, rows,
+        lambda path: text_index_delete(spark, path, _ids(spark, "d1")),
+        lambda path: text_index_compact(spark, path),
+    )
+
+
+def _ivf_store(spark):
+    import math
+
+    from window_aggregation_spark.operators import similarity as sim
+
+    vecs = spark.createDataFrame(
+        [
+            (i, [math.sin((i + 1) * (j + 1) * 0.7) for j in range(8)])
+            for i in range(30)
+        ],
+        "vec_id long, embedding array<float>",
+    )
+
+    def build(path):
+        sim.build_ivf_index(vecs.where("vec_id < 24"), path, n_centroids=4)
+        sim.ivf_index_add(spark, path, vecs.where("vec_id >= 24"))
+
+    def rows(path):
+        idx = sim.load_ivf_index(spark, path)
+        return idx.centroids.tolist(), idx.lists.collect()
+
+    return (
+        build, rows,
+        lambda path: sim.ivf_index_delete(
+            spark, path, spark.createDataFrame([(3,), (25,)], "vec_id long")
+        ),
+        lambda path: sim.ivf_index_compact(spark, path),
+    )
+
+
+def _signature_store(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog near the river"),
+            (2, "the quick brown fox jumps over the lazy dog near the creek"),
+            (3, "completely different text about spark shuffle partitions"),
+            (4, "another unrelated document mentioning window aggregation"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def delete(path, doc_id):
+        dd.signature_store_delete(
+            spark, path, spark.createDataFrame([(doc_id,)], "doc_id long")
+        )
+
+    def build(path):
+        dd.build_signature_store(docs, "doc_id", path)
+        delete(path, 4)
+        dd.signature_store_compact(spark, path)
+
+    return (
+        build,
+        lambda path: ((), dd.load_signature_store(spark, path).sigs.collect()),
+        lambda path: delete(path, 2),
+        lambda path: dd.signature_store_compact(spark, path),
+    )
+
+
+def _span_hash_store(spark):
+    def batch(doc_id, text):
+        return spark.createDataFrame(
+            [(doc_id, text)], "doc_id long, text string"
+        )
+
+    def build(path):
+        dd.build_sentence_hash_store(
+            batch(1, "Corpus doc opens. And more here. Also this one."),
+            "doc_id", path,
+        )
+        dd.sentence_hash_store_add(
+            batch(2, "Batch one brings words. Three of them. Exactly so."),
+            "doc_id", path, batch_id=1,
+        )
+        dd.sentence_hash_store_compact(spark, path)
+
+    def rows(path):
+        store = dd.load_sentence_hash_store(spark, path)
+        return (store.window, store.grain), store.hashes.distinct().collect()
+
+    return (
+        build, rows,
+        lambda path: dd.sentence_hash_store_add(
+            batch(3, "A later batch arrives. It has news. Fresh news."),
+            "doc_id", path, batch_id=2,
+        ),
+        lambda path: dd.sentence_hash_store_compact(spark, path),
+    )
+
+
+@pytest.mark.parametrize(
+    "store",
+    [_text_store, _ivf_store, _signature_store, _span_hash_store],
+    ids=["text", "ivf", "signature", "span_hash"],
+)
+def test_single_manifest_store_loads_mutates_and_moves_to_numbered(
+    spark, tmp_path, store
+):
+    """A store whose current generation is named by one ``MANIFEST``
+    file loads the same rows as its numbered twin, takes a mutation and
+    a compaction, and ends with numbered manifests only."""
+    build, rows, mutate, compact = store(spark)
+    path = str(tmp_path / "store")
+    build(path)
+    assert _numbered(path)  # the build's mutation published a generation
+
+    def snapshot():
+        meta, data = rows(path)
+        return meta, sorted(tuple(r) for r in data)
+
+    before = snapshot()
+    _rewrite_as_single_manifest(path)
+    assert snapshot() == before
+    mutate(path)
+    mutated = snapshot()
+    assert mutated != before
+    compact(path)
+    assert snapshot() == mutated
+    manifests = [n for n in os.listdir(path) if n.startswith("MANIFEST")]
+    assert manifests and manifests == [
+        n for n in manifests if sm._MANIFEST_RE.match(n)
+    ]

@@ -2,7 +2,8 @@
 releases, ``scope`` frees what was pinned inside it. These tests pin the
 block lifecycle (iterative operators end at the storage baseline inside a
 scope), the reliable branch a checkpoint dir selects, the failure count of
-``free``, and the rule that no other module pins a frame itself."""
+``free``, the rule that no other module pins a frame itself, and the
+rule that no module of the package swallows an exception silently."""
 
 from __future__ import annotations
 
@@ -55,8 +56,9 @@ def _results(edges) -> tuple:
 
 def test_only_session_pins_frames_and_it_swallows_nothing():
     """Every pin goes through ``session.checkpoint``: no other module of
-    the package calls ``.localCheckpoint(`` or ``.checkpoint(``, and
-    ``session.py`` has no ``except`` whose body is only ``pass``."""
+    the package calls ``.localCheckpoint(`` or ``.checkpoint(``, and no
+    module of the package has an ``except`` whose body is only ``pass``
+    (a caught failure is logged or counted)."""
     offenders = []
     for path in sorted(PACKAGE.rglob("*.py")):
         tree = ast.parse(path.read_text(), str(path))
@@ -70,8 +72,7 @@ def test_only_session_pins_frames_and_it_swallows_nothing():
             ):
                 offenders.append(f"{rel}:{node.lineno} .{node.func.attr}(")
             if (
-                path.name == "session.py"
-                and isinstance(node, ast.ExceptHandler)
+                isinstance(node, ast.ExceptHandler)
                 and all(isinstance(s, ast.Pass) for s in node.body)
             ):
                 offenders.append(f"{rel}:{node.lineno} except: pass")

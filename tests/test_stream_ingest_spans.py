@@ -415,7 +415,7 @@ def test_midstream_compaction_is_retry_safe(spark, tmp_path, staged):
     # folds 0,1 merged away; at most epoch 2's own fold is carried (this
     # fixture's batch 2 is cut to empty, so its fold has no hashes and
     # the carried-fold dir may legitimately not exist)
-    if sm.dir_exists(spark, f"{store_path}/{m['folds']}"):
+    if os.path.exists(f"{store_path}/{m['folds']}"):
         folds = spark.read.parquet(f"{store_path}/{m['folds']}")
         assert {r["batch_id"] for r in folds.select("batch_id")
                 .distinct().collect()} <= {2}

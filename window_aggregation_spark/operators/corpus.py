@@ -453,7 +453,7 @@ def prune_duplicated_lines(
       |bl| <= ``blocklist_join_threshold`` (default 4096: at ~60-char
       boilerplate lines that is a ~0.25 MB broadcast array and ≤4096
       equality probes per line — past it the hash join wins; measured
-      crossover in ``bench.py::prune_dup_lines_strategy_probe``).
+      crossover in ``OPTIMIZATION_r14.md``, "Retired probes").
 
     All strategies are value-identical; the fallback hash-matching the
     fast path is pinned in ``tests/test_corpus.py``. ``"auto"``
@@ -501,7 +501,7 @@ def prune_duplicated_lines(
         )
         # materialize the coalesced per-doc blocklist as a COLUMN before
         # the lambda references it (the measured interpreted-HOF
-        # re-evaluation pitfall, BENCH_DETAIL hof_materialization_probe)
+        # re-evaluation pitfall, OPTIMIZATION_r14.md "Retired probes")
         pruned = base.join(per_doc_bl, on=id_col, how="left").withColumn(
             "__bl",
             F.coalesce(F.col("__bl_hits"), F.array().cast("array<string>")),

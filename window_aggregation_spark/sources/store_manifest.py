@@ -15,39 +15,40 @@ directory. A crash before the flip leaves the old generation fully
 intact; stale version directories are garbage, not corruption, collected
 by :func:`gc_store`.
 
-Two publication protocols, selected per filesystem (round 8 — VERDICT r7
-next-round #2 asked for the rename-less path):
+One publication protocol, on every filesystem: each generation is a
+monotonically numbered ``MANIFEST-00000000000000000042`` file, CLAIMED
+with create-if-absent and written whole. Readers list and take the
+highest PARSEABLE generation — a torn or half-replicated top file is
+skipped, falling back to the previous complete generation. Superseded
+numbered manifests are pruned down to a keep-window on each write. The
+claim is ``O_EXCL`` on plain paths (atomic on local disks and on NFSv3+)
+and Hadoop ``create(path, overwrite=false)`` on ``scheme://`` paths
+(atomic on HDFS and on any FileSystem that honors the flag); on S3/GCS
+an object PUT is atomic too: the key shows the complete object or
+nothing. No rename is needed, so the same protocol runs on object
+stores, which have none.
 
-- **POSIX rename** (local disk, NFS): one ``MANIFEST`` file, written to a
-  temp name in the same directory and ``os.replace``-d over — the fast
-  path, unchanged from earlier rounds.
-- **Numbered manifests** (object stores and any FS without atomic
-  rename): monotonically numbered ``MANIFEST-00000000000000000042`` files
-  written WHOLE (on S3/GCS an object PUT is atomic: the key either shows
-  the complete object or nothing). Readers list and take the highest
-  PARSEABLE generation — a torn or half-replicated top file is skipped,
-  falling back to the previous complete generation. Writers fence through
-  the same single-writer contract as before (the ``expected=`` guard now
-  also catches a generation-number race). Superseded numbered manifests
-  are pruned down to a keep-window on each write.
+A store written before numbered manifests carries one ``MANIFEST``
+file. It is still read (and a corrupt one still fails loudly: it has no
+older generation to fall back to); the first numbered publish
+supersedes it and removes it.
 
 Filesystem dispatch: plain paths use driver-side ``os`` calls; any
 ``scheme://`` path resolves through Spark's Hadoop FileSystem layer (the
 same JVM connectors Spark already uses for the parquet data, so s3a/gcs/
-hdfs credentials and semantics come for free). Tests — and deployments
-that want to force the rename-less protocol on a shared mount — can
-register an override for a path prefix with :func:`register_fs_prefix`.
+hdfs credentials and semantics come for free). Tests and deployments
+can route a path prefix through another implementation with
+:func:`register_fs_prefix`.
 
-Writer fencing (round 9 — VERDICT r8 next-round #2): a numbered
-generation is CLAIMED with create-if-absent — ``O_EXCL`` on POSIX,
-Hadoop ``create(path, overwrite=false)`` (atomic on HDFS and on any
-FileSystem that honors the flag) on ``scheme://`` paths — so when two
-writers race to publish the same generation number, exactly one wins
-and the loser raises :class:`ManifestConflictError` instead of silently
-overwriting a published generation (whose data the next GC would have
-deleted permanently). The generation number itself is derived from the
-highest LISTED manifest name, readable or not, so a torn or transiently
-unreadable top file is never re-claimed either.
+Writer fencing: when two writers race to publish the same generation
+number, exactly one claim wins and the loser raises
+:class:`ManifestConflictError` instead of silently overwriting a
+published generation (whose data the next GC would have deleted
+permanently). A writer derives its generation number from the same
+listing its ``expected=`` check reads, so two writers that both pass
+that check claim the same number and only one publishes. The number
+comes from the highest LISTED manifest name, readable or not, so a torn
+or transiently unreadable top file is never re-claimed either.
 
 Conditional-write seam (round 10 — VERDICT r9 next-round #7): the
 Hadoop FileSystem API does not expose S3 ``If-None-Match`` / GCS
@@ -100,11 +101,12 @@ logic beside them:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import shutil
-import tempfile
 import time
+import uuid
 import warnings
 from functools import reduce
 
@@ -115,6 +117,7 @@ _LEGACY_MANIFEST = "MANIFEST"
 _MANIFEST_RE = re.compile(r"^MANIFEST-(\d{20})$")
 _MANIFEST_KEEP = 8  # numbered generations retained for in-flight readers
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+_log = logging.getLogger(__name__)
 
 
 class ManifestConflictError(RuntimeError):
@@ -130,10 +133,7 @@ class ManifestConflictError(RuntimeError):
 
 
 class PosixFS:
-    """Driver-side ``os`` implementation — the default for plain paths.
-    ``atomic_rename=True`` selects the single-``MANIFEST`` fast path."""
-
-    atomic_rename = True
+    """Driver-side ``os`` implementation — the default for plain paths."""
 
     def exists(self, p: str) -> bool:
         return os.path.exists(p)
@@ -151,29 +151,13 @@ class PosixFS:
         with open(p) as f:
             return f.read()
 
-    def write_file_atomic(self, p: str, data: str) -> None:
-        """Publish ``data`` at ``p`` so readers never see a torn file:
-        temp name in the same directory, fsync, rename over."""
-        d = os.path.dirname(p)
-        fd, tmp = tempfile.mkstemp(dir=d, prefix=".manifest-")
-        try:
-            with os.fdopen(fd, "w") as f:
-                f.write(data)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, p)
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
-
     def create_new(self, p: str, data: str) -> None:
         """Claim ``p`` with create-if-absent (``O_EXCL``): raises
         ``FileExistsError`` if any other writer already created it —
         the numbered-manifest writer fence. The parent directory is
-        fsynced after the write so the CLAIM itself is as durable as
-        ``write_file_atomic``'s rename (a power loss must not resurrect
-        the pre-claim state under a writer that believes it published).
+        fsynced after the write so the CLAIM itself is durable (a power
+        loss must not resurrect the pre-claim state under a writer that
+        believes it published).
 
         A crash BETWEEN the ``O_EXCL`` claim and the content fsync can
         leave a torn ``MANIFEST-N`` at the top: that is expected debris,
@@ -198,8 +182,8 @@ class PosixFS:
         elif os.path.exists(p):
             try:
                 os.unlink(p)
-            except OSError:
-                pass
+            except OSError as exc:
+                _log.warning("could not delete %s: %r", p, exc)
 
     def mtime(self, p: str) -> float:
         return os.path.getmtime(p)
@@ -224,34 +208,13 @@ class PosixFS:
                 yield f"{prefix}{name}", st.st_size, st.st_mtime
 
 
-class RenamelessLocalFS(PosixFS):
-    """A local filesystem WITHOUT atomic rename — the object-store shim
-    the lifecycle tests (and a cautious NFS deployment) run against: same
-    local directories Spark reads/writes natively, but the manifest
-    protocol is forced onto the numbered-generation path, and publishing
-    a file is a plain whole-file write (the object-PUT model)."""
-
-    atomic_rename = False
-
-    def write_file_atomic(self, p: str, data: str) -> None:
-        # deliberately NOT temp+rename: models an object PUT. The
-        # numbered protocol never overwrites an existing generation, so
-        # the only torn-write exposure is the brand-new key — which
-        # readers skip as unparseable, exactly like a torn PUT replica.
-        with open(p, "w") as f:
-            f.write(data)
-            f.flush()
-            os.fsync(f.fileno())
-
-
 class ConditionalPutFS:
     """Native writer fencing for object stores WITH a conditional-write
-    API (VERDICT r9 next-round #7): wraps any rename-less filesystem and
-    routes ONLY the generation claim (``create_new``) through a
-    caller-supplied conditional PUT, keeping every read/list/delete on
-    the wrapped FS. Register it for the store prefix via
-    :func:`register_fs_prefix` and raw-object-store deployments no
-    longer need an external writer lock.
+    API (VERDICT r9 next-round #7): wraps any filesystem and routes ONLY
+    the generation claim (``create_new``) through a caller-supplied
+    conditional PUT, keeping every read/list/delete on the wrapped FS.
+    Register it for the store prefix via :func:`register_fs_prefix` and
+    raw-object-store deployments no longer need an external writer lock.
 
     ``conditional_put(path, data)`` must atomically create-if-absent and
     return True on success, False when the key already exists — use the
@@ -263,22 +226,7 @@ class ConditionalPutFS:
     :func:`write_manifest` maps to :class:`ManifestConflictError` —
     the same lost-race contract as ``O_EXCL``."""
 
-    atomic_rename = False
-
     def __init__(self, base, conditional_put):
-        # refuse to wrap an atomic-rename-capable FS (ADVICE r10):
-        # `atomic_rename = False` here would silently switch the
-        # manifest protocol to the rename-less numbered layout while
-        # the base FS could have used the simpler rename protocol —
-        # the wrapper exists for object stores, which are rename-less
-        if getattr(base, "atomic_rename", True) is not False:
-            raise ValueError(
-                "ConditionalPutFS wraps RENAME-LESS filesystems only "
-                f"(got base {type(base).__name__} with atomic_rename="
-                f"{getattr(base, 'atomic_rename', None)!r}); an "
-                "atomic-rename-capable store should use the rename "
-                "manifest protocol directly, not a conditional-PUT shim"
-            )
         self._base = base
         self._conditional_put = conditional_put
 
@@ -443,11 +391,7 @@ class HadoopFS:
     """``scheme://`` paths through Spark's Hadoop FileSystem layer — the
     same JVM connectors (s3a, gcs, abfs, hdfs...) the parquet data
     already moves through, so credentials/endpoints need no second
-    configuration. Treated as rename-less (numbered manifests): S3/GCS
-    genuinely lack atomic rename, and on HDFS the numbered protocol is
-    merely slightly chattier while staying correct."""
-
-    atomic_rename = False
+    configuration."""
 
     def __init__(self, spark):
         self._jvm = spark._jvm
@@ -482,15 +426,6 @@ class HadoopFS:
             )
         finally:
             stream.close()
-
-    def write_file_atomic(self, p: str, data: str) -> None:
-        # create(overwrite=True) + close = one object PUT on s3a/gcs —
-        # the key appears complete or not at all
-        out = self._fs(p).create(self._path(p), True)
-        try:
-            out.write(bytearray(data.encode("utf-8")))
-        finally:
-            out.close()
 
     def create_new(self, p: str, data: str) -> None:
         """Hadoop ``create(path, overwrite=false)`` — atomic
@@ -534,9 +469,8 @@ class HadoopFS:
 
 
 _POSIX = PosixFS()
-# (prefix, fs) overrides, longest prefix wins — the test shim hook and a
-# deployment escape hatch ("this NFS mount lies about rename: use the
-# numbered protocol on it")
+# (prefix, fs) overrides, longest prefix wins — the test hook and the
+# seam that puts a ConditionalPutFS in front of an object-store prefix
 _FS_PREFIXES: list[tuple[str, object]] = []
 
 
@@ -557,8 +491,7 @@ def unregister_fs_prefix(prefix: str) -> None:
 def _fs_for(path: str, what: str = "store"):
     for prefix, fs in _FS_PREFIXES:
         # path-separator boundary: a registered '/mnt/nfs' must not
-        # capture the sibling '/mnt/nfs-backup' and silently switch its
-        # manifest protocol
+        # capture the sibling '/mnt/nfs-backup'
         p = prefix.rstrip("/")
         if path == p or path.startswith(f"{p}/"):
             return fs
@@ -579,29 +512,9 @@ def _fs_for(path: str, what: str = "store"):
 
 def check_store_path(path: str, what: str = "store") -> None:
     """Fail fast if ``path`` cannot carry the manifest protocol: plain
-    paths always can (POSIX fast path); ``scheme://`` paths need an
-    active SparkSession to reach the Hadoop connector (and then use the
-    rename-less numbered-manifest protocol)."""
+    paths always can; ``scheme://`` paths need an active SparkSession to
+    reach the Hadoop connector."""
     _fs_for(path, what)  # raises with the actionable message when unresolvable
-
-
-def require_posix_path(path: str, what: str = "store") -> None:
-    """Backward-compatible alias for :func:`check_store_path` — the name
-    predates the round-8 rename-less protocol, when ``scheme://`` paths
-    were rejected up front instead of dispatched."""
-    check_store_path(path, what)
-
-
-def dir_exists(spark, path: str) -> bool:
-    """Existence check THROUGH Spark's Hadoop filesystem layer, so it is
-    correct on every FS Spark can read (local, NFS, HDFS, s3a...) —
-    driver-side ``os.path.exists`` silently answers False for any
-    non-local URI, which would make optional store components (tombstone
-    dirs, streamed fold partitions) invisible exactly where they matter."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
 
 
 # ---------------------------------------------------------------------------
@@ -622,13 +535,15 @@ def _numbered_manifests(fs, path: str) -> list[tuple[int, str]]:
     return out
 
 
-def _current_manifest(fs, path: str) -> tuple[int, dict | None]:
-    """Highest PARSEABLE generation at ``path``: ``(generation,
-    mapping)``, or ``(0, legacy mapping or None)`` when no numbered
-    manifest exists. An unparseable numbered file (torn whole-file write
-    on a rename-less FS) is skipped — the previous complete generation
-    keeps serving, which is the protocol's safety property."""
-    for gen, name in _numbered_manifests(fs, path):
+def _current_manifest(fs, path: str, listed=None) -> dict | None:
+    """Mapping of the highest PARSEABLE generation among ``listed``
+    (default: list ``path`` now), else of the legacy single ``MANIFEST``,
+    else ``None``. An unparseable numbered file (a torn whole-file write)
+    is skipped — the previous complete generation keeps serving, which is
+    the protocol's safety property."""
+    if listed is None:
+        listed = _numbered_manifests(fs, path)
+    for _, name in listed:
         # broad catch, deliberately: besides torn JSON (ValueError) the
         # read itself can fail — FileNotFound after a concurrent prune of
         # a stale listing entry, a transient object-store read error —
@@ -638,13 +553,13 @@ def _current_manifest(fs, path: str) -> tuple[int, dict | None]:
         # wholly unreadable still fails loudly downstream when its
         # component directories cannot be scanned.
         try:
-            return gen, json.loads(fs.read_text(f"{path}/{name}"))
+            return json.loads(fs.read_text(f"{path}/{name}"))
         except Exception:
             continue
     legacy = f"{path}/{_LEGACY_MANIFEST}"
     if fs.exists(legacy):
-        # NO broad skip here, deliberately: the single-file protocol has
-        # no older generation to fall back to, and sweep defaults to
+        # NO broad skip here, deliberately: a legacy store has no older
+        # generation to fall back to, and sweep defaults to
         # False, so superseded legacy-named dirs usually still exist —
         # silently serving the pre-manifest defaults would hand readers
         # a STALE generation instead of failing loudly
@@ -657,22 +572,21 @@ def _current_manifest(fs, path: str) -> tuple[int, dict | None]:
                 "default directories"
             ) from e
         try:
-            return 0, json.loads(text)
+            return json.loads(text)
         except ValueError as e:
             raise RuntimeError(
-                f"legacy MANIFEST at {path!r} is corrupt ({e}) — the "
-                "single-file protocol has no previous generation to fall "
-                "back to; restore the file or rebuild the store"
+                f"legacy MANIFEST at {path!r} is corrupt ({e}) — it has "
+                "no previous generation to fall back to; restore the file "
+                "or rebuild the store"
             ) from e
-    return 0, None
+    return None
 
 
 def read_manifest(path: str, defaults: dict[str, str]) -> dict[str, str]:
     """Current component->directory mapping for the store at ``path``.
     A store written before manifests existed has no manifest file; it
     reads as ``defaults`` (the legacy fixed directory names)."""
-    fs = _fs_for(path)
-    _, mapping = _current_manifest(fs, path)
+    mapping = _current_manifest(_fs_for(path), path)
     out = dict(defaults)
     if mapping:
         out.update(mapping)
@@ -684,14 +598,11 @@ def write_manifest(
     mapping: dict[str, str],
     expected: dict[str, str] | None = None,
 ) -> None:
-    """Atomically publish a new generation.
-
-    POSIX paths with no numbered history use the temp-file +
-    ``os.replace`` fast path onto the single ``MANIFEST``. Rename-less
-    filesystems — and any store that already carries numbered manifests,
-    e.g. one copied back from an object store — write the next
-    ``MANIFEST-<n+1>`` whole and prune the numbered history down to the
-    keep-window.
+    """Atomically publish a new generation: claim ``MANIFEST-<n+1>``
+    with create-if-absent, where ``n`` is the highest listed generation
+    (0 for a new store or one that carries only a legacy ``MANIFEST``),
+    then prune the numbered history down to the keep-window and remove a
+    legacy ``MANIFEST``.
 
     The store writers are SINGLE-WRITER by contract (like every
     log-structured store here: adds, deletes, compactions run from one
@@ -704,29 +615,26 @@ def write_manifest(
       :class:`ManifestConflictError` instead of silently erasing their
       published generation (a read-modify-write lost update whose data
       the next GC would delete permanently).
-    - the numbered protocol CLAIMS its generation file with
-      create-if-absent, so even two writers that pass the ``expected``
-      check in the same instant cannot both publish the same generation
-      — exactly one wins, the loser gets :class:`ManifestConflictError`
-      (full fence on POSIX/HDFS; raw S3A narrows to check-then-write —
-      see the module docstring).
+    - the claim: the check above and the generation number come from
+      one listing, so two writers that pass the ``expected`` check in
+      the same instant claim the same number — exactly one wins, the
+      loser gets :class:`ManifestConflictError` (full fence on local
+      disk, NFS and HDFS; raw S3A narrows to check-then-write — see the
+      module docstring).
 
     The new generation number comes from the highest LISTED manifest
     name — NOT the highest readable one — so a torn PUT or a transient
     read failure on the top manifest can never cause this writer to
-    re-claim (and on an overwriting path, clobber) an existing
-    generation: an unreadable ``MANIFEST-N`` still bumps the next write
-    to ``N+1``."""
+    re-claim an existing generation: an unreadable ``MANIFEST-N`` still
+    bumps the next write to ``N+1``."""
     fs = _fs_for(path)
+    listed = _numbered_manifests(fs, path)
     if expected is not None:
         # only the expected-guard needs to READ current state; an
         # unguarded write must not (a corrupt legacy MANIFEST raises on
         # read, and overwriting it with a fresh mapping is exactly how
         # such a store is repaired)
-        _, current_raw = _current_manifest(fs, path)
-        current = dict(expected)
-        if current_raw:
-            current.update(current_raw)
+        current = {**expected, **(_current_manifest(fs, path, listed) or {})}
         if current != expected:
             raise ManifestConflictError(
                 f"manifest at {path!r} changed since it was read "
@@ -735,39 +643,37 @@ def write_manifest(
                 "re-read and retry"
             )
     fs.mkdirs(path)
-    data = json.dumps(mapping, indent=1, sort_keys=True)
-    listed = _numbered_manifests(fs, path)
-    gen = listed[0][0] if listed else 0
-    if fs.atomic_rename and gen == 0:
-        fs.write_file_atomic(f"{path}/{_LEGACY_MANIFEST}", data)
-        return
-    new_name = f"MANIFEST-{gen + 1:020d}"
+    new_name = f"MANIFEST-{(listed[0][0] if listed else 0) + 1:020d}"
     try:
-        fs.create_new(f"{path}/{new_name}", data)
+        fs.create_new(
+            f"{path}/{new_name}", json.dumps(mapping, indent=1, sort_keys=True)
+        )
     except FileExistsError as e:
         raise ManifestConflictError(
             f"generation {new_name} at {path!r} was claimed by another "
             "writer between this writer's read and its publish — these "
             "stores are single-writer: re-read and retry"
         ) from e
-    # prune: keep the newest _MANIFEST_KEEP numbered generations for
-    # readers that listed a moment ago; best-effort, never the flip's
-    # problem
-    # broad catch: the flip above already SUCCEEDED, and a prune failure
+    # prune: keep the newest _MANIFEST_KEEP generations (the new one
+    # included) for readers that listed a moment ago. Logged, not
+    # raised: the claim above already SUCCEEDED, and a prune failure
     # (missing DeleteObject permission, transient errors — Py4JJavaError
     # on HadoopFS, OSError on posix) must never surface as a failed
     # write: the caller's documented remedy for a failed add is retry,
     # and retrying a published add double-counts every document
     try:
-        for old_gen, name in _numbered_manifests(fs, path)[_MANIFEST_KEEP:]:
+        for _, name in listed[_MANIFEST_KEEP - 1:]:
             fs.delete(f"{path}/{name}")
         # a legacy MANIFEST is superseded by any numbered generation
         # (readers prefer numbered); removing it avoids a stale mapping
         # resurfacing if the numbered history is ever manually wiped
         if fs.exists(f"{path}/{_LEGACY_MANIFEST}"):
             fs.delete(f"{path}/{_LEGACY_MANIFEST}")
-    except Exception:
-        pass
+    except Exception as exc:
+        _log.warning(
+            "published %s at %s but could not prune the manifests it "
+            "superseded: %r", new_name, path, exc, exc_info=exc,
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -909,15 +815,20 @@ def _fs_now(fs, path: str) -> float:
     store server), not the driver's: with the driver's clock N minutes
     ahead, ``time.time() - grace`` would classify a just-written
     generation as old and collect it mid-publish. Falls back to the
-    driver clock if the probe cannot be written (read-only GC user)."""
-    probe = f"{path}/.gc-clock-probe-{os.getpid()}"
+    driver clock, with a warning, if the probe cannot be written
+    (read-only GC user)."""
+    probe = f"{path}/.gc-clock-probe-{uuid.uuid4().hex}"
     try:
-        fs.write_file_atomic(probe, "x")
+        fs.create_new(probe, "x")
         try:
             return fs.mtime(probe)
         finally:
             fs.delete(probe)
-    except Exception:
+    except Exception as exc:
+        _log.warning(
+            "could not stamp a clock probe at %s, using the driver clock "
+            "for the GC grace cutoff: %r", path, exc, exc_info=exc,
+        )
         return time.time()
 
 
@@ -1063,9 +974,10 @@ def read_dirs(spark, path: str, value: str, *, schema: str | None = None):
 def read_optional(spark, path: str, value: str, *, schema: str | None = None):
     """:func:`read_dirs` over the component's directories that exist, or
     ``None`` when none does: tombstones, folds and the pair cache appear
-    only with their first write. Existence goes through
-    :func:`dir_exists`, so it holds on every filesystem Spark reads."""
-    dirs = [d for d in split_dirs(value) if dir_exists(spark, f"{path}/{d}")]
+    only with their first write. Existence goes through the store's
+    filesystem (:func:`_fs_for`), so ``scheme://`` paths ask Hadoop."""
+    fs = _fs_for(path)
+    dirs = [d for d in split_dirs(value) if fs.exists(f"{path}/{d}")]
     if not dirs:
         return None
     return read_dirs(spark, path, join_dirs(dirs), schema=schema)

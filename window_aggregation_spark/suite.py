@@ -3597,8 +3597,9 @@ def _register_corpus() -> None:
         exploded lines against the frequent set, collect_set into a
         per-doc blocklist, rejoin — the shape for tiny max_doc_frac on
         boilerplate-heavy corpora where the one-row-array scan turns
-        O(lines x |bl|) per doc. Crossover measured in
-        bench.py::prune_dup_lines_strategy_probe (3.9x at |bl|=20k)
+        O(lines x |bl|) per doc. Crossover measured by the retired
+        prune_dup_lines_strategy_probe (OPTIMIZATION_r14.md: 10.0x at
+        |bl|=20k, sf0.1)
         (operators/corpus.py::prune_duplicated_lines strategy='join')."""
         docs = read_table(spark, sf_dir, "documents").select(
             "doc_id", F.expr(_BOILER_SYNTH_SQL).alias("t2")
