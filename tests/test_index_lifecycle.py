@@ -933,3 +933,39 @@ def test_ivf_add_is_atomic_under_crash(spark, tmp_path):
     compacted = sim.ivf_index_compact(spark, path)
     assert len(sm.split_dirs(sm.read_manifest(path, {})["lists"])) == 1
     assert _topk_rows(compacted, queries) == _topk_rows(want, queries)
+
+
+def test_add_only_index_compacts_to_one_directory(spark, tmp_path):
+    """Three adds and no delete leave four postings and doclens
+    directories; a compaction collapses each list to one directory, and
+    the compacted index still scores like DuckDB's BM25 over its docs."""
+    import duckdb
+
+    from window_aggregation_spark.operators.search import bm25_topk_oracle_sql
+
+    docs = _corpus(spark)
+    path = str(tmp_path / "ix")
+    build_text_index(docs.where("doc_id <= 'd3'"), path, n_buckets=4)
+    for batch in ("doc_id = 'd4'", "doc_id = 'd5'", "doc_id > 'd5'"):
+        text_index_add(spark, path, docs.where(batch))
+    m = sm.read_manifest(path, {})
+    assert [len(sm.split_dirs(m[k])) for k in ("postings", "doclens")] == [4, 4]
+    idx = text_index_compact(spark, path)
+    m = sm.read_manifest(path, {})
+    assert [len(sm.split_dirs(m[k])) for k in ("postings", "doclens")] == [1, 1]
+    assert idx.tombstones is None
+    assert load_text_index(spark, path).n_docs == idx.n_docs == 7
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE docs (doc_id VARCHAR, text VARCHAR)")
+        con.executemany(
+            "INSERT INTO docs VALUES (?, ?)",
+            [(r.doc_id, r.text) for r in docs.collect()],
+        )
+        for q in QUERIES:
+            want = con.execute(
+                bm25_topk_oracle_sql(q, k=10, table="docs")
+            ).fetchall()
+            assert _scores(idx, q) == [(a, float(b)) for a, b in want]
+    finally:
+        con.close()

@@ -18,6 +18,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import strip_manifest_meta
 from window_aggregation_spark.operators import dedup as dd
 from window_aggregation_spark.operators.search import (
     bm25_topk_indexed,
@@ -1073,3 +1074,51 @@ def test_single_manifest_store_loads_mutates_and_moves_to_numbered(
     assert manifests and manifests == [
         n for n in manifests if sm._MANIFEST_RE.match(n)
     ]
+
+
+@pytest.mark.parametrize(
+    "store",
+    [_text_store, _ivf_store, _signature_store, _span_hash_store],
+    ids=["text", "ivf", "signature", "span_hash"],
+)
+def test_store_without_manifest_meta_loads_mutates_and_compacts(
+    spark, tmp_path, store
+):
+    """A store whose manifests carry no params, stats or id type keeps
+    reading its params parquet and inferring its schemas: it serves the
+    same rows as its twin written with them, after the same mutation and
+    compaction, and its manifests gain no record on the way."""
+    build, rows, mutate, compact = store(spark)
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    build(old)
+    build(new)
+    strip_manifest_meta(old)
+    assert sm.meta(sm.read_manifest(new, {})) is not None
+
+    def snapshot(path):
+        meta, data = rows(path)
+        return meta, sorted(tuple(r) for r in data)
+
+    for step in (lambda path: None, mutate, compact):
+        step(old)
+        step(new)
+        assert snapshot(old) == snapshot(new)
+    assert sm.meta(sm.read_manifest(old, {})) is None
+
+
+def test_file_uri_and_plain_path_see_one_manifest(spark, tmp_path, monkeypatch):
+    """A store named by a ``file:`` URI, with one slash (Hadoop's
+    ``Path.toString()`` form) or three, publishes its manifest beside
+    its parquet: the plain path sees the same generations, and no
+    relative ``file:`` directory appears under the working directory."""
+    monkeypatch.chdir(tmp_path)
+    path = str(tmp_path / "ix")
+    build_text_index(_corpus(spark), f"file:{path}", n_buckets=4)
+    assert _numbered(path) == [f"MANIFEST-{1:020d}"]
+    snap = sm.read_manifest(path, {})
+    assert sm.read_manifest(f"file:{path}", {}) == snap
+    sm.write_manifest(f"file://{path}", {**snap, "x": "x_v1"}, expected=snap)
+    assert _numbered(path) == [f"MANIFEST-{1:020d}", f"MANIFEST-{2:020d}"]
+    assert sm.read_manifest(f"file:{path}", {})["x"] == "x_v1"
+    assert load_text_index(spark, path).n_docs == 6
+    assert not os.path.exists(tmp_path / "file:")

@@ -158,3 +158,79 @@ def test_reliable_checkpoints_equal_local_ones(spark, tmp_path):
     )
     assert all(local), local
     assert reliable == local
+
+
+def _group_jobs(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reliable_pin_computes_the_frame_once(spark, tmp_path):
+    """A pinned frame is computed once with or without a checkpoint dir.
+    A lazy reliable checkpoint computed it twice: in the first action
+    that read it and again in the job that wrote its files."""
+    from pyspark.sql import functions as F
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        calls.add(1)
+        return x
+
+    udf = F.udf(counted, "long")
+
+    def rows_computed():
+        calls.value = 0
+        with session.scope():
+            pinned = session.checkpoint(
+                spark.range(50).select(udf("id").alias("x"))
+            )
+            for _ in range(2):
+                assert pinned.agg(F.sum("x")).first()[0] == 1225
+        return calls.value
+
+    local = rows_computed()
+    with _checkpoint_dir(spark, tmp_path / "ckpt"):
+        reliable = rows_computed()
+    assert (local, reliable) == (50, 50)
+
+
+def test_cc_jobs_with_a_checkpoint_dir_add_one_write_per_pin(
+    spark, tmp_path
+):
+    """``connected_components`` runs the jobs it runs with local pins,
+    plus one per pin: the job that writes the reliable checkpoint's
+    files, the only one that computes the pinned frame. The counts
+    cannot be equal: a reliable checkpoint always writes its files in a
+    job of its own."""
+    from window_aggregation_spark.operators import graph
+
+    edges = _random_edges(spark, seed=5, n=300, m=450)
+    pins = []
+
+    def counting(df, **kwargs):
+        pins.append(df)
+        return session.checkpoint(df, **kwargs)
+
+    def run(label):
+        pins.clear()
+        rows = []
+        with mock.patch.object(graph, "checkpoint", counting):
+            jobs = _group_jobs(spark, f"cc-{label}", lambda: rows.extend(
+                tuple(r) for r in connected_components(edges, "u", "v")
+                .collect()
+            ))
+        return jobs, len(pins), sorted(rows)
+
+    local, local_pins, local_rows = run("local")
+    with _checkpoint_dir(spark, tmp_path / "ckpt"):
+        reliable, reliable_pins, reliable_rows = run("reliable")
+    assert reliable_rows == local_rows
+    assert reliable_pins == local_pins > 1
+    assert reliable == local + reliable_pins

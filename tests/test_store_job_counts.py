@@ -7,16 +7,25 @@ op (an extra schema-inference read, a stray ``count()`` or ``first()``)
 fails here, the way exchange counts are pinned in
 ``test_plan_quality.py``. Fixtures are tiny and fixed, so the counts are
 deterministic for the test session's configuration: a local master,
-so file listing never runs as a job, and one-row params/stats files
-read with their declared schema (no schema-inference job)."""
+so file listing never runs as a job. A store written now carries its
+params and stats in its manifest and reads every directory with a
+declared schema, so a load runs no job but the reads of data it
+returns to the driver (the IVF codebook, the text index's tombstone
+delta). A store whose manifest lacks that record (written before it
+existed) reads its params/stats parquets and infers its schemas; its
+counts are pinned too."""
 
 import itertools
 import math
 import os
 
+import pytest
+
+from tests.conftest import strip_manifest_meta
 from window_aggregation_spark.operators import dedup as dd
 from window_aggregation_spark.operators import search
 from window_aggregation_spark.operators import similarity as sim
+from window_aggregation_spark.sources import store_manifest as sm
 
 _GROUPS = itertools.count()
 
@@ -95,17 +104,19 @@ def test_text_index_op_job_counts(spark, tmp_path):
         "load_tombstoned": _jobs(spark, search.load_text_index, spark, path),
         "compact": _jobs(spark, search.text_index_compact, spark, path),
     }
-    # add, delete and compact load the index once, at entry
+    # loads read the manifest only; with tombstones pending, the
+    # tombstone delta (count, sum of lengths) is the load's one read
     assert got == {
-        "build": 10, "load": 3, "add": 11, "delete": 16,
-        "load_tombstoned": 7, "compact": 19,
+        "build": 6, "load": 0, "add": 5, "delete": 5,
+        "load_tombstoned": 2, "compact": 6,
     }
 
 
 def test_text_index_load_lists_many_buckets_inline(spark, tmp_path):
     """A 64-bucket postings directory is past Spark's default listing
     threshold (32 paths); in local mode it is listed in the driver, so
-    a load is still the params, stats and postings-schema reads only."""
+    a load, whose params, stats and schema the manifest holds, runs no
+    job at all."""
     path = str(tmp_path / "ix64")
     words = " ".join(f"word{i}" for i in range(400))
     search.build_text_index(
@@ -113,7 +124,7 @@ def test_text_index_load_lists_many_buckets_inline(spark, tmp_path):
         path, n_buckets=64,
     )
     assert len(os.listdir(f"{path}/postings")) > 33  # buckets + _SUCCESS
-    assert _jobs(spark, search.load_text_index, spark, path) == 3
+    assert _jobs(spark, search.load_text_index, spark, path) == 0
 
 
 def test_ivf_index_op_job_counts(spark, tmp_path):
@@ -133,12 +144,11 @@ def test_ivf_index_op_job_counts(spark, tmp_path):
         "load_tombstoned": _jobs(spark, sim.load_ivf_index, spark, path),
         "compact": _jobs(spark, sim.ivf_index_compact, spark, path),
     }
-    # the add publishes its batch as a second lists directory, so it and
-    # every op until the compaction read two list directories (one
-    # schema-inference job each)
+    # a load's one job reads the codebook; the add publishes its batch as
+    # a second lists directory, read with the declared schema, no job
     assert got == {
-        "build": 7, "load": 4, "add": 10, "delete": 8,
-        "load_tombstoned": 6, "compact": 9,
+        "build": 3, "load": 1, "add": 2, "delete": 3,
+        "load_tombstoned": 1, "compact": 3,
     }
 
 
@@ -175,9 +185,9 @@ def test_signature_store_op_job_counts(spark, tmp_path):
         "compact": _jobs(spark, dd.signature_store_compact, spark, path),
     }
     assert got == {
-        "build": 5, "load": 2, "load_folded": 3, "build_pairs": 9,
-        "load_pair_cache": 1, "delete": 11, "load_tombstoned": 4,
-        "compact": 9,
+        "build": 3, "load": 0, "load_folded": 0, "build_pairs": 6,
+        "load_pair_cache": 1, "delete": 2, "load_tombstoned": 0,
+        "compact": 3,
     }
 
 
@@ -201,5 +211,110 @@ def test_sentence_hash_store_op_job_counts(spark, tmp_path):
         "compact": _jobs(spark, dd.sentence_hash_store_compact, spark, path),
     }
     assert got == {
-        "build": 8, "load": 2, "add": 5, "load_folded": 2, "compact": 10,
+        "build": 5, "load": 0, "add": 2, "load_folded": 0, "compact": 5,
+    }
+
+
+def test_text_index_without_manifest_meta_job_counts(spark, tmp_path):
+    """The parquet reads of a store written before its manifest held
+    params and stats: a load reads params and stats (one job each) and
+    infers each postings directory's schema."""
+    docs = _docs(spark)
+    path = str(tmp_path / "ix")
+    search.build_text_index(docs.where("doc_id <= 'd4'"), path, n_buckets=4)
+    strip_manifest_meta(path, search._IDX_COMPONENTS)
+    got = {
+        "load": _jobs(spark, search.load_text_index, spark, path),
+        "add": _jobs(
+            spark, search.text_index_add, spark, path,
+            docs.where("doc_id > 'd4'"),
+        ),
+        "delete": _jobs(
+            spark, search.text_index_delete, spark, path,
+            spark.createDataFrame([("d1",)], "doc_id string"),
+        ),
+        "compact": _jobs(spark, search.text_index_compact, spark, path),
+    }
+    assert sm.meta(sm.read_manifest(path, {})) is None
+    assert got == {"load": 3, "add": 9, "delete": 14, "compact": 14}
+
+
+def test_other_stores_without_manifest_meta_job_counts(spark, tmp_path):
+    """IVF, signature and span-hash stores written before their manifest
+    held params and stats keep the parquet reads: a params row (one job)
+    and an inferred schema per directory."""
+    ivf, sig, span = (str(tmp_path / n) for n in ("ivf", "sig", "span"))
+    sim.build_ivf_index(_vectors(spark, 0, 24), ivf, n_centroids=4)
+    dd.build_signature_store(
+        _sig_docs(spark).where("doc_id <= 3"), "doc_id", sig
+    )
+    dd.build_sentence_hash_store(
+        _span_docs(spark).where("doc_id < 10"), "doc_id", span
+    )
+    for path, components in (
+        (ivf, sim._IVF_COMPONENTS),
+        (sig, dd._SIG_COMPONENTS),
+        (span, dd._SPANHASH_COMPONENTS),
+    ):
+        strip_manifest_meta(path, components)
+    got = {
+        "ivf_load": _jobs(spark, sim.load_ivf_index, spark, ivf),
+        "ivf_add": _jobs(
+            spark, sim.ivf_index_add, spark, ivf, _vectors(spark, 24, 32)
+        ),
+        "ivf_compact": _jobs(spark, sim.ivf_index_compact, spark, ivf),
+        "sig_load": _jobs(spark, dd.load_signature_store, spark, sig),
+        "sig_delete": _jobs(
+            spark, dd.signature_store_delete, spark, sig,
+            spark.createDataFrame([(2,)], "doc_id long"),
+        ),
+        "sig_compact": _jobs(spark, dd.signature_store_compact, spark, sig),
+        "span_load": _jobs(spark, dd.load_sentence_hash_store, spark, span),
+        "span_add": _jobs(
+            spark, dd.sentence_hash_store_add,
+            _span_docs(spark).where("doc_id >= 10"), "doc_id", span,
+            batch_id=0,
+        ),
+        "span_compact": _jobs(
+            spark, dd.sentence_hash_store_compact, spark, span
+        ),
+    }
+    assert got == {
+        "ivf_load": 2, "ivf_add": 5, "ivf_compact": 5,
+        "sig_load": 2, "sig_delete": 7, "sig_compact": 7,
+        "span_load": 1, "span_add": 4, "span_compact": 7,
+    }
+
+
+@pytest.mark.parametrize("n_adds", [1, 3])
+def test_text_op_job_counts_do_not_depend_on_the_number_of_adds(
+    spark, tmp_path, n_adds
+):
+    """Each add publishes one more postings and doclens directory; no
+    text op reads them with a job per directory, and the compaction
+    collapses the lists."""
+    docs = _docs(spark)
+    path = str(tmp_path / "ix")
+    search.build_text_index(docs.where("doc_id <= 'd2'"), path, n_buckets=4)
+    for d in ("d3", "d4", "d5")[:n_adds - 1]:
+        search.text_index_add(spark, path, docs.where(f"doc_id = '{d}'"))
+    got = {
+        "add": _jobs(
+            spark, search.text_index_add, spark, path,
+            docs.where("doc_id = 'd6'"),
+        ),
+        "load": _jobs(spark, search.load_text_index, spark, path),
+        "delete": _jobs(
+            spark, search.text_index_delete, spark, path,
+            spark.createDataFrame([("d1",)], "doc_id string"),
+        ),
+        "load_tombstoned": _jobs(spark, search.load_text_index, spark, path),
+        "compact": _jobs(spark, search.text_index_compact, spark, path),
+        "load_compacted": _jobs(spark, search.load_text_index, spark, path),
+    }
+    dirs = sm.split_dirs(sm.read_manifest(path, {})["postings"])
+    assert len(dirs) == 1
+    assert got == {
+        "add": 5, "load": 0, "delete": 5, "load_tombstoned": 2,
+        "compact": 6, "load_compacted": 0,
     }

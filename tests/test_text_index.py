@@ -110,3 +110,29 @@ def test_index_add_equals_rebuild(spark, tmp_path):
         want = bm25_topk_indexed(full, q, k=10).collect()
         scan = bm25_topk(docs, q, k=10).collect()
         assert got == want == scan
+
+
+def test_declared_schema_plans_like_inferred(spark, tmp_path):
+    """A load reads the postings with the schema the manifest's params
+    declare: the optimized BM25 plan equals the plan over the same
+    directories read with an inferred schema (a store whose manifest
+    carries no params)."""
+    import re
+
+    from tests.conftest import strip_manifest_meta
+
+    docs = _corpus(spark)
+    path = str(tmp_path / "ix")
+    build_text_index(docs.where("doc_id <= 'd3'"), path, n_buckets=4)
+    declared = text_index_add(spark, path, docs.where("doc_id > 'd3'"))
+    strip_manifest_meta(path)
+    inferred = load_text_index(spark, path)
+    assert inferred.postings.schema == declared.postings.schema
+
+    def plan(idx, q):
+        text = bm25_topk_indexed(idx, q, k=5)._jdf.queryExecution()
+        # expression ids and lambda variable ids are per-plan counters
+        return re.sub(r"(?<=[#_])\d+L?", "", text.optimizedPlan().toString())
+
+    for q in ("hash join", "window partition sort", "pasta"):
+        assert plan(declared, q) == plan(inferred, q)

@@ -206,6 +206,34 @@ _SIG_COMPONENTS = {
 _SIG_PARAMS_SCHEMA = "id_col string, ngram int, num_hashes int"
 
 
+def _sig_params(spark, path: str, m: dict):
+    """The params of manifest ``m``: its record, or, for a store whose
+    manifest predates one, the one-row params parquet."""
+    md = sm.meta(m)
+    if md is not None:
+        return md["params"]
+    return (
+        spark.read.schema(_SIG_PARAMS_SCHEMA).parquet(f"{path}/params").first()
+    )
+
+
+def _sig_schemas(m: dict):
+    """Declared read schemas of the signatures, the fold partitions and
+    the tombstones, from the id type and hash count the manifest's params
+    record; Nones (inferred) for a store whose manifest predates them."""
+    md = sm.meta(m)
+    if md is None:
+        return None, None, None
+    p = md["params"]
+    idc = (p["id_col"], p["id_type"])
+    sigs = [idc] + [(f"m{i}", "long") for i in range(int(p["num_hashes"]))]
+    return (
+        sm.schema(sigs),
+        sm.schema(sigs + [("batch_id", "integer")]),
+        sm.schema([idc, ("__upto_batch", "long")]),
+    )
+
+
 def build_signature_store(
     df: DataFrame,
     id_col: str,
@@ -217,7 +245,8 @@ def build_signature_store(
     mode: str = "overwrite",
 ) -> SignatureStore:
     """Compute minhash signatures once and persist them under ``path``
-    (``sigs/`` parquet + a one-row ``params/`` parquet). Returns the
+    (``sigs/`` parquet + a one-row ``params/`` parquet, whose row, with
+    the id column's type, the build's manifest records too). Returns the
     store re-read from disk, so downstream plans run against exactly
     what was persisted."""
     sm.guard_build(
@@ -234,7 +263,11 @@ def build_signature_store(
         spark, [(id_col, ngram, num_hashes)], _SIG_PARAMS_SCHEMA,
         f"{path}/params", mode,
     )
-    return load_signature_store(spark, path)
+    m = sm.publish_build(path, _SIG_COMPONENTS, {
+        "id_col": id_col, "id_type": sm.type_value(df, id_col),
+        "ngram": ngram, "num_hashes": num_hashes,
+    })
+    return _load_signatures(spark, path, m=m)[0]
 
 
 def load_signature_store(
@@ -263,16 +296,22 @@ def load_signature_store(
 
 
 def _load_signatures(
-    spark, path: str, exclude_folds_from: int | None = None
+    spark, path: str, exclude_folds_from: int | None = None, *,
+    m: dict | None = None,
 ) -> tuple[SignatureStore, bool]:
-    """:func:`load_signature_store`, plus whether folds or tombstones are
-    pending (what a compaction would merge)."""
-    m = sm.read_manifest(path, _SIG_COMPONENTS)
-    p = spark.read.schema(_SIG_PARAMS_SCHEMA).parquet(f"{path}/params").first()
+    """:func:`load_signature_store` of manifest ``m`` (default: the
+    current one), plus whether folds or tombstones are pending (what a
+    compaction would merge). With the params in the manifest, it runs no
+    Spark job."""
+    if m is None:
+        m = sm.read_manifest(path, _SIG_COMPONENTS)
+    p = _sig_params(spark, path, m)
     id_c = p["id_col"]
-    base = spark.read.parquet(f"{path}/{m['sigs']}")
+    sigs_schema, folds_schema, tomb_schema = _sig_schemas(m)
+    base = sm.read_dirs(spark, path, m["sigs"], schema=sigs_schema)
     folds = sm.folds_before(
-        sm.read_optional(spark, path, m["folds"]), exclude_folds_from
+        sm.read_optional(spark, path, m["folds"], schema=folds_schema),
+        exclude_folds_from,
     )
     # pending deletions (signature_store_delete) anti-join out here, so
     # deleted docs stop matching ingest batches immediately. Tombstones
@@ -283,7 +322,7 @@ def _load_signatures(
     # re-submitted content reusing a stable id (url hash, content id)
     # would stay invisible forever and the next compaction would destroy
     # its fresh signature.
-    tomb = sm.read_optional(spark, path, m["tombstones"])
+    tomb = sm.read_optional(spark, path, m["tombstones"], schema=tomb_schema)
     if tomb is not None:
         if "__upto_batch" not in tomb.columns:  # legacy id-only tombstones
             tomb = tomb.withColumn("__upto_batch", F.lit(2**62))
@@ -327,21 +366,18 @@ def signature_store_delete(spark, path: str, ids: DataFrame) -> SignatureStore:
     :func:`signature_store_compact`. Works on POSIX paths and object
     stores alike (manifest protocol, ``sources/store_manifest.py``)."""
     m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
-    id_c = (
-        spark.read.schema(_SIG_PARAMS_SCHEMA).parquet(f"{path}/params")
-        .first()["id_col"]
-    )
+    id_c = _sig_params(spark, path, m)["id_col"]
     sm.check_id_type(
-        ids, spark.read.parquet(f"{path}/{m['sigs']}"), id_c,
-        "signature_store_delete",
+        ids, sm.read_dirs(spark, path, m["sigs"], schema=_sig_schemas(m)[0]),
+        id_c, "signature_store_delete",
     )
-    folds = sm.read_optional(spark, path, m["folds"])
-    upto = None if folds is None else folds.agg(F.max("batch_id")).first()[0]
+    upto = sm.last_fold(path, m["folds"])
     batch = ids.toDF(id_c).dropDuplicates().withColumn(
-        "__upto_batch", F.lit(-1 if upto is None else int(upto)).cast("long")
+        "__upto_batch", F.lit(-1 if upto is None else upto).cast("long")
     )
     batch.write.mode("append").parquet(f"{path}/{m['tombstones']}")
-    return load_signature_store(spark, path)
+    # a delete publishes nothing: the snapshot is still the manifest
+    return _load_signatures(spark, path, m=m)[0]
 
 
 def signature_store_compact(
@@ -367,7 +403,7 @@ def signature_store_compact(
     # the serving view (folds unioned, watermarked tombstones applied) is
     # what gets materialized — compaction can never drift from what loads
     # were already serving
-    store, pending = _load_signatures(spark, path)
+    store, pending = _load_signatures(spark, path, m=m)
     if not pending:
         return store
     # "pairs" is rotated to a fresh (not-yet-existing, reads as absent)
@@ -378,10 +414,10 @@ def signature_store_compact(
         path, m, _SIG_COMPONENTS, ("sigs", "tombstones", "folds", "pairs")
     )
     store.sigs.write.parquet(f"{path}/{new['sigs']}")
-    sm.publish(
+    m = sm.publish(
         path, m, new, _SIG_COMPONENTS, sweep=sweep, drop=("pairs_meta",)
     )
-    return load_signature_store(spark, path)
+    return _load_signatures(spark, path, m=m)[0]
 
 
 def signature_store_gc(path: str, *, grace_seconds: float = 900.0) -> dict:
@@ -445,7 +481,7 @@ def signature_store_build_pairs(
     fully written, then one atomic manifest flip (expected-guarded)."""
     spark = df.sparkSession
     m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
-    store = load_signature_store(spark, path)
+    store = _load_signatures(spark, path, m=m)[0]
     pairs = minhash_dedup_pairs(
         df, id_col, text_col,
         ngram=ngram, num_hashes=num_hashes, bands=bands,
@@ -554,6 +590,15 @@ def _band_keys(
     banded-rows exchange is the LSH stage's one corpus-order shuffle,
     so its width is what the stage costs at scale (guide §2.3 narrower
     types / shuffle fewer bytes)."""
+    return sigs.selectExpr(
+        f"{quote_ident(id_col)} AS __id",
+        _band_keys_sql(num_hashes=num_hashes, bands=bands),
+    )
+
+
+def _band_keys_sql(*, num_hashes: int, bands: int) -> str:
+    """``explode(...) AS key``: the SQL text of :func:`_band_keys`'s
+    generator over columns ``m0..m{num_hashes-1}``."""
     rows = num_hashes // bands
     keys = ", ".join(
         "xxhash64(" + ", ".join(
@@ -561,9 +606,7 @@ def _band_keys(
         ) + ")"
         for b in range(bands)
     )
-    return sigs.selectExpr(
-        f"{quote_ident(id_col)} AS __id", f"explode(array({keys})) AS key"
-    )
+    return f"explode(array({keys})) AS key"
 
 
 def minhash_candidate_pairs(
@@ -1624,6 +1667,9 @@ SPAN_HASH_BROADCAST_MAX = 4_000_000
 # the schema explicitly so an all-empty fold set (every batch so far
 # cut to empty) still loads instead of failing parquet schema inference
 _SPANHASH_FOLD_SCHEMA = "__h BIGINT, batch_id BIGINT"
+# the base hash set, read with its schema on every store: the column and
+# its type are fixed by the window builders, never by the input
+_SPANHASH_SCHEMA = "__h BIGINT"
 
 
 def _resolve_span_strategy(
@@ -1679,14 +1725,19 @@ _WINDOW_GRAINS = {
 
 
 def _span_params(spark, path: str, m: dict) -> tuple[int, str, int | None]:
-    """``(window, grain, n_hashes)`` from the store's params row.
+    """``(window, grain, n_hashes)`` from manifest ``m``'s record, or,
+    for a store whose manifest predates one, from the params row.
     Pre-r12 stores predate the grain column and are sentence-grain;
     pre-r13 stores predate ``n_hashes`` (None: the auto strategy defers
     to the planner)."""
-    p = (
-        spark.read.schema(_SPAN_PARAMS_SCHEMA)
-        .parquet(f"{path}/{m['params']}").first()
-    )
+    md = sm.meta(m)
+    if md is not None:
+        p = {**md["params"], **md["stats"]}
+    else:
+        p = (
+            spark.read.schema(_SPAN_PARAMS_SCHEMA)
+            .parquet(f"{path}/{m['params']}").first()
+        )
     n_hashes = p["n_hashes"]
     return (
         int(p["window"]), p["grain"] or "sentence",
@@ -1726,12 +1777,18 @@ def build_sentence_hash_store(
     # count the WRITTEN parquet (columnless scan, footer-cheap), not the
     # plan — the count drives the join auto-strategy, so it must be the
     # store's truth, not a recompute that could drift from it
-    n_hashes = spark.read.parquet(f"{path}/span_hashes").count()
+    n_hashes = spark.read.schema(_SPANHASH_SCHEMA).parquet(
+        f"{path}/span_hashes"
+    ).count()
     sm.write_rows(
         spark, [(window, grain, n_hashes)],
         _SPAN_PARAMS_SCHEMA, f"{path}/params", mode,
     )
-    return load_sentence_hash_store(spark, path)
+    m = sm.publish_build(
+        path, _SPANHASH_COMPONENTS, {"window": window, "grain": grain},
+        {"n_hashes": n_hashes},
+    )
+    return _open_span_store(spark, path, m)
 
 
 def load_sentence_hash_store(
@@ -1755,9 +1812,19 @@ def load_sentence_hash_store(
     a fresh-checkpoint restart replaying SEVERAL epochs reconstructs
     each epoch's original store view too, because earlier epochs can
     no longer see LATER epochs' folds (ADVICE r12)."""
-    m = sm.read_manifest(path, _SPANHASH_COMPONENTS)
+    return _open_span_store(
+        spark, path, sm.read_manifest(path, _SPANHASH_COMPONENTS),
+        exclude_folds_from,
+    )
+
+
+def _open_span_store(
+    spark, path: str, m: dict, exclude_folds_from: int | None = None
+) -> "SentenceHashStore":
+    """The span-hash store of manifest ``m``; with the params in the
+    manifest, no Spark job."""
     window, grain, n_base = _span_params(spark, path, m)
-    base = spark.read.parquet(f"{path}/{m['hashes']}")
+    base = spark.read.schema(_SPANHASH_SCHEMA).parquet(f"{path}/{m['hashes']}")
     # explicit schema: a stream whose batches so far were ALL cut to
     # empty leaves only empty fold partitions, and schema inference over
     # zero part-files would fail the load
@@ -1809,9 +1876,9 @@ def sentence_hash_store_add(
         f"{path}/{m['folds']}/batch_id={int(batch_id)}"
     )
     # reload=False: the streaming loop discards the return (it reloads
-    # with exclude_folds_from at the NEXT epoch anyway) — skip the
-    # manifest read + params job it would pay per micro-batch
-    return load_sentence_hash_store(spark, path) if reload else None
+    # with exclude_folds_from at the NEXT epoch anyway). A fold publishes
+    # nothing, so the snapshot is still the current manifest
+    return _open_span_store(spark, path, m) if reload else None
 
 
 def sentence_hash_store_compact(
@@ -1848,14 +1915,18 @@ def sentence_hash_store_compact(
         spark, path, m["folds"], schema=_SPANHASH_FOLD_SCHEMA
     )
     if folds is None:
-        return load_sentence_hash_store(spark, path)
+        return _open_span_store(spark, path, m)
     new = sm.new_generation(
         path, m, _SPANHASH_COMPONENTS, ("hashes", "folds", "params")
     )
-    spark.read.parquet(f"{path}/{m['hashes']}").unionByName(
+    spark.read.schema(_SPANHASH_SCHEMA).parquet(
+        f"{path}/{m['hashes']}"
+    ).unionByName(
         sm.folds_before(folds, keep_folds_from).select("__h")
     ).distinct().write.parquet(f"{path}/{new['hashes']}")
-    n_hashes = spark.read.parquet(f"{path}/{new['hashes']}").count()
+    n_hashes = spark.read.schema(_SPANHASH_SCHEMA).parquet(
+        f"{path}/{new['hashes']}"
+    ).count()
     if keep_folds_from is not None:
         kept = folds.where(F.col("batch_id") >= int(keep_folds_from))
         if kept.head(1):
@@ -1869,8 +1940,11 @@ def sentence_hash_store_compact(
         spark, [(window, grain, n_hashes)],
         _SPAN_PARAMS_SCHEMA, f"{path}/{new['params']}",
     )
-    sm.publish(path, m, new, _SPANHASH_COMPONENTS, sweep=sweep)
-    return load_sentence_hash_store(spark, path)
+    m = sm.publish(
+        path, m, new, _SPANHASH_COMPONENTS, sweep=sweep,
+        stats={"n_hashes": n_hashes},
+    )
+    return _open_span_store(spark, path, m)
 
 
 def sentence_hash_store_gc(path: str, *, grace_seconds: float = 900.0) -> dict:
@@ -2459,6 +2533,11 @@ def minhash_dedup_against(
             f"corpus signatures are missing column m{num_hashes - 1} — "
             f"built with fewer hashes than num_hashes={num_hashes}?"
         )
+    if verify == "estimate":
+        return _estimated_matches(
+            nsig, csig, id_col, num_hashes=num_hashes, bands=bands,
+            threshold=threshold,
+        ).dropDuplicates(["new_id", "corpus_id"])
     nband = _band_keys(nsig, id_col, num_hashes=num_hashes, bands=bands)
     cband = _band_keys(csig, id_col, num_hashes=num_hashes, bands=bands)
     candidates = (
@@ -2467,32 +2546,6 @@ def minhash_dedup_against(
         .select("new_id", "corpus_id")
         .dropDuplicates(["new_id", "corpus_id"])
     )
-    if verify == "estimate":
-        # Signature-agreement estimator: mean over i of [m_i(new)==m_i(corpus)].
-        # Joins only the (small) new-side signatures broadcast against the
-        # corpus signatures — the corpus text column is never in any plan.
-        # SQL text, the same trees as the Column-built sum (a left fold
-        # from 0) at a fraction of the plan-build cost.
-        agree = " + ".join(
-            ["0"] + [f"CAST((__n{i} = __c{i}) AS INT)" for i in range(num_hashes)]
-        )
-        idq = quote_ident(id_col)
-        nsel = nsig.selectExpr(
-            f"{idq} AS new_id", *[f"m{i} AS __n{i}" for i in range(num_hashes)]
-        )
-        csel = csig.selectExpr(
-            f"{idq} AS corpus_id",
-            *[f"m{i} AS __c{i}" for i in range(num_hashes)],
-        )
-        return (
-            csel.join(F.broadcast(candidates), on="corpus_id")
-            .join(F.broadcast(nsel), on="new_id")
-            .withColumn(
-                "jaccard", F.expr(f"round(({agree}) / {num_hashes}, 4)")
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select("new_id", "corpus_id", "jaccard")
-        )
     ntexts = new.select(
         F.col(id_col).alias("new_id"), F.col(text_col).alias("__ta")
     )
@@ -2509,6 +2562,58 @@ def minhash_dedup_against(
     )
 
 
+def _estimated_matches(
+    nsig: DataFrame,
+    csig: DataFrame,
+    id_col: str,
+    *,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """``(new_id, corpus_id, jaccard)`` with the signature-agreement
+    estimate ``jaccard >= threshold``, once per band the two signatures
+    share (a pair that shares k bands appears k times).
+
+    The estimate is taken AT the band join: each broadcast new-side band
+    row carries its document's signature (packed as ``array<int>``: every
+    component is below the 2^31-1 modulus), each corpus band row its
+    own. So ``nsig`` has one consumer: the batch's shingle+signature pass
+    runs once. A second consumer (band keys on one side, the estimator's
+    signatures on the other) is two shuffle stages over the batch
+    whenever exchange reuse fails, as it does for a cached batch (AQE
+    plans a cached relation as a query stage of its own per reference).
+    The corpus signatures are scanned once too (the candidate pairs no
+    longer join back to them), and only matches above the threshold
+    reach a shuffle. The broadcast holds ``bands`` rows per batch
+    document, ~300 bytes each at the default 64 hashes: about 4.7 KB per
+    document, against ~0.8 KB for band keys plus signatures broadcast
+    apart. SQL text: the same trees as Column-built expressions at a
+    fraction of the plan-build cost."""
+    idq = quote_ident(id_col)
+    keys = _band_keys_sql(num_hashes=num_hashes, bands=bands)
+    packed = ", ".join(f"CAST(m{i} AS INT)" for i in range(num_hashes))
+    new_bands = nsig.selectExpr(
+        f"{idq} AS new_id", f"array({packed}) AS __n", keys
+    )
+    corpus_bands = csig.selectExpr(
+        f"{idq} AS corpus_id",
+        *[f"m{i}" for i in range(num_hashes)],
+        keys,
+    )
+    agree = " + ".join(
+        ["0"] + [f"CAST((__n[{i}] = m{i}) AS INT)" for i in range(num_hashes)]
+    )
+    return (
+        corpus_bands.join(F.broadcast(new_bands), on="key")
+        .selectExpr(
+            "new_id", "corpus_id",
+            f"round(({agree}) / {num_hashes}, 4) AS jaccard",
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def dedup_new_against_corpus(
     new: DataFrame,
     corpus: DataFrame,
@@ -2517,7 +2622,9 @@ def dedup_new_against_corpus(
     **kwargs,
 ) -> DataFrame:
     """The ingestion filter itself: ``new`` minus anything that
-    near-duplicates the existing corpus."""
+    near-duplicates the existing corpus. The duplicate ids are distinct,
+    so at most one row per batch document, and broadcast: the anti-join
+    does not shuffle the batch."""
     pairs = minhash_dedup_against(new, corpus, id_col, text_col, **kwargs)
     dupes = pairs.select(F.col("new_id").alias(id_col)).distinct()
-    return new.join(dupes, on=id_col, how="left_anti")
+    return new.join(F.broadcast(dupes), on=id_col, how="left_anti")

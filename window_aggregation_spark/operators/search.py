@@ -31,7 +31,7 @@ import re
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from window_aggregation_spark.operators.lm import sorted_fold_sum
@@ -383,8 +383,8 @@ def hybrid_topk_rrf(
 @dataclass(frozen=True)
 class TextIndex:
     """A persisted inverted index: lazy ``postings`` scan plus the two
-    corpus scalars every BM25 score needs. Only the one params row, the
-    one stats row, and (when deletions are pending) the one tombstone
+    corpus scalars every BM25 score needs. Only the manifest (params and
+    stats included) and, when deletions are pending, the one tombstone
     delta row ever reach the driver.
 
     ``n_docs`` / ``sum_dl`` are EFFECTIVE values: raw build/add stats
@@ -416,7 +416,7 @@ def _postings_frame(base: DataFrame, id_col: str, n_buckets: int) -> DataFrame:
     path can never drift from the build path."""
     from window_aggregation_spark.operators.dedup import portable_hash64
 
-    return (
+    postings = (
         base.select(
             id_col,
             F.size("toks").alias("dl"),
@@ -429,11 +429,58 @@ def _postings_frame(base: DataFrame, id_col: str, n_buckets: int) -> DataFrame:
             F.pmod(portable_hash64(F.col("token")), F.lit(n_buckets))
             .cast("int"),
         )
-        .repartition("term_bucket")
+    )
+    return _bucketed(postings, id_col, n_buckets)
+
+
+def _bucketed(postings: DataFrame, id_col: str, n_buckets: int) -> DataFrame:
+    """``postings`` laid out for the ``partitionBy("term_bucket")`` write
+    of a build, add or compact: one file per bucket, sorted by token.
+
+    The repartition names its partition count,
+    ``min(n_buckets, spark.sql.shuffle.partitions)``. Without one, AQE
+    coalesces a small postings shuffle into ONE task, which then writes
+    every bucket file in turn: a 132-doc batch's 64 bucket files took
+    1.17 s that way against 0.88 s from four tasks (medians of 5
+    interleaved warm pairs, 4 vCPUs). A bucket still hashes to one
+    partition, so it is still one file."""
+    spark = postings.sparkSession
+    n = min(n_buckets, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    return (
+        postings.repartition(n, "term_bucket")
         # led by the partition column, the sort is the one the bucketed
         # write needs; a sort without it gets replaced by the writer's
         # own sort on term_bucket alone, losing the token order
         .sortWithinPartitions("term_bucket", "token", id_col)
+    )
+
+
+def _observing_stats(lens: DataFrame, obs: Observation) -> DataFrame:
+    """``(id, dl)`` doclens rows whose write also fills ``obs`` with
+    their ``n_docs`` and ``sum_dl``: the stats come from the write's own
+    job, not a pass of their own."""
+    return lens.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"),
+    )
+
+
+def _schemas(m: dict):
+    """Declared read schemas of the postings and of the doclens and
+    tombstone rows, from the id type the manifest's params record;
+    ``(None, None)`` (inferred) for a store whose manifest predates
+    them."""
+    md = sm.meta(m)
+    if md is None:
+        return None, None
+    idc = (md["params"]["id_col"], md["params"]["id_type"])
+    return (
+        sm.schema([
+            ("token", "string"), idc, ("tf", "long"), ("dl", "integer"),
+            ("term_bucket", "integer"),
+        ]),
+        sm.schema([idc, ("dl", "integer")]),
     )
 
 
@@ -461,7 +508,9 @@ def build_text_index(
       frequency is NOT stored; it aggregates at query time from the
       (already pruned) probed postings, so incremental appends never
       invalidate a global statistic.
-    - ``stats/`` / ``params/`` — one-row parquets (N, Σdl; layout).
+    - ``stats/`` / ``params/`` — one-row parquets (N, Σdl; layout). The
+      same rows, with the id column's type, are in the manifest the
+      build publishes, which is where every later op reads them.
 
     The bucket count bounds skew: a hot term's postings share a
     directory with ~1/n_buckets of the vocabulary, but scoring
@@ -475,26 +524,34 @@ def build_text_index(
         path, mode, _IDX_COMPONENTS,
         "to grow an existing index use text_index_add",
     )
+    spark = df.sparkSession
     base = df.select(id_col, tokens(F.col(text_col)).alias("toks"))
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.coalesce(F.sum(F.size("toks")), F.lit(0)).alias("sum_dl"),
-    )
-    stats.coalesce(1).write.mode(mode).parquet(f"{path}/stats")
     # doclens sidecar: (id, dl) for EVERY doc, including zero-token ones
     # (which have no posting rows) — the exact-stats source for
     # text_index_delete / text_index_compact.
-    base.select(id_col, F.size("toks").alias("dl")).write.mode(mode).parquet(
-        f"{path}/doclens"
-    )
+    obs = Observation()
+    _observing_stats(
+        base.select(id_col, F.size("toks").alias("dl")), obs
+    ).write.mode(mode).parquet(f"{path}/doclens")
+    stats = obs.get
     _postings_frame(base, id_col, n_buckets).write.mode(mode).partitionBy(
         "term_bucket"
     ).parquet(f"{path}/postings")
-    spark = df.sparkSession
+    sm.write_rows(
+        spark, [(stats["n_docs"], stats["sum_dl"])], _STATS_SCHEMA,
+        f"{path}/stats", mode,
+    )
     sm.write_rows(
         spark, [(n_buckets, id_col)], _PARAMS_SCHEMA, f"{path}/params", mode,
     )
-    return load_text_index(spark, path)
+    params = {
+        "n_buckets": n_buckets, "id_col": id_col,
+        "id_type": sm.type_value(df, id_col),
+    }
+    m = sm.publish_build(path, _IDX_COMPONENTS, params, stats)
+    return _open_text_index(
+        spark, path, m, params, stats["n_docs"], stats["sum_dl"]
+    )
 
 
 def text_index_add(
@@ -527,18 +584,18 @@ def text_index_add(
 
     Ids are NOT deduplicated against existing postings (upstream
     ingestion filter's job); re-adding a document double-counts its tf
-    AND its stats row. The manifest flip is atomic on POSIX paths
-    (rename) and on object stores (numbered whole-file generations) —
-    see ``sources/store_manifest.py``.
+    AND its stats row. The flip claims the next numbered manifest with
+    create-if-absent, on every filesystem — see
+    ``sources/store_manifest.py``.
 
     ``sweep`` (default OFF) removes the superseded stats generation
     after the flip; leave it off when readers may hold the index open
     concurrently and GC out of band instead.
 
-    One load per add: the params and raw stats rows are read once at
-    entry, with their written schemas, and the returned index is built
-    from the manifest and stats this add published; no postings
-    directory is listed before the write.
+    One read of the store per add: the params and raw stats come from the
+    manifest, the batch's stats from its doclens write, and the returned
+    index is built from the manifest this add published. An empty batch
+    publishes nothing (its doclens directory is unreferenced garbage).
     """
     m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
     p, n_docs, sum_dl = _index_rows(spark, path, m)
@@ -546,36 +603,35 @@ def text_index_add(
     base = new_docs.select(
         F.col(id_col or id_c).alias(id_c), tokens(F.col(text_col)).alias("toks")
     )
-    batch = base.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.coalesce(F.sum(F.size("toks")), F.lit(0)).alias("sum_dl"),
-    ).first()
-    if int(batch["n_docs"]) == 0:
-        # empty batch: nothing to publish
+    new = sm.new_generation(
+        path, m, _IDX_COMPONENTS, ("doclens", "stats", "postings")
+    )
+    obs = Observation()
+    _observing_stats(
+        base.select(id_c, F.size("toks").alias("dl")), obs
+    ).write.parquet(f"{path}/{new['doclens']}")
+    batch = obs.get
+    if batch["n_docs"] == 0:
         return _open_text_index(spark, path, m, p, n_docs, sum_dl)
     # postings only when the batch has tokens: a zero-row partitionBy
-    # write produces a _SUCCESS-only directory that parquet cannot infer
-    # a schema from, which would brick every later load. A batch of
-    # zero-token docs has no postings — it still counts in N via
-    # doclens/stats below.
-    has_tokens = int(batch["sum_dl"]) > 0
-    keys = ("doclens", "stats") + (("postings",) if has_tokens else ())
-    new = sm.new_generation(path, m, _IDX_COMPONENTS, keys)
-    if has_tokens:
+    # write produces a _SUCCESS-only directory, which an inferred read
+    # cannot load. A batch of zero-token docs has no postings — it still
+    # counts in N via doclens/stats below.
+    if batch["sum_dl"] > 0:
         _postings_frame(base, id_c, n_buckets).write.partitionBy(
             "term_bucket"
         ).parquet(f"{path}/{new['postings']}")
-    base.select(id_c, F.size("toks").alias("dl")).write.parquet(
-        f"{path}/{new['doclens']}"
-    )
-    n_docs += int(batch["n_docs"])
-    sum_dl += int(batch["sum_dl"])
+    else:
+        del new["postings"]
+    n_docs += batch["n_docs"]
+    sum_dl += batch["sum_dl"]
     sm.write_rows(
         spark, [(n_docs, sum_dl)], _STATS_SCHEMA, f"{path}/{new['stats']}"
     )
     m = sm.publish(
         path, m, new, _IDX_COMPONENTS,
         append=("postings", "doclens"), sweep=sweep,
+        stats={"n_docs": n_docs, "sum_dl": sum_dl},
     )
     return _open_text_index(spark, path, m, p, n_docs, sum_dl)
 
@@ -603,7 +659,8 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
     rebuild the index once with this version first."""
     m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
     p, n_raw, sum_raw = _index_rows(spark, path, m)
-    idx = _open_text_index(spark, path, m, p, n_raw, sum_raw)
+    id_c = p["id_col"]
+    _, lens_schema = _schemas(m)
     # only the "sidecar was never written" shapes (missing path /
     # no-schema empty dir, both AnalysisException) mean a pre-deletion
     # store; anything else (FS hiccup, permissions, corrupt file) must
@@ -612,8 +669,10 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
     from pyspark.errors import AnalysisException
 
     try:
-        doclens = sm.read_dirs(spark, path, m["doclens"])
-        n_lens = doclens.count()
+        doclens = sm.read_dirs(spark, path, m["doclens"], schema=lens_schema)
+        # a store whose manifest records its params was built with the
+        # sidecar: only an older one needs the row count
+        n_lens = n_raw if lens_schema is not None else doclens.count()
     except AnalysisException:
         n_lens = -1
     if n_lens != n_raw:
@@ -625,12 +684,14 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
             "deletion needs the per-doc lengths — rebuild the index "
             "with build_text_index(mode='overwrite') to heal"
         )
-    sm.check_id_type(ids, doclens, idx.id_col, "text_index_delete")
+    sm.check_id_type(ids, doclens, id_c, "text_index_delete")
     batch = sm.drop_tombstoned(
-        ids.toDF(idx.id_col).dropDuplicates(), idx.tombstones, idx.id_col
+        ids.toDF(id_c).dropDuplicates(),
+        sm.read_optional(spark, path, m["tombstones"], schema=lens_schema),
+        id_c,
     )
-    matched = doclens.join(F.broadcast(batch), idx.id_col)
-    matched.select(idx.id_col, "dl").write.mode("append").parquet(
+    matched = doclens.join(F.broadcast(batch), id_c)
+    matched.select(id_c, "dl").write.mode("append").parquet(
         f"{path}/{m['tombstones']}"
     )
     # same generation, one more tombstone batch: re-derive the delta only
@@ -638,17 +699,19 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
 
 
 def text_index_compact(spark, path: str, *, sweep: bool = False) -> TextIndex:
-    """Fold pending tombstones into the physical layout: rewrite
-    postings/doclens without the deleted docs, publish subtracted stats,
-    and reset the tombstone set — all as ONE new store generation flipped
-    in with a single atomic manifest replace.
+    """Fold pending tombstones and the directory lists adds left behind
+    into the physical layout: rewrite postings/doclens as one directory
+    each without the deleted docs, publish their stats, and reset the
+    tombstone set — all as ONE new store generation flipped in with a
+    single atomic manifest write.
 
     A loader running concurrently (or a crash at any point before the
     flip) sees the previous generation fully intact; a crash after the
     flip only leaves unreferenced stale directories. Scores are
     unchanged by compaction — the tombstone anti-join already excluded
     these docs — it reclaims space and makes query plans cheaper (no
-    anti-join, fewer posting rows). No-op when nothing is tombstoned.
+    anti-join, fewer posting rows, one scan per query instead of one per
+    add). No-op when nothing is tombstoned and no add is pending.
 
     ``sweep`` (default OFF) deletes the superseded generation dirs right
     after the flip — ONLY safe with no concurrent readers: a reader that
@@ -657,36 +720,45 @@ def text_index_compact(spark, path: str, *, sweep: bool = False) -> TextIndex:
     of band when no readers are active."""
     m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
     p, n_raw, sum_raw = _index_rows(spark, path, m)
-    idx = _open_text_index(spark, path, m, p, n_raw, sum_raw)
-    if idx.tombstones is None:
-        return idx
-    tomb = spark.read.parquet(f"{path}/{m['tombstones']}")
+    id_c, n_buckets = p["id_col"], int(p["n_buckets"])
+    postings_schema, lens_schema = _schemas(m)
+    tomb = sm.read_optional(spark, path, m["tombstones"], schema=lens_schema)
+    if tomb is None and all(
+        len(sm.split_dirs(m[k])) == 1 for k in ("postings", "doclens")
+    ):
+        return _open_text_index(spark, path, m, p, n_raw, sum_raw)
     new = sm.new_generation(
         path, m, _IDX_COMPONENTS,
         ("postings", "doclens", "stats", "tombstones"),
     )
-    (
+    _bucketed(
         sm.drop_tombstoned(
-            sm.read_dirs(spark, path, m["postings"]), tomb, idx.id_col
-        )
-        .repartition("term_bucket")
-        .sortWithinPartitions("term_bucket", "token", idx.id_col)
-        .write.partitionBy("term_bucket")
-        .parquet(f"{path}/{new['postings']}")
-    )
-    sm.drop_tombstoned(
-        sm.read_dirs(spark, path, m["doclens"]), tomb, idx.id_col
+            sm.read_dirs(spark, path, m["postings"], schema=postings_schema),
+            tomb, id_c,
+        ),
+        id_c, n_buckets,
+    ).write.partitionBy("term_bucket").parquet(f"{path}/{new['postings']}")
+    obs = Observation()
+    _observing_stats(
+        sm.drop_tombstoned(
+            sm.read_dirs(spark, path, m["doclens"], schema=lens_schema),
+            tomb, id_c,
+        ),
+        obs,
     ).write.parquet(f"{path}/{new['doclens']}")
-    # effective stats were already tombstone-adjusted at load: publish them
+    stats = obs.get
     sm.write_rows(
-        spark, [(idx.n_docs, idx.sum_dl)], _STATS_SCHEMA,
+        spark, [(stats["n_docs"], stats["sum_dl"])], _STATS_SCHEMA,
         f"{path}/{new['stats']}",
     )
     # tombstones reset by pointing at a not-yet-existing dir (reads as
     # none)
-    m = sm.publish(path, m, new, _IDX_COMPONENTS, sweep=sweep)
-    return _open_text_index(spark, path, m, p, idx.n_docs, idx.sum_dl)
-
+    m = sm.publish(
+        path, m, new, _IDX_COMPONENTS, sweep=sweep, stats=stats
+    )
+    return _open_text_index(
+        spark, path, m, p, stats["n_docs"], stats["sum_dl"]
+    )
 
 
 def text_index_gc(path: str, *, grace_seconds: float = 900.0) -> dict:
@@ -697,19 +769,25 @@ def text_index_gc(path: str, *, grace_seconds: float = 900.0) -> dict:
     return sm.gc_store(path, _IDX_COMPONENTS, grace_seconds=grace_seconds)
 
 def load_text_index(spark, path: str) -> TextIndex:
-    """Open the persisted index at ``path``: the manifest, the params and
-    raw stats rows (read with their written schemas, one job each), the
-    pending tombstones' (count, Σdl) delta, and a lazy scan per postings
-    directory. The mutations build their result from the rows they read
-    at entry and the manifest they published instead of loading again
-    (one load per add, delete or compact)."""
+    """Open the persisted index at ``path``: the manifest (params and raw
+    stats included), the pending tombstones' (count, Σdl) delta, and a
+    lazy scan per postings directory, read with its declared schema. A
+    store whose manifest predates params and stats reads them from their
+    one-row parquets and infers the postings schema. The mutations build
+    their result from the manifest they published instead of loading
+    again (one load per add, delete or compact)."""
     m = sm.read_manifest(path, _IDX_COMPONENTS)
     return _open_text_index(spark, path, m, *_index_rows(spark, path, m))
 
 
 def _index_rows(spark, path: str, m: dict):
-    """``(params row, raw n_docs, raw sum_dl)`` of manifest ``m``: two
-    one-row reads with the schemas the index wrote."""
+    """``(params, raw n_docs, raw sum_dl)`` of manifest ``m``: from the
+    manifest, or, for a store whose manifest predates them, two one-row
+    reads with the schemas the index wrote."""
+    md = sm.meta(m)
+    if md is not None:
+        s = md["stats"]
+        return md["params"], int(s["n_docs"]), int(s["sum_dl"])
     s = (
         spark.read.schema(_STATS_SCHEMA).parquet(f"{path}/{m['stats']}")
         .first()
@@ -723,10 +801,11 @@ def _index_rows(spark, path: str, m: dict):
 def _open_text_index(
     spark, path: str, m: dict, p, n_docs: int, sum_dl: int
 ) -> TextIndex:
-    """The index of manifest ``m`` with params row ``p`` and RAW stats
+    """The index of manifest ``m`` with params ``p`` and RAW stats
     ``n_docs``/``sum_dl``; the pending tombstones are subtracted here."""
+    postings_schema, lens_schema = _schemas(m)
     tombstones = None
-    tomb = sm.read_optional(spark, path, m["tombstones"])
+    tomb = sm.read_optional(spark, path, m["tombstones"], schema=lens_schema)
     if tomb is not None:
         d = tomb.agg(
             F.count(F.lit(1)).alias("n"),
@@ -742,7 +821,9 @@ def _open_text_index(
         id_col=p["id_col"],
         n_docs=n_docs,
         sum_dl=sum_dl,
-        postings=sm.read_dirs(spark, path, m["postings"]),
+        postings=sm.read_dirs(
+            spark, path, m["postings"], schema=postings_schema
+        ),
         tombstones=tombstones,
     )
 

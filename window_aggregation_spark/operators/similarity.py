@@ -728,6 +728,14 @@ _IVF_COMPONENTS = {
 }
 # The codebook parquet, written and read with this schema.
 _CENTROIDS_SCHEMA = "list_id int, centroid array<double>"
+# The lists' read schemas (partition column last, as a read appends it),
+# declared for a store whose manifest records whether it is quantized;
+# the tombstones' type never depended on the input.
+_LISTS_SCHEMA = "id bigint, v array<float>, list_id int"
+_QLISTS_SCHEMA = (
+    "id bigint, v array<float>, qvec array<int>, qscale double, list_id int"
+)
+_TOMB_SCHEMA = "id bigint"
 
 _LONG_ID_TYPES = ("byte", "short", "int", "integer", "bigint", "long")
 
@@ -817,7 +825,10 @@ def build_ivf_index(
         spark, [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
         _CENTROIDS_SCHEMA, f"{path}/centroids", mode,
     )
-    return load_ivf_index(spark, path)
+    m = sm.publish_build(path, _IVF_COMPONENTS, {"quantized": quantize})
+    # the codebook just written, as a load reads it back (doubles
+    # round-trip exactly)
+    return _open_ivf_index(spark, path, m, np.asarray(cents, dtype=np.float64))
 
 
 def ivf_index_add(
@@ -854,10 +865,11 @@ def ivf_index_add(
 
     Ids are NOT deduplicated against the existing lists (that's the
     ingestion filter's job, upstream); appending an id twice yields
-    duplicate candidates. Returns the reloaded index."""
+    duplicate candidates. Returns the index of the published manifest,
+    with the codebook read at entry."""
     _require_long_id(new_vectors, corpus_id, "ivf_index_add")
     m = sm.snapshot(path, _IVF_COMPONENTS, "IVF index")
-    idx = load_ivf_index(spark, path)
+    idx = _open_ivf_index(spark, path, m)
     n_base = new_vectors.select(
         F.col(corpus_id).alias("id"), F.col(vec_col).alias("v")
     )
@@ -872,8 +884,8 @@ def ivf_index_add(
     assigned.write.partitionBy("list_id").parquet(f"{path}/{new['lists']}")
     if not sm.has_data(path, new["lists"]):
         return idx  # empty batch: nothing to publish
-    sm.publish(path, m, new, _IVF_COMPONENTS, append=("lists",))
-    return load_ivf_index(spark, path)
+    m = sm.publish(path, m, new, _IVF_COMPONENTS, append=("lists",))
+    return _open_ivf_index(spark, path, m, idx.centroids)
 
 
 def ivf_index_delete(spark, path: str, ids: DataFrame) -> IVFIndex:
@@ -893,7 +905,7 @@ def ivf_index_delete(spark, path: str, ids: DataFrame) -> IVFIndex:
     ids.toDF("id").dropDuplicates().select(
         F.col("id").cast("long")
     ).write.mode("append").parquet(f"{path}/{m['tombstones']}")
-    return load_ivf_index(spark, path)
+    return _open_ivf_index(spark, path, m)
 
 
 def ivf_index_compact(spark, path: str, *, sweep: bool = False) -> IVFIndex:
@@ -911,15 +923,16 @@ def ivf_index_compact(spark, path: str, *, sweep: bool = False) -> IVFIndex:
     after the flip — only safe with no concurrent readers; default keeps
     it for out-of-band GC."""
     m = sm.snapshot(path, _IVF_COMPONENTS, "IVF index")
-    tomb = sm.read_optional(spark, path, m["tombstones"])
+    tomb = sm.read_optional(spark, path, m["tombstones"], schema=_TOMB_SCHEMA)
     if tomb is None and len(sm.split_dirs(m["lists"])) == 1:
-        return load_ivf_index(spark, path)
+        return _open_ivf_index(spark, path, m)
     new = sm.new_generation(path, m, _IVF_COMPONENTS, ("lists", "tombstones"))
     sm.drop_tombstoned(
-        sm.read_dirs(spark, path, m["lists"]), tomb, "id"
+        sm.read_dirs(spark, path, m["lists"], schema=_lists_schema(m)),
+        tomb, "id",
     ).write.partitionBy("list_id").parquet(f"{path}/{new['lists']}")
-    sm.publish(path, m, new, _IVF_COMPONENTS, sweep=sweep)
-    return load_ivf_index(spark, path)
+    m = sm.publish(path, m, new, _IVF_COMPONENTS, sweep=sweep)
+    return _open_ivf_index(spark, path, m)
 
 
 
@@ -931,20 +944,43 @@ def ivf_index_gc(path: str, *, grace_seconds: float = 900.0) -> dict:
 
 def load_ivf_index(spark, path: str) -> IVFIndex:
     """Load a persisted IVF index. Only ``n_centroids`` rows reach the
-    driver; the inverted lists stay a lazy partition-pruned scan (the
-    ``list_id`` pruning filter pushes below the tombstone anti-join when
-    deletions are pending)."""
-    m = sm.read_manifest(path, _IVF_COMPONENTS)
-    rows = spark.read.schema(_CENTROIDS_SCHEMA).parquet(
-        f"{path}/{m['centroids']}"
-    ).orderBy("list_id").collect()
-    cents = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in rows])
+    driver (the load's one Spark job); the inverted lists stay a lazy
+    partition-pruned scan (the ``list_id`` pruning filter pushes below
+    the tombstone anti-join when deletions are pending)."""
+    return _open_ivf_index(
+        spark, path, sm.read_manifest(path, _IVF_COMPONENTS)
+    )
+
+
+def _lists_schema(m: dict) -> str | None:
+    """The lists' declared read schema, or ``None`` (inferred) for a store
+    whose manifest predates recording whether it is quantized."""
+    md = sm.meta(m)
+    if md is None:
+        return None
+    return _QLISTS_SCHEMA if md["params"]["quantized"] else _LISTS_SCHEMA
+
+
+def _open_ivf_index(
+    spark, path: str, m: dict, centroids: np.ndarray | None = None
+) -> IVFIndex:
+    """The index of manifest ``m``; the codebook is read unless given."""
+    if centroids is None:
+        # sorted on the driver: an orderBy would add a sampling and a
+        # shuffle job to the read of a few rows
+        rows = spark.read.schema(_CENTROIDS_SCHEMA).parquet(
+            f"{path}/{m['centroids']}"
+        ).collect()
+        centroids = np.stack([
+            np.asarray(r["centroid"], dtype=np.float64)
+            for r in sorted(rows, key=lambda r: r["list_id"])
+        ])
     lists = sm.drop_tombstoned(
-        sm.read_dirs(spark, path, m["lists"]),
-        sm.read_optional(spark, path, m["tombstones"]),
+        sm.read_dirs(spark, path, m["lists"], schema=_lists_schema(m)),
+        sm.read_optional(spark, path, m["tombstones"], schema=_TOMB_SCHEMA),
         "id",
     )
-    return IVFIndex(cents, lists)
+    return IVFIndex(centroids, lists)
 
 
 def ivf_topk_index(

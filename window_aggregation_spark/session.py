@@ -105,11 +105,14 @@ def checkpoint(df: DataFrame, *, eager: bool = False) -> DataFrame:
     (``spark.sparkContext.setCheckpointDir``: the pinned rows survive
     executor loss), a ``localCheckpoint`` otherwise (faster, but a lost
     executor fails the query that reads its blocks). ``eager=False``
-    materialises on the first action that reads the frame. The result is
-    registered with the innermost open :func:`scope`, which frees it on
-    exit."""
+    materialises a local checkpoint on the first action that reads the
+    frame. A reliable checkpoint is always eager: its files are written
+    by a job of their own, which computes the frame; a lazy one computes
+    it twice, once in the first action that reads it and again in that
+    write job. The result is registered with the innermost open
+    :func:`scope`, which frees it on exit."""
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        out = df.checkpoint(eager=eager)
+        out = df.checkpoint(eager=True)
     else:
         out = df.localCheckpoint(eager=eager)
     pinned = _SCOPE.get()

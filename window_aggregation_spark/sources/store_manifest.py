@@ -33,12 +33,27 @@ file. It is still read (and a corrupt one still fails loudly: it has no
 older generation to fall back to); the first numbered publish
 supersedes it and removes it.
 
+The manifest also carries the store's params and stats. A builder
+publishes its store's first generation (:func:`publish_build`) with a
+``meta`` record: the params row, the id column's type included, and
+the generation's stats. Every later publish carries the record forward
+and replaces the stats in the same write as the directories they
+describe (``publish(stats=...)``). So a load reads both on the driver,
+from the manifest it reads anyway, and reads every directory with a
+schema declared from them (:func:`schema`): no Spark job learns what
+the store already knows. A store whose manifest has no ``meta`` (one
+written before manifests carried it) keeps reading its params/stats
+parquets and inferring its schemas. Those parquets are still written,
+so a reader without this record still opens a store written now.
+
 Filesystem dispatch: plain paths use driver-side ``os`` calls; any
 ``scheme://`` path resolves through Spark's Hadoop FileSystem layer (the
 same JVM connectors Spark already uses for the parquet data, so s3a/gcs/
-hdfs credentials and semantics come for free). Tests and deployments
-can route a path prefix through another implementation with
-:func:`register_fs_prefix`.
+hdfs credentials and semantics come for free). A ``file:`` URI
+(``file:/x``, ``file:///x``) is its plain path, scheme stripped, so its
+manifest lands beside the parquet Spark writes there. Tests and
+deployments can route a path prefix through another implementation
+with :func:`register_fs_prefix`.
 
 Writer fencing: when two writers race to publish the same generation
 number, exactly one claim wins and the loser raises
@@ -81,18 +96,24 @@ logic beside them:
 
 - :func:`guard_build` — a builder refuses ``mode="append"`` and, on
   ``overwrite``, clears the previous life (:func:`reset_generations`);
+  :func:`publish_build` writes its first manifest, ``meta`` included;
+- :func:`meta` / :func:`schema` / :func:`type_value` — the params and
+  stats a manifest carries, and the declared read schemas built from
+  them;
 - :func:`snapshot` — a mutation checks the path and reads the manifest
   it derives its new generation from;
 - :func:`read_dirs` / :func:`read_optional` — read a component that may
   be a ``;``-joined directory list, or ``None`` when an optional
   component (tombstones, folds, the pair cache) was never written;
-- :func:`drop_tombstoned` / :func:`folds_before` — anti-join pending
-  tombstones; keep only the fold epochs before a given one;
+- :func:`drop_tombstoned` / :func:`folds_before` / :func:`last_fold` —
+  anti-join pending tombstones; keep only the fold epochs before a
+  given one; the highest fold epoch on disk;
 - :func:`check_id_type` — a delete batch's id type must equal the
   store's;
 - :func:`new_generation` / :func:`publish` — stage fresh versioned
   directories, then flip the manifest once, guarded by the snapshot
-  (``expected=``), optionally sweeping what the flip superseded;
+  (``expected=``), with the new generation's stats, optionally
+  sweeping what the flip superseded;
   :func:`has_data` tells an empty staged batch (nothing to publish);
 - :func:`write_rows` — the small params/stats/centroid parquets, written
   with the schema each store declares once and reads them back with.
@@ -111,12 +132,21 @@ import warnings
 from functools import reduce
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
+from pyspark.sql.types import (
+    DataType,
+    StructField,
+    StructType,
+    _parse_datatype_json_value,
+)
 
 _LEGACY_MANIFEST = "MANIFEST"
 _MANIFEST_RE = re.compile(r"^MANIFEST-(\d{20})$")
 _MANIFEST_KEEP = 8  # numbered generations retained for in-flight readers
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+# a local-filesystem URI: ``file:/x`` (Hadoop's ``Path.toString()`` form),
+# ``file:///x`` or ``file://host/x``; the match is what to strip
+_FILE_URI_RE = re.compile(r"^file:(?://[^/]*)?(?=/)", re.IGNORECASE)
+_FOLD_RE = re.compile(r"^batch_id=(-?\d+)$")
 _log = logging.getLogger(__name__)
 
 
@@ -488,7 +518,22 @@ def unregister_fs_prefix(prefix: str) -> None:
     _FS_PREFIXES[:] = [t for t in _FS_PREFIXES if t[0] != prefix]
 
 
+class _LocalURIFS:
+    """A ``file:`` URI store: every call goes to the filesystem of the
+    plain path the URI names, with the scheme stripped from its path
+    argument, so the manifest lands beside the parquet Spark writes."""
+
+    def __init__(self, base):
+        self._base = base
+
+    def __getattr__(self, name):
+        fn = getattr(self._base, name)
+        return lambda p, *args: fn(_FILE_URI_RE.sub("", p), *args)
+
+
 def _fs_for(path: str, what: str = "store"):
+    if _FILE_URI_RE.match(path):
+        return _LocalURIFS(_fs_for(_FILE_URI_RE.sub("", path), what))
     for prefix, fs in _FS_PREFIXES:
         # path-separator boundary: a registered '/mnt/nfs' must not
         # capture the sibling '/mnt/nfs-backup'
@@ -949,13 +994,62 @@ def snapshot(
     return read_manifest(path, components)
 
 
-def read_dirs(spark, path: str, value: str, *, schema: str | None = None):
+META = "meta"
+
+
+def meta(m: dict) -> dict | None:
+    """The ``{"params": {...}, "stats": {...}}`` record manifest ``m``
+    carries: the store's params row and its current generation's stats,
+    which every op reads here, on the driver, with no Spark job. ``None``
+    for a store written before manifests carried them; such a store keeps
+    reading its params/stats parquets and inferring its directories'
+    schemas. The record is JSON text, so every manifest value stays a
+    string (as ``pairs_meta`` is)."""
+    raw = m.get(META)
+    return None if raw is None else json.loads(raw)
+
+
+def _meta_text(params: dict, stats: dict) -> str:
+    return json.dumps({"params": params, "stats": stats}, sort_keys=True)
+
+
+def publish_build(
+    path: str, components: dict[str, str], params: dict, stats=None
+) -> dict:
+    """A builder's one manifest write, after its directories are written:
+    the fresh component names with the params row and the first
+    generation's stats. Returns the manifest."""
+    m = {**components, META: _meta_text(params, stats or {})}
+    write_manifest(path, m)
+    return m
+
+
+def type_value(df, col: str):
+    """Column ``col``'s type as a JSON value, the form ``params`` records
+    an id type in and :func:`schema` reads it back from."""
+    return df.schema[col].dataType.jsonValue()
+
+
+def schema(cols) -> StructType:
+    """A declared read schema from ``(name, type)`` pairs, each type a
+    JSON value as :func:`type_value` records it (``"long"``,
+    ``"string"``, ...). Parsed in Python: no JVM call. Every field is
+    nullable, as an inferred parquet schema is, so a declared read plans
+    exactly like an inferred one."""
+    return StructType([
+        StructField(name, _parse_datatype_json_value(t), True)
+        for name, t in cols
+    ])
+
+
+def read_dirs(spark, path: str, value: str, *, schema=None):
     """Read a component that may reference several directories
     (";"-joined — the atomic-append encoding): a unionByName of per-dir
     parquet reads. Per-dir reads keep partition discovery and filter
     pushdown working independently in each branch; the branch count is
-    bounded by adds since the last compaction. ``schema`` skips inference
-    (an all-empty fold set still loads)."""
+    bounded by adds since the last compaction. ``schema`` (DDL text or a
+    :func:`schema`) skips inference, which is one Spark job per directory
+    on a local master, and loads an all-empty fold set."""
     dirs = split_dirs(value)
     if len(dirs) > 32:
         warnings.warn(
@@ -971,7 +1065,7 @@ def read_dirs(spark, path: str, value: str, *, schema: str | None = None):
     )
 
 
-def read_optional(spark, path: str, value: str, *, schema: str | None = None):
+def read_optional(spark, path: str, value: str, *, schema=None):
     """:func:`read_dirs` over the component's directories that exist, or
     ``None`` when none does: tombstones, folds and the pair cache appear
     only with their first write. Existence goes through the store's
@@ -985,12 +1079,16 @@ def read_optional(spark, path: str, value: str, *, schema: str | None = None):
 
 def drop_tombstoned(df, tombstones, id_col: str):
     """``df`` without the rows whose ``id_col`` is tombstoned (``None``:
-    nothing pending). No broadcast hint: AQE broadcasts small tombstone
-    sets from runtime stats, and a mass deletion stays within the join
-    budget."""
+    nothing pending), in ``df``'s column order (a join on a column name
+    would move it first, and a compaction would write that order). No
+    broadcast hint: AQE broadcasts small tombstone sets from runtime
+    stats, and a mass deletion stays within the join budget."""
     if tombstones is None:
         return df
-    return df.join(tombstones.select(id_col), id_col, "left_anti")
+    out = df.join(tombstones.select(id_col), id_col, "left_anti")
+    # reordered only when the id was not first: a select builds one
+    # py4j Column per name (65 for a signature store)
+    return out if out.columns == df.columns else out.select(df.columns)
 
 
 def folds_before(folds, epoch: int | None):
@@ -1000,6 +1098,23 @@ def folds_before(folds, epoch: int | None):
     if folds is None or epoch is None:
         return folds
     return folds.where(F.col("batch_id") < int(epoch))
+
+
+def last_fold(path: str, value: str) -> int | None:
+    """The highest ``batch_id=N`` fold partition on disk in the
+    component's directories, from a driver-side listing (no Spark job),
+    or ``None`` when there is none."""
+    fs = _fs_for(path)
+    return max(
+        (
+            int(hit.group(1))
+            for d in split_dirs(value)
+            if fs.isdir(f"{path}/{d}")
+            for name in fs.listdir(f"{path}/{d}")
+            if (hit := _FOLD_RE.match(name))
+        ),
+        default=None,
+    )
 
 
 def check_id_type(ids, store, id_col: str, where: str) -> None:
@@ -1059,6 +1174,7 @@ def publish(
     append=(),
     sweep: bool = False,
     drop=(),
+    stats: dict | None = None,
 ) -> dict[str, str]:
     """Flip the manifest from snapshot ``m`` to ``m`` updated by ``new``,
     in one write guarded by ``expected=m``: a writer that flipped in
@@ -1068,6 +1184,8 @@ def publish(
     - ``append``: keys whose new directory joins the component's
       ";"-joined list (an atomic add) instead of replacing it;
     - ``drop``: manifest keys to remove (metadata the flip invalidates);
+    - ``stats``: the new generation's stats, replacing those in the
+      manifest's :func:`meta` (ignored for a store without one);
     - ``sweep``: after the flip, delete the superseded generation dirs of
       every replaced component. Only safe with no concurrent readers;
       the default keeps them for out-of-band GC (:func:`gc_store`).
@@ -1080,6 +1198,8 @@ def publish(
             mapping[k] = join_dirs(split_dirs(m[k]) + [new[k]])
     for k in drop:
         mapping.pop(k, None)
+    if stats is not None and META in mapping:
+        mapping[META] = _meta_text(meta(mapping)["params"], stats)
     write_manifest(path, mapping, expected=m)
     if sweep:
         for k in new:
