@@ -1086,8 +1086,8 @@ def span_fold_probe(
     """Fold-count serve-cost curve (r13 — VERDICT r12 #5): what a
     long-running ingest loop pays per batch as un-compacted fold
     partitions accumulate, and what one compaction buys back. For each
-    fold count: a full serve cycle — fresh load (manifest read + params
-    + fold union) + the incremental span query — timed min-of-2; then
+    fold count: a full serve cycle — fresh load (manifest read + fold
+    union) + the incremental span query — timed min-of-2; then
     the store is compacted and the same serve re-timed. The knee of
     this curve is what ``compact_every`` (streaming/ingest_spans.py)
     exists to stay left of."""

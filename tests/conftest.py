@@ -122,27 +122,3 @@ def property_examples(n: int) -> int:
     SPARK_GRAFT_PROPERTY_SCALE=1 for the original counts."""
     scale = float(os.environ.get("SPARK_GRAFT_PROPERTY_SCALE", "0.5"))
     return max(5, round(n * scale))
-
-
-def strip_manifest_meta(path: str, components: dict | None = None) -> None:
-    """Give the store at ``path`` the layout of one written before
-    manifests carried params and stats: every numbered manifest loses its
-    ``meta`` record (the params parquet never held the id type). With
-    ``components``, a manifest naming only those fresh directories (a
-    build's) goes too: builders then published none."""
-    import json
-    import os
-
-    from window_aggregation_spark.sources import store_manifest as sm
-
-    for name in os.listdir(path):
-        if not sm._MANIFEST_RE.match(name):
-            continue
-        with open(f"{path}/{name}") as f:
-            mapping = json.load(f)
-        del mapping[sm.META]
-        if mapping == components:
-            os.unlink(f"{path}/{name}")
-            continue
-        with open(f"{path}/{name}", "w") as f:
-            f.write(json.dumps(mapping, indent=1, sort_keys=True))

@@ -1095,9 +1095,7 @@ def test_span_hash_store_grains(spark, tmp_path):
     """r12 grain generalization: a token-grain store serves
     token_spans_against identically to the corpus recompute; grain is
     persisted and re-checked (a sentence-grain store raises in the
-    token operator and vice versa — never a silent zero-match); a
-    pre-r12 params parquet without the grain column loads as
-    sentence-grain."""
+    token operator and vice versa — never a silent zero-match)."""
     import pytest as _pytest
 
     corpus = spark.createDataFrame(
@@ -1135,20 +1133,13 @@ def test_span_hash_store_grains(spark, tmp_path):
         dd.token_spans_against(new, sent, "doc_id", window=15)
     with _pytest.raises(ValueError, match="grain"):
         dd.sentence_spans_against(new, tok, "doc_id", window=3)
-    # pre-r12 store: params row without the grain column
-    legacy = str(tmp_path / "legacy")
-    dd.build_sentence_hash_store(corpus, "doc_id", legacy)
-    spark.createDataFrame([(3,)], "window int").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{legacy}/params")
-    assert dd.load_sentence_hash_store(spark, legacy).grain == "sentence"
 
 
 def test_span_join_strategy_resolution_and_equivalence(spark, tmp_path):
     """r13 (VERDICT r12 #3): the span-hash join sizes itself from the
     store — auto broadcasts at/under SPAN_HASH_BROADCAST_MAX and
-    shuffles above; a pre-r13 store (no n_hashes) defers to the
-    planner; forced regimes are value-identical; folds grow the
+    shuffles above; a DataFrame corpus defers to the planner; forced
+    regimes are value-identical; folds grow the
     serving-size bound (overcount-safe); compaction refreshes it."""
     import pytest as _pytest
 
@@ -1164,16 +1155,14 @@ def test_span_join_strategy_resolution_and_equivalence(spark, tmp_path):
     )
     store = dd.build_sentence_hash_store(corpus, "doc_id",
                                          str(tmp_path / "s"))
-    assert store.n_base is not None and store.serving_size() == store.n_base
+    assert store.serving_size() == store.n_base
     # auto at fixture scale resolves to broadcast; above the cap, shuffle
     assert dd._resolve_span_strategy(store, "auto") == "broadcast"
     small_cap = dd.SentenceHashStore(
         store.hashes, window=3, n_base=dd.SPAN_HASH_BROADCAST_MAX + 1
     )
     assert dd._resolve_span_strategy(small_cap, "auto") == "shuffle"
-    # pre-r13 store (no n_hashes) and DataFrame corpora defer to planner
-    legacy = dd.SentenceHashStore(store.hashes, window=3)
-    assert dd._resolve_span_strategy(legacy, "auto") == "planner"
+    # a DataFrame corpus carries no size: the planner decides
     assert dd._resolve_span_strategy(corpus, "auto") == "planner"
     with _pytest.raises(ValueError, match="strategy"):
         dd.sentence_spans_against(new, store, "doc_id",

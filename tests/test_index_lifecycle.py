@@ -168,24 +168,33 @@ def test_ivf_rebuild_resets_tombstones(spark, tmp_path):
 
 
 def test_add_after_compact_and_versioned_stats(spark, tmp_path):
-    """The full lifecycle: build -> delete -> compact -> add. The add's
-    stats rewrite is a fresh versioned dir + manifest flip (never an
-    in-place overwrite), and scoring equals a rebuild on the final
-    corpus."""
+    """The full lifecycle: build -> delete -> compact -> add. Each
+    mutation publishes its stats in the manifest flip that publishes its
+    directories (never an in-place overwrite), and scoring equals a
+    rebuild on the final corpus."""
     docs = _corpus(spark)
     path = str(tmp_path / "ix")
+
+    def stats():
+        return sm.meta(sm.read_manifest(path, {}))["stats"]
+
     build_text_index(docs.where("doc_id <= 'd5'"), path, n_buckets=4)
+    built = stats()
     text_index_delete(spark, path, _ids(spark, "d2"))
+    assert stats() == built  # a delete publishes nothing
     text_index_compact(spark, path)
+    compacted = stats()
     idx = text_index_add(spark, path, docs.where("doc_id > 'd5'"))
     final = docs.where("doc_id <> 'd2'")
     want = build_text_index(final, str(tmp_path / "rb"), n_buckets=4)
     assert (idx.n_docs, idx.sum_dl) == (want.n_docs, want.sum_dl)
     for q in QUERIES:
         assert _scores(idx, q) == _scores(want, q)
-    # the stats component advanced past the compact's generation
-    m = sm.read_manifest(path, {})
-    assert m["stats"].startswith("stats_v")
+    # the stats advanced with each published generation, and the last
+    # ones are the served index's
+    assert built["n_docs"] - 1 == compacted["n_docs"] < stats()["n_docs"]
+    assert stats() == {"n_docs": idx.n_docs, "sum_dl": idx.sum_dl}
+    assert "stats" not in sm.read_manifest(path, {})
 
 
 def test_delete_rejects_pre_doclens_store(spark, tmp_path):
@@ -201,11 +210,10 @@ def test_delete_rejects_pre_doclens_store(spark, tmp_path):
 def test_manifest_roundtrip_and_scheme_guard(tmp_path):
     path = str(tmp_path / "store")
     os.makedirs(path)
-    assert sm.read_manifest(path, {"a": "a"}) == {"a": "a"}  # legacy default
+    with pytest.raises(sm.StoreFormatError, match="no readable numbered"):
+        sm.read_manifest(path, {"a": "a"})
     sm.write_manifest(path, {"a": "a_v3"})
-    assert sm.read_manifest(path, {"a": "a", "b": "b"}) == {
-        "a": "a_v3", "b": "b",
-    }
+    assert sm.read_manifest(path, {"a": "a", "b": "b"}) == {"a": "a_v3"}
     os.makedirs(f"{path}/a_v4")  # crashed, never-published generation
     assert sm.next_version(path, "a", "a_v3") == "a_v5"
     # round 8: scheme:// paths DISPATCH (Hadoop connector / numbered
@@ -353,6 +361,38 @@ def test_sig_delete_equals_filtered_rebuild(spark, tmp_path):
     assert all(2 not in (a, b) for a, b, _ in got)
     # 1~4 survive as a pair (2 was the third member of the cluster)
     assert any((a, b) == (1, 4) for a, b, _ in got)
+
+
+def test_sig_fold_replay_replaces_its_rows(spark, tmp_path):
+    """signature_store_fold writes one overwrite-per-epoch partition with
+    the store's own ngram and hash count: a replayed batch_id replaces
+    that epoch's rows instead of appending to them, and the folded
+    signatures equal those of a store built over the same documents."""
+    docs = _sig_corpus(spark)
+    path = str(tmp_path / "store")
+    dd.build_signature_store(
+        docs.where("doc_id <= 3"), "doc_id", path, num_hashes=32
+    )
+
+    def rows(p, **kw):
+        return sorted(
+            tuple(r) for r in dd.load_signature_store(spark, p, **kw)
+            .sigs.collect()
+        )
+
+    dd.signature_store_fold(docs.where("doc_id = 4"), "doc_id", path,
+                            batch_id=0)
+    # the epoch replays with other survivors: its first rows are gone
+    for _ in range(2):
+        dd.signature_store_fold(docs.where("doc_id = 5"), "doc_id", path,
+                                batch_id=0)
+        assert [r[0] for r in rows(path)] == [1, 2, 3, 5]
+    assert [r[0] for r in rows(path, exclude_folds_from=0)] == [1, 2, 3]
+    want = str(tmp_path / "want")
+    dd.build_signature_store(
+        docs.where("doc_id <> 4"), "doc_id", want, num_hashes=32
+    )
+    assert rows(path) == rows(want)
 
 
 def test_sig_compact_merges_folds_and_drops_tombstones(spark, tmp_path):
@@ -542,8 +582,8 @@ def test_add_is_atomic_under_crash(spark, tmp_path):
     build_text_index(docs.where("doc_id <= 'd4'"), path, n_buckets=4)
     before = load_text_index(spark, path)
     scores_before = {q: _scores(before, q) for q in QUERIES}
-    # simulate the torn add: batch postings+doclens+stats dirs written,
-    # no manifest flip
+    # simulate the torn add: batch postings+doclens dirs written, no
+    # manifest flip (the stats ride in the flip)
     batch = docs.where("doc_id > 'd4'").select(
         "doc_id", _tokens(F.col("text")).alias("toks")
     )
@@ -553,8 +593,6 @@ def test_add_is_atomic_under_crash(spark, tmp_path):
     batch.select("doc_id", F.size("toks").alias("dl")).write.parquet(
         f"{path}/doclens_v1"
     )
-    spark.createDataFrame([(99, 999)], "n_docs bigint, sum_dl bigint")\
-        .write.parquet(f"{path}/stats_v1")
     after_crash = load_text_index(spark, path)
     assert (after_crash.n_docs, after_crash.sum_dl) == (
         before.n_docs, before.sum_dl)
@@ -600,8 +638,9 @@ def test_multiple_adds_then_delete_and_compact(spark, tmp_path):
 
 def test_add_tolerates_empty_and_tokenless_batches(spark, tmp_path):
     """An empty batch is a published no-op; a batch of zero-token docs
-    counts in N (via doclens/stats) but must NOT publish an empty
-    partitioned postings dir (unreadable: _SUCCESS-only, no schema)."""
+    counts in N (via doclens and the manifest's stats) but must NOT
+    publish an empty partitioned postings dir (unreadable: _SUCCESS-only,
+    no schema)."""
     docs = _corpus(spark)
     path = str(tmp_path / "ix")
     build_text_index(docs.where("doc_id <= 'd5'"), path, n_buckets=4)

@@ -7,9 +7,10 @@ HadoopFS, and prove the protocol's safety property: a reader concurrent
 with add/delete/compact always resolves a COMPLETE generation (old or
 new, never a mix), torn manifest writes fall back to the previous
 complete generation, a crash before the flip changes nothing, and of two
-writers racing for one generation exactly one publishes. A store
-written with the older single ``MANIFEST`` file still loads and moves to
-numbered manifests on its first publish.
+writers racing for one generation exactly one publishes. A store in
+an older layout (no manifest, a single ``MANIFEST`` file, or numbered
+manifests without params and stats) is refused by every op, which
+writes nothing.
 """
 
 import json
@@ -18,7 +19,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import strip_manifest_meta
 from window_aggregation_spark.operators import dedup as dd
 from window_aggregation_spark.operators.search import (
     bm25_topk_indexed,
@@ -367,9 +367,7 @@ def test_hadoopfs_manifest_roundtrip_and_fingerprint(spark, hadoop_dir):
     os.makedirs(path)
     sm.write_manifest(path, {"a": "a_v1"})
     assert _numbered(path) == [f"MANIFEST-{1:020d}"]
-    assert sm.read_manifest(path, {"a": "a", "b": "b"}) == {
-        "a": "a_v1", "b": "b",
-    }
+    assert sm.read_manifest(path, {"a": "a", "b": "b"}) == {"a": "a_v1"}
     snap = sm.read_manifest(path, {"a": "a"})
     sm.write_manifest(path, {"a": "a_v2"}, expected=snap)
     with pytest.raises(RuntimeError, match="another"):
@@ -484,23 +482,15 @@ def test_create_new_is_exclusive_on_every_fs(spark, tmp_path):
             assert f.read() == "first"  # the loser changed nothing
 
 
-@pytest.mark.parametrize("legacy", [False, True])
-def test_contended_writers_exactly_one_wins(tmp_path, legacy):
+def test_contended_writers_exactly_one_wins(tmp_path):
     """Two writers race to publish the same generation number: the one
     whose PUT lands first wins; the other raises ManifestConflictError
-    and the winner's published mapping survives byte-for-byte — also
-    when the race is for the first numbered generation of a store that
-    carries only a legacy single ``MANIFEST``."""
+    and the winner's published mapping survives byte-for-byte."""
     root = str(tmp_path / "store")
     os.makedirs(root)
-    if legacy:
-        with open(f"{root}/MANIFEST", "w") as f:
-            json.dump({"a": "a_v1"}, f)
-    else:
-        sm.write_manifest(root, {"a": "a_v1"})
+    sm.write_manifest(root, {"a": "a_v1"})
     sm.write_manifest(root, {"a": "a_winner"})  # writer A publishes
     top = _numbered(root)[-1]
-    assert not os.path.exists(f"{root}/MANIFEST")
     # writer B listed BEFORE A's publish landed, so it claims A's number
     sm.register_fs_prefix(root, _StaleListingFS(top))
     try:
@@ -557,23 +547,6 @@ def test_unreadable_top_manifest_is_never_reclaimed(tmp_path):
         assert f.read() == '{"a": "TRUNC'
     assert _numbered(path)[-1] == f"MANIFEST-{3:020d}"
     assert sm.read_manifest(path, {"a": "a"})["a"] == "a_v3"
-
-
-def test_corrupt_legacy_manifest_fails_loudly(tmp_path):
-    """ADVICE r8: the single-file protocol has no previous generation to
-    fall back to, and superseded legacy-named dirs usually still exist —
-    a corrupt legacy MANIFEST must raise, not silently serve the
-    pre-manifest default directory names (a stale generation)."""
-    path = str(tmp_path / "s")
-    os.makedirs(path)
-    with open(f"{path}/MANIFEST", "w") as f:
-        f.write('{"a": "TRUNC')
-    with pytest.raises(RuntimeError, match="corrupt"):
-        sm.read_manifest(path, {"a": "a"})
-    # ...but an UNGUARDED write must repair the store, not brick on the
-    # same read (write_manifest only reads current state for expected=)
-    sm.write_manifest(path, {"a": "a_v9"})
-    assert sm.read_manifest(path, {"a": "a"})["a"] == "a_v9"
 
 
 # ---------------------------------------------------------------------------
@@ -918,19 +891,40 @@ def test_boto3_adapter_fences_write_manifest_end_to_end(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Stores published with a single MANIFEST file (the format plain paths
-# used before every filesystem published numbered manifests)
+# Stores in an older layout: refused by every op, which writes nothing
 # ---------------------------------------------------------------------------
+
+
+def _remove_manifests(path):
+    """A store written before it had a manifest: directories only."""
+    for name in _numbered(path):
+        os.unlink(f"{path}/{name}")
 
 
 def _rewrite_as_single_manifest(path):
     """Replace the numbered history with one ``MANIFEST`` holding the
     current mapping, written the way the single-file protocol wrote it."""
     mapping = sm.read_manifest(path, {})
-    for name in _numbered(path):
-        os.unlink(f"{path}/{name}")
+    _remove_manifests(path)
     with open(f"{path}/MANIFEST", "w") as f:
         f.write(json.dumps(mapping, indent=1, sort_keys=True))
+
+
+def _strip_meta(path):
+    """Numbered manifests written before they carried params and stats."""
+    for name in _numbered(path):
+        with open(f"{path}/{name}") as f:
+            mapping = json.load(f)
+        del mapping[sm.META]
+        with open(f"{path}/{name}", "w") as f:
+            f.write(json.dumps(mapping, indent=1, sort_keys=True))
+
+
+_OLD_LAYOUTS = {
+    "no_manifest": _remove_manifests,
+    "single_manifest": _rewrite_as_single_manifest,
+    "no_meta": _strip_meta,
+}
 
 
 def _text_store(spark):
@@ -940,16 +934,12 @@ def _text_store(spark):
         build_text_index(docs.where("doc_id <= 'd4'"), path, n_buckets=4)
         text_index_add(spark, path, docs.where("doc_id > 'd4'"))
 
-    def rows(path):
-        idx = load_text_index(spark, path)
-        live = sm.drop_tombstoned(idx.postings, idx.tombstones, "doc_id")
-        return (idx.n_docs, idx.sum_dl), live.collect()
-
-    return (
-        build, rows,
+    return "build_text_index", build, [
+        lambda path: load_text_index(spark, path),
+        lambda path: text_index_add(spark, path, docs),
         lambda path: text_index_delete(spark, path, _ids(spark, "d1")),
         lambda path: text_index_compact(spark, path),
-    )
+    ]
 
 
 def _ivf_store(spark):
@@ -964,22 +954,18 @@ def _ivf_store(spark):
         ],
         "vec_id long, embedding array<float>",
     )
-
-    def build(path):
-        sim.build_ivf_index(vecs.where("vec_id < 24"), path, n_centroids=4)
-        sim.ivf_index_add(spark, path, vecs.where("vec_id >= 24"))
-
-    def rows(path):
-        idx = sim.load_ivf_index(spark, path)
-        return idx.centroids.tolist(), idx.lists.collect()
-
-    return (
-        build, rows,
+    return "build_ivf_index", (
+        lambda path: sim.build_ivf_index(
+            vecs.where("vec_id < 24"), path, n_centroids=4
+        )
+    ), [
+        lambda path: sim.load_ivf_index(spark, path),
+        lambda path: sim.ivf_index_add(spark, path, vecs.where("vec_id >= 24")),
         lambda path: sim.ivf_index_delete(
-            spark, path, spark.createDataFrame([(3,), (25,)], "vec_id long")
+            spark, path, spark.createDataFrame([(3,)], "vec_id long")
         ),
         lambda path: sim.ivf_index_compact(spark, path),
-    )
+    ]
 
 
 def _signature_store(spark):
@@ -988,122 +974,71 @@ def _signature_store(spark):
             (1, "the quick brown fox jumps over the lazy dog near the river"),
             (2, "the quick brown fox jumps over the lazy dog near the creek"),
             (3, "completely different text about spark shuffle partitions"),
-            (4, "another unrelated document mentioning window aggregation"),
         ],
         "doc_id long, text string",
     )
-
-    def delete(path, doc_id):
-        dd.signature_store_delete(
-            spark, path, spark.createDataFrame([(doc_id,)], "doc_id long")
-        )
-
-    def build(path):
-        dd.build_signature_store(docs, "doc_id", path)
-        delete(path, 4)
-        dd.signature_store_compact(spark, path)
-
-    return (
-        build,
-        lambda path: ((), dd.load_signature_store(spark, path).sigs.collect()),
-        lambda path: delete(path, 2),
-        lambda path: dd.signature_store_compact(spark, path),
-    )
-
-
-def _span_hash_store(spark):
-    def batch(doc_id, text):
-        return spark.createDataFrame(
-            [(doc_id, text)], "doc_id long, text string"
-        )
-
-    def build(path):
-        dd.build_sentence_hash_store(
-            batch(1, "Corpus doc opens. And more here. Also this one."),
-            "doc_id", path,
-        )
-        dd.sentence_hash_store_add(
-            batch(2, "Batch one brings words. Three of them. Exactly so."),
-            "doc_id", path, batch_id=1,
-        )
-        dd.sentence_hash_store_compact(spark, path)
-
-    def rows(path):
-        store = dd.load_sentence_hash_store(spark, path)
-        return (store.window, store.grain), store.hashes.distinct().collect()
-
-    return (
-        build, rows,
-        lambda path: dd.sentence_hash_store_add(
-            batch(3, "A later batch arrives. It has news. Fresh news."),
-            "doc_id", path, batch_id=2,
+    return "build_signature_store", (
+        lambda path: dd.build_signature_store(docs, "doc_id", path)
+    ), [
+        lambda path: dd.load_signature_store(spark, path),
+        lambda path: dd.load_pair_cache(spark, path, threshold=0.3),
+        lambda path: dd.signature_store_fold(docs, "doc_id", path, batch_id=0),
+        lambda path: dd.signature_store_delete(
+            spark, path, spark.createDataFrame([(2,)], "doc_id long")
         ),
-        lambda path: dd.sentence_hash_store_compact(spark, path),
-    )
-
-
-@pytest.mark.parametrize(
-    "store",
-    [_text_store, _ivf_store, _signature_store, _span_hash_store],
-    ids=["text", "ivf", "signature", "span_hash"],
-)
-def test_single_manifest_store_loads_mutates_and_moves_to_numbered(
-    spark, tmp_path, store
-):
-    """A store whose current generation is named by one ``MANIFEST``
-    file loads the same rows as its numbered twin, takes a mutation and
-    a compaction, and ends with numbered manifests only."""
-    build, rows, mutate, compact = store(spark)
-    path = str(tmp_path / "store")
-    build(path)
-    assert _numbered(path)  # the build's mutation published a generation
-
-    def snapshot():
-        meta, data = rows(path)
-        return meta, sorted(tuple(r) for r in data)
-
-    before = snapshot()
-    _rewrite_as_single_manifest(path)
-    assert snapshot() == before
-    mutate(path)
-    mutated = snapshot()
-    assert mutated != before
-    compact(path)
-    assert snapshot() == mutated
-    manifests = [n for n in os.listdir(path) if n.startswith("MANIFEST")]
-    assert manifests and manifests == [
-        n for n in manifests if sm._MANIFEST_RE.match(n)
+        lambda path: dd.signature_store_compact(spark, path),
+        lambda path: dd.signature_store_build_pairs(
+            docs, "doc_id", path, threshold=0.3
+        ),
     ]
 
 
+def _span_hash_store(spark):
+    docs = spark.createDataFrame(
+        [(1, "Corpus doc opens. And more here. Also this one.")],
+        "doc_id long, text string",
+    )
+    return "build_sentence_hash_store", (
+        lambda path: dd.build_sentence_hash_store(docs, "doc_id", path)
+    ), [
+        lambda path: dd.load_sentence_hash_store(spark, path),
+        lambda path: dd.sentence_hash_store_add(
+            docs, "doc_id", path, batch_id=0
+        ),
+        lambda path: dd.sentence_hash_store_compact(spark, path),
+    ]
+
+
+def _tree(path):
+    return sorted(
+        (os.path.relpath(os.path.join(root, n), path),
+         os.stat(os.path.join(root, n)).st_mtime_ns)
+        for root, dirs, files in os.walk(path)
+        for n in dirs + files
+    )
+
+
+@pytest.mark.parametrize("layout", list(_OLD_LAYOUTS))
 @pytest.mark.parametrize(
     "store",
     [_text_store, _ivf_store, _signature_store, _span_hash_store],
     ids=["text", "ivf", "signature", "span_hash"],
 )
-def test_store_without_manifest_meta_loads_mutates_and_compacts(
-    spark, tmp_path, store
+def test_old_layout_store_is_refused_and_left_unwritten(
+    spark, tmp_path, store, layout
 ):
-    """A store whose manifests carry no params, stats or id type keeps
-    reading its params parquet and inferring its schemas: it serves the
-    same rows as its twin written with them, after the same mutation and
-    compaction, and its manifests gain no record on the way."""
-    build, rows, mutate, compact = store(spark)
-    old, new = str(tmp_path / "old"), str(tmp_path / "new")
-    build(old)
-    build(new)
-    strip_manifest_meta(old)
-    assert sm.meta(sm.read_manifest(new, {})) is not None
-
-    def snapshot(path):
-        meta, data = rows(path)
-        return meta, sorted(tuple(r) for r in data)
-
-    for step in (lambda path: None, mutate, compact):
-        step(old)
-        step(new)
-        assert snapshot(old) == snapshot(new)
-    assert sm.meta(sm.read_manifest(old, {})) is None
+    """A store without numbered manifests carrying params and stats is
+    refused by its load and by each of its mutations, with one error
+    naming the builder that rebuilds it; none of them writes a file."""
+    builder, build, ops = store(spark)
+    path = str(tmp_path / "store")
+    build(path)
+    _OLD_LAYOUTS[layout](path)
+    before = _tree(path)
+    for op in ops:
+        with pytest.raises(sm.StoreFormatError, match=builder):
+            op(path)
+        assert _tree(path) == before
 
 
 def test_file_uri_and_plain_path_see_one_manifest(spark, tmp_path, monkeypatch):

@@ -7,13 +7,11 @@ op (an extra schema-inference read, a stray ``count()`` or ``first()``)
 fails here, the way exchange counts are pinned in
 ``test_plan_quality.py``. Fixtures are tiny and fixed, so the counts are
 deterministic for the test session's configuration: a local master,
-so file listing never runs as a job. A store written now carries its
-params and stats in its manifest and reads every directory with a
-declared schema, so a load runs no job but the reads of data it
-returns to the driver (the IVF codebook, the text index's tombstone
-delta). A store whose manifest lacks that record (written before it
-existed) reads its params/stats parquets and infers its schemas; its
-counts are pinned too."""
+so file listing never runs as a job. A store carries its params and
+stats in its manifest (no op writes or reads them as parquet) and reads
+every directory with a declared schema, so a load runs no job but the
+reads of data it returns to the driver (the IVF codebook, the text
+index's tombstone delta)."""
 
 import itertools
 import math
@@ -21,7 +19,6 @@ import os
 
 import pytest
 
-from tests.conftest import strip_manifest_meta
 from window_aggregation_spark.operators import dedup as dd
 from window_aggregation_spark.operators import search
 from window_aggregation_spark.operators import similarity as sim
@@ -107,8 +104,8 @@ def test_text_index_op_job_counts(spark, tmp_path):
     # loads read the manifest only; with tombstones pending, the
     # tombstone delta (count, sum of lengths) is the load's one read
     assert got == {
-        "build": 6, "load": 0, "add": 5, "delete": 5,
-        "load_tombstoned": 2, "compact": 6,
+        "build": 4, "load": 0, "add": 4, "delete": 5,
+        "load_tombstoned": 2, "compact": 5,
     }
 
 
@@ -160,13 +157,15 @@ def test_signature_store_op_job_counts(spark, tmp_path):
         "doc_id", path,
     )
     load = _jobs(spark, dd.load_signature_store, spark, path)
-    # a streamed fold partition, written the way the ingest loop does
-    dd.minhash_signatures(docs.where("doc_id > 3"), "doc_id").write.parquet(
-        f"{path}/sigs_folds/batch_id=0"
+    # a streamed fold partition, written as the ingest loop writes it
+    fold = _jobs(
+        spark, dd.signature_store_fold, docs.where("doc_id > 3"), "doc_id",
+        path, batch_id=0,
     )
     got = {
         "build": build,
         "load": load,
+        "fold": fold,
         "load_folded": _jobs(
             spark, dd.load_signature_store, spark, path, exclude_folds_from=1
         ),
@@ -185,7 +184,7 @@ def test_signature_store_op_job_counts(spark, tmp_path):
         "compact": _jobs(spark, dd.signature_store_compact, spark, path),
     }
     assert got == {
-        "build": 3, "load": 0, "load_folded": 0, "build_pairs": 6,
+        "build": 2, "load": 0, "fold": 2, "load_folded": 0, "build_pairs": 6,
         "load_pair_cache": 1, "delete": 2, "load_tombstoned": 0,
         "compact": 3,
     }
@@ -211,78 +210,7 @@ def test_sentence_hash_store_op_job_counts(spark, tmp_path):
         "compact": _jobs(spark, dd.sentence_hash_store_compact, spark, path),
     }
     assert got == {
-        "build": 5, "load": 0, "add": 2, "load_folded": 0, "compact": 5,
-    }
-
-
-def test_text_index_without_manifest_meta_job_counts(spark, tmp_path):
-    """The parquet reads of a store written before its manifest held
-    params and stats: a load reads params and stats (one job each) and
-    infers each postings directory's schema."""
-    docs = _docs(spark)
-    path = str(tmp_path / "ix")
-    search.build_text_index(docs.where("doc_id <= 'd4'"), path, n_buckets=4)
-    strip_manifest_meta(path, search._IDX_COMPONENTS)
-    got = {
-        "load": _jobs(spark, search.load_text_index, spark, path),
-        "add": _jobs(
-            spark, search.text_index_add, spark, path,
-            docs.where("doc_id > 'd4'"),
-        ),
-        "delete": _jobs(
-            spark, search.text_index_delete, spark, path,
-            spark.createDataFrame([("d1",)], "doc_id string"),
-        ),
-        "compact": _jobs(spark, search.text_index_compact, spark, path),
-    }
-    assert sm.meta(sm.read_manifest(path, {})) is None
-    assert got == {"load": 3, "add": 9, "delete": 14, "compact": 14}
-
-
-def test_other_stores_without_manifest_meta_job_counts(spark, tmp_path):
-    """IVF, signature and span-hash stores written before their manifest
-    held params and stats keep the parquet reads: a params row (one job)
-    and an inferred schema per directory."""
-    ivf, sig, span = (str(tmp_path / n) for n in ("ivf", "sig", "span"))
-    sim.build_ivf_index(_vectors(spark, 0, 24), ivf, n_centroids=4)
-    dd.build_signature_store(
-        _sig_docs(spark).where("doc_id <= 3"), "doc_id", sig
-    )
-    dd.build_sentence_hash_store(
-        _span_docs(spark).where("doc_id < 10"), "doc_id", span
-    )
-    for path, components in (
-        (ivf, sim._IVF_COMPONENTS),
-        (sig, dd._SIG_COMPONENTS),
-        (span, dd._SPANHASH_COMPONENTS),
-    ):
-        strip_manifest_meta(path, components)
-    got = {
-        "ivf_load": _jobs(spark, sim.load_ivf_index, spark, ivf),
-        "ivf_add": _jobs(
-            spark, sim.ivf_index_add, spark, ivf, _vectors(spark, 24, 32)
-        ),
-        "ivf_compact": _jobs(spark, sim.ivf_index_compact, spark, ivf),
-        "sig_load": _jobs(spark, dd.load_signature_store, spark, sig),
-        "sig_delete": _jobs(
-            spark, dd.signature_store_delete, spark, sig,
-            spark.createDataFrame([(2,)], "doc_id long"),
-        ),
-        "sig_compact": _jobs(spark, dd.signature_store_compact, spark, sig),
-        "span_load": _jobs(spark, dd.load_sentence_hash_store, spark, span),
-        "span_add": _jobs(
-            spark, dd.sentence_hash_store_add,
-            _span_docs(spark).where("doc_id >= 10"), "doc_id", span,
-            batch_id=0,
-        ),
-        "span_compact": _jobs(
-            spark, dd.sentence_hash_store_compact, spark, span
-        ),
-    }
-    assert got == {
-        "ivf_load": 2, "ivf_add": 5, "ivf_compact": 5,
-        "sig_load": 2, "sig_delete": 7, "sig_compact": 7,
-        "span_load": 1, "span_add": 4, "span_compact": 7,
+        "build": 4, "load": 0, "add": 2, "load_folded": 0, "compact": 4,
     }
 
 
@@ -315,6 +243,6 @@ def test_text_op_job_counts_do_not_depend_on_the_number_of_adds(
     dirs = sm.split_dirs(sm.read_manifest(path, {})["postings"])
     assert len(dirs) == 1
     assert got == {
-        "add": 5, "load": 0, "delete": 5, "load_tombstoned": 2,
-        "compact": 6, "load_compacted": 0,
+        "add": 4, "load": 0, "delete": 5, "load_tombstoned": 2,
+        "compact": 5, "load_compacted": 0,
     }

@@ -1,6 +1,7 @@
 """On-disk layout of the persisted stores: the token order of the text
-index's postings files, and the types of the small rows every store
-writes with ``store_manifest.write_rows``."""
+index's postings files, the types of the rows ``store_manifest.write_rows``
+writes (the IVF codebook, and small rows of other column types), and the
+fixture store cache's key on the store format."""
 
 import math
 import os
@@ -9,7 +10,6 @@ import random
 import pyarrow.parquet as pq
 import pytest
 
-from window_aggregation_spark.operators import dedup as dd
 from window_aggregation_spark.operators import search
 from window_aggregation_spark.operators import similarity as sim
 from window_aggregation_spark.sources import store_manifest as sm
@@ -93,15 +93,20 @@ def _same(a, b) -> bool:
 
 
 _RNG = random.Random(11)
+# small rows of int, string (escapes included), bigint (at its limits)
+# and null values, then the codebook
+_INT_STR = "n_buckets int, id_col string"
+_BIGINTS = "n_docs bigint, sum_dl bigint"
+_SPAN_ROW = "window int, grain string, n_hashes long"
 _STORE_ROWS = [
-    (search._PARAMS_SCHEMA, [(64, "doc_id")]),
-    (search._PARAMS_SCHEMA, [(7, "naïve id ` 'q' \\ \\' \\u0041")]),
-    (search._STATS_SCHEMA, [(2**40 + 3, 2**62 - 1)]),
-    (search._STATS_SCHEMA, [(0, 0)]),
-    (search._STATS_SCHEMA, [(-(2**63), -1)]),
-    (dd._SIG_PARAMS_SCHEMA, [("doc_id", 3, 64)]),
-    (dd._SPAN_PARAMS_SCHEMA, [(3, "sentence", 2**33)]),
-    (dd._SPAN_PARAMS_SCHEMA, [(15, "token", None)]),
+    (_INT_STR, [(64, "doc_id")]),
+    (_INT_STR, [(7, "naïve id ` 'q' \\ \\' \\u0041")]),
+    (_BIGINTS, [(2**40 + 3, 2**62 - 1)]),
+    (_BIGINTS, [(0, 0)]),
+    (_BIGINTS, [(-(2**63), -1)]),
+    ("id_col string, ngram int, num_hashes int", [("doc_id", 3, 64)]),
+    (_SPAN_ROW, [(3, "sentence", 2**33)]),
+    (_SPAN_ROW, [(15, "token", None)]),
     # a default-size codebook (16 lists, 64 dims) over many magnitudes:
     # every double must survive the trip through text bit for bit
     (sim._CENTROIDS_SCHEMA, [
@@ -141,5 +146,49 @@ def test_write_rows_rejects_values_the_schema_cannot_hold(
     """An int overflow, a string or a float in an int column and a short
     row fail the write instead of storing a null or a truncated value."""
     with pytest.raises(Exception, match=r"MALFORMED_RECORD|zip\(\)"):
-        sm.write_rows(spark, rows, search._PARAMS_SCHEMA, str(tmp_path / "p"))
+        sm.write_rows(spark, rows, _INT_STR, str(tmp_path / "p"))
 
+
+
+def test_fixture_cache_of_an_older_layout_is_left_unread(spark, tmp_path):
+    """``suite.fixture_store_path`` keys a cached store on the store
+    format, so a store cached in an older layout under the tag it had
+    before is never opened: ``text_index_for`` builds a fresh index
+    beside it and leaves it as it was."""
+    import hashlib
+    import shutil
+
+    import pyarrow as pa
+
+    from window_aggregation_spark import suite
+
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    pq.write_table(
+        pa.table({"doc_id": [1, 2], "text": ["spark join", "join sort"]}),
+        f"{sf_dir}/documents.parquet",
+    )
+    st = os.stat(f"{sf_dir}/documents.parquet")
+    old_tag = hashlib.md5(
+        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
+    ).hexdigest()[:16]
+    old = f"/tmp/spark_graft_stores/text_index_{old_tag}"
+    new = suite.fixture_store_path(sf_dir, "text_index")
+    try:
+        # an old cache: params parquet, no manifest, and postings that
+        # any read would fail on
+        for d in ("params", "stats", "postings"):
+            os.makedirs(f"{old}/{d}")
+            with open(f"{old}/{d}/part-0.parquet", "w") as f:
+                f.write("not parquet")
+        before = sorted(os.walk(old))
+        assert new != old and not os.path.exists(new)
+        idx = suite.text_index_for(spark, sf_dir)
+        assert (idx.path, idx.n_docs) == (new, 2)
+        assert sm.published(new) and not sm.published(old)
+        assert sorted(os.walk(old)) == before
+        # the next call loads the published store
+        assert suite.text_index_for(spark, sf_dir).n_docs == 2
+    finally:
+        shutil.rmtree(old, ignore_errors=True)
+        shutil.rmtree(new, ignore_errors=True)

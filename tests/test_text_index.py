@@ -13,6 +13,7 @@ from window_aggregation_spark.operators.search import (
     term_bucket,
     text_index_add,
 )
+from window_aggregation_spark.sources import store_manifest as sm
 
 
 def _corpus(spark):
@@ -90,8 +91,8 @@ def test_empty_query_raises(spark, tmp_path):
 
 
 def test_append_mode_rejected(spark, tmp_path):
-    """mode='append' would stack rows into the one-row stats/params
-    files and corrupt loads — growing an index is text_index_add."""
+    """mode='append' would write past the manifest's stats and corrupt
+    loads — growing an index is text_index_add."""
     with pytest.raises(ValueError, match="text_index_add"):
         build_text_index(_corpus(spark), str(tmp_path / "m"), mode="append")
 
@@ -115,18 +116,21 @@ def test_index_add_equals_rebuild(spark, tmp_path):
 def test_declared_schema_plans_like_inferred(spark, tmp_path):
     """A load reads the postings with the schema the manifest's params
     declare: the optimized BM25 plan equals the plan over the same
-    directories read with an inferred schema (a store whose manifest
-    carries no params)."""
+    directories read by ``spark.read.parquet``, which infers it."""
+    import dataclasses
     import re
-
-    from tests.conftest import strip_manifest_meta
+    from functools import reduce
 
     docs = _corpus(spark)
     path = str(tmp_path / "ix")
     build_text_index(docs.where("doc_id <= 'd3'"), path, n_buckets=4)
     declared = text_index_add(spark, path, docs.where("doc_id > 'd3'"))
-    strip_manifest_meta(path)
-    inferred = load_text_index(spark, path)
+    dirs = sm.split_dirs(sm.read_manifest(path, {})["postings"])
+    assert len(dirs) == 2
+    inferred = dataclasses.replace(declared, postings=reduce(
+        lambda a, b: a.unionByName(b),
+        [spark.read.parquet(f"{path}/{d}") for d in dirs],
+    ))
     assert inferred.postings.schema == declared.postings.schema
 
     def plan(idx, q):

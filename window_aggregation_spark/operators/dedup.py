@@ -192,7 +192,7 @@ class SignatureStore:
 
 # Component -> directory names of a freshly built signature store; the
 # manifest protocol (sources/store_manifest.py) versions them on
-# compaction, and pre-manifest stores read as exactly these names.
+# compaction, and its manifest holds the params.
 _SIG_COMPONENTS = {
     "sigs": "sigs",
     "tombstones": "tombstones",
@@ -202,29 +202,13 @@ _SIG_COMPONENTS = {
     # lets the CC family skip LSH + exact-verify entirely
     "pairs": "pairs",
 }
-# The store's one-row params parquet, written and read with this schema.
-_SIG_PARAMS_SCHEMA = "id_col string, ngram int, num_hashes int"
-
-
-def _sig_params(spark, path: str, m: dict):
-    """The params of manifest ``m``: its record, or, for a store whose
-    manifest predates one, the one-row params parquet."""
-    md = sm.meta(m)
-    if md is not None:
-        return md["params"]
-    return (
-        spark.read.schema(_SIG_PARAMS_SCHEMA).parquet(f"{path}/params").first()
-    )
 
 
 def _sig_schemas(m: dict):
     """Declared read schemas of the signatures, the fold partitions and
     the tombstones, from the id type and hash count the manifest's params
-    record; Nones (inferred) for a store whose manifest predates them."""
-    md = sm.meta(m)
-    if md is None:
-        return None, None, None
-    p = md["params"]
+    record."""
+    p = sm.meta(m)["params"]
     idc = (p["id_col"], p["id_type"])
     sigs = [idc] + [(f"m{i}", "long") for i in range(int(p["num_hashes"]))]
     return (
@@ -245,10 +229,9 @@ def build_signature_store(
     mode: str = "overwrite",
 ) -> SignatureStore:
     """Compute minhash signatures once and persist them under ``path``
-    (``sigs/`` parquet + a one-row ``params/`` parquet, whose row, with
-    the id column's type, the build's manifest records too). Returns the
-    store re-read from disk, so downstream plans run against exactly
-    what was persisted."""
+    (``sigs/`` parquet; the params, the id column's type included, in the
+    build's manifest). Returns the store re-read from disk, so downstream
+    plans run against exactly what was persisted."""
     sm.guard_build(
         path, mode, _SIG_COMPONENTS,
         "signatures are grown by the ingest loop's fold (sigs_folds/), "
@@ -259,10 +242,6 @@ def build_signature_store(
         df, id_col, text_col, ngram=ngram, num_hashes=num_hashes
     )
     sigs.write.mode(mode).parquet(f"{path}/sigs")
-    sm.write_rows(
-        spark, [(id_col, ngram, num_hashes)], _SIG_PARAMS_SCHEMA,
-        f"{path}/params", mode,
-    )
     m = sm.publish_build(path, _SIG_COMPONENTS, {
         "id_col": id_col, "id_type": sm.type_value(df, id_col),
         "ngram": ngram, "num_hashes": num_hashes,
@@ -274,7 +253,7 @@ def load_signature_store(
     spark, path: str, *, exclude_folds_from: int | None = None,
 ) -> SignatureStore:
     """Load a persisted signature store; the signatures stay a lazy
-    parquet scan (only the one params row reaches the driver).
+    parquet scan (the params come from the manifest).
 
     Signatures folded back by the streaming ingest loop live under
     ``sigs_folds/batch_id=N`` (one overwrite-able directory per
@@ -304,8 +283,8 @@ def _load_signatures(
     compaction would merge). With the params in the manifest, it runs no
     Spark job."""
     if m is None:
-        m = sm.read_manifest(path, _SIG_COMPONENTS)
-    p = _sig_params(spark, path, m)
+        m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
+    p = sm.meta(m)["params"]
     id_c = p["id_col"]
     sigs_schema, folds_schema, tomb_schema = _sig_schemas(m)
     base = sm.read_dirs(spark, path, m["sigs"], schema=sigs_schema)
@@ -324,8 +303,6 @@ def _load_signatures(
     # its fresh signature.
     tomb = sm.read_optional(spark, path, m["tombstones"], schema=tomb_schema)
     if tomb is not None:
-        if "__upto_batch" not in tomb.columns:  # legacy id-only tombstones
-            tomb = tomb.withColumn("__upto_batch", F.lit(2**62))
         base = sm.drop_tombstoned(base, tomb, id_c)
         if folds is not None:
             folds = folds.alias("f").join(
@@ -343,6 +320,35 @@ def _load_signatures(
     return store, folds is not None or tomb is not None
 
 
+def signature_store_fold(
+    batch: DataFrame,
+    id_col: str,
+    path: str,
+    text_col: str = "text",
+    *,
+    batch_id: int,
+) -> None:
+    """Fold an ADMITTED batch's minhash signatures back into the store,
+    so the next batch dedups against everything accepted since the build
+    — the signature twin of :func:`sentence_hash_store_add`, and the
+    write the streaming ingest loop makes per epoch.
+
+    The signatures take the store's own ``ngram`` and hash count, and
+    its id column's name. ``batch_id`` keys an overwrite-per-epoch fold
+    partition (``sigs_folds/batch_id=N``), resolved through the manifest
+    so it follows compaction generations: a replayed batch REPLACES its
+    own rows instead of appending duplicates. A fold publishes nothing;
+    :func:`load_signature_store` unions it in."""
+    m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
+    p = sm.meta(m)["params"]
+    minhash_signatures(
+        batch, id_col, text_col,
+        ngram=int(p["ngram"]), num_hashes=int(p["num_hashes"]),
+    ).withColumnRenamed(id_col, p["id_col"]).write.mode("overwrite").parquet(
+        f"{path}/{m['folds']}/batch_id={int(batch_id)}"
+    )
+
+
 def signature_store_delete(spark, path: str, ids: DataFrame) -> SignatureStore:
     """Tombstone documents in a persisted :class:`SignatureStore` — the
     dedup twin of ``search.text_index_delete``: when docs leave the
@@ -352,8 +358,8 @@ def signature_store_delete(spark, path: str, ids: DataFrame) -> SignatureStore:
     longer served.
 
     ``ids`` is a one-column DataFrame of document ids (renamed to the
-    store's id column from ``params``; its TYPE must match the store's —
-    a silently coercing join would tombstone nothing). Each tombstone
+    store's id column; its TYPE must match the store's — a silently
+    coercing join would tombstone nothing). Each tombstone
     row records the fold WATERMARK at delete time (max fold epoch on
     disk), so it suppresses the base signatures and folds up to that
     epoch but not a LATER re-ingestion of the same id — deleting,
@@ -366,7 +372,7 @@ def signature_store_delete(spark, path: str, ids: DataFrame) -> SignatureStore:
     :func:`signature_store_compact`. Works on POSIX paths and object
     stores alike (manifest protocol, ``sources/store_manifest.py``)."""
     m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
-    id_c = _sig_params(spark, path, m)["id_col"]
+    id_c = sm.meta(m)["params"]["id_col"]
     sm.check_id_type(
         ids, sm.read_dirs(spark, path, m["sigs"], schema=_sig_schemas(m)[0]),
         id_c, "signature_store_delete",
@@ -516,7 +522,7 @@ def load_pair_cache(
     fingerprint no longer matches the one recorded at build time — see
     :func:`signature_store_build_pairs`). ``None`` means "recompute",
     never "serve something close"."""
-    m = sm.read_manifest(path, _SIG_COMPONENTS)
+    m = sm.snapshot(path, _SIG_COMPONENTS, "signature store")
     raw = m.get("pairs_meta")
     if not raw:
         return None
@@ -1593,34 +1599,29 @@ class SentenceHashStore:
     when the convention changes.
     """
 
-    def __init__(self, hashes: DataFrame, *, window: int,
-                 grain: str = "sentence", n_base: int | None = None,
-                 folds: DataFrame | None = None):
+    def __init__(self, hashes: DataFrame, *, window: int, n_base: int,
+                 grain: str = "sentence", folds: DataFrame | None = None):
         if grain not in _WINDOW_GRAINS:
             raise ValueError(f"unknown grain: {grain!r}")
         self.hashes = hashes
         self.window = window
         self.grain = grain
         # size bookkeeping for the join auto-strategy: n_base is the
-        # DISTINCT base count persisted at build/compact time (None on
-        # pre-r13 stores), folds the un-compacted fold partitions (their
-        # rows are counted lazily, once, only when a strategy decision
-        # asks — a per-micro-batch load pays nothing for it)
+        # DISTINCT base count persisted at build/compact time, folds the
+        # un-compacted fold partitions (their rows are counted lazily,
+        # once, only when a strategy decision asks — a per-micro-batch
+        # load pays nothing for it)
         self.n_base = n_base
         self._folds = folds
         self._n_serving: int | None = None
 
-    def serving_size(self) -> "int | None":
+    def serving_size(self) -> int:
         """UPPER BOUND on the served hash-set size, for strategy
         selection: the persisted base count plus the fold partitions'
         raw row count. Hashes repeated across base/folds are counted
         twice — deliberately the safe direction (an overcount can only
         push a borderline broadcast to shuffle, never broadcast a set
-        bigger than believed). ``None`` when the store predates
-        ``n_hashes`` persistence (r13); ``auto`` then defers to the
-        planner."""
-        if self.n_base is None:
-            return None
+        bigger than believed)."""
         if self._n_serving is None:
             extra = self._folds.count() if self._folds is not None else 0
             self._n_serving = int(self.n_base) + int(extra)
@@ -1636,23 +1637,15 @@ class SentenceHashStore:
             )
 
 
-# Component -> directory names of a span-hash store (manifest
-# protocol versions them on compaction; pre-manifest stores read as
-# exactly these names — same convention as _SIG_COMPONENTS). `params`
-# joined the versioned set in r13: compaction rewrites `n_hashes`
-# (the strategy-selection size), and a half-updated params next to a
-# new hashes generation must be impossible — one manifest flip
-# publishes both.
+# Component -> directory names of a span-hash store (the manifest
+# protocol versions them on compaction — same convention as
+# _SIG_COMPONENTS). The manifest holds the params (window, grain) and
+# the stats (``n_hashes``, the strategy-selection size), so the flip
+# that publishes a compacted hashes generation publishes its count too.
 _SPANHASH_COMPONENTS = {
     "hashes": "span_hashes",
     "folds": "span_hash_folds",
-    "params": "params",
 }
-# The span-hash store's one-row params parquet, written and read with this
-# schema. A declared read gives a column the file lacks as null, so a
-# store written before ``grain`` or ``n_hashes`` existed still loads
-# (:func:`_span_params`).
-_SPAN_PARAMS_SCHEMA = "window int, grain string, n_hashes long"
 
 #: Largest corpus hash set the span-join auto strategy will broadcast
 #: (count of 8-byte hashes; 4M ≈ 32 MB raw, comfortably inside executor
@@ -1683,9 +1676,8 @@ def _resolve_span_strategy(
       :data:`SPAN_HASH_BROADCAST_MAX` hashes, ``shuffle`` above (the
       store knows its size from build/compact-time ``n_hashes`` plus a
       lazy fold count — no extra user action, VERDICT r12 #3);
-    - ``"auto"`` with a DataFrame corpus, or a pre-r13 store that never
-      persisted ``n_hashes``: ``"planner"`` — no hint, Catalyst/AQE
-      decide from their own size estimates (the pre-r13 behavior).
+    - ``"auto"`` with a DataFrame corpus: ``"planner"`` — no hint,
+      Catalyst/AQE decide from their own size estimates.
     """
     if strategy not in ("auto", "broadcast", "shuffle"):
         raise ValueError(
@@ -1694,13 +1686,11 @@ def _resolve_span_strategy(
         )
     if strategy != "auto":
         return strategy
-    if isinstance(corpus, SentenceHashStore):
-        n = corpus.serving_size()
-        if n is not None:
-            return (
-                "broadcast" if n <= SPAN_HASH_BROADCAST_MAX else "shuffle"
-            )
-    return "planner"
+    if not isinstance(corpus, SentenceHashStore):
+        return "planner"
+    if corpus.serving_size() <= SPAN_HASH_BROADCAST_MAX:
+        return "broadcast"
+    return "shuffle"
 
 
 def _hint_span_corpus(corpus_h: DataFrame, resolved: str) -> DataFrame:
@@ -1724,25 +1714,11 @@ _WINDOW_GRAINS = {
 }
 
 
-def _span_params(spark, path: str, m: dict) -> tuple[int, str, int | None]:
-    """``(window, grain, n_hashes)`` from manifest ``m``'s record, or,
-    for a store whose manifest predates one, from the params row.
-    Pre-r12 stores predate the grain column and are sentence-grain;
-    pre-r13 stores predate ``n_hashes`` (None: the auto strategy defers
-    to the planner)."""
+def _span_params(m: dict) -> tuple[int, str, int]:
+    """``(window, grain, n_hashes)`` from manifest ``m``'s record."""
     md = sm.meta(m)
-    if md is not None:
-        p = {**md["params"], **md["stats"]}
-    else:
-        p = (
-            spark.read.schema(_SPAN_PARAMS_SCHEMA)
-            .parquet(f"{path}/{m['params']}").first()
-        )
-    n_hashes = p["n_hashes"]
-    return (
-        int(p["window"]), p["grain"] or "sentence",
-        None if n_hashes is None else int(n_hashes),
-    )
+    p = md["params"]
+    return int(p["window"]), p["grain"], int(md["stats"]["n_hashes"])
 
 
 def build_sentence_hash_store(
@@ -1757,9 +1733,9 @@ def build_sentence_hash_store(
 ) -> "SentenceHashStore":
     """One window+hash pass over the corpus at the chosen ``grain``,
     persisting the DISTINCT window-hash set under ``path``
-    (``span_hashes/`` parquet + a one-row ``params/`` parquet). Returns
-    the store re-read from disk, so downstream plans run against
-    exactly what was persisted."""
+    (``span_hashes/`` parquet; window, grain and the hash count in the
+    build's manifest). Returns the store re-read from disk, so
+    downstream plans run against exactly what was persisted."""
     if grain not in _WINDOW_GRAINS:
         raise ValueError(f"unknown grain: {grain!r}")
     sm.guard_build(
@@ -1780,10 +1756,6 @@ def build_sentence_hash_store(
     n_hashes = spark.read.schema(_SPANHASH_SCHEMA).parquet(
         f"{path}/span_hashes"
     ).count()
-    sm.write_rows(
-        spark, [(window, grain, n_hashes)],
-        _SPAN_PARAMS_SCHEMA, f"{path}/params", mode,
-    )
     m = sm.publish_build(
         path, _SPANHASH_COMPONENTS, {"window": window, "grain": grain},
         {"n_hashes": n_hashes},
@@ -1795,7 +1767,7 @@ def load_sentence_hash_store(
     spark, path: str, *, exclude_folds_from: int | None = None,
 ) -> "SentenceHashStore":
     """Load a persisted span-hash store; the hashes stay a lazy
-    parquet scan (only the one params row reaches the driver). Fold
+    parquet scan (the params come from the manifest). Fold
     partitions written by :func:`sentence_hash_store_add` union in
     here; the base written at build time is never touched after the
     fact (until a compaction flips a new generation). Existence checks
@@ -1813,7 +1785,8 @@ def load_sentence_hash_store(
     each epoch's original store view too, because earlier epochs can
     no longer see LATER epochs' folds (ADVICE r12)."""
     return _open_span_store(
-        spark, path, sm.read_manifest(path, _SPANHASH_COMPONENTS),
+        spark, path,
+        sm.snapshot(path, _SPANHASH_COMPONENTS, "sentence-hash store"),
         exclude_folds_from,
     )
 
@@ -1823,7 +1796,7 @@ def _open_span_store(
 ) -> "SentenceHashStore":
     """The span-hash store of manifest ``m``; with the params in the
     manifest, no Spark job."""
-    window, grain, n_base = _span_params(spark, path, m)
+    window, grain, n_base = _span_params(m)
     base = spark.read.schema(_SPANHASH_SCHEMA).parquet(f"{path}/{m['hashes']}")
     # explicit schema: a stream whose batches so far were ALL cut to
     # empty leaves only empty fold partitions, and schema inference over
@@ -1866,7 +1839,7 @@ def sentence_hash_store_add(
     :func:`sentence_hash_store_compact`."""
     spark = new.sparkSession
     m = sm.snapshot(path, _SPANHASH_COMPONENTS, "sentence-hash store")
-    window, grain, _ = _span_params(spark, path, m)
+    window, grain, _ = _span_params(m)
     hashes = (
         _WINDOW_GRAINS[grain](new, id_col, text_col, window)
         .select("__h")
@@ -1887,10 +1860,9 @@ def sentence_hash_store_compact(
 ) -> "SentenceHashStore":
     """Merge the fold partitions into ONE new distinct base generation
     behind a single atomic manifest flip: serving stops paying the
-    per-call union+distinct over every fold ever folded, and ``params``
-    is re-published with the merged ``n_hashes`` so the join
-    auto-strategy keeps seeing the store's true size. No-op when there
-    are no folds.
+    per-call union+distinct over every fold ever folded, and the same
+    flip publishes the merged ``n_hashes``, so the join auto-strategy
+    keeps seeing the store's true size. No-op when there are no folds.
 
     ``keep_folds_from`` (r13 — the mid-stream compaction contract):
     folds with ``batch_id >=`` it are NOT merged; they are carried into
@@ -1916,9 +1888,7 @@ def sentence_hash_store_compact(
     )
     if folds is None:
         return _open_span_store(spark, path, m)
-    new = sm.new_generation(
-        path, m, _SPANHASH_COMPONENTS, ("hashes", "folds", "params")
-    )
+    new = sm.new_generation(path, m, _SPANHASH_COMPONENTS, ("hashes", "folds"))
     spark.read.schema(_SPANHASH_SCHEMA).parquet(
         f"{path}/{m['hashes']}"
     ).unionByName(
@@ -1935,11 +1905,6 @@ def sentence_hash_store_compact(
             kept.write.partitionBy("batch_id").parquet(
                 f"{path}/{new['folds']}"
             )
-    window, grain, _ = _span_params(spark, path, m)
-    sm.write_rows(
-        spark, [(window, grain, n_hashes)],
-        _SPAN_PARAMS_SCHEMA, f"{path}/{new['params']}",
-    )
     m = sm.publish(
         path, m, new, _SPANHASH_COMPONENTS, sweep=sweep,
         stats={"n_hashes": n_hashes},

@@ -89,11 +89,16 @@ def covariance_cells(
     element-wise sums via posexplode + groupBy, then two broadcast joins
     of d-row mean tables onto the d^2 cells."""
     parts = gram_moments(df, vec_col, dim)
-    # one row per pandas batch from here on — localCheckpoint so the four
+    # one row per pandas batch from here on — pinned EAGERLY so the four
     # consuming branches (total, s_sum, g_sum, d_row) run the BLAS corpus
-    # pass ONCE, not once each (the lm.py lesson: AQE exchange reuse does
-    # not dedupe mapInPandas branches)
-    parts = checkpoint(parts)
+    # pass ONCE, in one job of its own (the lm.py lesson: AQE exchange
+    # reuse does not dedupe mapInPandas branches). A lazy pin is computed
+    # by whichever of the branches' concurrently submitted stages gets
+    # there first, so a failing pass (a dim mismatch) failed up to four
+    # jobs at once and could surface as AQE's
+    # STAGE_MATERIALIZATION_MULTIPLE_FAILURES instead of the worker's
+    # error
+    parts = checkpoint(parts, eager=True)
     total = parts.agg(F.sum("n").alias("n"))
     s_sum = (
         parts.select(F.posexplode("s").alias("i", "v"))

@@ -39,17 +39,13 @@ from window_aggregation_spark.operators.text import TOKEN_RE, tokens
 from window_aggregation_spark.session import checkpoint
 from window_aggregation_spark.sources import store_manifest as sm
 
-# Component -> directory names of a freshly built index (a pre-manifest
-# store reads as exactly this, so old stores load unchanged).
+# Component -> directory names of a freshly built index. Its params and
+# stats (N, sum of lengths) live in the manifest.
 _IDX_COMPONENTS = {
     "postings": "postings",
-    "stats": "stats",
     "doclens": "doclens",
     "tombstones": "tombstones",
 }
-# The index's one-row parquets, written and read with these schemas.
-_PARAMS_SCHEMA = "n_buckets int, id_col string"
-_STATS_SCHEMA = "n_docs bigint, sum_dl bigint"
 
 _IDF_SCALE = 9
 _SCORE_SCALE = 6
@@ -468,13 +464,9 @@ def _observing_stats(lens: DataFrame, obs: Observation) -> DataFrame:
 
 def _schemas(m: dict):
     """Declared read schemas of the postings and of the doclens and
-    tombstone rows, from the id type the manifest's params record;
-    ``(None, None)`` (inferred) for a store whose manifest predates
-    them."""
-    md = sm.meta(m)
-    if md is None:
-        return None, None
-    idc = (md["params"]["id_col"], md["params"]["id_type"])
+    tombstone rows, from the id type the manifest's params record."""
+    p = sm.meta(m)["params"]
+    idc = (p["id_col"], p["id_type"])
     return (
         sm.schema([
             ("token", "string"), idc, ("tf", "long"), ("dl", "integer"),
@@ -508,17 +500,20 @@ def build_text_index(
       frequency is NOT stored; it aggregates at query time from the
       (already pruned) probed postings, so incremental appends never
       invalidate a global statistic.
-    - ``stats/`` / ``params/`` — one-row parquets (N, Σdl; layout). The
-      same rows, with the id column's type, are in the manifest the
-      build publishes, which is where every later op reads them.
+    - ``doclens/`` — ``(id, dl)`` for every document, zero-token ones
+      included: the exact per-doc lengths a delete subtracts.
+
+    The stats (N, Σdl) and params (layout, the id column's type) are in
+    the manifest the build publishes, which is where every later op
+    reads them.
 
     The bucket count bounds skew: a hot term's postings share a
     directory with ~1/n_buckets of the vocabulary, but scoring
     aggregates per (token, doc) — there is no per-bucket reduce to melt.
 
     ``mode`` is restricted to overwrite/error semantics: ``append``
-    would stack extra rows into the one-row stats/params files and
-    silently corrupt loads — growing an index is :func:`text_index_add`.
+    would write past the manifest's stats and silently corrupt loads —
+    growing an index is :func:`text_index_add`.
     """
     sm.guard_build(
         path, mode, _IDX_COMPONENTS,
@@ -537,13 +532,6 @@ def build_text_index(
     _postings_frame(base, id_col, n_buckets).write.mode(mode).partitionBy(
         "term_bucket"
     ).parquet(f"{path}/postings")
-    sm.write_rows(
-        spark, [(stats["n_docs"], stats["sum_dl"])], _STATS_SCHEMA,
-        f"{path}/stats", mode,
-    )
-    sm.write_rows(
-        spark, [(n_buckets, id_col)], _PARAMS_SCHEMA, f"{path}/params", mode,
-    )
     params = {
         "n_buckets": n_buckets, "id_col": id_col,
         "id_type": sm.type_value(df, id_col),
@@ -561,7 +549,6 @@ def text_index_add(
     *,
     text_col: str = "text",
     id_col: str | None = None,
-    sweep: bool = False,
 ) -> TextIndex:
     """Append a document batch to a persisted :class:`TextIndex` without
     a rebuild — the lexical twin of ``ivf_index_add``.
@@ -572,25 +559,21 @@ def text_index_add(
     over the union corpus (pinned in tests) — there is no stale-df decay.
 
     The add is ATOMIC: the batch's postings and doclens are written as
-    FRESH generation directories (never appended into live ones), the
-    summed stats as a new versioned file, and one manifest flip
-    publishes all three. A job dying at ANY point before the flip
-    leaves only unreferenced directories (garbage for
-    :func:`text_index_gc`), never a torn store — concurrent loaders see
-    the pre-add index complete, then the post-add index complete. The
-    postings manifest entry becomes a ";"-joined directory list; loads
-    union the per-directory scans (bucket pruning works per branch) and
-    :func:`text_index_compact` collapses the list back to one directory.
+    FRESH generation directories (never appended into live ones), and
+    one manifest flip publishes both with the summed stats. A job dying
+    at ANY point before the flip leaves only unreferenced directories
+    (garbage for :func:`text_index_gc`), never a torn store — concurrent
+    loaders see the pre-add index complete, then the post-add index
+    complete. The postings manifest entry becomes a ";"-joined directory
+    list; loads union the per-directory scans (bucket pruning works per
+    branch) and :func:`text_index_compact` collapses the list back to
+    one directory.
 
     Ids are NOT deduplicated against existing postings (upstream
     ingestion filter's job); re-adding a document double-counts its tf
-    AND its stats row. The flip claims the next numbered manifest with
+    AND its stats. The flip claims the next numbered manifest with
     create-if-absent, on every filesystem — see
     ``sources/store_manifest.py``.
-
-    ``sweep`` (default OFF) removes the superseded stats generation
-    after the flip; leave it off when readers may hold the index open
-    concurrently and GC out of band instead.
 
     One read of the store per add: the params and raw stats come from the
     manifest, the batch's stats from its doclens write, and the returned
@@ -598,14 +581,12 @@ def text_index_add(
     publishes nothing (its doclens directory is unreferenced garbage).
     """
     m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
-    p, n_docs, sum_dl = _index_rows(spark, path, m)
+    p, n_docs, sum_dl = _index_rows(m)
     id_c, n_buckets = p["id_col"], int(p["n_buckets"])
     base = new_docs.select(
         F.col(id_col or id_c).alias(id_c), tokens(F.col(text_col)).alias("toks")
     )
-    new = sm.new_generation(
-        path, m, _IDX_COMPONENTS, ("doclens", "stats", "postings")
-    )
+    new = sm.new_generation(path, m, _IDX_COMPONENTS, ("doclens", "postings"))
     obs = Observation()
     _observing_stats(
         base.select(id_c, F.size("toks").alias("dl")), obs
@@ -616,7 +597,7 @@ def text_index_add(
     # postings only when the batch has tokens: a zero-row partitionBy
     # write produces a _SUCCESS-only directory, which an inferred read
     # cannot load. A batch of zero-token docs has no postings — it still
-    # counts in N via doclens/stats below.
+    # counts in N via its doclens and the published stats.
     if batch["sum_dl"] > 0:
         _postings_frame(base, id_c, n_buckets).write.partitionBy(
             "term_bucket"
@@ -625,12 +606,8 @@ def text_index_add(
         del new["postings"]
     n_docs += batch["n_docs"]
     sum_dl += batch["sum_dl"]
-    sm.write_rows(
-        spark, [(n_docs, sum_dl)], _STATS_SCHEMA, f"{path}/{new['stats']}"
-    )
     m = sm.publish(
-        path, m, new, _IDX_COMPONENTS,
-        append=("postings", "doclens"), sweep=sweep,
+        path, m, new, _IDX_COMPONENTS, append=("postings", "doclens"),
         stats={"n_docs": n_docs, "sum_dl": sum_dl},
     )
     return _open_text_index(spark, path, m, p, n_docs, sum_dl)
@@ -654,36 +631,27 @@ def text_index_delete(spark, path: str, ids: DataFrame) -> TextIndex:
     double-subtract stats. Query-time cost until compaction: one small
     broadcast anti-join against the tombstone ids.
 
-    Raises on stores built before the doclens sidecar existed (detected
-    by doclens count ≠ raw N): deletion needs the exact per-doc lengths;
-    rebuild the index once with this version first."""
+    Raises when the doclens sidecar is missing: deletion needs the
+    exact per-doc lengths; rebuild the index to heal."""
     m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
-    p, n_raw, sum_raw = _index_rows(spark, path, m)
+    p, n_raw, sum_raw = _index_rows(m)
     id_c = p["id_col"]
     _, lens_schema = _schemas(m)
-    # only the "sidecar was never written" shapes (missing path /
-    # no-schema empty dir, both AnalysisException) mean a pre-deletion
-    # store; anything else (FS hiccup, permissions, corrupt file) must
-    # propagate — misdiagnosing a transient failure as "rebuild the
-    # index" steers users toward a destructive full rebuild
+    # only a missing sidecar directory (AnalysisException) means the
+    # lengths are gone; anything else (FS hiccup, permissions, corrupt
+    # file) must propagate — misdiagnosing a transient failure as
+    # "rebuild the index" steers users toward a destructive full rebuild
     from pyspark.errors import AnalysisException
 
     try:
         doclens = sm.read_dirs(spark, path, m["doclens"], schema=lens_schema)
-        # a store whose manifest records its params was built with the
-        # sidecar: only an older one needs the row count
-        n_lens = n_raw if lens_schema is not None else doclens.count()
-    except AnalysisException:
-        n_lens = -1
-    if n_lens != n_raw:
+    except AnalysisException as e:
         raise ValueError(
-            f"text index at {path!r} has no usable doclens sidecar "
-            f"({n_lens} rows vs {n_raw} raw docs): the "
-            "store predates deletion support (adds are published "
-            "atomically, so a torn add cannot cause this). Exact "
-            "deletion needs the per-doc lengths — rebuild the index "
+            f"text index at {path!r} has no doclens sidecar (adds are "
+            "published atomically, so a torn add cannot cause this). "
+            "Exact deletion needs the per-doc lengths — rebuild the index "
             "with build_text_index(mode='overwrite') to heal"
-        )
+        ) from e
     sm.check_id_type(ids, doclens, id_c, "text_index_delete")
     batch = sm.drop_tombstoned(
         ids.toDF(id_c).dropDuplicates(),
@@ -719,7 +687,7 @@ def text_index_compact(spark, path: str, *, sweep: bool = False) -> TextIndex:
     would find its directories gone mid-job. Default keeps them; GC out
     of band when no readers are active."""
     m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
-    p, n_raw, sum_raw = _index_rows(spark, path, m)
+    p, n_raw, sum_raw = _index_rows(m)
     id_c, n_buckets = p["id_col"], int(p["n_buckets"])
     postings_schema, lens_schema = _schemas(m)
     tomb = sm.read_optional(spark, path, m["tombstones"], schema=lens_schema)
@@ -728,8 +696,7 @@ def text_index_compact(spark, path: str, *, sweep: bool = False) -> TextIndex:
     ):
         return _open_text_index(spark, path, m, p, n_raw, sum_raw)
     new = sm.new_generation(
-        path, m, _IDX_COMPONENTS,
-        ("postings", "doclens", "stats", "tombstones"),
+        path, m, _IDX_COMPONENTS, ("postings", "doclens", "tombstones")
     )
     _bucketed(
         sm.drop_tombstoned(
@@ -747,10 +714,6 @@ def text_index_compact(spark, path: str, *, sweep: bool = False) -> TextIndex:
         obs,
     ).write.parquet(f"{path}/{new['doclens']}")
     stats = obs.get
-    sm.write_rows(
-        spark, [(stats["n_docs"], stats["sum_dl"])], _STATS_SCHEMA,
-        f"{path}/{new['stats']}",
-    )
     # tombstones reset by pointing at a not-yet-existing dir (reads as
     # none)
     m = sm.publish(
@@ -771,31 +734,18 @@ def text_index_gc(path: str, *, grace_seconds: float = 900.0) -> dict:
 def load_text_index(spark, path: str) -> TextIndex:
     """Open the persisted index at ``path``: the manifest (params and raw
     stats included), the pending tombstones' (count, Σdl) delta, and a
-    lazy scan per postings directory, read with its declared schema. A
-    store whose manifest predates params and stats reads them from their
-    one-row parquets and infers the postings schema. The mutations build
-    their result from the manifest they published instead of loading
-    again (one load per add, delete or compact)."""
-    m = sm.read_manifest(path, _IDX_COMPONENTS)
-    return _open_text_index(spark, path, m, *_index_rows(spark, path, m))
+    lazy scan per postings directory, read with its declared schema. The
+    mutations build their result from the manifest they published
+    instead of loading again (one load per add, delete or compact)."""
+    m = sm.snapshot(path, _IDX_COMPONENTS, "text index")
+    return _open_text_index(spark, path, m, *_index_rows(m))
 
 
-def _index_rows(spark, path: str, m: dict):
-    """``(params, raw n_docs, raw sum_dl)`` of manifest ``m``: from the
-    manifest, or, for a store whose manifest predates them, two one-row
-    reads with the schemas the index wrote."""
+def _index_rows(m: dict):
+    """``(params, raw n_docs, raw sum_dl)`` of manifest ``m``."""
     md = sm.meta(m)
-    if md is not None:
-        s = md["stats"]
-        return md["params"], int(s["n_docs"]), int(s["sum_dl"])
-    s = (
-        spark.read.schema(_STATS_SCHEMA).parquet(f"{path}/{m['stats']}")
-        .first()
-    )
-    return (
-        spark.read.schema(_PARAMS_SCHEMA).parquet(f"{path}/params").first(),
-        int(s["n_docs"]), int(s["sum_dl"]),
-    )
+    s = md["stats"]
+    return md["params"], int(s["n_docs"]), int(s["sum_dl"])
 
 
 def _open_text_index(

@@ -719,8 +719,8 @@ class IVFIndex:
         self.lists = lists  # id long, v array<float>, list_id int
 
 
-# Component -> directory names of a freshly built IVF store (pre-manifest
-# stores read as exactly this, so they load unchanged).
+# Component -> directory names of a freshly built IVF store; its params
+# (quantized or not) live in the manifest.
 _IVF_COMPONENTS = {
     "lists": "lists",
     "centroids": "centroids",
@@ -729,8 +729,8 @@ _IVF_COMPONENTS = {
 # The codebook parquet, written and read with this schema.
 _CENTROIDS_SCHEMA = "list_id int, centroid array<double>"
 # The lists' read schemas (partition column last, as a read appends it),
-# declared for a store whose manifest records whether it is quantized;
-# the tombstones' type never depended on the input.
+# picked by whether the manifest records the store as quantized; the
+# tombstones' type never depended on the input.
 _LISTS_SCHEMA = "id bigint, v array<float>, list_id int"
 _QLISTS_SCHEMA = (
     "id bigint, v array<float>, qvec array<int>, qscale double, list_id int"
@@ -948,17 +948,14 @@ def load_ivf_index(spark, path: str) -> IVFIndex:
     partition-pruned scan (the ``list_id`` pruning filter pushes below
     the tombstone anti-join when deletions are pending)."""
     return _open_ivf_index(
-        spark, path, sm.read_manifest(path, _IVF_COMPONENTS)
+        spark, path, sm.snapshot(path, _IVF_COMPONENTS, "IVF index")
     )
 
 
-def _lists_schema(m: dict) -> str | None:
-    """The lists' declared read schema, or ``None`` (inferred) for a store
-    whose manifest predates recording whether it is quantized."""
-    md = sm.meta(m)
-    if md is None:
-        return None
-    return _QLISTS_SCHEMA if md["params"]["quantized"] else _LISTS_SCHEMA
+def _lists_schema(m: dict) -> str:
+    """The lists' declared read schema: quantized or not, as the
+    manifest's params record."""
+    return _QLISTS_SCHEMA if sm.meta(m)["params"]["quantized"] else _LISTS_SCHEMA
 
 
 def _open_ivf_index(

@@ -6,7 +6,7 @@ and span-hash stores) are plain parquet directories. Their lifecycle
 steps (add, delete, compact) rewrite shared state that cannot be
 replaced in place without a window where readers see half a store. The
 fix is the classic one: every mutable component is a VERSIONED directory
-(``stats_v3/``, ``postings_v7/``...), and one tiny manifest names the
+(``doclens_v3/``, ``postings_v7/``...), and one tiny manifest names the
 current version of each. Writers build the new generation fully, then
 publish it with one atomic manifest flip. Readers resolve every
 component through the manifest, so they observe either the old complete
@@ -28,23 +28,22 @@ an object PUT is atomic too: the key shows the complete object or
 nothing. No rename is needed, so the same protocol runs on object
 stores, which have none.
 
-A store written before numbered manifests carries one ``MANIFEST``
-file. It is still read (and a corrupt one still fails loudly: it has no
-older generation to fall back to); the first numbered publish
-supersedes it and removes it.
-
-The manifest also carries the store's params and stats. A builder
-publishes its store's first generation (:func:`publish_build`) with a
-``meta`` record: the params row, the id column's type included, and
+The manifest is also the only home of the store's params and stats. A
+builder publishes its store's first generation (:func:`publish_build`)
+with a ``meta`` record: the params, the id column's type included, and
 the generation's stats. Every later publish carries the record forward
 and replaces the stats in the same write as the directories they
 describe (``publish(stats=...)``). So a load reads both on the driver,
 from the manifest it reads anyway, and reads every directory with a
 schema declared from them (:func:`schema`): no Spark job learns what
-the store already knows. A store whose manifest has no ``meta`` (one
-written before manifests carried it) keeps reading its params/stats
-parquets and inferring its schemas. Those parquets are still written,
-so a reader without this record still opens a store written now.
+the store already knows.
+
+That is the one store format (:data:`STORE_FORMAT`). A path without a
+numbered manifest (a store written before them, with no manifest or a
+single ``MANIFEST`` file) or whose manifest carries no ``meta`` raises
+:class:`StoreFormatError` from :func:`read_manifest` / :func:`meta`,
+before any op writes: every store is a derived index, so the remedy is
+to rebuild it from its corpus with the builder the error names.
 
 Filesystem dispatch: plain paths use driver-side ``os`` calls; any
 ``scheme://`` path resolves through Spark's Hadoop FileSystem layer (the
@@ -100,8 +99,9 @@ logic beside them:
 - :func:`meta` / :func:`schema` / :func:`type_value` — the params and
   stats a manifest carries, and the declared read schemas built from
   them;
-- :func:`snapshot` — a mutation checks the path and reads the manifest
-  it derives its new generation from;
+- :func:`published` — whether a path holds a published store;
+- :func:`snapshot` — every load and mutation checks the path and reads
+  the manifest it starts from, refusing an older format;
 - :func:`read_dirs` / :func:`read_optional` — read a component that may
   be a ``;``-joined directory list, or ``None`` when an optional
   component (tombstones, folds, the pair cache) was never written;
@@ -115,8 +115,9 @@ logic beside them:
   (``expected=``), with the new generation's stats, optionally
   sweeping what the flip superseded;
   :func:`has_data` tells an empty staged batch (nothing to publish);
-- :func:`write_rows` — the small params/stats/centroid parquets, written
-  with the schema each store declares once and reads them back with.
+- :func:`write_rows` — the IVF codebook parquet, the one small file a
+  store still writes beside its manifest, with the schema it is read
+  back with.
 """
 
 from __future__ import annotations
@@ -139,7 +140,10 @@ from pyspark.sql.types import (
     _parse_datatype_json_value,
 )
 
-_LEGACY_MANIFEST = "MANIFEST"
+#: The stores' one on-disk layout: numbered manifests whose ``meta``
+#: record carries the params and stats. Caches of built stores key on it
+#: (``suite.fixture_store_path``), so it changes whenever the layout does.
+STORE_FORMAT = "numbered-manifest+meta/1"
 _MANIFEST_RE = re.compile(r"^MANIFEST-(\d{20})$")
 _MANIFEST_KEEP = 8  # numbered generations retained for in-flight readers
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
@@ -148,6 +152,32 @@ _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 _FILE_URI_RE = re.compile(r"^file:(?://[^/]*)?(?=/)", re.IGNORECASE)
 _FOLD_RE = re.compile(r"^batch_id=(-?\d+)$")
 _log = logging.getLogger(__name__)
+
+
+class StoreFormatError(RuntimeError):
+    """The path holds no store of :data:`STORE_FORMAT`: no numbered
+    manifest, or one without the params and stats record. Rebuild the
+    store from its corpus with the builder the message names."""
+
+
+# the builder of each store, keyed by a component only that store has:
+# the format error names it
+_BUILDERS = {
+    "postings": "search.build_text_index",
+    "lists": "similarity.build_ivf_index",
+    "sigs": "dedup.build_signature_store",
+    "hashes": "dedup.build_sentence_hash_store",
+}
+
+
+def _refuse(what: str, keys) -> StoreFormatError:
+    builder = next((_BUILDERS[k] for k in keys if k in _BUILDERS), "build_*")
+    return StoreFormatError(
+        f"{what}: not a store of the current format (numbered manifests "
+        "carrying the store's params and stats); it was written by an "
+        "older version. A store is a derived index: rebuild it from its "
+        f"corpus with {builder}(..., mode='overwrite')"
+    )
 
 
 class ManifestConflictError(RuntimeError):
@@ -582,10 +612,9 @@ def _numbered_manifests(fs, path: str) -> list[tuple[int, str]]:
 
 def _current_manifest(fs, path: str, listed=None) -> dict | None:
     """Mapping of the highest PARSEABLE generation among ``listed``
-    (default: list ``path`` now), else of the legacy single ``MANIFEST``,
-    else ``None``. An unparseable numbered file (a torn whole-file write)
-    is skipped — the previous complete generation keeps serving, which is
-    the protocol's safety property."""
+    (default: list ``path`` now), else ``None``. An unparseable numbered
+    file (a torn whole-file write) is skipped — the previous complete
+    generation keeps serving, which is the protocol's safety property."""
     if listed is None:
         listed = _numbered_manifests(fs, path)
     for _, name in listed:
@@ -594,48 +623,24 @@ def _current_manifest(fs, path: str, listed=None) -> dict | None:
         # a stale listing entry, a transient object-store read error —
         # and those arrive as OSError on PosixFS but Py4JJavaError on
         # HadoopFS. Skipping to the next-highest parseable generation is
-        # the protocol's safety property on every FS; a store that is
-        # wholly unreadable still fails loudly downstream when its
-        # component directories cannot be scanned.
+        # the protocol's safety property on every FS; a store with no
+        # readable generation at all is refused by read_manifest.
         try:
             return json.loads(fs.read_text(f"{path}/{name}"))
         except Exception:
             continue
-    legacy = f"{path}/{_LEGACY_MANIFEST}"
-    if fs.exists(legacy):
-        # NO broad skip here, deliberately: a legacy store has no older
-        # generation to fall back to, and sweep defaults to
-        # False, so superseded legacy-named dirs usually still exist —
-        # silently serving the pre-manifest defaults would hand readers
-        # a STALE generation instead of failing loudly
-        try:
-            text = fs.read_text(legacy)
-        except Exception as e:
-            raise RuntimeError(
-                f"legacy MANIFEST at {path!r} exists but cannot be read "
-                f"({e}) — refusing to silently serve the pre-manifest "
-                "default directories"
-            ) from e
-        try:
-            return json.loads(text)
-        except ValueError as e:
-            raise RuntimeError(
-                f"legacy MANIFEST at {path!r} is corrupt ({e}) — it has "
-                "no previous generation to fall back to; restore the file "
-                "or rebuild the store"
-            ) from e
     return None
 
 
-def read_manifest(path: str, defaults: dict[str, str]) -> dict[str, str]:
-    """Current component->directory mapping for the store at ``path``.
-    A store written before manifests existed has no manifest file; it
-    reads as ``defaults`` (the legacy fixed directory names)."""
+def read_manifest(path: str, components: dict[str, str]) -> dict[str, str]:
+    """Current manifest of the store at ``path`` whose component
+    directories are ``components``. Raises :class:`StoreFormatError`,
+    naming the store's builder, when ``path`` has no readable numbered
+    manifest: no store, or one written before them."""
     mapping = _current_manifest(_fs_for(path), path)
-    out = dict(defaults)
-    if mapping:
-        out.update(mapping)
-    return out
+    if mapping is None:
+        raise _refuse(f"{path!r} has no readable numbered manifest", components)
+    return mapping
 
 
 def write_manifest(
@@ -645,9 +650,8 @@ def write_manifest(
 ) -> None:
     """Atomically publish a new generation: claim ``MANIFEST-<n+1>``
     with create-if-absent, where ``n`` is the highest listed generation
-    (0 for a new store or one that carries only a legacy ``MANIFEST``),
-    then prune the numbered history down to the keep-window and remove a
-    legacy ``MANIFEST``.
+    (0 for a new store), then prune the numbered history down to the
+    keep-window.
 
     The store writers are SINGLE-WRITER by contract (like every
     log-structured store here: adds, deletes, compactions run from one
@@ -675,11 +679,7 @@ def write_manifest(
     fs = _fs_for(path)
     listed = _numbered_manifests(fs, path)
     if expected is not None:
-        # only the expected-guard needs to READ current state; an
-        # unguarded write must not (a corrupt legacy MANIFEST raises on
-        # read, and overwriting it with a fresh mapping is exactly how
-        # such a store is repaired)
-        current = {**expected, **(_current_manifest(fs, path, listed) or {})}
+        current = _current_manifest(fs, path, listed)
         if current != expected:
             raise ManifestConflictError(
                 f"manifest at {path!r} changed since it was read "
@@ -709,11 +709,6 @@ def write_manifest(
     try:
         for _, name in listed[_MANIFEST_KEEP - 1:]:
             fs.delete(f"{path}/{name}")
-        # a legacy MANIFEST is superseded by any numbered generation
-        # (readers prefer numbered); removing it avoids a stale mapping
-        # resurfacing if the numbered history is ever manually wiped
-        if fs.exists(f"{path}/{_LEGACY_MANIFEST}"):
-            fs.delete(f"{path}/{_LEGACY_MANIFEST}")
     except Exception as exc:
         _log.warning(
             "published %s at %s but could not prune the manifests it "
@@ -727,17 +722,17 @@ def write_manifest(
 
 
 def reset_generations(path: str, components: dict[str, str]) -> None:
-    """Remove every manifest-protocol artifact under ``path`` — manifest
-    files (legacy and numbered), versioned ``{component}_vN`` dirs, and
-    the legacy component dirs themselves — so a from-scratch rebuild over
-    an existing store cannot be shadowed by a stale manifest (pointing at
+    """Remove every manifest-protocol artifact under ``path`` — numbered
+    manifests, versioned ``{component}_vN`` dirs, and the fresh
+    component dirs themselves — so a from-scratch rebuild over an
+    existing store cannot be shadowed by a stale manifest (pointing at
     generation dirs the rebuild never writes) or haunted by stale
     tombstones filtering the fresh data."""
     fs = _fs_for(path)
     if not fs.isdir(path):
         return
     for name in fs.listdir(path):
-        if name == _LEGACY_MANIFEST or _MANIFEST_RE.match(name):
+        if _MANIFEST_RE.match(name):
             fs.delete(f"{path}/{name}")
             continue
         # match on the component DIRECTORY base names (dict values), not
@@ -823,8 +818,8 @@ def join_dirs(dirs: list[str]) -> str:
 
 def next_version(path: str, component: str, current: str) -> str:
     """Next unused versioned directory name for ``component`` (e.g.
-    ``stats`` -> ``stats_v1`` when current is the legacy ``stats``,
-    ``stats_v2`` after that). Scans for existing dirs so a crashed,
+    ``doclens`` -> ``doclens_v1`` when current is the built ``doclens``,
+    ``doclens_v2`` after that). Scans for existing dirs so a crashed,
     never-published generation is skipped rather than overwritten."""
     fs = _fs_for(path)
     n = 0
@@ -892,9 +887,9 @@ def gc_store(
     are active — after a deploy drain, in a maintenance window, from the
     same quiet slot that runs compactions with ``sweep=True``.
 
-    Returns ``{component: [removed dirs]}`` for logging. Idempotent and
-    safe to run on a store with no manifest (nothing is unreferenced
-    then: the legacy names ARE the current generation).
+    Returns ``{component: [removed dirs]}`` for logging. Idempotent; a
+    path with no numbered manifest raises :class:`StoreFormatError`
+    (:func:`read_manifest`), since nothing there is known to be garbage.
 
     ``grace_seconds`` (default 15 min) skips any directory written more
     recently than that: an in-flight add/compact builds its generation
@@ -972,10 +967,10 @@ def guard_build(
     path: str, mode: str, components: dict[str, str], grow: str
 ) -> None:
     """Build guard of every store builder. ``append`` is refused: it would
-    stack rows into the one-row params/stats parquets (an arbitrary row
-    wins at load) and write past the manifest after a compaction; a store
-    grows through its own add/fold path, which ``grow`` names in the
-    error. ``overwrite`` first removes the previous generation's manifest,
+    write past the manifest, whose params and stats describe the build
+    alone, and past its generation after a compaction; a store grows
+    through its own add/fold path, which ``grow`` names in the error.
+    ``overwrite`` first removes the previous generation's manifest,
     tombstones, folds and versioned dirs, or loads would keep resolving
     the old generation or filtering the fresh data."""
     if mode not in ("overwrite", "error", "errorifexists"):
@@ -987,26 +982,38 @@ def guard_build(
 def snapshot(
     path: str, components: dict[str, str], what: str
 ) -> dict[str, str]:
-    """The manifest a mutation derives its new generation from, after
-    checking that ``path`` can carry the manifest protocol. Pass it back
-    to :func:`publish`, whose flip is guarded against it."""
+    """The manifest every store op (load or mutation) starts from, after
+    checking that ``path`` can carry the manifest protocol and holds a
+    store of :data:`STORE_FORMAT`: an older store is refused before the
+    op writes anything. A mutation derives its new generation from it
+    and passes it back to :func:`publish`, whose flip is guarded
+    against it."""
     check_store_path(path, what)
-    return read_manifest(path, components)
+    m = read_manifest(path, components)
+    meta(m)
+    return m
+
+
+def published(path: str) -> bool:
+    """True when ``path`` holds a numbered manifest: a store some builder
+    finished (a crashed build leaves directories and no manifest)."""
+    return bool(_numbered_manifests(_fs_for(path), path))
 
 
 META = "meta"
 
 
-def meta(m: dict) -> dict | None:
+def meta(m: dict) -> dict:
     """The ``{"params": {...}, "stats": {...}}`` record manifest ``m``
-    carries: the store's params row and its current generation's stats,
-    which every op reads here, on the driver, with no Spark job. ``None``
-    for a store written before manifests carried them; such a store keeps
-    reading its params/stats parquets and inferring its directories'
-    schemas. The record is JSON text, so every manifest value stays a
-    string (as ``pairs_meta`` is)."""
+    carries: the store's params and its current generation's stats,
+    which every op reads here, on the driver, with no Spark job. A
+    manifest without one (written before manifests carried it) raises
+    :class:`StoreFormatError`. The record is JSON text, so every manifest
+    value stays a string (as ``pairs_meta`` is)."""
     raw = m.get(META)
-    return None if raw is None else json.loads(raw)
+    if raw is None:
+        raise _refuse("a store manifest without params and stats", m)
+    return json.loads(raw)
 
 
 def _meta_text(params: dict, stats: dict) -> str:
@@ -1017,7 +1024,7 @@ def publish_build(
     path: str, components: dict[str, str], params: dict, stats=None
 ) -> dict:
     """A builder's one manifest write, after its directories are written:
-    the fresh component names with the params row and the first
+    the fresh component names with the params and the first
     generation's stats. Returns the manifest."""
     m = {**components, META: _meta_text(params, stats or {})}
     write_manifest(path, m)
@@ -1141,8 +1148,9 @@ def new_generation(
 def write_rows(
     spark, rows, schema: str, dst: str, mode: str = "errorifexists"
 ) -> None:
-    """Write a few driver-side rows (params, stats, centroids) as one
-    parquet file with the column types of the DDL ``schema``.
+    """Write a few driver-side rows as one parquet file with the column
+    types of the DDL ``schema``: the IVF codebook, the one small file a
+    store writes beside its manifest.
 
     The rows travel as one JSON string literal, parsed by ``from_json``
     into ``array<struct<schema>>`` and ``inline``-d over
@@ -1151,7 +1159,7 @@ def write_rows(
     number column) fails the write (``FAILFAST``) instead of storing a
     null. Doubles round-trip exactly, NaN and ±inf included.
     ``createDataFrame`` pickles the rows into a Python RDD
-    (``parallelize``): one params row took 1.19-1.44 s that way against
+    (``parallelize``): a one-row write took 1.19-1.44 s that way against
     0.23-0.34 s here, and a 256 x 256 codebook 1.40-1.55 s against
     0.63-0.99 s (4 vCPUs); only a codebook far past the default 16 lists
     is slower here (1,024 x 768: 3.9-5.1 s against 1.8-2.0 s), once per
@@ -1185,7 +1193,7 @@ def publish(
       ";"-joined list (an atomic add) instead of replacing it;
     - ``drop``: manifest keys to remove (metadata the flip invalidates);
     - ``stats``: the new generation's stats, replacing those in the
-      manifest's :func:`meta` (ignored for a store without one);
+      manifest's :func:`meta`;
     - ``sweep``: after the flip, delete the superseded generation dirs of
       every replaced component. Only safe with no concurrent readers;
       the default keeps them for out-of-band GC (:func:`gc_store`).
@@ -1198,7 +1206,7 @@ def publish(
             mapping[k] = join_dirs(split_dirs(m[k]) + [new[k]])
     for k in drop:
         mapping.pop(k, None)
-    if stats is not None and META in mapping:
+    if stats is not None:
         mapping[META] = _meta_text(meta(mapping)["params"], stats)
     write_manifest(path, mapping, expected=m)
     if sweep:

@@ -39,15 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from window_aggregation_spark.operators.dedup import (
-    _SIG_COMPONENTS,
     SignatureStore,
     dedup_new_against_corpus,
     load_signature_store,
     minhash_dedup_cc,
-    minhash_signatures,
+    signature_store_fold,
 )
 from window_aggregation_spark.session import checkpoint, scope
-from window_aggregation_spark.sources import store_manifest
 
 
 def ingest_dedup_batch(
@@ -178,22 +176,12 @@ def streaming_ingest_dedup(
             )
             if not fold_signatures:
                 return
-            # overwrite THIS epoch's fold dir: replayed batches replace
-            # their own rows (idempotent), never append duplicates. The
-            # folds dir resolves through the store manifest so the loop
-            # keeps working across signature_store_compact generations
-            # (run compaction only between streaming runs — see its doc)
-            folds = store_manifest.read_manifest(
-                store_path, _SIG_COMPONENTS
-            )["folds"]
-            minhash_signatures(
-                clean,
-                id_col,
-                text_col,
-                ngram=store.ngram,
-                num_hashes=store.num_hashes,
-            ).write.mode("overwrite").parquet(
-                f"{store_path}/{folds}/batch_id={int(epoch_id)}"
+            # overwrites THIS epoch's fold partition: replayed batches
+            # replace their own rows (idempotent). It follows
+            # signature_store_compact generations (run compaction only
+            # between streaming runs — see its doc)
+            signature_store_fold(
+                clean, id_col, store_path, text_col, batch_id=int(epoch_id)
             )
 
     return (

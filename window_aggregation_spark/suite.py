@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from window_aggregation_spark.parser import config_to_plan
 from window_aggregation_spark.plans.sql_gen import cast_types, plan_to_sql
 from window_aggregation_spark.session import checkpoint
+from window_aggregation_spark.sources import store_manifest as sm
 from window_aggregation_spark.sources.io import (
     read_table,
     read_table_spread,
@@ -1110,12 +1111,10 @@ def text_index_for(spark: SparkSession, sf_dir: str):
     """The per-fixture persisted inverted index (same tag-and-cache
     pattern as ``signature_store_for``); bench.py builds it outside the
     timed region to account build cost separately from query cost."""
-    import os
-
     from window_aggregation_spark.operators import search as se
 
     path = fixture_store_path(sf_dir, "text_index")
-    if not os.path.exists(f"{path}/params"):
+    if not sm.published(path):
         docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
         return se.build_text_index(docs, path)
     return se.load_text_index(spark, path)
@@ -1282,7 +1281,10 @@ def fixture_store_path(sf_dir: str, prefix: str, table: str = "documents") -> st
     SOURCE parquet's identity (mtime+size) so a regenerated fixture
     invalidates the cache — pass ``table`` naming the table the artifact
     is actually derived from (an events-derived stage keyed off
-    documents would serve stale data when only events regenerates).
+    documents would serve stale data when only events regenerates). The
+    tag also mixes in the store format (``store_manifest.STORE_FORMAT``),
+    so a cache written in an older layout is never opened: the fixture
+    builds afresh beside it.
     md5, NOT hash(): Python's str hash is per-process randomized — a
     hash() tag would never hit across runs and /tmp would accumulate one
     store per process."""
@@ -1292,7 +1294,7 @@ def fixture_store_path(sf_dir: str, prefix: str, table: str = "documents") -> st
     src = os.path.join(sf_dir, f"{table}.parquet")
     st = os.stat(src)
     tag = hashlib.md5(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
+        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{sm.STORE_FORMAT}".encode()
     ).hexdigest()[:16]
     return f"/tmp/spark_graft_stores/{prefix}_{tag}"
 
@@ -1304,12 +1306,10 @@ def signature_store_for(spark: SparkSession, sf_dir: str):
     loaded on every later call. bench.py calls this outside its timed
     region to record the build cost separately from the steady-state
     query cost — the write-once-artifact accounting."""
-    import os
-
     from window_aggregation_spark.operators import dedup as dd
 
     path = fixture_store_path(sf_dir, "minhash")
-    if not os.path.exists(f"{path}/params"):
+    if not sm.published(path):
         docs = read_table(spark, sf_dir, "documents")
         return dd.build_signature_store(docs, "doc_id", path)
     return dd.load_signature_store(spark, path)
@@ -1356,12 +1356,10 @@ def token_hash_store_for(spark: SparkSession, sf_dir: str):
     store — the verbatim-passage/decontamination twin of
     :func:`sentence_hash_store_for`, built over the same
     EXISTING-corpus slice of the raw documents text."""
-    import os
-
     from window_aggregation_spark.operators import dedup as dd
 
     path = fixture_store_path(sf_dir, "tokhash")
-    if not os.path.exists(f"{path}/params"):
+    if not sm.published(path):
         corpus = read_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         ).where(F.col("doc_id") % 3 != 0)
@@ -1379,12 +1377,10 @@ def sentence_hash_store_for(spark: SparkSession, sf_dir: str):
     the cache), loaded on every later call. bench.py builds it outside
     the timed region — write-once-artifact accounting, same as the
     minhash signature store."""
-    import os
-
     from window_aggregation_spark.operators import dedup as dd
 
     path = fixture_store_path(sf_dir, "spanhash")
-    if not os.path.exists(f"{path}/params"):
+    if not sm.published(path):
         corpus = (
             read_table(spark, sf_dir, "documents")
             .select("doc_id", F.expr(_SPANS_SYNTH_SQL).alias("t2"))
