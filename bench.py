@@ -102,413 +102,6 @@ def frame_scaling_probe(spark, sf_dir: str, k: int = 8) -> dict:
     return out
 
 
-def skew_probe(spark, sf_dir: str, *, chunks: int = 16, copies: int = 4) -> dict:
-    """Hot-key evidence for the salted operators: a synthetic key column
-    where ONE key holds ~90% of a ``copies``x-replicated lineitem (the
-    classic null/default key owning most of a fact table), then plain vs
-    salted running sum and plain vs salted equi-join on the same cached
-    input. The replication exists to push the hot key past a single task's
-    time budget even at local scale — that is the regime the operators are
-    for; below it (small hot keys) the plain plans win and salting is the
-    wrong tool, which sf0.1-at-30%% measurements confirmed. Broadcast is
-    disabled for the join pair: the probe models the 100 TB case where the
-    dimension exceeds the broadcast budget and AQE's skew split (256 MB
-    partition threshold) does not fire even though the hot key serializes
-    a task."""
-    from pyspark.sql import Window
-
-    from window_aggregation_spark.operators.skew import (
-        salted_join,
-        salted_running_agg,
-    )
-    from window_aggregation_spark.sources.io import read_table
-
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_suppkey", "l_extendedprice",
-        "l_quantity",
-    )
-    big = li
-    for i in range(1, copies):
-        big = big.unionByName(
-            li.select(
-                (F.col("l_orderkey") + F.lit(i * 10**8)).alias("l_orderkey"),
-                "l_linenumber",
-                "l_suppkey",
-                (F.col("l_extendedprice") + F.lit(i * 0.01)).alias(
-                    "l_extendedprice"
-                ),
-                "l_quantity",
-            )
-        )
-    hot = big.withColumn(
-        "k",
-        F.when(
-            F.pmod(
-                F.xxhash64("l_orderkey", "l_linenumber", "l_extendedprice"),
-                F.lit(10),
-            )
-            < 9,
-            F.lit(0),
-        ).otherwise(F.col("l_suppkey")),
-    ).cache()
-    n = hot.count()
-    dim = (
-        li.select(F.col("l_suppkey").alias("k"))
-        .distinct()
-        .union(spark.createDataFrame([(0,)], "k long"))
-        .distinct()
-        .withColumn("dim_val", F.col("k") * 2)
-        .cache()
-    )
-    dim.count()
-
-    def best_of(build, reps: int = 3) -> float:
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    w = Window.partitionBy("k").orderBy("l_extendedprice")
-    out: dict = {"rows": n, "hot_share": 0.9, "chunks": chunks}
-    out["plain_running_sum"] = best_of(
-        lambda: hot.withColumn("rs", F.sum("l_quantity").over(w))
-    )
-    out["salted_running_sum"] = best_of(
-        lambda: salted_running_agg(
-            hot, ["k"], "l_extendedprice", "l_quantity",
-            agg="sum", chunks=chunks, alias="rs",
-        )
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out["plain_join"] = best_of(lambda: hot.join(dim, on="k"))
-        out["salted_join"] = best_of(
-            lambda: salted_join(hot, dim, on=["k"], salts=chunks)
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    hot.unpersist()
-    dim.unpersist()
-    out["running_sum_speedup"] = round(
-        out["plain_running_sum"] / max(out["salted_running_sum"], 1e-9), 2
-    )
-    out["join_speedup"] = round(
-        out["plain_join"] / max(out["salted_join"], 1e-9), 2
-    )
-    return out
-
-
-def streaming_probe(spark, sf_dir: str, *, n_files: int = 8) -> dict:
-    """End-to-end Structured Streaming throughput, actually micro-batched:
-    events staged as ``n_files`` parquet files, ``maxFilesPerTrigger=1``
-    (so each file is one micro-batch with its own state commit), through
-    (a) the watermarked tumbling window aggregation and (b) the
-    ``applyInPandasWithState`` per-key EWMA, each to a noop sink with a
-    fresh checkpoint. Reports wall-clock, non-empty micro-batch count,
-    and rows/sec — the batch twins in the headline set prove semantics;
-    this proves the streaming path itself sustains throughput with
-    bounded state across many state commits."""
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from window_aggregation_spark.sources.io import read_table
-    from window_aggregation_spark.streaming.stateful import streaming_ewma
-    from window_aggregation_spark.streaming.window_stream import tumbling_counts
-
-    src = Path(
-        os.environ.get("SPARK_GRAFT_STREAM_SRC", "/tmp/spark_graft_stream_src")
-    )
-    ev = read_table(spark, sf_dir, "events")
-    n_rows = ev.count()
-    data_dir = _ensure_staged_stream(
-        src,
-        f"{n_rows}:{n_files}",
-        lambda d: ev.repartition(n_files).write.mode("overwrite").parquet(
-            str(d)
-        ),
-    )
-    schema = spark.read.parquet(str(data_dir)).schema
-
-    def rows_of(p):
-        try:
-            return p["numInputRows"]
-        except Exception:
-            return getattr(p, "numInputRows", 0) or 0
-
-    def run(build, mode: str, *, warm: bool = False) -> dict:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1 if not warm else n_files)
-            .parquet(str(data_dir))
-            # micros-fixture ts arrives as TIMESTAMP_NTZ, which watermarks
-            # reject; the cast is a no-op on LTZ (session zone is UTC)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-        ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-        t0 = time.perf_counter()
-        q = (
-            build(stream)
-            .writeStream.outputMode(mode)
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        dt = time.perf_counter() - t0
-        batches = sum(1 for p in q.recentProgress if rows_of(p) > 0)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        return {
-            "sec": round(dt, 3),
-            "micro_batches": batches,
-            "rows_per_sec": int(n_rows / dt),
-        }
-
-    # Warm BOTH paths before timing either (one single-trigger pass each):
-    # whichever query starts first in a session otherwise pays JVM/codegen/
-    # Python-worker spin-up inside its measurement — r6 observed the
-    # window/EWMA ratio FLIPPING between warm and cold sessions on
-    # identical code, which is measurement noise, not engine behavior.
-    run(lambda s: tumbling_counts(s, watermark="2 hours"), "update", warm=True)
-    run(streaming_ewma, "append", warm=True)
-    return {
-        "rows": n_rows,
-        "files": n_files,
-        "window_agg": run(
-            lambda s: tumbling_counts(s, watermark="2 hours"), "update"
-        ),
-        "stateful_ewma": run(streaming_ewma, "append"),
-    }
-
-
-def _stamp_mtimes(d: str, order: int, base: float) -> None:
-    """Explicit ascending mtimes for staged stream files: the file
-    stream source orders by modification time, and sub-second write
-    spacing can tie — a scrambled order puts whole slices behind the
-    watermark (the suite staging's lesson, shared here)."""
-    for root, _, files in os.walk(d):
-        for fn in files:
-            fp = os.path.join(root, fn)
-            os.utime(fp, (base + order * 10, base + order * 10))
-
-
-def _ensure_staged_stream(src, stamp: str, writer):
-    """Write-once staging gate shared by the streaming probes: the
-    marker records the staged identity (row count : file count), so a
-    different sf_dir pointed at the same staging path rebuilds instead
-    of streaming stale data; otherwise the staged files are reused.
-    Returns the data directory."""
-    import shutil
-
-    data_dir = src / "events"
-    marker = src / "_BUILT"
-    if not (marker.exists() and marker.read_text() == stamp):
-        if src.exists():
-            shutil.rmtree(src)
-        writer(data_dir)
-        marker.write_text(stamp)
-    return data_dir
-
-
-def stream_state_probe(spark, sf_dir: str, *, n_files: int = 8) -> dict:
-    """State-store telemetry for the stream-stream interval join
-    (VERDICT r8 #7): the claim that the 2 h watermark + 30 min join
-    bound lets Spark EVICT join state rested on the plan; this records
-    the NUMBER. Events staged as ``n_files`` time-RANGED files with
-    ascending mtimes (one micro-batch each, so the watermark advances
-    ~1/n of the fixture span per batch), the inner and LEFT joins run to
-    a noop sink, and each batch's ``stateOperators`` row counts are
-    captured from ``recentProgress``. Eviction proven when rows are
-    removed across batches and the peak state size stays a small
-    fraction of the total input — state plateaus instead of growing
-    with the stream."""
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from window_aggregation_spark.sources.io import read_table
-    from window_aggregation_spark.streaming.interval_join import interval_join
-
-    src = Path(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_STATE_SRC", "/tmp/spark_graft_stream_state"
-        )
-    )
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .select(
-            "event_id", "user_id", "event_type",
-            F.col("ts").cast("timestamp").alias("ts"),
-        )
-        .where(F.col("ts").isNotNull())
-    )
-    n_rows = ev.count()
-
-    def write_slices(data_dir) -> None:
-        # time-ranged quantile slices (approxQuantile rejects
-        # TimestampType: slice on unix_micros) with ascending mtimes
-        evm = ev.withColumn("__us", F.unix_micros(F.col("ts")))
-        cuts = evm.approxQuantile(
-            "__us", [i / n_files for i in range(1, n_files)], 0.001
-        )
-        base = time.time()
-        bounds = [None, *cuts, None]
-        for i in range(n_files):
-            part = evm
-            if bounds[i] is not None:
-                part = part.where(F.col("__us") >= F.lit(int(bounds[i])))
-            if bounds[i + 1] is not None:
-                part = part.where(F.col("__us") < F.lit(int(bounds[i + 1])))
-            d = str(data_dir / f"t{i:02d}")
-            part.drop("__us").coalesce(1).write.mode("overwrite").parquet(d)
-            _stamp_mtimes(d, i, base)
-
-    data_dir = _ensure_staged_stream(src, f"{n_rows}:{n_files}", write_slices)
-    schema = spark.read.option("recursiveFileLookup", "true").parquet(
-        str(data_dir)
-    ).schema
-
-    def run(how: str, *, warm: bool = False) -> dict:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", n_files if warm else 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(str(data_dir))
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-        left = stream.where(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("p_id"), "user_id", "ts"
-        )
-        right = stream.where(F.col("event_type") == "error").select(
-            F.col("event_id").alias("e_id"), "user_id",
-            F.col("ts").alias("ts_r"),
-        )
-        joined = interval_join(
-            left, right, ["user_id"], "ts", "ts_r",
-            upper="30 minutes", watermark="2 hours", how=how,
-        )
-        ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        t0 = time.perf_counter()
-        try:
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        dt = time.perf_counter() - t0
-        batches = []
-        for p in q.recentProgress:
-            j = json.loads(p.json)
-            ops = j.get("stateOperators") or []
-            tot = sum(op.get("numRowsTotal", 0) for op in ops)
-            rem = sum(op.get("numRowsRemoved", 0) for op in ops)
-            batches.append(
-                {
-                    "input": j.get("numInputRows", 0),
-                    "state_rows": tot,
-                    "removed": rem,
-                }
-            )
-        shutil.rmtree(ckpt, ignore_errors=True)
-        peak = max((b["state_rows"] for b in batches), default=0)
-        final = batches[-1]["state_rows"] if batches else 0
-        removed = sum(b["removed"] for b in batches)
-        return {
-            "sec": round(dt, 3),
-            "batches": batches,
-            "peak_state_rows": peak,
-            "final_state_rows": final,
-            "rows_removed_total": removed,
-            "input_rows": n_rows,
-            "peak_state_fraction": round(peak / max(n_rows, 1), 4),
-            "state_evicts": bool(removed > 0 and final <= peak),
-        }
-
-    # warm once before timing (streaming_probe's r6 lesson: whichever
-    # query starts first otherwise pays JVM/state-store spin-up inside
-    # its measurement, and the inner-vs-left comparison would carry it)
-    run("inner", warm=True)
-    return {"rows": n_rows, "files": n_files,
-            "inner": run("inner"), "left": run("left")}
-
-
-def layout_probe(spark, sf_dir: str, *, n_files: int = 16) -> dict:
-    """File-skipping evidence for the layout writers: events written once
-    range-clustered on ts and once z-ordered on (ts, user_id), then a
-    second-dimension slice query (ALL of ts × the lowest 10% of users) is
-    tested against every file's parquet footer min/max. The single-key
-    layout cannot prune that query (every file spans the full user
-    domain); the z-order layout skips most files — the fraction recorded
-    here is the read amplification a 100 TB scan would actually see."""
-    import glob
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from window_aggregation_spark.sources.io import (
-        read_table,
-        write_clustered_parquet,
-        write_zordered_parquet,
-    )
-
-    events = read_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id"
-    )
-    lo, hi = events.agg(F.min("user_id"), F.max("user_id")).first()
-    u_cut = lo + (hi - lo) // 10
-    base = tempfile.mkdtemp(prefix="spark_graft_layout_")
-    out: dict = {"files": n_files, "user_slice": 0.1}
-    try:
-        for label, write in (
-            ("clustered_ts", lambda p: write_clustered_parquet(
-                events, p, ["ts"], num_files=n_files)),
-            ("zorder_ts_user", lambda p: write_zordered_parquet(
-                events, p, ["ts", "user_id"], num_files=n_files)),
-        ):
-            path = f"{base}/{label}"
-            t0 = time.perf_counter()
-            write(path)
-            wsec = round(time.perf_counter() - t0, 3)
-            hit = total = 0
-            for f in glob.glob(f"{path}/*.parquet"):
-                md = pq.read_metadata(f)
-                idx = next(
-                    i for i in range(md.num_columns)
-                    if md.row_group(0).column(i).path_in_schema == "user_id"
-                )
-                fmin = min(
-                    md.row_group(rg).column(idx).statistics.min
-                    for rg in range(md.num_row_groups)
-                )
-                total += 1
-                hit += fmin <= u_cut
-            out[label] = {
-                "write_sec": wsec,
-                "files_read": hit,
-                "files_total": total,
-                "read_fraction": round(hit / max(total, 1), 3),
-            }
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
-
-
 # tables the headline queries actually scan; the rest are symlinked 1x
 _SCALED_TABLES = ("lineitem", "events", "documents", "embeddings")
 
@@ -657,69 +250,6 @@ def sf1_section(
     out["text_index_build_sec"] = tix_build
     out["sentence_hash_store_build_sec"] = spanhash_build
     out["dedup_pair_counts"] = dedup_pair_counts(spark, out_dir)
-    return out
-
-
-def graph_skew_probe(
-    spark, *, n_nodes: int = 20_000, n_edges: int = 120_000,
-    hot_share: float = 0.10,
-) -> dict:
-    """Measure (not argue) triangle_count's degree-orientation bound on a
-    skewed graph: one hot node carries ``hot_share`` of all edges — the
-    naive wedge enumeration would pivot ~(hot_share*m)^2/2 wedges at that
-    node; orientation must cap every out-degree near sqrt(2m) regardless.
-    Records max raw degree vs max ORIENTED out-degree and total oriented
-    wedges for a uniform and a skewed graph of identical size, plus wall
-    clock for the full count (VERDICT r6 next-round #6)."""
-    from window_aggregation_spark.operators.graph import (
-        oriented_out_degrees,
-        triangle_count,
-    )
-
-    def synth(skewed: bool):
-        e = spark.range(n_edges).select(
-            F.when(
-                F.lit(skewed) & (F.col("id") < int(n_edges * hot_share)),
-                F.lit(0),
-            )
-            .otherwise(F.pmod(F.xxhash64("id", F.lit("u")), F.lit(n_nodes)))
-            .alias("u"),
-            F.pmod(F.xxhash64("id", F.lit("v")), F.lit(n_nodes)).alias("v"),
-        )
-        return e.where(F.col("u") != F.col("v"))
-
-    out: dict = {"n_nodes": n_nodes, "n_edges": n_edges,
-                 "hot_share": hot_share,
-                 "sqrt_2m_bound": round((2 * n_edges) ** 0.5, 1)}
-    for label in ("uniform", "skewed"):
-        edges = synth(label == "skewed").localCheckpoint()
-        deg = (
-            edges.select(F.col("u").alias("n"))
-            .union(edges.select(F.col("v").alias("n")))
-            .groupBy("n").count()
-        )
-        max_deg = deg.agg(F.max("count")).first()[0]
-        od = oriented_out_degrees(edges)
-        row = od.agg(
-            F.max("out_deg").alias("mx"),
-            F.sum(F.expr("out_deg * (out_deg - 1) / 2")).alias("wedges"),
-        ).first()
-        t0 = time.perf_counter()
-        tri = triangle_count(edges, per_node=False).first()[0]
-        sec = round(time.perf_counter() - t0, 3)
-        out[label] = {
-            "max_degree": int(max_deg),
-            "max_oriented_out_degree": int(row["mx"]),
-            "oriented_wedges": int(row["wedges"]),
-            "triangles": int(tri),
-            "sec": sec,
-        }
-        edges.unpersist()
-    sk, un = out["skewed"], out["uniform"]
-    out["hot_degree_vs_out_degree"] = round(
-        sk["max_degree"] / max(sk["max_oriented_out_degree"], 1), 1
-    )
-    out["skew_time_ratio"] = round(sk["sec"] / max(un["sec"], 1e-9), 2)
     return out
 
 
@@ -893,329 +423,6 @@ def machine_snapshot() -> dict:
     return out
 
 
-def mjpeg_decode_probe() -> dict:
-    """Throughput of the pure-Python T.81 baseline JPEG fallback vs the
-    PIL seam, in frames/sec at 64x64 and 256x256 (VERDICT r7 #4): the
-    codec docstring says 'install libjpeg-turbo for the 100 TB hot path'
-    — this records the NUMBER that advice rests on, so a user can compute
-    at what corpus size the fallback stops being viable. Deterministic
-    synthetic frames; each decode is full entropy-decode + IDCT work."""
-    import numpy as np
-
-    from window_aggregation_spark.operators.jpeg_codec import (
-        decode_jpeg_baseline,
-        encode_jpeg_baseline,
-    )
-
-    out: dict = {}
-    for side in (64, 256):
-        yy, xx = np.mgrid[0:side, 0:side]
-        rgb = np.stack(
-            [
-                (xx * 255 // max(side - 1, 1)),
-                (yy * 255 // max(side - 1, 1)),
-                ((xx + yy) % 256),
-            ],
-            axis=2,
-        ).astype(np.uint8)
-        payload = encode_jpeg_baseline(rgb, quality=85)
-        # adaptive rep count: enough decodes for a stable rate, capped so
-        # the 256px pure-Python path doesn't dominate the bench wall clock
-        reps, budget = 0, 2.0
-        t0 = time.perf_counter()
-        while True:
-            decode_jpeg_baseline(payload)
-            reps += 1
-            dt = time.perf_counter() - t0
-            if dt >= budget or reps >= 64:
-                break
-        entry = {
-            "bytes": len(payload),
-            "t81_fps": round(reps / dt, 2),
-            "t81_reps": reps,
-        }
-        try:
-            import io as _io
-
-            from PIL import Image  # optional; absent in this container
-
-            reps_p, t0 = 0, time.perf_counter()
-            while True:
-                np.asarray(Image.open(_io.BytesIO(payload)).convert("RGB"))
-                reps_p += 1
-                dtp = time.perf_counter() - t0
-                if dtp >= 1.0 or reps_p >= 2000:
-                    break
-            entry["pil_fps"] = round(reps_p / dtp, 2)
-        except ImportError:
-            entry["pil_fps"] = None
-        out[f"{side}x{side}"] = entry
-        print(f"# mjpeg_decode {side}px: {entry}", file=sys.stderr, flush=True)
-    return out
-
-
-def span_store_probe(spark, sf_dir: str, *, corpus_mult: int = 64) -> dict:
-    """The SentenceHashStore's reason to exist, measured (r12 — VERDICT
-    r11 #1): the incremental span dedup's batch cost must not scale
-    with the corpus. Three timings over the same new batch —
-
-    - ``rescan_sec``: ``sentence_spans_against(new, corpus_df)``, the
-      r11 shape that re-hashes the corpus text per batch;
-    - ``rescan_big_sec``: same, corpus replicated ``corpus_mult``x
-      (id-shifted) — shows the rescan cost GROWING with the corpus;
-    - ``stored_sec``: served from the persisted hash store — the
-      corpus enters as the 8-byte hash parquet only, so this number
-      should track the BATCH size and sit near-flat as the corpus
-      grows (the store parquet grows, but only in distinct windows).
-
-    min-of-2 noop-forced runs each; ``speedup`` = rescan/stored,
-    ``speedup_big`` = rescan_big/stored — the second is the one that
-    widens with corpus scale (at 100 TB the rescan is simply not
-    runnable per batch). ``corpus_mult`` defaults high (64) because at
-    small multipliers the replicated scan just soaks up idle cores on
-    the 32-thread host and the volume effect is invisible (measured:
-    8x read FASTER than 1x; 64x reads 4x slower while stored stays
-    flat)."""
-    from window_aggregation_spark.operators import dedup as dd
-    from window_aggregation_spark.sources.io import read_table
-    from window_aggregation_spark.suite import (
-        _SPANS_SYNTH_SQL,
-        sentence_hash_store_for,
-    )
-
-    base = read_table(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_SPANS_SYNTH_SQL).alias("t2")
-    )
-    new = base.where(F.col("doc_id") % 3 == 0)
-    corpus = base.where(F.col("doc_id") % 3 != 0)
-    big = corpus
-    for i in range(1, corpus_mult):
-        big = big.unionByName(
-            corpus.select(
-                (F.col("doc_id") + F.lit(i * 10**9)).alias("doc_id"), "t2"
-            )
-        )
-    store = sentence_hash_store_for(spark, sf_dir)
-
-    def best(df) -> float:
-        t = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t = min(t, time.perf_counter() - t0)
-        return round(t, 3)
-
-    rescan = best(dd.sentence_spans_against(new, corpus, "doc_id", "t2"))
-    rescan_big = best(dd.sentence_spans_against(new, big, "doc_id", "t2"))
-    stored = best(dd.sentence_spans_against(new, store, "doc_id", "t2"))
-    return {
-        "corpus_mult": corpus_mult,
-        "rescan_sec": rescan,
-        "rescan_big_sec": rescan_big,
-        "stored_sec": stored,
-        "speedup": round(rescan / max(stored, 1e-9), 2),
-        "speedup_big": round(rescan_big / max(stored, 1e-9), 2),
-    }
-
-
-def span_join_strategy_probe(
-    spark, sf_dir: str, *, sizes=(100_000, 1_000_000, 8_000_000),
-) -> dict:
-    """The span-hash join's size-aware regime, measured (r13 — VERDICT
-    r12 #3): the same batch joined against synthetic hash sets of
-    growing size under BOTH regimes. At fixture scale broadcast wins on
-    wall clock (one-shot hash build beats two sorted exchanges), but
-    its cost is a MEMORY cliff, not a curve — every executor holds the
-    whole set, so past broadcast budgets the regime simply stops
-    existing; the shuffle column is the price of the regime that still
-    works at 100 TB (the store there is billions of hashes). The probe
-    records both times, their ratio, and what ``auto`` resolves to at
-    each size — the crossover the resolver encodes at
-    SPAN_HASH_BROADCAST_MAX.
-
-    The synthetic sets plant the REAL batch's window hashes inside
-    (1-in-1024 sampled), so the join produces hits and the span-merge
-    stage is exercised too, not just the join."""
-    from window_aggregation_spark.operators import dedup as dd
-    from window_aggregation_spark.sources.io import read_table
-    from window_aggregation_spark.suite import _SPANS_SYNTH_SQL
-
-    base = read_table(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_SPANS_SYNTH_SQL).alias("t2")
-    )
-    new = base.where(F.col("doc_id") % 3 == 0)
-    real_h = (
-        dd._sentence_windows(new, "doc_id", "t2", 3)
-        .select("__h")
-        .where(F.abs(F.col("__h")) % 1024 == 0)
-    )
-
-    def best(df) -> float:
-        t = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t = min(t, time.perf_counter() - t0)
-        return round(t, 3)
-
-    out: dict = {"broadcast_max": dd.SPAN_HASH_BROADCAST_MAX}
-    for n in sizes:
-        hashes = (
-            spark.range(n)
-            .select(F.xxhash64(F.col("id")).alias("__h"))
-            .unionByName(real_h)
-        )
-        store = dd.SentenceHashStore(hashes, window=3, n_base=int(n))
-        per = {"auto_resolves": dd._resolve_span_strategy(store, "auto")}
-        for s in ("broadcast", "shuffle"):
-            per[f"{s}_sec"] = best(
-                dd.sentence_spans_against(
-                    new, store, "doc_id", "t2", strategy=s
-                )
-            )
-        per["shuffle_over_broadcast"] = round(
-            per["shuffle_sec"] / max(per["broadcast_sec"], 1e-9), 2
-        )
-        out[str(n)] = per
-    return out
-
-
-def span_fold_probe(
-    spark, sf_dir: str, *, fold_counts=(0, 4, 16, 48), docs_per_fold: int = 20,
-) -> dict:
-    """Fold-count serve-cost curve (r13 — VERDICT r12 #5): what a
-    long-running ingest loop pays per batch as un-compacted fold
-    partitions accumulate, and what one compaction buys back. For each
-    fold count: a full serve cycle — fresh load (manifest read + fold
-    union) + the incremental span query — timed min-of-2; then
-    the store is compacted and the same serve re-timed. The knee of
-    this curve is what ``compact_every`` (streaming/ingest_spans.py)
-    exists to stay left of."""
-    import shutil
-    import tempfile
-
-    from window_aggregation_spark.operators import dedup as dd
-    from window_aggregation_spark.sources.io import read_table
-    from window_aggregation_spark.suite import _SPANS_SYNTH_SQL
-
-    base = read_table(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_SPANS_SYNTH_SQL).alias("t2")
-    )
-    new = base.where(F.col("doc_id") % 3 == 0)
-    corpus = base.where(F.col("doc_id") % 3 != 0)
-    path = tempfile.mkdtemp(prefix="span_fold_probe_")
-    shutil.rmtree(path, ignore_errors=True)
-    dd.build_sentence_hash_store(corpus, "doc_id", path, "t2")
-
-    def serve() -> float:
-        t = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            st = dd.load_sentence_hash_store(spark, path)
-            dd.sentence_spans_against(
-                new, st, "doc_id", "t2"
-            ).write.format("noop").mode("overwrite").save()
-            t = min(t, time.perf_counter() - t0)
-        return round(t, 3)
-
-    out: dict = {"docs_per_fold": docs_per_fold, "serve_sec_by_folds": {}}
-    done = 0
-    for target in sorted(fold_counts):
-        while done < target:
-            batch = corpus.where(
-                F.col("doc_id") % 97 == done % 97
-            ).select(
-                (F.col("doc_id") + F.lit((done + 1) * 10**9)).alias(
-                    "doc_id"
-                ),
-                F.concat(F.lit(f"Fold {done} marker. "), F.col("t2")).alias(
-                    "t2"
-                ),
-            ).limit(docs_per_fold)
-            dd.sentence_hash_store_add(
-                batch, "doc_id", path, "t2", batch_id=done, reload=False
-            )
-            done += 1
-        out["serve_sec_by_folds"][str(target)] = serve()
-    t0 = time.perf_counter()
-    dd.sentence_hash_store_compact(spark, path)
-    out["compact_sec"] = round(time.perf_counter() - t0, 3)
-    out["serve_sec_after_compact"] = serve()
-    worst = out["serve_sec_by_folds"][str(max(fold_counts))]
-    out["compaction_payback"] = round(
-        worst / max(out["serve_sec_after_compact"], 1e-9), 2
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    return out
-
-
-def hybrid_cost_probe(
-    spark, sf_dir: str, *, n_corpus: int = 20_000, dim: int = 64,
-    n_centroids: int = 64, n_queries: int = 16, k: int = 10,
-    nprobes=(4, 8),
-) -> dict:
-    """The hybrid ANN prune's cost claim at a scale where it is VISIBLE
-    (r13 — VERDICT r12 what's-wrong #3): the recall probe's 2,000-vector
-    corpus is dominated by per-call collect overhead, so its
-    cost_vs_sum_of_branches hovered ~1.0 and the r12 claim rested on
-    plan shape alone. Here: ~20k clustered vectors, cost-only timings
-    (noop sink, no result collection), one shared kmeans codebook —
-    hybrid (one plan: int8 shortlist anti-joined against the IVF top-k,
-    IVF branch checkpointed once) vs its two branches run separately.
-    Expected consistently < 1.0; recall floors are unchanged by
-    construction (the recall probe still records them)."""
-    from window_aggregation_spark.operators.similarity import (
-        hybrid_topk,
-        ivf_centroids,
-        ivf_topk,
-        quantized_topk,
-    )
-
-    corpus = _clustered_embeddings(spark, n_corpus, dim, n_centroids).cache()
-    corpus.count()
-    queries = corpus.orderBy("vec_id").limit(n_queries).cache()
-    queries.count()
-    codebook = ivf_centroids(corpus, n_centroids, mode="kmeans")
-
-    def best(df) -> float:
-        t = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t = min(t, time.perf_counter() - t0)
-        return round(t, 3)
-
-    out: dict = {
-        "n_corpus": n_corpus, "dim": dim, "n_centroids": n_centroids,
-        "n_queries": n_queries, "k": k, "codebook": "kmeans",
-    }
-    int8_sec = best(quantized_topk(queries, corpus, k=k, overfetch=4))
-    out["int8_overfetch_4_sec"] = int8_sec
-    for np_ in nprobes:
-        ivf_sec = best(
-            ivf_topk(
-                queries, corpus, k=k, n_centroids=n_centroids,
-                nprobe=np_, centroids=codebook,
-            )
-        )
-        hyb_sec = best(
-            hybrid_topk(
-                queries, corpus, k=k, n_centroids=n_centroids,
-                nprobe=np_, overfetch=4, centroids=codebook,
-            )
-        )
-        out[str(np_)] = {
-            "ivf_sec": ivf_sec,
-            "hybrid_sec": hyb_sec,
-            "cost_vs_sum_of_branches": round(
-                hyb_sec / max(ivf_sec + int8_sec, 1e-9), 3
-            ),
-        }
-    queries.unpersist()
-    corpus.unpersist()
-    return out
-
-
 # Pinned host-speed reference for the calibrated headline (round 11 —
 # VERDICT r10 next-round #2): the geometric mean of ROUND 10's recorded
 # start/end calibration medians (BENCH_r10.json noise_control: 0.157 /
@@ -1292,213 +499,6 @@ def calibration_probe(spark, *, reps: int = 3) -> dict:
         "median_sec": round(times[len(times) // 2], 3),
         "times_sec": [round(t, 3) for t in times],
     }
-
-
-def _clustered_embeddings(
-    spark, n_rows: int, dim: int, n_clusters: int,
-    *, sigma: float = 0.05, seed: int = 7,
-):
-    """Synthetic embeddings WITH planted cluster structure: ``n_clusters``
-    random unit centroid directions, each vector = its centroid plus
-    isotropic Gaussian noise (per-dim ``sigma``; noise norm ~
-    sigma*sqrt(dim) ≈ 0.4 at the defaults — tight clusters, the regime
-    real encoder embeddings of topically-grouped corpora live in).
-    Deterministic via the fixed seed."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    cents = rng.normal(size=(n_clusters, dim))
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    assign = rng.integers(0, n_clusters, size=n_rows)
-    vecs = cents[assign] + sigma * rng.normal(size=(n_rows, dim))
-    rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def ann_recall_probe(
-    spark,
-    sf_dir: str,
-    *,
-    k: int = 10,
-    n_queries: int = 64,
-    n_centroids: int = 16,
-    nprobes=(1, 2, 4, 8),
-) -> dict:
-    """recall@k of the APPROXIMATE retrieval settings vs brute-force
-    truth (VERDICT r8 #3): the gate rows prove the IVF/quantized
-    plumbing at exact-by-construction configurations, which says nothing
-    about retrieval QUALITY once a user tunes ``nprobe`` down for the
-    100 TB case. This records the actual recall curve — recall@k = mean
-    over queries of |approx top-k ∩ exact top-k| / k, exact = the
-    deterministic tie-broken :func:`cosine_topk` — for IVF at each
-    ``nprobe`` (both centroid modes) and for the int8 coarse-scan path.
-    The candidate fraction ~ nprobe/n_centroids is the cost lever the
-    recall buys down.
-
-    TWO regimes (VERDICT r9 next-round #3): ``unstructured`` runs on
-    the fixture embeddings (near IVF's worst case — little cluster
-    structure, so a neighbor's list is barely more likely than any
-    other, and recall ~ candidate fraction); ``clustered`` runs on a
-    same-size synthetic corpus with ``n_centroids`` planted Gaussian
-    clusters (:func:`_clustered_embeddings`) — the regime where IVF
-    pays, showing candidate_fraction ≪ recall. Together they bracket
-    what a user should expect at each nprobe."""
-    from window_aggregation_spark.sources.io import read_table
-
-    out: dict = {
-        "unstructured": _recall_sweep(
-            spark, None, sf_dir=sf_dir, k=k, n_queries=n_queries,
-            n_centroids=n_centroids, nprobes=nprobes,
-        ),
-    }
-    dim = len(
-        read_table(spark, sf_dir, "embeddings")
-        .select("embedding").first()["embedding"]
-    )
-    clustered = _clustered_embeddings(
-        spark, out["unstructured"]["n_corpus"], dim, n_centroids
-    )
-    out["clustered"] = _recall_sweep(
-        spark, clustered, sf_dir=sf_dir, k=k, n_queries=n_queries,
-        n_centroids=n_centroids, nprobes=nprobes,
-    )
-    return out
-
-
-def _recall_sweep(
-    spark,
-    corpus_df,
-    *,
-    sf_dir: str,
-    k: int,
-    n_queries: int,
-    n_centroids: int,
-    nprobes,
-) -> dict:
-    """One regime's full recall sweep (IVF both centroid modes × nprobe,
-    plus the int8 overfetch curve) over ``corpus_df`` (or the fixture
-    embeddings when None)."""
-    from window_aggregation_spark.operators.similarity import (
-        cosine_topk,
-        hybrid_topk,
-        ivf_centroids,
-        ivf_topk,
-        quantized_topk,
-    )
-    from window_aggregation_spark.sources.io import read_table
-
-    emb = (
-        corpus_df
-        if corpus_df is not None
-        else read_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-    )
-    corpus = emb.cache()
-    n_corpus = corpus.count()
-    queries = corpus.orderBy("vec_id").limit(n_queries).cache()
-    queries.count()
-
-    def topk_sets(df) -> dict:
-        out: dict = {}
-        for r in df.select("query_id", "neighbor_id").collect():
-            out.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return out
-
-    truth = topk_sets(cosine_topk(queries, corpus, k=k))
-
-    def recall_of(df) -> float:
-        got = topk_sets(df)
-        per_q = [
-            len(got.get(q, set()) & hits) / len(hits)
-            for q, hits in truth.items()
-        ]
-        return round(sum(per_q) / len(per_q), 4)
-
-    out: dict = {
-        "k": k,
-        "n_queries": len(truth),
-        "n_corpus": n_corpus,
-        "n_centroids": n_centroids,
-    }
-    codebooks: dict = {}
-    for mode in ("sample", "kmeans"):
-        # ONE codebook per mode, reused across the nprobe sweep: the
-        # corpus passes (3 Lloyd iterations for kmeans) happen once and
-        # — because the distributed float sums are deterministic only up
-        # to BLAS summation order — every point probes the SAME lists,
-        # which is what makes the recall curve monotone in nprobe
-        t0 = time.perf_counter()
-        codebook = ivf_centroids(corpus, n_centroids, mode=mode)
-        build_sec = round(time.perf_counter() - t0, 3)
-        curve = {"codebook_build_sec": build_sec}
-        for np_ in nprobes:
-            t0 = time.perf_counter()
-            r = recall_of(
-                ivf_topk(
-                    queries, corpus, k=k, n_centroids=n_centroids,
-                    nprobe=np_, centroids=codebook,
-                )
-            )
-            curve[str(np_)] = {
-                "recall": r,
-                "sec": round(time.perf_counter() - t0, 3),
-                "candidate_fraction": round(np_ / n_centroids, 3),
-            }
-        out[f"ivf_{mode}"] = curve
-        codebooks[mode] = codebook
-    for overfetch in (1, 2, 4):
-        t0 = time.perf_counter()
-        r = recall_of(
-            quantized_topk(queries, corpus, k=k, overfetch=overfetch)
-        )
-        out[f"int8_overfetch_{overfetch}"] = {
-            "recall": r,
-            "sec": round(time.perf_counter() - t0, 3),
-        }
-    # hybrid = IVF(kmeans codebook) candidates UNION int8 candidates,
-    # one exact re-rank (VERDICT r10 next-round #4). The operator's
-    # guarantee — recall >= max of its branches at the SAME (nprobe,
-    # overfetch) — is recorded per point as floor_max_of_branches so a
-    # violation (which would mean the branches stopped sharing the
-    # exact ordering) is visible in the recording itself.
-    hyb: dict = {"overfetch": 4, "codebook": "kmeans"}
-    for np_ in nprobes:
-        t0 = time.perf_counter()
-        r = recall_of(
-            hybrid_topk(
-                queries, corpus, k=k, n_centroids=n_centroids,
-                nprobe=np_, overfetch=4, centroids=codebooks["kmeans"],
-            )
-        )
-        sec = round(time.perf_counter() - t0, 3)
-        branches_sec = (
-            out["ivf_kmeans"][str(np_)]["sec"]
-            + out["int8_overfetch_4"]["sec"]
-        )
-        hyb[str(np_)] = {
-            "recall": r,
-            "sec": sec,
-            "floor_max_of_branches": max(
-                out["ivf_kmeans"][str(np_)]["recall"],
-                out["int8_overfetch_4"]["recall"],
-            ),
-            # the r12 shortlist prune's receipt (VERDICT r11 "what's
-            # wrong" #2): one hybrid plan vs its two branches run
-            # separately. Expect ~0.9-1.0 at probe scale: the int8
-            # coarse scan dominates both sides, so the structural
-            # savings (overlap skips the float re-rank fetch, no dedup
-            # exchange, IVF branch checkpointed to execute once) are
-            # small against per-call collect overhead here — they are
-            # the part that matters at corpus scale.
-            "cost_vs_sum_of_branches": round(
-                sec / max(branches_sec, 1e-9), 3
-            ),
-        }
-    out["hybrid"] = hyb
-    queries.unpersist()
-    corpus.unpersist()
-    return out
 
 
 def dedup_pair_counts(spark, sf_dir: str) -> dict:
@@ -1705,44 +705,19 @@ def main() -> None:
         "text_index": {"build_sec": tix_build_sec},
         "sentence_hash_store": {"build_sec": spanhash_build_sec},
     }
-    # (section key, env var that disables it with "0", probe, sf0.1 only).
-    # Probes are evidence, never the headline's problem: a failing probe
-    # records {"err": ...} and the run goes on (a scaled-fixture problem
-    # in sf1 must not break the headline JSON line either).
+    # (section key, probe, sf0.1 only). Probes are evidence, never the
+    # headline's problem: a failing probe records {"err": ...} and the run
+    # goes on (a scaled-fixture problem in sf1 must not break the
+    # headline JSON line either).
     probes = [
-        ("mjpeg_decode_probe", "SPARK_GRAFT_MJPEG_PROBE",
-         mjpeg_decode_probe, False),
-        ("frame_probe", "SPARK_GRAFT_FRAME_PROBE",
-         lambda: frame_scaling_probe(spark, sf_dir), False),
-        ("skew_probe", "SPARK_GRAFT_SKEW_PROBE",
-         lambda: skew_probe(spark, sf_dir), False),
-        ("streaming_probe", "SPARK_GRAFT_STREAM_PROBE",
-         lambda: streaming_probe(spark, sf_dir), False),
-        ("stream_state_probe", "SPARK_GRAFT_STREAM_STATE_PROBE",
-         lambda: stream_state_probe(spark, sf_dir), False),
-        ("span_store_probe", "SPARK_GRAFT_SPAN_STORE_PROBE",
-         lambda: span_store_probe(spark, sf_dir), False),
-        ("ann_recall_probe", "SPARK_GRAFT_ANN_RECALL_PROBE",
-         lambda: ann_recall_probe(spark, sf_dir), False),
-        ("span_join_strategy_probe", "SPARK_GRAFT_SPAN_STRATEGY_PROBE",
-         lambda: span_join_strategy_probe(spark, sf_dir), False),
-        ("span_fold_probe", "SPARK_GRAFT_SPAN_FOLD_PROBE",
-         lambda: span_fold_probe(spark, sf_dir), False),
-        ("hybrid_cost_probe", "SPARK_GRAFT_HYBRID_COST_PROBE",
-         lambda: hybrid_cost_probe(spark, sf_dir), True),
-        ("layout_probe", "SPARK_GRAFT_LAYOUT_PROBE",
-         lambda: layout_probe(spark, sf_dir), False),
-        ("graph_skew_probe", "SPARK_GRAFT_GRAPH_PROBE",
-         lambda: graph_skew_probe(spark), False),
-        ("cc_scale_probe", "SPARK_GRAFT_CC_PROBE",
-         lambda: cc_scale_probe(spark, sf_dir), True),
-        ("spread_scale_probe", "SPARK_GRAFT_SPREAD_PROBE",
+        ("frame_probe", lambda: frame_scaling_probe(spark, sf_dir), False),
+        ("cc_scale_probe", lambda: cc_scale_probe(spark, sf_dir), True),
+        ("spread_scale_probe",
          lambda: spread_scale_probe(spark, sf_dir), True),
-        ("sf1", "SPARK_GRAFT_SF1",
-         lambda: sf1_section(spark, sf_dir, timings), True),
+        ("sf1", lambda: sf1_section(spark, sf_dir, timings), True),
     ]
-    for key, env, probe, sf01_only in probes:
-        if (sf01_only and sf != "0.1") or os.environ.get(env, "1") == "0":
+    for key, probe, sf01_only in probes:
+        if sf01_only and sf != "0.1":
             continue
         try:
             sections[key] = probe()

@@ -1,6 +1,7 @@
 """COUNT_DISTINCT window function: flag+sum rewrite vs the one-pass
-collect_list composition (bit-equality), NULL handling, peer (RANGE)
-semantics, clause validation, and both SQL dialect renderings."""
+collect_list composition the SQL backend renders (bit-equality), NULL
+handling, peer (RANGE) semantics, clause validation, and both SQL dialect
+renderings."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from window_aggregation_spark.errors import ValidationError
 from window_aggregation_spark.operators.window_aggregation import (
     window_aggregate,
 )
+from window_aggregation_spark.plans.sql_gen import cast_types, plan_to_sql
 from window_aggregation_spark.spec import (
     AggregateDef,
     OrderKey,
@@ -21,6 +23,13 @@ from window_aggregation_spark.spec import (
 )
 
 T0 = dt.datetime(2024, 1, 1)
+
+
+def _sql_backend(spark, df, plan):
+    """The plan through the SQL backend (the one-pass composition)."""
+    df.createOrReplaceTempView("cd_input")
+    return spark.sql(plan_to_sql(plan, "cd_input", df.columns,
+                                 input_types=cast_types(df)))
 
 
 def _plan(**kw):
@@ -54,9 +63,13 @@ class TestCountDistinctRunning:
 
     def test_strategies_bit_identical(self, spark, df):
         fast = window_aggregate(df, _plan())
-        slow = window_aggregate(df, _plan(), percentile_strategy="one_pass")
+        slow = _sql_backend(spark, df, _plan())
         assert fast.exceptAll(slow).count() == 0
         assert slow.exceptAll(fast).count() == 0
+        plan = slow._sc._jvm.PythonSQLUtils.explainString(
+            slow._jdf.queryExecution(), "simple"
+        )
+        assert "collect_list" in plan  # the one-pass composition
 
     def test_peer_rows_share_count(self, spark):
         # RANGE running frame: order-key ties are peers; a value first
@@ -65,11 +78,12 @@ class TestCountDistinctRunning:
             [("a", 1, "x"), ("a", 1, "y"), ("a", 2, "y")],
             "k string, o int, v string",
         )
-        for strategy in ("rank_lookup", "one_pass"):
-            out = window_aggregate(
-                df, _plan(), percentile_strategy=strategy
-            ).orderBy("o", "v").collect()
-            assert [r.ndv for r in out] == [2, 2, 2], strategy
+        for backend, out in (
+            ("dataframe", window_aggregate(df, _plan())),
+            ("sql", _sql_backend(spark, df, _plan())),
+        ):
+            rows = out.orderBy("o", "v").collect()
+            assert [r.ndv for r in rows] == [2, 2, 2], backend
 
     def test_all_null_partition_counts_zero(self, spark):
         df = spark.createDataFrame(
@@ -110,8 +124,6 @@ class TestCountDistinctRunning:
         assert "collect_list" not in plan  # flat-memory path
 
     def test_sql_backend_matches(self, spark, df):
-        from window_aggregation_spark.plans.sql_gen import plan_to_sql
-
         df.createOrReplaceTempView("cd_input")
         sql = plan_to_sql(_plan(), "cd_input", df.columns,
                           input_types=dict(df.dtypes))

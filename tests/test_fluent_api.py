@@ -122,19 +122,6 @@ def test_fluent_validation_errors(spark):
         _fn("frobnicate")
 
 
-def test_fluent_agg_percentile_strategy_passthrough(spark):
-    from window_aggregation_spark.api import median, window
-
-    df = spark.createDataFrame(
-        [(i, "g", float(i)) for i in range(6)], "id int, g string, v double"
-    )
-    out = window(df).partition_by("g").order_by("v").agg(
-        median("v").alias("m"), percentile_strategy="one_pass"
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "percentile(" in plan  # single-WindowExec plan, not the lookup
-
-
 def test_sql_door_keeps_nested_and_udt_passthrough_types(spark):
     """The SQL door builds its passthrough casts like the DataFrame
     backend (``sql_gen.cast_types``): a struct whose field name needs

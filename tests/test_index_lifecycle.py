@@ -515,6 +515,26 @@ def test_rebuild_clears_stale_folds(spark, tmp_path):
     ) == [1, 2]
 
 
+def test_rebuild_empties_an_old_layout(spark, tmp_path):
+    """An overwrite build replaces the store directory the way Spark's
+    overwrite replaces a path: an older layout's leftovers (``params`` and
+    ``stats`` directories, no manifest) do not survive beside the new
+    build, and a stale file inside a reused component name is gone too."""
+    docs = _corpus(spark)
+    path = tmp_path / "ix"
+    for d in ("doclens", "params", "postings", "stats"):
+        (path / d).mkdir(parents=True)
+        (path / d / "part-00000-old.parquet").write_bytes(b"old")
+    build_text_index(docs, str(path), n_buckets=4)
+    fresh = tmp_path / "fresh"
+    build_text_index(docs, str(fresh), n_buckets=4)
+    assert sorted(os.listdir(path)) == sorted(os.listdir(fresh))
+    assert not any(
+        "old" in name for _, _, names in os.walk(path) for name in names
+    )
+    assert load_text_index(spark, str(path)).n_docs == 7
+
+
 def test_store_gc_removes_only_unreferenced_generations(spark, tmp_path):
     """gc_store deletes superseded generations, keeps the manifest's
     current ones, and never cross-collects a component whose name shares

@@ -149,6 +149,74 @@ def test_left_stream_equals_batch(spark, sf_dir, events_dir, tmp_path):
     assert got == want
 
 
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_watermarked_stream_evicts_join_state(spark, tmp_path, how):
+    """The watermark plus the join's time bound let Spark evict join
+    state: over three time-ordered micro-batches, rows are removed
+    (``numRowsRemoved`` > 0), the state's peak stays below the input, and
+    the state at the end is no larger than its peak (``recentProgress``)."""
+    import datetime as dt
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    n_files, per_file = 3, 60
+    for f in range(n_files):
+        ids = range(f * per_file, (f + 1) * per_file)
+        path = str(tmp_path / f"events-{f}.parquet")
+        pq.write_table(pa.table({
+            "event_id": pa.array(ids, pa.int64()),
+            "ts": pa.array([t0 + dt.timedelta(minutes=3 * i) for i in ids],
+                           pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array([i % 4 for i in ids], pa.int64()),
+            "event_type": ["purchase" if i % 2 else "error" for i in ids],
+        }), path)
+        # the file source orders by mtime: keep the files in time order
+        os.utime(path, (1e9 + f, 1e9 + f))
+    stream = (
+        spark.readStream
+        .schema("event_id long, ts timestamp, user_id long, event_type string")
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "events-*.parquet")
+        .parquet(str(tmp_path))
+    )
+    left = stream.where("event_type = 'purchase'").select(
+        F.col("event_id").alias("p_id"), "user_id", "ts"
+    )
+    right = stream.where("event_type = 'error'").select(
+        F.col("event_id").alias("e_id"), "user_id", F.col("ts").alias("ts_r")
+    )
+    out = interval_join(left, right, ["user_id"], "ts", "ts_r",
+                        upper="30 minutes", watermark="2 hours", how=how)
+    # one state-store partition: a few hundred rows need no more
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        q = (
+            out.writeStream.outputMode("append").format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    state, removed = [], 0
+    for p in q.recentProgress:
+        ops = json.loads(p.json).get("stateOperators") or []
+        state.append(sum(op.get("numRowsTotal", 0) for op in ops))
+        removed += sum(op.get("numRowsRemoved", 0) for op in ops)
+    assert len(state) >= n_files
+    assert removed > 0
+    assert 0 < max(state) < n_files * per_file
+    assert state[-1] <= max(state)
+
+
 def test_left_half_open_bounds_null_fill(spark):
     left = spark.createDataFrame(
         [(1, 7, "2024-01-01 10:00:00"), (2, 8, "2024-01-01 10:05:00")],

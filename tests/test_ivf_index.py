@@ -259,3 +259,53 @@ def test_hybrid_index_matches_in_memory_hybrid(spark, emb, tmp_path):
     assert _rows(
         sim.hybrid_topk_index(queries, plain, k=5, nprobe=4, overfetch=4)
     ) == want
+
+
+def test_recall_rises_with_nprobe_and_hybrid_dominates(spark, emb):
+    """The approximate retrieval operators' recall guarantees against the
+    exact :func:`cosine_topk` (recall@k = mean over queries of
+    |approx top-k ∩ exact top-k| / k). With one codebook reused across
+    the sweep, IVF recall never falls as ``nprobe`` rises (more lists
+    scanned only add candidates under the same tie-break), in both
+    centroid modes, and ``nprobe == n_centroids`` scans every list, so it
+    is exact. ``hybrid_topk`` re-ranks the union of its IVF and int8
+    candidates exactly, so at every matched (nprobe, overfetch) point its
+    recall is at least the better of its two branches."""
+    corpus = emb.select("vec_id", "embedding")
+    queries = corpus.where(F.col("vec_id") < 8)
+    k, n_centroids, nprobes = 5, 8, (1, 2, 8)
+
+    def topk_sets(df):
+        out: dict = {}
+        for r in df.select("query_id", "neighbor_id").collect():
+            out.setdefault(r.query_id, set()).add(r.neighbor_id)
+        return out
+
+    truth = topk_sets(sim.cosine_topk(queries, corpus, k=k))
+
+    def recall(df):
+        got = topk_sets(df)
+        return sum(
+            len(got.get(q, set()) & hits) / len(hits)
+            for q, hits in truth.items()
+        ) / len(truth)
+
+    int8 = recall(sim.quantized_topk(queries, corpus, k=k, overfetch=1))
+    for mode in ("sample", "kmeans"):
+        codebook = sim.ivf_centroids(corpus, n_centroids, mode=mode)
+        ivf = [
+            recall(sim.ivf_topk(
+                queries, corpus, k=k, n_centroids=n_centroids, nprobe=p,
+                centroids=codebook,
+            ))
+            for p in nprobes
+        ]
+        assert ivf == sorted(ivf), (mode, ivf)
+        assert ivf[-1] == 1.0, (mode, ivf)
+        if mode == "kmeans":
+            for p, ivf_recall in zip(nprobes, ivf):
+                hybrid = recall(sim.hybrid_topk(
+                    queries, corpus, k=k, n_centroids=n_centroids,
+                    nprobe=p, overfetch=1, centroids=codebook,
+                ))
+                assert hybrid >= max(ivf_recall, int8), (p, hybrid)

@@ -111,3 +111,29 @@ class TestTriangleCount:
                     expect[x] = expect.get(x, 0) + 1
         out = {r.node: r.triangles for r in self._tris(spark, edges).collect()}
         assert out == expect
+
+
+def test_degree_orientation_caps_out_degree_on_a_hot_node(spark):
+    """triangle_count's scale bound: orienting each edge from the
+    lower-(degree, id) endpoint caps every out-degree at sqrt(2m), even
+    when one node holds ~10% of the edges, so the hot node's wedges are
+    never enumerated at its raw degree."""
+    from pyspark.sql import functions as F
+
+    from window_aggregation_spark.operators.graph import _degree_oriented
+
+    n_nodes, n_edges = 2000, 12000
+    edges = spark.range(n_edges).select(
+        F.when(F.col("id") < n_edges // 10, F.lit(0))
+        .otherwise(F.pmod(F.xxhash64("id", F.lit("u")), F.lit(n_nodes)))
+        .alias("u"),
+        F.pmod(F.xxhash64("id", F.lit("v")), F.lit(n_nodes)).alias("v"),
+    )
+    oriented = _degree_oriented(edges)
+    m = oriented.count()
+    max_out = oriented.groupBy("u").count().agg(F.max("count")).first()[0]
+    assert max_out <= (2 * m) ** 0.5
+    # the hot node's raw degree is >10x any oriented out-degree, its own
+    # included
+    hot_degree = oriented.where("u = 0 OR v = 0").count()
+    assert hot_degree > 10 * max_out

@@ -3,7 +3,8 @@ request/value generator and a running last-value lookup per aggregate
 (O(1)/row) replacing O(frame)/row buffers for DISCRETE_PERCENTILE / MEDIAN
 over running frames ordered by the aggregated field — both directions,
 several aggregates fused into one plan. Results must be BIT-identical to
-the general window composition (collect_list / Hive percentile)."""
+the general window composition (collect_list / Hive percentile), which
+is what the SQL backend (``plan_to_sql``) renders."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ from window_aggregation_spark import (
     WindowSpecDef,
     window_aggregate,
 )
+from window_aggregation_spark.plans.sql_gen import cast_types, plan_to_sql
 
 ROWS = [
     (i, ["a", "b", "c"][i % 3], float([7, 3, 3, 9, 1, 5, 8, 2, 6, 4][i % 10]))
@@ -38,6 +40,14 @@ def _plan(function, direction, args=()):
             AggregateDef("out", function, field="v", args=tuple(args)),
         ),
     )
+
+
+def _sql_backend(spark, df, plan):
+    """The plan through the SQL backend: the registry's single-WindowExec
+    composition, rendered by ``plan_to_sql``."""
+    df.createOrReplaceTempView("pr_input")
+    return spark.sql(plan_to_sql(plan, "pr_input", df.columns,
+                                 input_types=cast_types(df)))
 
 
 def _general_expected(df, function, direction, p, field="v", alias="out"):
@@ -99,13 +109,13 @@ def test_rank_join_plan_has_no_per_row_buffers(spark, function, args,
 
 @pytest.mark.parametrize("direction", ["ascending", "descending"])
 def test_one_pass_strategy_matches_rank_lookup(spark, direction):
-    """percentile_strategy='one_pass' (the explicit small-frames assertion)
-    must produce bit-identical results through the single-WindowExec plan —
-    Hive percentile appears in the plan, the union/rank-lookup does not."""
+    """The SQL backend's one-pass composition must be bit-identical to
+    the DataFrame backend's rank lookup — Hive percentile appears in the
+    SQL plan, the union/rank-lookup does not."""
     df = spark.createDataFrame(ROWS, SCHEMA)
     plan = _plan("median", direction)
     default = window_aggregate(df, plan)
-    one_pass = window_aggregate(df, plan, percentile_strategy="one_pass")
+    one_pass = _sql_backend(spark, df, plan)
     cols = ["id", "g", "v", "out"]
     assert (
         one_pass.select(cols).orderBy("id").collect()
@@ -114,14 +124,6 @@ def test_one_pass_strategy_matches_rank_lookup(spark, direction):
     jplan = one_pass._jdf.queryExecution().executedPlan().toString()
     assert "percentile(" in jplan
     assert "__pr_rk" not in jplan
-
-
-def test_percentile_strategy_validated(spark):
-    df = spark.createDataFrame(ROWS, SCHEMA)
-    with pytest.raises(ValueError, match="percentile_strategy"):
-        window_aggregate(
-            df, _plan("median", "ascending"), percentile_strategy="auto"
-        )
 
 
 def test_rank_join_not_applied_when_ordered_by_other_field(spark):
@@ -167,8 +169,8 @@ def test_fused_percentiles_match_general_and_one_pass(spark, direction,
                                                       vtype):
     """Several same-field percentiles share ONE count/rank window, ONE
     generator and ONE exchange, with one lookup window each — and every
-    column stays bit-identical to the general composition and to
-    ``one_pass``, nulls and the null-only group included."""
+    column stays bit-identical to the general composition and to the
+    SQL backend, nulls and the null-only group included."""
     import re
 
     rows = [(i, g, None if v is None else (int(v) if vtype == "int" else v))
@@ -176,7 +178,7 @@ def test_fused_percentiles_match_general_and_one_pass(spark, direction,
     df = spark.createDataFrame(rows, f"id int, g string, v {vtype}")
     plan = _multi_plan(direction, [(a, f, args) for a, f, args, _ in _FUSED])
     got = window_aggregate(df, plan)
-    one_pass = window_aggregate(df, plan, percentile_strategy="one_pass")
+    one_pass = _sql_backend(spark, df, plan)
     got_rows = got.orderBy("id").collect()
     assert got.columns == ["id", "g", "v", "med", "p25", "p90"]
     assert got_rows == one_pass.orderBy("id").collect()
@@ -212,17 +214,19 @@ def test_fused_lookup_alias_collisions_keep_sequential_semantics(
         spark, direction, aggregates):
     """An alias that replaces the field or a partition key ends the fused
     group: the result must equal the sequential withColumn chain of
-    single-aggregate plans and the ``one_pass`` plan, column for column.
+    single-aggregate plans, through either backend, column for column.
+    (One SELECT cannot read a column an earlier aggregate of the same
+    SELECT replaced, so the SQL side chains one plan per step.)
     (A repeated alias cannot reach a group: WindowPlan rejects it,
     tests/test_parser_validation.py.)"""
     df = spark.createDataFrame(ROWS, SCHEMA)
     plan = _multi_plan(direction, aggregates)
     got = window_aggregate(df, plan)
-    one_pass = window_aggregate(df, plan, percentile_strategy="one_pass")
-    chained = df
+    chained = one_pass = df
     for agg in aggregates:
-        chained = window_aggregate(chained, _multi_plan(direction, [agg]),
-                                   validate=False)
+        step = _multi_plan(direction, [agg])
+        chained = window_aggregate(chained, step, validate=False)
+        one_pass = _sql_backend(spark, one_pass, step)
     assert got.columns == one_pass.columns == chained.columns
     got_rows = sorted(map(tuple, got.collect()), key=repr)
     assert got_rows == sorted(map(tuple, one_pass.collect()), key=repr)

@@ -182,13 +182,11 @@ class WindowBuilder:
     def agg(
         self,
         *aggs: AggregateDef,
-        percentile_strategy: str = "rank_lookup",
         advise_skew: bool = False,
         skew_mitigation: str | None = None,
     ) -> DataFrame:
         return window_aggregate(
             self.df, self.plan(*aggs),
-            percentile_strategy=percentile_strategy,
             advise_skew=advise_skew,
             skew_mitigation=skew_mitigation,
         )

@@ -233,7 +233,7 @@ def build_signature_store(
     build's manifest). Returns the store re-read from disk, so downstream
     plans run against exactly what was persisted."""
     sm.guard_build(
-        path, mode, _SIG_COMPONENTS,
+        path, mode,
         "signatures are grown by the ingest loop's fold (sigs_folds/), "
         "never by re-running the builder",
     )
@@ -1739,7 +1739,7 @@ def build_sentence_hash_store(
     if grain not in _WINDOW_GRAINS:
         raise ValueError(f"unknown grain: {grain!r}")
     sm.guard_build(
-        path, mode, _SPANHASH_COMPONENTS,
+        path, mode,
         "the hash set is grown per admitted batch via "
         "sentence_hash_store_add, never by re-running the builder",
     )

@@ -212,9 +212,9 @@ def _degree_oriented(
 ) -> DataFrame:
     """Deduplicated undirected edges oriented from the lower-(degree, id)
     endpoint to the higher — the Schank-Wagner orientation whose
-    out-degrees are bounded by O(sqrt(m)). THE one definition, shared by
-    :func:`triangle_count` and :func:`oriented_out_degrees` so the probe
-    measures exactly what the operator runs."""
+    out-degrees are bounded by sqrt(2m) (tests/test_pagerank.py holds it
+    on a hot-node graph; the last measurement at scale is the
+    ``graph_skew_probe`` record in OPTIMIZATION_r14.md)."""
     # The dedup'd edge set is referenced FIVE times downstream (twice
     # per degree union, once per rank join side) and the orientation
     # result three more — without a materialization barrier every
@@ -248,20 +248,6 @@ def _degree_oriented(
     return ranked.select(
         F.when(lt, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(lt, F.col("b")).otherwise(F.col("a")).alias("v"),
-    )
-
-
-def oriented_out_degrees(
-    edges: DataFrame, src: str = "u", dst: str = "v"
-) -> DataFrame:
-    """Per-node out-degree AFTER degree orientation, ``(node, out_deg)``
-    — the quantity triangle_count's wedge cost is quadratic in. Exposed
-    so bench.py's graph_skew_probe can MEASURE the sqrt(m) cap on a
-    hot-node graph instead of arguing it."""
-    return (
-        _degree_oriented(edges, src, dst)
-        .groupBy(F.col("u").alias("node"))
-        .agg(F.count(F.lit(1)).alias("out_deg"))
     )
 
 

@@ -28,14 +28,14 @@ Scope (honest, checked):
 
 Entropy coding is bit-serial Python — right for the small synthetic
 frames the suite decodes and for correctness pinning, wrong as the
-100 TB hot path. Measured (bench.py's ``mjpeg_decode_probe``, recorded
-per round in BENCH_DETAIL.json): ~210-250 frames/sec per core at
-64x64 and ~7-9 frames/sec per core at 256x256 — so on a 32-core
-executor the fallback sustains roughly 250 fps of 256px video, fine
-for fixture-scale corpora but ~100-1000x below libjpeg-turbo. Past a
-few thousand 256px frames per core per job, install PIL/libjpeg-turbo:
-``get_jpeg_decoder`` picks it up without any plan change (the
-mapInPandas seam, batching, and schema are identical).
+100 TB hot path. Measured (the retired ``mjpeg_decode_probe``, last
+numbers in OPTIMIZATION_r14.md "Retired probes"): ~150-250
+frames/sec per core at 64x64 and ~5-9 frames/sec per core at 256x256 —
+so on a 32-core executor the fallback sustains roughly 160-290 fps of
+256px video, fine for fixture-scale corpora but ~100-1000x below
+libjpeg-turbo. Past a few thousand 256px frames per core per job,
+install PIL/libjpeg-turbo: ``get_jpeg_decoder`` picks it up without any
+plan change (the mapInPandas seam, batching, and schema are identical).
 
 Round-trip accuracy is pinned in tests (encoder->decoder error within
 quantization bounds) plus a PIL cross-check that runs wherever PIL

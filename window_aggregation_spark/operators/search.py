@@ -516,7 +516,7 @@ def build_text_index(
     growing an index is :func:`text_index_add`.
     """
     sm.guard_build(
-        path, mode, _IDX_COMPONENTS,
+        path, mode,
         "to grow an existing index use text_index_add",
     )
     spark = df.sparkSession

@@ -163,11 +163,12 @@ def quantized_topk(
     when pre-quantized) touches only ``k·overfetch`` rows per query
     instead of the corpus. Composes with the bucketed candidate
     generators (LSH/IVF) — here the coarse stage is exhaustive so recall
-    loss comes only from quantization. MEASURED
-    (``bench.py::ann_recall_probe``, BENCH_DETAIL.json): recall@10 vs
-    brute-force truth on the sf0.1 embeddings is 0.99 at ``overfetch=1``
-    and 1.0 at ``overfetch>=2`` — int8 + re-rank is effectively exact,
-    unlike the IVF pruning whose recall curve see :func:`ivf_topk`.
+    loss comes only from quantization. MEASURED (the retired
+    ``ann_recall_probe``, last numbers in OPTIMIZATION_r14.md "Retired
+    probes"): recall@10 vs brute-force truth on the sf0.1 embeddings is
+    0.99 at ``overfetch=1`` and 1.0 at ``overfetch>=2`` — int8 + re-rank
+    is effectively exact, unlike the IVF pruning whose recall curve see
+    :func:`ivf_topk`.
 
     Regime caveat (measured on the probe's planted-cluster corpus):
     int8 recall INVERTS on tightly clustered embeddings —
@@ -517,8 +518,10 @@ def ivf_topk(
     computations agree in sign/order (ties broken by centroid index in
     both). Candidate fraction ~= nprobe / n_centroids.
 
-    MEASURED recall, BOTH regimes (``bench.py::ann_recall_probe``,
-    recorded in BENCH_DETAIL.json): recall@10 vs brute-force truth at
+    MEASURED recall, BOTH regimes (the retired ``ann_recall_probe``,
+    last numbers in OPTIMIZATION_r14.md "Retired probes"; the monotone
+    curve and the exact end point are held by
+    tests/test_ivf_index.py): recall@10 vs brute-force truth at
     sf0.1 (2000 x 64-dim, 16 centroids), ``nprobe`` 1/2/4/8 —
 
     - **unstructured** (the fixture embeddings — near IVF's WORST case,
@@ -798,7 +801,7 @@ def build_ivf_index(
     spark = corpus.sparkSession
     _require_long_id(corpus, corpus_id, "build_ivf_index")
     sm.guard_build(
-        path, mode, _IVF_COMPONENTS,
+        path, mode,
         "to grow an existing index use ivf_index_add",
     )
     c_base = corpus.select(
@@ -1201,8 +1204,10 @@ def hybrid_topk(
     the exact ordering places above it — which, k at a time, would
     contradict its membership in the true top-k. Hence
     ``recall(hybrid) >= max(recall(ivf), recall(int8))`` at every
-    (nprobe, overfetch) setting, on every corpus. MEASURED
-    (``bench.py::ann_recall_probe``, ``hybrid`` section; sf0.1, 2000 ×
+    (nprobe, overfetch) setting, on every corpus
+    (tests/test_ivf_index.py holds it). MEASURED (the retired
+    ``ann_recall_probe``, ``hybrid`` section, last numbers in
+    OPTIMIZATION_r14.md "Retired probes"; sf0.1, 2000 ×
     64-dim, k-means codebook, overfetch=4): unstructured regime —
     recall@10 = 1.0 at EVERY nprobe (the int8 branch carries it where
     IVF alone starves at 0.44–0.87); clustered regime — 0.99/1.0/1.0/
@@ -1216,14 +1221,13 @@ def hybrid_topk(
     shortlist pairs the IVF branch did not already exact-score, the
     union needs no dedup exchange, and the IVF branch is guaranteed to
     execute once (lazy checkpoint; it is referenced twice) — read as
-    cost ≈ sum-of-branches minus the overlap re-rank:
-    ``bench.py::ann_recall_probe`` records
-    ``hybrid.cost_vs_sum_of_branches`` per point (~0.9–1.0 at probe
-    scale, where the saved stage is small against collect overhead;
-    the removed exchange and single-execution guarantee are the part
-    that matters at corpus scale). When even the coarse-scan budget is
-    tight, fall back to the single branch matching your measured
-    regime.
+    cost ≈ sum-of-branches minus the overlap re-rank. The retired
+    probes measured hybrid cost / sum of branches at 0.36–0.94 on 2,000
+    vectors (``ann_recall_probe``) and 0.46–0.55 on 20,000 clustered
+    ones (``hybrid_cost_probe``); the last numbers are in
+    OPTIMIZATION_r14.md "Retired probes". When even the coarse-scan
+    budget is tight, fall back to the single branch matching your
+    measured regime.
 
     Both branches accept their usual knobs (``centroids=`` codebook /
     mode for IVF, pre-quantized ``qvec_col``/``qscale_col`` columns for

@@ -198,7 +198,6 @@ def window_aggregate(
     plan: WindowPlan,
     *,
     validate: bool = True,
-    percentile_strategy: str = "rank_lookup",
     advise_skew: bool = False,
     skew_mitigation: str | None = None,
 ) -> DataFrame:
@@ -227,29 +226,16 @@ def window_aggregate(
     one projection, and identical window specs still collapse into a single
     ``WindowExec``.
 
-    ``percentile_strategy`` picks the physical plan for MEDIAN /
-    DISCRETE_PERCENTILE over running frames ordered by their own field:
-
-    - ``"rank_lookup"`` (default): the O(1)/row fused rank lookup —
-      consecutive percentiles over the same field share one count/rank
-      window and one request/value generator, then take one last-value
-      lookup window each; one key-only shuffle, flat memory, the shape
-      that survives hot partitions at 100 TB.
-    - ``"one_pass"``: the single-WindowExec composition (Hive
-      ``percentile`` / collect_list) — also one shuffle, but O(frame)
-      memory per row. An EXPLICIT caller assertion that frames stay small
-      (thousands of rows, not millions); deliberately not a silent
-      stats-based guess, because plan stability matters more than a
-      micro-win when the estimate is wrong.
-
-    Results are bit-identical either way
-    (tests/test_percentile_rank_join.py pins it).
+    MEDIAN / DISCRETE_PERCENTILE over running frames ordered by their own
+    field take the O(1)/row fused rank lookup: consecutive percentiles
+    over the same field share one count/rank window and one
+    request/value generator, then take one last-value lookup window
+    each; one key-only shuffle, flat memory, the shape that survives hot
+    partitions at 100 TB. Results are bit-identical to the registry's
+    single-WindowExec composition (Hive ``percentile`` / collect_list,
+    O(frame) memory per row) that :func:`..plans.sql_gen.plan_to_sql`
+    renders (tests/test_percentile_rank_join.py pins it).
     """
-    if percentile_strategy not in ("rank_lookup", "one_pass"):
-        raise ValueError(
-            f"percentile_strategy must be 'rank_lookup' or 'one_pass', "
-            f"got {percentile_strategy!r}"
-        )
     if validate:
         collector = FailureCollector()
         validate_plan(df.schema, plan, collector)
@@ -287,8 +273,7 @@ def window_aggregate(
     for agg in plan.aggregates:
         fdef = lookup(agg.function)
         if (
-            percentile_strategy == "rank_lookup"
-            and fdef.name in _RANK_LOOKUP_FUNCTIONS
+            fdef.name in _RANK_LOOKUP_FUNCTIONS
             and _rank_lookup_applies(plan.spec, agg)
         ):
             # (aliases are unique within a plan: WindowPlan rejects repeats)
@@ -302,8 +287,7 @@ def window_aggregate(
             out = _percentile_rank_lookup(out, plan.spec, group)
             group = []
         if (
-            percentile_strategy == "rank_lookup"
-            and fdef.name == "count_distinct"
+            fdef.name == "count_distinct"
             and plan.spec.frame_type is FrameType.NONE
         ):
             out = _count_distinct_flag_sum(out, plan.spec, agg)
@@ -330,7 +314,6 @@ def window_aggregate_multi(
     *,
     validate: bool = True,
     declared_schema: "tuple[str, ...] | None" = None,
-    percentile_strategy: str = "rank_lookup",
 ) -> DataFrame:
     """Apply several :class:`WindowPlan`\\ s, appending every plan's aggregate
     columns — the multi-spec extension of the reference's one-spec operator
@@ -353,10 +336,7 @@ def window_aggregate_multi(
     ordered = _group_plans_by_partition_keys(list(plans))
     out = df
     for plan in ordered:
-        out = window_aggregate(
-            out, plan, validate=validate,
-            percentile_strategy=percentile_strategy,
-        )
+        out = window_aggregate(out, plan, validate=validate)
     if declared_schema is not None:
         out = out.select(*[F.col(name) for name in declared_schema])
     return out
@@ -419,11 +399,9 @@ def _count_distinct_flag_sum(
     peer bound, so every peer counts it).
 
     Cost: two WindowExecs — the flag window shuffles on
-    (partition keys, field), the sum reuses the plan's own window. Same
-    ``percentile_strategy`` knob as the rank-lookup percentiles
-    (:func:`_percentile_rank_lookup`):
-    ``"one_pass"`` keeps the single-WindowExec composition as an explicit
-    small-frame assertion. Results are bit-identical either way
+    (partition keys, field), the sum reuses the plan's own window.
+    Results are bit-identical to the registry composition that
+    :func:`..plans.sql_gen.plan_to_sql` renders
     (tests/test_count_distinct.py pins it)."""
     flag_col = f"__cdf_{agg.alias}"
     if flag_col in df.columns:

@@ -94,7 +94,7 @@ and compact through these plain functions and keep only their own
 logic beside them:
 
 - :func:`guard_build` — a builder refuses ``mode="append"`` and, on
-  ``overwrite``, clears the previous life (:func:`reset_generations`);
+  ``overwrite``, empties the store directory (:func:`reset_generations`);
   :func:`publish_build` writes its first manifest, ``meta`` included;
 - :func:`meta` / :func:`schema` / :func:`type_value` — the params and
   stats a manifest carries, and the declared read schemas built from
@@ -721,29 +721,19 @@ def write_manifest(
 # ---------------------------------------------------------------------------
 
 
-def reset_generations(path: str, components: dict[str, str]) -> None:
-    """Remove every manifest-protocol artifact under ``path`` — numbered
-    manifests, versioned ``{component}_vN`` dirs, and the fresh
-    component dirs themselves — so a from-scratch rebuild over an
-    existing store cannot be shadowed by a stale manifest (pointing at
-    generation dirs the rebuild never writes) or haunted by stale
-    tombstones filtering the fresh data."""
+def reset_generations(path: str) -> None:
+    """Empty ``path`` for a from-scratch rebuild, the way Spark's
+    ``mode("overwrite")`` replaces a path: every manifest, generation,
+    tombstone and fold directory goes, and so does anything an older
+    store layout left there (a ``params`` or ``stats`` directory that
+    :func:`gc_store` cannot see). A stale manifest would shadow the
+    rebuild; stale tombstones or folds would filter or union into the
+    fresh data."""
     fs = _fs_for(path)
     if not fs.isdir(path):
         return
     for name in fs.listdir(path):
-        if _MANIFEST_RE.match(name):
-            fs.delete(f"{path}/{name}")
-            continue
-        # match on the component DIRECTORY base names (dict values), not
-        # the manifest keys: stores where key != dir name (e.g. the
-        # signature store's "folds" -> "sigs_folds") would otherwise
-        # leave that component's data behind for the rebuilt store to
-        # union back in
-        for base in set(components.values()):
-            if name == base or name.startswith(f"{base}_v"):
-                fs.delete(f"{path}/{name}")
-                break
+        fs.delete(f"{path}/{name}")
 
 
 def state_fingerprint(path: str, dirs: list[str]) -> str:
@@ -963,20 +953,17 @@ def sweep_stale(path: str, component: str, keep: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def guard_build(
-    path: str, mode: str, components: dict[str, str], grow: str
-) -> None:
+def guard_build(path: str, mode: str, grow: str) -> None:
     """Build guard of every store builder. ``append`` is refused: it would
     write past the manifest, whose params and stats describe the build
     alone, and past its generation after a compaction; a store grows
     through its own add/fold path, which ``grow`` names in the error.
-    ``overwrite`` first removes the previous generation's manifest,
-    tombstones, folds and versioned dirs, or loads would keep resolving
-    the old generation or filtering the fresh data."""
+    ``overwrite`` first empties the store directory
+    (:func:`reset_generations`)."""
     if mode not in ("overwrite", "error", "errorifexists"):
         raise ValueError(f"mode must be overwrite/error, got {mode!r}; {grow}")
     if mode == "overwrite":
-        reset_generations(path, components)
+        reset_generations(path)
 
 
 def snapshot(

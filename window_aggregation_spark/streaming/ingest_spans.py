@@ -182,10 +182,11 @@ def streaming_ingest_spans(
 
     ``compact_every=K`` (VERDICT r12 #5) compacts the store in-loop at
     every K-th epoch, bounding the fold-partition count the per-batch
-    load pays to union. The measured curve lives in
-    ``BENCH_DETAIL.json.span_fold_probe`` (re-recorded every shipped
-    bench run — numbers here would drift): serve cost grows tens of
-    percent by 16 folds and roughly doubles by 48, and one compaction
+    load pays to union. The retired ``span_fold_probe`` measured the
+    curve; its last sf0.1 run read flat through 48 folds
+    (OPTIMIZATION_r14.md "Retired probes"), earlier runs showed serve
+    cost growing tens of percent by 16 folds and roughly doubling by
+    48, and one compaction
     buys it back to the fold-free baseline at a one-off cost on the
     order of ten serves — so K in the 16–48 band bounds the curve
     while the compaction cost amortizes to a few percent per epoch;

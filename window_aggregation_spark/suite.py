@@ -2165,8 +2165,9 @@ def _register_similarity() -> None:
         """The regime-dominant ANN path (VERDICT r10 #4): IVF candidates
         UNION int8 coarse-scan candidates, one exact float re-rank —
         recall >= max(ivf, int8) pointwise because both branches share
-        the exact rounded-cosine ordering (measured on both probe
-        regimes, bench.py::ann_recall_probe 'hybrid'). Gate config uses
+        the exact rounded-cosine ordering (held by
+        tests/test_ivf_index.py; the retired ann_recall_probe's last
+        numbers are in OPTIMIZATION_r14.md). Gate config uses
         the bit-reproducible branches (assign='expr' IVF + int8's exact
         integer coarse ranking) so the whole union is oracle-checkable
         (operators/similarity.py::hybrid_topk)."""
@@ -4349,7 +4350,8 @@ def _register_pipeline() -> None:
         cut from every batch occurrence, batch-internal duplicates
         keep their first occurrence. Batch cost is independent of
         corpus size: the corpus enters as the 8-byte hash parquet only
-        (measured in bench.py::span_store_probe)
+        (measured by the retired span_store_probe; last numbers in
+        OPTIMIZATION_r14.md)
         (operators/dedup.py::sentence_spans_increment,
         SentenceHashStore)."""
         # the cheap %3 batch filter goes BELOW the barrier: a filter
