@@ -9,6 +9,7 @@ sys.path.insert(0, os.getcwd())
 from hypothesis import HealthCheck, given, settings
 
 import tests.test_property_dual_backend as m
+from window_aggregation_spark.plans.sql_gen import plan_to_sql
 from window_aggregation_spark.session import get_spark
 
 spark = get_spark("soak2", shuffle_partitions=4)
@@ -51,6 +52,20 @@ def soak_interval(case):
     )
     checked["n"] += 1
 
+colliding = {"compared": 0, "refused": 0}
+
+@settings(max_examples=150, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(m.colliding_plan())
+def soak_colliding(plan):
+    m.test_colliding_aliases_dual_backend.hypothesis.inner_test(spark, plan)
+    try:
+        plan_to_sql(plan, "t", ["id", "grp", "val", "small"])
+        colliding["compared"] += 1
+    except ValueError:  # the body above already matched the refusal
+        colliding["refused"] += 1
+    checked["n"] += 1
+
 soak_unframed()
 print("unframed ok", checked["n"], flush=True)
 soak_framed()
@@ -59,4 +74,6 @@ soak_range()
 print("range ok", checked["n"], flush=True)
 soak_interval()
 print("interval ok", checked["n"], flush=True)
+soak_colliding()
+print("colliding ok", checked["n"], colliding, flush=True)
 spark.stop()

@@ -7,6 +7,8 @@ randomized coverage of function x frame x direction combinations.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -15,7 +17,7 @@ from tests.conftest import property_examples
 from pyspark.sql import functions as F
 
 from window_aggregation_spark.operators.window_aggregation import window_aggregate
-from window_aggregation_spark.plans.sql_gen import plan_to_sql
+from window_aggregation_spark.plans.sql_gen import cast_types, plan_to_sql
 from window_aggregation_spark.spec import (
     UNBOUNDED_FOLLOWING,
     UNBOUNDED_PRECEDING,
@@ -106,6 +108,21 @@ def unframed_plan(draw):
     return WindowPlan(spec=spec, aggregates=aggs)
 
 
+# input columns first: an alias may replace a column a later aggregate
+# reads (field, column arg, partition or order key)
+COLLIDING_ALIASES = ["val", "grp", "id", "small", "a0", "a1", "a2", "a3"]
+
+
+@st.composite
+def colliding_plan(draw):
+    """An unframed or framed plan whose aliases may name input columns."""
+    plan = draw(st.one_of(unframed_plan(), framed_plan()))
+    names = draw(st.permutations(COLLIDING_ALIASES))
+    return replace(plan, aggregates=tuple(
+        replace(a, alias=n) for a, n in zip(plan.aggregates, names)
+    ))
+
+
 def _run_both(spark, plan: WindowPlan):
     df = spark.createDataFrame(ROWS, SCHEMA)
     api = window_aggregate(df, plan).orderBy("id").collect()
@@ -135,6 +152,32 @@ def test_unframed_plans_dual_backend(spark, plan):
 def test_framed_plans_dual_backend(spark, plan):
     api, via_sql = _run_both(spark, plan)
     assert api == via_sql
+
+
+@settings(
+    max_examples=property_examples(25),
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(plan=colliding_plan())
+def test_colliding_aliases_dual_backend(spark, plan):
+    """The SQL door either refuses a plan whose aggregate reads a column
+    an earlier aggregate replaced, or returns what the DataFrame door
+    returns: replaced columns in place, appended aliases after."""
+    df = spark.createDataFrame(ROWS, SCHEMA)
+    try:
+        sql = plan_to_sql(plan, "prop_collide", df.columns,
+                          input_types=cast_types(df))
+    except ValueError as exc:
+        assert "earlier aggregate of the same plan" in str(exc)
+        return
+    api = window_aggregate(df, plan)
+    df.createOrReplaceTempView("prop_collide")
+    via_sql = spark.sql(sql)
+    assert api.columns == via_sql.columns
+    assert sorted(map(tuple, api.collect()), key=repr) == sorted(
+        map(tuple, via_sql.collect()), key=repr
+    )
 
 
 def test_running_two_field_moments_dual_backend(spark):

@@ -74,7 +74,11 @@ def test_discrete_percentile_backends_agree_on_the_rank(spark):
             ),
             (AggregateDef("pd", "discrete_percentile", field="val", args=(p,)),),
         )
-        api = window_aggregate(df, plan).orderBy("id").collect()
+        out = window_aggregate(df, plan)
+        # n comes from count(), so the composition collects the frame once
+        optimized = out._jdf.queryExecution().optimizedPlan().toString()
+        assert optimized.count("collect_list(") == 1
+        api = out.orderBy("id").collect()
         df.createOrReplaceTempView("dp_rank_parity")
         sql = spark.sql(
             plan_to_sql(plan, "dp_rank_parity", df.columns,

@@ -179,19 +179,15 @@ class WindowBuilder:
             spec=self.spec, aggregates=tuple(aggs), declared_schema=self.declared
         )
 
-    def agg(
-        self,
-        *aggs: AggregateDef,
-        advise_skew: bool = False,
-        skew_mitigation: str | None = None,
-    ) -> DataFrame:
-        return window_aggregate(
-            self.df, self.plan(*aggs),
-            advise_skew=advise_skew,
-            skew_mitigation=skew_mitigation,
-        )
+    def agg(self, *aggs: AggregateDef) -> DataFrame:
+        return window_aggregate(self.df, self.plan(*aggs))
 
     def sql(self, table: str, *aggs: AggregateDef, dialect: str = "spark") -> str:
+        """Render the plan as one SELECT over ``table``
+        (:func:`..plans.sql_gen.plan_to_sql`). Raises ``ValueError`` when
+        an aggregate reads a column an earlier aggregate replaced: one
+        SELECT would read the original column where ``.agg`` reads the
+        replacement. Build one plan per replacing step instead."""
         plan = self.plan(*aggs)
         # same batched validation as .agg(): the SQL door must not render
         # broken SQL (e.g. lead with no offset) that only fails later

@@ -236,8 +236,10 @@ def _sql_discrete_percentile(agg: AggregateDef, over: str, dialect: str) -> str:
     """
     field = quote_ident(agg.field, dialect)
     p = double_sql(_float_arg(agg), dialect)
+    # n from count(), not size() of the sorted list: one collect per row
+    n = f"count({field}) {over}"
     vals = f"array_sort(collect_list({field}) {over})"
-    return f"get({vals}, CAST(greatest(ceil({p} * size({vals})), 1) AS INT) - 1)"
+    return f"get({vals}, CAST(greatest(ceil({p} * {n}), 1) AS INT) - 1)"
 
 
 @dataclass(frozen=True)
@@ -419,8 +421,8 @@ def consumed_columns(agg: AggregateDef) -> set[str]:
     """Every input column one aggregate reads: its field plus any
     column-valued positional args (``column_args`` registry flag — the
     two-field moments' second column lives in ``args[0]``). Used by the
-    plan-reordering safety checks in ``window_aggregate_multi`` and
-    ``plans_to_sql``."""
+    plan-order rule :func:`..plans.sql_gen.order_conflict` and
+    ``plans_to_sql``'s within-plan check."""
     fdef = lookup(agg.function)
     fields: set[str] = {agg.field} if agg.field else set()
     if fdef.column_args:

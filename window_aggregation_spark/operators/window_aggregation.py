@@ -37,10 +37,14 @@ Semantics re-expressed from the reference plugin (O1,
 Scale notes (100 TB):
 
 - ``WindowExec`` sorts each partition-key group within one task — a hot key
-  serializes onto one core. For running sums over hot keys prefer a two-phase
-  salted accumulate (chunk-local running sum + broadcast chunk offsets); for
-  whole-partition percentiles prefer ``approx_discrete_percentile`` (sketch,
-  fixed memory).
+  serializes onto one core. For a running sum/count/min/max/avg/variance/
+  stddev over hot keys call :func:`.skew.salted_running_agg` directly
+  instead of this operator (bit-equal two-phase chunking: chunk-local
+  running aggregate + broadcast chunk offsets, over one ascending numeric
+  order column — ``w_events_running_salted`` orders a timestamp by its
+  ``unix_micros``; pass one :func:`.skew.chunk_boundaries` result to every
+  aggregate salted on the same order column); for whole-partition
+  percentiles prefer ``approx_discrete_percentile`` (sketch, fixed memory).
 - Everything here is a pure Catalyst expression — no Python in the hot path,
   so filters below this operator still push down to the parquet scan and
   projections above it prune columns through the window.
@@ -63,6 +67,7 @@ from window_aggregation_spark.plans.sql_gen import (
     aggregate_sql,
     cast_types,
     declared_type,
+    order_conflict,
 )
 from window_aggregation_spark.spec import (
     CURRENT_ROW,
@@ -77,152 +82,19 @@ from window_aggregation_spark.spec import (
 )
 from window_aggregation_spark.validation import validate_plan
 
-# Running-aggregate functions the two-phase salted rewrite can compute
-# (skew.salted_running_agg), keyed by registry name -> salted agg name.
-# Bit-equality of the routed plan with the plain WindowExec is pinned by
-# the w_events_running_salted driver oracle and tests/test_skew_advisor.py.
-_SALTED_ROUTABLE = {
-    "accumulate": "sum",
-    "count": "count",
-    "min": "min",
-    "max": "max",
-    "avg": "avg",
-    "variance": "var_samp",
-    "stddev": "stddev",
-}
-
-_SALTED_NUMERIC_ORDER_TYPES = {
-    "tinyint", "smallint", "int", "bigint", "float", "double",
-}
-
-
-def _salted_route(
-    df: DataFrame, plan: WindowPlan, hints: list | None = None
-) -> DataFrame | None:
-    """The opt-in advisor-routed plan: when the skew advisor's hints fire
-    AND every aggregate is a salted-routable running aggregate over the
-    default (running RANGE) frame with one ascending order key, compute
-    the plan through :func:`..operators.skew.salted_running_agg` instead
-    of a single hot-key-serialized WindowExec. Returns None when the plan
-    shape is ineligible or the advisor stays quiet (caller falls through
-    to the plain WindowExec). ``hints`` carries an already-computed
-    :func:`..plans.advisor.skew_hints` result so ``advise_skew=True``
-    plus mitigation runs ONE sampling job, not two."""
-    if hints is not None and not hints:
-        return None
-    spec = plan.spec
-    if (
-        spec.frame_type is not FrameType.NONE
-        or spec.has_interval_frame
-        or not spec.partition_by
-        or len(spec.order_by) != 1
-        or spec.order_by[0].direction is not Direction.ASCENDING
-    ):
-        return None
-    mapped = []
-    for agg in plan.aggregates:
-        fdef = lookup(agg.function)
-        if fdef.name not in _SALTED_ROUTABLE or not agg.field:
-            return None
-        mapped.append((agg, _SALTED_ROUTABLE[fdef.name]))
-    order_field = spec.order_by[0].field
-    dtypes = dict(df.dtypes)
-    order_dtype = dtypes.get(order_field)
-    tmp_order = None
-    if order_dtype in _SALTED_NUMERIC_ORDER_TYPES:
-        order_col = order_field
-    elif order_dtype in ("timestamp", "timestamp_ntz", "date"):
-        # chunk boundaries come from approxQuantile (numeric only);
-        # unix_micros is a monotone tie-preserving map, so RANGE peer
-        # groups are preserved exactly.
-        tmp_order = "__salted_order_us"
-        if tmp_order in df.columns:  # collision — bail to the plain plan
-            return None
-        df = df.withColumn(
-            tmp_order, F.unix_micros(F.col(order_field).cast("timestamp"))
-        )
-        order_col = tmp_order
-    else:
-        return None
-
-    if hints is None:
-        from window_aggregation_spark.plans.advisor import skew_hints
-
-        hints = skew_hints(df, plan)
-    if not hints:
-        return None
-
-    from window_aggregation_spark.operators.skew import (
-        chunk_boundaries,
-        salted_running_agg,
-    )
-
-    # one approxQuantile pass shared by every routed aggregate (they all
-    # chunk on the same order column)
-    bounds = chunk_boundaries(df, order_col)
-    input_types = cast_types(df)
-    out = df
-    for agg, salted_name in mapped:
-        out = salted_running_agg(
-            out, list(spec.partition_by), order_col, agg.field,
-            agg=salted_name, alias=agg.alias, boundaries=bounds,
-        )
-        declared = declared_type(agg, input_types)
-        if declared is not None:
-            out = out.withColumn(agg.alias, F.col(agg.alias).cast(declared))
-    if tmp_order is not None:
-        out = out.drop(tmp_order)
-    if plan.declared_schema is not None:
-        out = out.select(*[F.col(name) for name in plan.declared_schema])
-    else:
-        # match the plain path's contract exactly: input fields in input
-        # order (salted_running_agg's join re-orders join keys first),
-        # then the appended alias fields; an alias replacing an input
-        # column keeps that column's position, like withColumn does
-        base = [c for c in df.columns if c != tmp_order]
-        appended = [
-            a.alias
-            for a, _ in mapped
-            if a.alias not in base
-        ]
-        seen: set = set()
-        appended = [a for a in appended if not (a in seen or seen.add(a))]
-        out = out.select(*base, *appended)
-    if plan.spec.num_partitions:
-        out = out.repartition(plan.spec.num_partitions)
-    return out
-
 
 def window_aggregate(
     df: DataFrame,
     plan: WindowPlan,
     *,
     validate: bool = True,
-    advise_skew: bool = False,
-    skew_mitigation: str | None = None,
 ) -> DataFrame:
     """Apply a :class:`WindowPlan` to ``df`` and return the widened DataFrame.
 
-    ``advise_skew=True`` additionally runs :func:`..plans.advisor.skew_hints`
-    (a bounded sampling job) and warns when the partition keys' distinct
-    count sits below the parallelism — the serial-at-scale running-window
-    shape. Opt-in: data-touching work stays out of the default plan build.
-
-    ``skew_mitigation="salted"`` closes that loop: the advisor runs and,
-    when its hints fire AND the plan is an eligible running-aggregate
-    shape (every aggregate in accumulate/count/min/max/avg/variance/
-    stddev, default frame, one ascending numeric-or-timestamp order key),
-    the plan executes through the bit-equal two-phase
-    :func:`..operators.skew.salted_running_agg` rewrite (~chunks-way
-    parallel per hot key) instead of one WindowExec task per key. Quiet
-    advisor or ineligible shape falls through to the plain plan
-    unchanged; each routed aggregate runs its own two-phase pass, so
-    prefer one or few aggregates on this path. Like ``advise_skew`` this
-    is opt-in because the advisor samples data at plan-build time.
-
     Aggregates are applied sequentially (``withColumn`` semantics, matching
     the reference's apply loop: a later aggregate reading a replaced column
-    sees the replacement). Catalyst's CollapseProject folds the chain into
+    sees the replacement; :func:`..plans.sql_gen.plan_to_sql` refuses such
+    a plan). Catalyst's CollapseProject folds the chain into
     one projection, and identical window specs still collapse into a single
     ``WindowExec``.
 
@@ -240,27 +112,6 @@ def window_aggregate(
         collector = FailureCollector()
         validate_plan(df.schema, plan, collector)
         collector.get_or_throw()
-    hints = None
-    if advise_skew:
-        import warnings
-
-        from window_aggregation_spark.plans.advisor import skew_hints
-
-        # computed once and handed to the salted route below, so
-        # advise_skew + skew_mitigation costs ONE sampling job
-        hints = skew_hints(df, plan)
-        for hint in hints:
-            warnings.warn(hint, stacklevel=2)
-    if skew_mitigation is not None:
-        if skew_mitigation != "salted":
-            raise ValueError(
-                f"unknown skew_mitigation {skew_mitigation!r} "
-                f"(supported: 'salted')"
-            )
-        routed = _salted_route(df, plan, hints=hints)
-        if routed is not None:
-            return routed
-
     plan = reverse_unbounded_following(plan)
     over = plan.spec.over_sql()
     # the input's types, for the declared-type casts (withColumn semantics
@@ -344,30 +195,9 @@ def window_aggregate_multi(
 
 def _group_plans_by_partition_keys(plans: "list[WindowPlan]") -> "list[WindowPlan]":
     """Stable regroup of plans by partition-key tuple (first-occurrence
-    order), only when reordering is unobservable — see caller docstring."""
-    produced: list[set[str]] = [
-        {a.alias for a in p.aggregates} for p in plans
-    ]
-    from window_aggregation_spark.functions.registry import consumed_columns
-
-    consumed: list[set[str]] = []
-    for p in plans:
-        fields: set[str] = set()
-        for a in p.aggregates:
-            # consumed_columns includes column-valued args (corr/covar read
-            # their second field via args[0]) — field alone misses them.
-            fields.update(consumed_columns(a))
-        fields.update(p.spec.partition_by)
-        fields.update(k.field for k in p.spec.order_by)
-        consumed.append(fields)
-    for i, p in enumerate(plans):
-        if p.declared_schema is not None:
-            return plans
-        for j in range(len(plans)):
-            if i == j:
-                continue
-            if consumed[i] & produced[j] or produced[i] & produced[j]:
-                return plans
+    order), only when reordering is unobservable (:func:`order_conflict`)."""
+    if order_conflict(plans) is not None:
+        return plans
     order: dict[tuple, int] = {}
     for p in plans:
         order.setdefault(tuple(p.spec.partition_by), len(order))

@@ -33,7 +33,53 @@ from window_aggregation_spark.functions.registry import (
     lookup,
 )
 from window_aggregation_spark.plans.rewrites import reverse_unbounded_following
-from window_aggregation_spark.spec import AggregateDef, WindowPlan, quote_ident
+from window_aggregation_spark.spec import (
+    AggregateDef,
+    WindowPlan,
+    WindowSpecDef,
+    quote_ident,
+)
+
+
+def _reads(spec: WindowSpecDef, aggregates) -> set[str]:
+    """Every column ``aggregates`` over ``spec`` read: their fields and
+    column-valued args (corr/covar read their second field via args[0]),
+    plus the partition and order keys."""
+    cols = set(spec.partition_by) | {k.field for k in spec.order_by}
+    for a in aggregates:
+        cols.update(consumed_columns(a))
+    return cols
+
+
+def order_conflict(plans: "list[WindowPlan]") -> str | None:
+    """Why the order of ``plans`` is observable, or None when every order
+    gives the same result: two plans produce the same alias, a plan reads
+    a column another plan produces, or a plan pins its own
+    ``declared_schema``. ``window_aggregate_multi`` keeps plan order when
+    this is not None; :func:`plans_to_sql` refuses, since one SELECT has
+    no order."""
+    produced = [{a.alias for a in p.aggregates} for p in plans]
+    seen: set[str] = set()
+    for own in produced:
+        if own & seen:
+            return (
+                "duplicate aggregate aliases across plans "
+                f"({sorted(own & seen)}) cannot render as one SELECT."
+            )
+        seen |= own
+    for p, own in zip(plans, produced):
+        cross = _reads(p.spec, p.aggregates) & (seen - own)
+        if cross:
+            return (
+                f"plan reads other plans' outputs {sorted(cross)}"
+                " — sequential semantics cannot render as one SELECT."
+            )
+        if p.declared_schema is not None:
+            return (
+                "per-plan declared_schema is order-dependent; "
+                "use the declared_schema parameter instead."
+            )
+    return None
 
 
 def plans_to_sql(
@@ -50,43 +96,36 @@ def plans_to_sql(
     so Catalyst (or any warehouse) plans one WindowExec per distinct spec,
     exactly like the DataFrame path after its regroup.
 
-    A single SELECT cannot express sequential semantics, so this raises for
-    the cases where plan order is observable (a plan reading another plan's
-    output column, duplicate aliases across plans, per-plan declared
-    schemas) — the same conditions under which the DataFrame path disables
-    its regroup.
+    A single SELECT reads only the input columns, so it cannot express
+    sequential semantics. This raises ``ValueError`` where order is
+    observable: across plans (:func:`order_conflict`, the same rule under
+    which the DataFrame path keeps plan order), and within a plan when an
+    aggregate reads — as field, column arg, partition or order key — a
+    column an earlier aggregate of that plan replaced (the DataFrame path
+    reads the replacement, one SELECT the original). Workaround: one plan
+    per replacing step, each rendered over the previous step's output.
     """
     # the DataFrame backend's rewrite too: identical logical plans keep
     # double aggregates bit-identical across backends (and spare the SQL
     # Spark's O(n^2) unbounded-following frame)
     plans = [reverse_unbounded_following(p) for p in plans]
-    produced: set[str] = set()
+    conflict = order_conflict(plans)
+    if conflict is not None:
+        raise ValueError(f"plans_to_sql: {conflict}")
     for p in plans:
-        aliases = {a.alias for a in p.aggregates}
-        if aliases & produced:
-            raise ValueError(
-                "plans_to_sql: duplicate aggregate aliases across plans "
-                f"({sorted(aliases & produced)}) cannot render as one SELECT."
-            )
-        produced |= aliases
-    for p in plans:
-        consumed: set[str] = set()
+        # a validated plan reads only input columns, so an earlier alias
+        # it reads is an input column that alias replaced
+        earlier: set[str] = set()
         for a in p.aggregates:
-            # includes column-valued args (corr/covar second field, args[0])
-            consumed.update(consumed_columns(a))
-        consumed.update(p.spec.partition_by)
-        consumed.update(k.field for k in p.spec.order_by)
-        cross = consumed & (produced - {a.alias for a in p.aggregates})
-        if cross:
-            raise ValueError(
-                f"plans_to_sql: plan reads other plans' outputs {sorted(cross)}"
-                " — sequential semantics cannot render as one SELECT."
-            )
-        if p.declared_schema is not None:
-            raise ValueError(
-                "plans_to_sql: per-plan declared_schema is order-dependent; "
-                "use the declared_schema parameter instead."
-            )
+            stale = _reads(p.spec, [a]) & earlier
+            if stale:
+                raise ValueError(
+                    f"plans_to_sql: aggregate {a.alias!r} reads {sorted(stale)},"
+                    " which an earlier aggregate of the same plan replaced —"
+                    " one SELECT would read the original column; render one"
+                    " plan per replacing step."
+                )
+            earlier.add(a.alias)
 
     rendered: dict[str, str] = {}
     order: list[str] = []
@@ -171,6 +210,12 @@ def plan_to_sql(
     casts the DataFrame backend applies — without it, widening aggregates
     (e.g. ACCUMULATE over INT returns BIGINT in SQL) would diverge in type
     from the DataFrame path's declared output schema.
+
+    Raises ``ValueError`` when an aggregate reads (field, column arg,
+    partition or order key) a column an earlier aggregate of the plan
+    replaced: ``window_aggregate`` reads the replacement, one SELECT the
+    original. Render one plan per replacing step instead, each over the
+    previous step's output.
     """
     return plans_to_sql(
         [replace(plan, declared_schema=None)], table, input_columns,
